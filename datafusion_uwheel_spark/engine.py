@@ -807,7 +807,7 @@ class WheelEngine:
 
         a = to_sec(start, w.low_sec)
         b = to_sec(end, w.high_sec_exclusive)
-        states = w.combine_range(a, b)
+        states = w.combine_range(a, b, ("count", "count_col"))
         if states is None:
             raise ValueError(
                 "range not answerable from the wheel (unaligned to its "
@@ -828,7 +828,7 @@ class WheelEngine:
         for occupied buckets at a named ``date_trunc`` granularity or an
         integer tumbling width in seconds. Zero jobs; the result is a tiny
         constant relation assembled from the wheel states."""
-        from .functions.timestamps import parse_ts_literal, sec_to_datetime
+        from .functions.timestamps import parse_ts_literal, secs_to_datetimes
 
         w = self.agg_wheels[(column, STAR_AGGREGATION_ALIAS)]
         if w.vcnt_ is None:
@@ -846,19 +846,19 @@ class WheelEngine:
 
         a = to_sec(start, w.low_sec)
         b = to_sec(end, w.high_sec_exclusive)
-        groups = w.group_by(a, b, granularity)
+        groups = w.group_by(a, b, granularity, ("count", "count_col"))
         if groups is None:
             raise ValueError(
                 "range/granularity not answerable from the wheel — query "
                 "through engine.sql for the delegated answer"
             )
-        rows = []
-        for sec, states in groups:
-            n = states["count"]
-            nulls = n - states["count_col"]
-            rows.append(
-                (sec_to_datetime(sec), n, nulls, (nulls / n) if n else None)
+        secs, cols = groups
+        rows = [
+            (t, n, n - vn, ((n - vn) / n) if n else None)
+            for t, n, vn in zip(
+                secs_to_datetimes(secs), cols["count"], cols["count_col"]
             )
+        ]
         return self.spark.createDataFrame(
             rows, "bucket timestamp, rows bigint, nulls bigint, null_ratio double"
         )
@@ -898,7 +898,8 @@ class WheelEngine:
             # a value's wheel may span less than the ask: clamp to its own
             # coverage (key-completeness proves nothing exists outside it)
             states = w.combine_range(
-                max(a, w.low_sec), min(b, w.high_sec_exclusive)
+                max(a, w.low_sec), min(b, w.high_sec_exclusive),
+                ("count", "count_col"),
             ) if w.low_sec < b and w.high_sec_exclusive > a else {"count": 0, "count_col": 0}
             if states is None:
                 raise ValueError(
@@ -922,7 +923,7 @@ class WheelEngine:
         from the wheel's min/max states, zero jobs. All-NULL buckets emit
         NULL bounds (SQL aggregate semantics). Outlier injections show up
         as envelope jumps without ever scanning the table."""
-        from .functions.timestamps import parse_ts_literal, sec_to_datetime
+        from .functions.timestamps import parse_ts_literal, secs_to_datetimes
 
         w = self.agg_wheels[(column, STAR_AGGREGATION_ALIAS)]
         if w.min_ is None or w.max_ is None:
@@ -941,17 +942,15 @@ class WheelEngine:
 
         a = to_sec(start, w.low_sec)
         b = to_sec(end, w.high_sec_exclusive)
-        groups = w.group_by(a, b, granularity)
+        groups = w.group_by(a, b, granularity, ("min", "max"))
         if groups is None:
             raise ValueError(
                 "range/granularity not answerable from the wheel — query "
                 "through engine.sql for the delegated answer"
             )
         sql_type = w.value_sql_type
-        rows = [
-            (sec_to_datetime(sec), states.get("min"), states.get("max"))
-            for sec, states in groups
-        ]
+        secs, cols = groups
+        rows = list(zip(secs_to_datetimes(secs), cols["min"], cols["max"]))
         return self.spark.createDataFrame(
             rows,
             f"bucket timestamp, min_value {sql_type}, max_value {sql_type}",

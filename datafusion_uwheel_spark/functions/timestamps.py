@@ -31,6 +31,7 @@ __all__ = [
     "bucket_starts",
     "parse_ts_literal",
     "sec_to_datetime",
+    "secs_to_datetimes",
     "us_to_datetime",
     "datetime_to_us",
     "is_second_aligned_us",
@@ -169,6 +170,12 @@ def us_to_datetime(epoch_us: int) -> datetime:
 
 def sec_to_datetime(sec: int) -> datetime:
     return datetime.fromtimestamp(sec, tz=timezone.utc).replace(tzinfo=None)
+
+
+def secs_to_datetimes(secs: np.ndarray) -> list[datetime]:
+    """:func:`sec_to_datetime` over an int64 array, as one vector
+    conversion (``datetime64[s]`` → naive ``datetime`` objects)."""
+    return secs.astype("datetime64[s]").astype(object).tolist()
 
 
 def is_second_aligned_us(epoch_us: int) -> bool:

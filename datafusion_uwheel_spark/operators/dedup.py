@@ -658,7 +658,8 @@ def lsh_join(
         def _filtered(rows, hot):
             if not hot:
                 return rows, True
-            hot_df = spark.createDataFrame(hot, "__band int, __key string")
+            # the probe's schema IS the band rows' own (no join-side casts)
+            hot_df = spark.createDataFrame(hot, rows.select("__band", "__key").schema)
             out = rows.join(
                 F.broadcast(hot_df), on=["__band", "__key"], how="anti"
             )

@@ -44,6 +44,11 @@ Correctness notes:
   ``UWheelAggregate`` builds, ``index/mod.rs:7-21``): a SUM-only wheel omits
   min/max/sumsq arrays and :meth:`combine_range` simply omits those keys —
   the router delegates aggregates whose state is absent.
+* Lookups compute only the states the caller names (``states=``), and
+  :meth:`group_by` answers column-wise — ``(bucket_secs, {state: column})``
+  — so a query pays for the reductions it reads, never a per-bucket dict of
+  every state (the column-at-a-time state operators of *Building Advanced
+  SQL Analytics From Low-Level Plan Operators*, SIGMOD 2021).
 """
 
 from __future__ import annotations
@@ -60,7 +65,7 @@ from ..functions.timestamps import (
     bucket_starts,
 )
 
-__all__ = ["WheelIndex", "STAR_AGGREGATION_ALIAS", "INTEGRAL_SQL_TYPES"]
+__all__ = ["WheelIndex", "STAR_AGGREGATION_ALIAS", "INTEGRAL_SQL_TYPES", "VARIANCE_KEYS"]
 
 #: Key suffix for unfiltered indices — mirrors ``STAR_AGGREGATION_ALIAS``
 #: (reference ``lib.rs:70``).
@@ -96,6 +101,47 @@ def _variance_states(s: float | None, sq: float | None, n: int) -> dict:
         out["var_samp"] = None
         out["stddev_samp"] = None
     return out
+
+
+#: The variance family, derived from (sum, sumsq, non-null count).
+VARIANCE_KEYS = ("var_pop", "var_samp", "stddev_pop", "stddev_samp")
+
+
+def carried_states(
+    vcnt: bool, sum_: bool, min_: bool, max_: bool, sumsq: bool
+) -> frozenset:
+    """State keys a wheel can answer given which state arrays it carries:
+    ``count`` always, ``count_col`` with NULL tracking, ``sum``/``avg`` with
+    the sum state, ``min``/``max`` with theirs, and the raw ``_sumsq`` plus
+    the variance family with both sum and sum-of-squares."""
+    keys = {"count"}
+    if vcnt:
+        keys.add("count_col")
+    if sum_:
+        keys.update(("sum", "avg"))
+    if min_:
+        keys.add("min")
+    if max_:
+        keys.add("max")
+    if sum_ and sumsq:
+        keys.update(("_sumsq", *VARIANCE_KEYS))
+    return frozenset(keys)
+
+
+def wanted_states(states, carried: frozenset) -> frozenset:
+    """The requested keys this wheel carries (all carried keys when
+    ``states`` is ``None``); requested keys it lacks are simply absent from
+    the answer, so callers delegate on ``key not in``."""
+    return carried if states is None else carried.intersection(states)
+
+
+def states_to_columns(starts, states_list, keys) -> tuple[np.ndarray, dict]:
+    """``[(start, states), ...]``-shaped per-window answers → the
+    column-wise group-by contract ``(bucket_secs, {key: column})``."""
+    return (
+        np.asarray(starts, dtype=np.int64),
+        {k: [st[k] for st in states_list] for k in keys},
+    )
 
 
 @dataclass
@@ -510,62 +556,82 @@ class WheelIndex:
                 out["max"] = self._py(self.at_max_[i])
         return out
 
-    def _combine_slice(self, i: int, j: int) -> dict[str, Any]:
-        """Combine all *available* states over the bucket slice ``[i, j)``.
+    @property
+    def state_keys(self) -> frozenset:
+        """Every state key this wheel can answer (:func:`carried_states`)."""
+        return carried_states(
+            self.vcnt_ is not None,
+            self.sum_ is not None,
+            self.min_ is not None,
+            self.max_ is not None,
+            self.sumsq_ is not None,
+        )
+
+    def _combine_slice(self, i: int, j: int, states=None) -> dict[str, Any]:
+        """Combine the requested states (all carried ones when ``states`` is
+        ``None``) over the bucket slice ``[i, j)``.
 
         SQL semantics: COUNT(*) counts rows, COUNT(col) counts non-NULL
         values, value aggregates skip NULLs and answer NULL when no non-NULL
         value exists. Keys are emitted only for states this wheel carries —
         the router delegates when a needed key is absent."""
-        n = int(self._pcnt[j] - self._pcnt[i])
-        out: dict[str, Any] = {"count": n}
+        keys = wanted_states(states, self.state_keys)
+        out: dict[str, Any] = {}
+        if "count" in keys or self._pvcnt is None:
+            n = int(self._pcnt[j] - self._pcnt[i])
+            if "count" in keys:
+                out["count"] = n
         if self._pvcnt is not None:
             vn = int(self._pvcnt[j] - self._pvcnt[i])
-            out["count_col"] = vn
+            if "count_col" in keys:
+                out["count_col"] = vn
         else:
             vn = n  # legacy wheel: no NULL tracking — assume no NULLs
-        has_values = self.sum_ is not None or self.min_ is not None or self.max_ is not None
-        if not has_values:
+        value_keys = keys - {"count", "count_col"}
+        if not value_keys:
             return out
         if vn == 0:
-            if self.sum_ is not None:
-                out["sum"] = None
-                out["avg"] = None
-            if self.min_ is not None:
-                out["min"] = None
-            if self.max_ is not None:
-                out["max"] = None
-            if self.sum_ is not None and self.sumsq_ is not None:
-                out["_sumsq"] = 0.0  # raw monoid state for hybrid combining
-                out.update(_variance_states(None, None, 0))
+            for k in value_keys:
+                # _sumsq is the raw monoid state for hybrid combining
+                out[k] = 0.0 if k == "_sumsq" else None
             return out
         s = None
-        if self.sum_ is not None:
+        if value_keys - {"min", "max", "_sumsq"}:
             s = self.sum_[i:j].sum()
+        if "sum" in keys:
             out["sum"] = self._py(s)
+        if "avg" in keys:
             out["avg"] = float(s) / vn
-        if self.min_ is not None:
+        if "min" in keys:
             out["min"] = self._py(np.min(self.min_[i:j]))
-        if self.max_ is not None:
+        if "max" in keys:
             out["max"] = self._py(np.max(self.max_[i:j]))
-        if self.sum_ is not None and self.sumsq_ is not None:
+        var_keys = value_keys.intersection(VARIANCE_KEYS)
+        if "_sumsq" in keys or var_keys:
             sq = float(np.sum(self.sumsq_[i:j]))
-            out["_sumsq"] = sq  # raw monoid state for hybrid combining
-            out.update(_variance_states(float(s), sq, vn))
+            if "_sumsq" in keys:
+                out["_sumsq"] = sq
+            if var_keys:
+                var = _variance_states(float(s), sq, vn)
+                for k in var_keys:
+                    out[k] = var[k]
         return out
 
-    def combine_range(self, start_sec: int, end_sec: int) -> dict[str, Any] | None:
-        """All available aggregate states over ``[start, end)``.
+    def combine_range(
+        self, start_sec: int, end_sec: int, states=None
+    ) -> dict[str, Any] | None:
+        """Aggregate states over ``[start, end)`` — only the keys named in
+        ``states`` (every carried key when ``None``).
 
-        Returns ``{"count": int, "count_col": int, "sum": ..., "min": ...,
-        "max": ..., "avg": ..., variance family}`` — value keys present only
-        when the wheel carries that state; SQL semantics — no non-NULL input
-        ⇒ NULL aggregates, COUNT ⇒ 0. Returns ``None`` when the range is not
-        covered (rewrite must fall through)."""
+        Keys: ``count``, ``count_col``, ``sum``, ``avg``, ``min``, ``max``,
+        the raw ``_sumsq`` and the variance family, each present only when
+        requested AND carried by the wheel; SQL semantics — no non-NULL
+        input ⇒ NULL aggregates, COUNT ⇒ 0. Returns ``None`` when the range
+        is not covered (rewrite must fall through)."""
         if not self.covers(start_sec, end_sec):
             return None
         i, j = self._slice(start_sec, end_sec)
-        return self._combine_slice(i, j)
+        return self._combine_slice(i, j, states)
 
     def landmark(self) -> dict[str, Any]:
         """Aggregate over *all* indexed data — the reference's ``landmark()``
@@ -575,18 +641,20 @@ class WheelIndex:
         return self._landmark
 
     def group_by(
-        self, start_sec: int, end_sec: int, granularity
-    ) -> list[tuple[int, dict[str, Any]]] | None:
+        self, start_sec: int, end_sec: int, granularity, states=None
+    ) -> tuple[np.ndarray, dict[str, list]] | None:
         """``GROUP BY date_trunc(granularity, ts)`` over ``[start, end)`` —
         or, with an **int** granularity, ``GROUP BY window(ts, '<w sec>')``
         at any epoch-aligned tumbling width the wheel buckets divide
         (beyond the reference's five named granularities, lib.rs:348-358).
 
         Reference: per-granularity ``wheel.group_by(range, duration)``
-        (``lib.rs:396-482``). Returns ``[(bucket_start_sec, states), ...]``
-        for **occupied** buckets only (SQL group-by emits no empty groups),
-        in ascending bucket order. Segmented numpy reduction — no per-bucket
-        Python loop over seconds.
+        (``lib.rs:396-482``). Returns ``(bucket_secs, {state: column})``:
+        the ascending starts of the **occupied** buckets only (SQL group-by
+        emits no empty groups) as an int64 array, and one Python-valued
+        column per requested state (same keys, values and types as
+        :meth:`combine_range` over each bucket). Segmented numpy reduction
+        per requested state — no per-bucket Python loop.
         """
         maxw = self._max_width_in(start_sec, end_sec)
         if isinstance(granularity, int):
@@ -605,64 +673,80 @@ class WheelIndex:
             return None
         if not self.covers(start_sec, end_sec):
             return None
+        keys = wanted_states(states, self.state_keys)
         i, j = self._slice(start_sec, end_sec)
         if i == j:
-            return []
+            return np.empty(0, dtype=np.int64), {k: [] for k in keys}
         bucket_ids = bucket_starts(self.secs[i:j], granularity)
         # Boundaries where the bucket id changes → segment starts.
-        seg = np.flatnonzero(np.r_[True, bucket_ids[1:] != bucket_ids[:-1]])
-        keys = bucket_ids[seg]
-        counts = np.add.reduceat(self.cnt[i:j], seg)
-        vns = (
-            np.add.reduceat(self.vcnt_[i:j], seg)
-            if self.vcnt_ is not None
-            else counts
-        )
-        sums = np.add.reduceat(self.sum_[i:j], seg) if self.sum_ is not None else None
-        mins = np.minimum.reduceat(self.min_[i:j], seg) if self.min_ is not None else None
-        maxs = np.maximum.reduceat(self.max_[i:j], seg) if self.max_ is not None else None
-        sqs = (
-            np.add.reduceat(self.sumsq_[i:j], seg)
-            if self.sum_ is not None and self.sumsq_ is not None
-            else None
-        )
-        rows: list[tuple[int, dict[str, Any]]] = []
-        for k in range(keys.size):
-            n = int(counts[k])
-            vn = int(vns[k])
-            states: dict[str, Any] = {"count": n}
-            if self.vcnt_ is not None:
-                states["count_col"] = vn
-            if sums is not None:
-                if vn == 0:
-                    states["sum"] = None
-                    states["avg"] = None
-                else:
-                    states["sum"] = self._py(sums[k])
-                    states["avg"] = float(sums[k]) / vn
-            if mins is not None:
-                states["min"] = self._py(mins[k]) if vn else None
-            if maxs is not None:
-                states["max"] = self._py(maxs[k]) if vn else None
-            if sqs is not None:
+        starts = np.empty(bucket_ids.size, dtype=bool)
+        starts[0] = True
+        np.not_equal(bucket_ids[1:], bucket_ids[:-1], out=starts[1:])
+        seg = starts.nonzero()[0]
+        cols: dict[str, list] = {}
+        value_keys = keys - {"count", "count_col"}
+        counts = None
+        if "count" in keys or self.vcnt_ is None:
+            counts = np.add.reduceat(self.cnt[i:j], seg)
+            if "count" in keys:
+                cols["count"] = counts.tolist()
+        if "count_col" in keys or value_keys:
+            vns = (
+                np.add.reduceat(self.vcnt_[i:j], seg)
+                if self.vcnt_ is not None
+                else counts
+            )
+            if "count_col" in keys:
+                cols["count_col"] = vns.tolist()
+        if not value_keys:
+            return bucket_ids[seg], cols
+        nulls = (vns == 0).nonzero()[0].tolist()  # all-NULL buckets
+        vdtype = np.int64 if self.is_integral else np.float64
+
+        def column(arr, dtype=vdtype, fill=None) -> list:
+            out = arr.astype(dtype, copy=False).tolist()
+            for k in nulls:
+                out[k] = fill
+            return out
+
+        sums = sqs = None
+        if value_keys - {"min", "max", "_sumsq"}:
+            sums = np.add.reduceat(self.sum_[i:j], seg)
+        if "sum" in keys:
+            cols["sum"] = column(sums)
+        if "avg" in keys:
+            with np.errstate(divide="ignore", invalid="ignore"):
+                cols["avg"] = column(sums.astype(np.float64) / vns, np.float64)
+        if "min" in keys:
+            cols["min"] = column(np.minimum.reduceat(self.min_[i:j], seg))
+        if "max" in keys:
+            cols["max"] = column(np.maximum.reduceat(self.max_[i:j], seg))
+        var_keys = [k for k in VARIANCE_KEYS if k in keys]
+        if "_sumsq" in keys or var_keys:
+            sqs = np.add.reduceat(self.sumsq_[i:j], seg)
+            if "_sumsq" in keys:
                 # raw monoid state alongside the derived values: cells from
                 # several disjoint intervals / partition keys re-combine via
                 # _combine_interval_parts, which needs Σx² (the derived
                 # variance values are NOT additive)
-                states["_sumsq"] = float(sqs[k]) if vn else 0.0
-                states.update(
-                    _variance_states(
-                        float(sums[k]) if vn else None,
-                        float(sqs[k]) if vn else None,
-                        vn,
-                    )
+                cols["_sumsq"] = column(sqs, np.float64, 0.0)
+        if var_keys:
+            var = [
+                _variance_states(s, sq, n) if n else None
+                for s, sq, n in zip(
+                    sums.astype(np.float64).tolist(),
+                    sqs.astype(np.float64).tolist(),
+                    vns.tolist(),
                 )
-            rows.append((int(keys[k]), states))
-        return rows
+            ]
+            for k in var_keys:
+                cols[k] = [v[k] if v is not None else None for v in var]
+        return bucket_ids[seg], cols
 
     def hop_group_by(
-        self, start_sec: int, end_sec: int, width_sec: int, slide_sec: int
-    ) -> list[tuple[int, dict[str, Any]]] | None:
+        self, start_sec: int, end_sec: int, width_sec: int, slide_sec: int,
+        states=None,
+    ) -> tuple[np.ndarray, dict[str, list]] | None:
         """``GROUP BY window(ts, width, slide)`` — hopping windows (Spark's
         sliding rollup; ``F.window`` with a slide). Window starts are the
         epoch-aligned multiples of ``slide`` (Spark ``startTime=0``); each
@@ -670,8 +754,9 @@ class WheelIndex:
         the rows inside ``[start, end)``, exactly what Spark computes over a
         WHERE-bounded scan (Spark requires ``slide <= width``; the parser
         delegates gapped shapes so Spark raises its own analysis error).
-        Occupied windows only, ascending. Returns ``None`` when the wheel's
-        buckets can't tile the window grid.
+        Occupied windows only, ascending, in :meth:`group_by`'s column-wise
+        shape. Returns ``None`` when the wheel's buckets can't tile the
+        window grid.
 
         Beyond the reference (tumbling ``date_trunc`` only, lib.rs:348-358)
         — and beyond our own R4 generalization: overlap means this is NOT a
@@ -686,15 +771,18 @@ class WheelIndex:
             return None
         if not self.covers(start_sec, end_sec):
             return None
-        out: list[tuple[int, dict[str, Any]]] = []
+        starts, cells = [], []
         # Smallest window start strictly overlapping [start, end).
         wmin = ((start_sec - width_sec) // slide_sec + 1) * slide_sec
         for wstart in range(wmin, end_sec, slide_sec):
             i, j = self._slice(max(wstart, start_sec), min(wstart + width_sec, end_sec))
             if i == j:
                 continue
-            out.append((wstart, self._combine_slice(i, j)))
-        return out
+            starts.append(wstart)
+            cells.append(self._combine_slice(i, j, states))
+        return states_to_columns(
+            starts, cells, wanted_states(states, self.state_keys)
+        )
 
     # ----------------------------------------------------------- min/max
     def min_max_range(self, start_sec: int, end_sec: int):

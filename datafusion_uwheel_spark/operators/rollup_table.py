@@ -26,7 +26,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.timestamps import GRANULARITY_SECONDS, MICROS_PER_SECOND
-from .lookup import INTEGRAL_SQL_TYPES
+from .lookup import (
+    INTEGRAL_SQL_TYPES,
+    carried_states,
+    states_to_columns,
+    wanted_states,
+)
 
 __all__ = ["SparkRollupWheel"]
 
@@ -281,6 +286,25 @@ class SparkRollupWheel:
             )
         return out
 
+    @property
+    def state_keys(self) -> frozenset:
+        """Every state key this wheel can answer — same rule as
+        :attr:`.lookup.WheelIndex.state_keys`."""
+        cols = self._state_cols
+        return carried_states(
+            self._has_vcnt, "sum" in cols, "min" in cols, "max" in cols,
+            "sumsq" in cols,
+        )
+
+    def _columns(self, rows, states):
+        """Collected ``(__bucket, states...)`` rows → the column-wise
+        group-by contract of :meth:`.lookup.WheelIndex.group_by`."""
+        return states_to_columns(
+            [int(r["__bucket"]) for r in rows],
+            [self._states_from(r.asDict()) for r in rows],
+            wanted_states(states, self.state_keys),
+        )
+
     def _states_row(self, df: DataFrame) -> dict[str, Any]:
         row = df.agg(*self._agg_exprs()).collect()[0].asDict()
         return self._states_from(row)
@@ -291,17 +315,21 @@ class SparkRollupWheel:
         row = self._range(start_sec, end_sec).agg(F.sum("__cnt")).collect()[0][0]
         return int(row or 0)
 
-    def combine_range(self, start_sec: int, end_sec: int) -> dict[str, Any] | None:
+    def combine_range(
+        self, start_sec: int, end_sec: int, states=None
+    ) -> dict[str, Any] | None:
         if not self.covers(start_sec, end_sec):
             return None
-        return self._states_row(self._range(start_sec, end_sec))
+        # the one Spark job computes every state; hand back what was asked
+        st = self._states_row(self._range(start_sec, end_sec))
+        return {k: st[k] for k in wanted_states(states, self.state_keys)}
 
     def landmark(self) -> dict[str, Any]:
         if self._landmark_cache is None:
             self._landmark_cache = self._states_row(self.rollup)
         return self._landmark_cache
 
-    def group_by(self, start_sec: int, end_sec: int, granularity):
+    def group_by(self, start_sec: int, end_sec: int, granularity, states=None):
         from ..functions.timestamps import (
             CALENDAR_GRANULARITIES,
             WEEK_EPOCH_OFFSET_SECONDS,
@@ -345,11 +373,12 @@ class SparkRollupWheel:
             .orderBy("__bucket")
             .collect()
         )
-        return [(int(r["__bucket"]), self._states_from(r.asDict())) for r in rows]
+        return self._columns(rows, states)
 
     def hop_group_by(
-        self, start_sec: int, end_sec: int, width_sec: int, slide_sec: int
-    ) -> list[tuple[int, dict[str, Any]]] | None:
+        self, start_sec: int, end_sec: int, width_sec: int, slide_sec: int,
+        states=None,
+    ):
         """``GROUP BY window(ts, width, slide)`` — hopping windows, the
         Spark-backend spelling of :meth:`.lookup.WheelIndex.hop_group_by`
         (same contract: epoch-aligned window starts, occupied windows only,
@@ -387,7 +416,7 @@ class SparkRollupWheel:
             .orderBy("__bucket")
             .collect()
         )
-        return [(int(r["__bucket"]), self._states_from(r.asDict())) for r in rows]
+        return self._columns(rows, states)
 
     def min_max_range(self, start_sec: int, end_sec: int):
         if "min" not in self._state_cols or "max" not in self._state_cols:

@@ -693,25 +693,14 @@ def _indices_from_rollup(
     def _ord_opt(arr):
         return _ord(arr) if arr is not None else None
 
+    # all-zero at-sliver: rollup_arrays' own dtype/state rules over a
+    # zero-row slice give the empty at-arrays without landing the __at*
+    # columns (each a full-length driver copy)
+    at_tbl = tbl.slice(0, 0) if at_mask is None else tbl
+    _sliver = _at if at_mask is not None else (lambda arr: arr)
     for c in columns:
         arrs = rollup_arrays(tbl, c, types[c], states)
-        if at_mask is None:
-            # all-zero at-sliver: empty at-arrays without landing the
-            # __at* columns (each a full-length driver copy)
-            vdtype = np.int64 if types[c] in _INT_SQL.values() else np.float64
-            _e_i = np.empty(0, dtype=np.int64)
-            _e_v = np.empty(0, dtype=vdtype)
-            ats = {
-                "vcnt": _e_i,
-                "sum": _e_v if "sum" in states else None,
-                "min": _e_v if "min" in states else None,
-                "max": _e_v if "max" in states else None,
-                "sumsq": np.empty(0) if "sumsq" in states else None,
-            }
-            _sliver = lambda arr: arr  # noqa: E731 — already empty
-        else:
-            ats = rollup_arrays(tbl, c, types[c], states, at=True)
-            _sliver = _at
+        ats = rollup_arrays(at_tbl, c, types[c], states, at=True)
         _mark(f"value_{c}")
         out[c] = WheelIndex(
             table,

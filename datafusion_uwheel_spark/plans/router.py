@@ -31,16 +31,22 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import TYPE_CHECKING, Any
 
+import numpy as np
 from pyspark.sql import DataFrame
 
 from ..functions.timestamps import (
     CALENDAR_GRANULARITIES,
     GRANULARITY_SECONDS,
     MICROS_PER_SECOND,
-    sec_to_datetime,
+    secs_to_datetimes,
     us_to_datetime,
 )
-from ..operators.lookup import STAR_AGGREGATION_ALIAS, WheelIndex
+from ..operators.lookup import (
+    STAR_AGGREGATION_ALIAS,
+    VARIANCE_KEYS,
+    WheelIndex,
+    _variance_states,
+)
 from .predicates import (
     MinMaxPredicate,
     _ts_value,
@@ -135,7 +141,9 @@ def _having_holds(val, op: str, lit: float) -> bool:
     return val != lit
 
 
-def _order_limit_rows(q, names: list[str], rows: list[tuple]) -> list[tuple]:
+def _order_limit_rows(
+    q, names: list[str], rows: list[tuple], ascending_cols=()
+) -> list[tuple]:
     """Apply the query's ORDER BY / LIMIT to constant result rows.
 
     NULL placement matches Spark's defaults (ASC → nulls first, DESC →
@@ -144,18 +152,241 @@ def _order_limit_rows(q, names: list[str], rows: list[tuple]) -> list[tuple]:
     last, DESC → NaN first, before nulls' placement), where a bare
     Python tuple sort would leave NaN rows wherever comparison found
     them. Multi-key sorts compose through stable sorting in reverse key
-    order."""
+    order. ``ascending_cols`` are column positions the rows already
+    ascend in with no ties (the bucket of a one-axis group-by): an ORDER
+    BY led by one of them, ascending, is already satisfied."""
 
     def key_of(v):
         nan = isinstance(v, float) and v != v
         return (v is not None, nan, 0.0 if nan else v)
 
-    for col, asc in reversed(q.order_by):
-        i = names.index(col)
-        rows.sort(key=lambda r: key_of(r[i]), reverse=not asc)
+    lead = q.order_by[0] if q.order_by else None
+    if not (lead and lead[1] and names.index(lead[0]) in ascending_cols):
+        for col, asc in reversed(q.order_by):
+            i = names.index(col)
+            rows.sort(key=lambda r: key_of(r[i]), reverse=not asc)
     if q.limit is not None:
         rows = rows[: q.limit]
     return rows
+
+
+def _combine_keys(key: str) -> tuple[str, ...]:
+    """The states that re-combine ``key`` across disjoint parts (OR
+    intervals, IN keys, hybrid core + slivers): the key itself, both
+    counts, and the sum / sum-of-squares the derived aggregates divide."""
+    keys = (key, "count", "count_col")
+    if key in ("sum", "avg"):
+        return keys + ("sum",)
+    if key in VARIANCE_KEYS:
+        return keys + ("sum", "_sumsq")
+    return keys
+
+
+def _lookup_plan(specs, wheels, keys_of=lambda key: (key,)):
+    """Batch one query's state reads per wheel: ``(sources, reads)`` where
+    ``sources[i]`` is the wheel spec ``i`` reads and ``reads`` maps each
+    distinct source to ``(wheel, keys)`` — one kernel call per wheel with
+    the union of the keys its specs name. COUNT(*) reads the row count of a
+    value wheel the query already reads: every wheel passed in shares one
+    filter, so both index the same rows, and one call replaces two."""
+    value = next((w for w in wheels if w.column is not None), None)
+    sources, reads = [], {}
+    for spec, w in zip(specs, wheels):
+        if value is not None and spec.func == "count" and spec.arg is None:
+            w = value
+        sources.append(w)
+        keys = reads.setdefault(id(w), (w, set()))[1]
+        keys.update(keys_of(_state_key(spec)))
+    return sources, reads
+
+
+def _read_states(specs, wheels, read, keys_of=lambda key: (key,)):
+    """``read(wheel, keys)`` once per distinct wheel; returns each spec's
+    answer, or a delegate reason — the reader's own (a string), or "range
+    not covered" when it answers ``None``."""
+    sources, reads = _lookup_plan(specs, wheels, keys_of)
+    got = {}
+    for wid, (w, keys) in reads.items():
+        got[wid] = r = read(w, keys)
+        if r is None or isinstance(r, str):
+            return r or "range not covered"
+    return [got[id(w)] for w in sources]
+
+
+def _group_columns(specs, wheels, read):
+    """Per-spec state columns over one bucket axis, one group-by kernel
+    call per distinct wheel. Returns ``(bucket_secs, columns)`` or a
+    delegate reason. A missing state delegates only when its wheel has
+    occupied buckets. All wheels of one filter index the same rows, so
+    their occupied buckets coincide; differing axes merge defensively
+    (a bucket a wheel lacks reads NULL)."""
+    got = _read_states(specs, wheels, read)
+    if isinstance(got, str):
+        return got
+    axes = [secs for secs, _ in got]
+    secs = axes[0] if axes else np.empty(0, dtype=np.int64)
+    aligned = all(a is secs or np.array_equal(a, secs) for a in axes)
+    if not aligned:
+        secs = np.unique(np.concatenate(axes))
+    cols = []
+    for spec, (wsecs, wcols) in zip(specs, got):
+        key = _state_key(spec)
+        if key not in wcols and len(wsecs):
+            return f"state {key} not indexed"
+        col = wcols.get(key, [])
+        if not aligned:
+            cells = dict(zip(wsecs.tolist(), col))
+            col = [cells.get(b) for b in secs.tolist()]
+        cols.append(col)
+    return secs, cols
+
+
+#: COUNT(*) — the occupancy probe of the keyed families.
+_COUNT_STAR = AggSpec("count", None, None)
+
+
+def _pick_values(specs, got):
+    """Each spec's value from its read states, or a delegate reason (the
+    read's own, or the first state a wheel does not carry)."""
+    if isinstance(got, str):
+        return got
+    values = []
+    for spec, states in zip(specs, got):
+        key = _state_key(spec)
+        if key not in states:
+            return f"state {key} not indexed"
+        values.append(states[key])
+    return values
+
+
+def _family_wheel(fam: dict, spec: AggSpec):
+    """The wheel of one partition value's family an aggregate reads:
+    the count wheel for COUNT(*), else the column's value wheel (matched
+    case-insensitively, as Catalyst resolves columns); ``None`` if absent."""
+    if spec.func == "count" and spec.arg is None:
+        return fam[None]
+    col = (spec.arg or "").lower()
+    for c, w in fam.items():
+        if c is not None and c.lower() == col:
+            return w
+    return None
+
+
+def _merged_columns(specs, parts):
+    """Monoid-merge the cells of disjoint parts (listed IN keys, OR
+    intervals) onto one ascending bucket axis: ``parts`` holds one
+    :func:`_read_states` answer per part, read with :func:`_combine_keys`.
+    Returns ``(bucket_secs, columns)`` or a delegate reason; a missing
+    state delegates only when its part has occupied buckets."""
+    merged = []
+    for i, spec in enumerate(specs):
+        key = _state_key(spec)
+        cells: dict[int, list] = {}
+        for got in parts:
+            secs, cols = got[i]
+            if key not in cols:
+                if len(secs):
+                    return f"state {key} not indexed"
+                continue
+            names = list(cols)
+            for b, *vals in zip(secs.tolist(), *cols.values()):
+                cells.setdefault(b, []).append(dict(zip(names, vals)))
+        merged.append(
+            {b: _combine_interval_parts(key, ps) for b, ps in cells.items()}
+        )
+    buckets = sorted(set().union(*merged))
+    return (
+        np.asarray(buckets, dtype=np.int64),
+        [[m.get(b) for b in buckets] for m in merged],
+    )
+
+
+def _having_keep(q, having_cols) -> list[int] | None:
+    """Row positions passing every HAVING condition (``None``: no HAVING)."""
+    if not q.having:
+        return None
+    conds = [(col, op, lit) for col, (_, op, lit) in zip(having_cols, q.having)]
+    n = len(having_cols[0])
+    return [
+        k for k in range(n) if all(_having_holds(c[k], op, lit) for c, op, lit in conds)
+    ]
+
+
+def _group_rows(q, gb, secs, agg_cols, key_value=None) -> list[tuple]:
+    """Result rows of one bucket axis, built column by column: aggregate
+    columns by select position, the bucket start/end as datetime vectors,
+    and the group key (``ColRef``) repeated."""
+    cols = []
+    for item in q.select_order:
+        if isinstance(item, AggSpec):
+            cols.append(agg_cols[q.aggs.index(item)])
+        elif isinstance(item, ColRef):
+            cols.append([key_value] * len(secs))
+        elif isinstance(item, WindowSpec) and item.field == "end":
+            cols.append(secs_to_datetimes(secs + gb.width_sec))
+        else:
+            cols.append(secs_to_datetimes(secs))
+    return list(zip(*cols))
+
+
+def _bucket_positions(q) -> tuple[int, ...]:
+    """Select positions holding the bucket (date_trunc or window start/end):
+    a one-axis group-by emits rows ascending in each, without ties."""
+    return tuple(
+        i for i, item in enumerate(q.select_order)
+        if not isinstance(item, (AggSpec, ColRef))
+    )
+
+
+def _filter_rows(keep, secs, cols):
+    """Keep the HAVING-passing positions of an axis and its columns."""
+    if keep is None:
+        return secs, cols
+    return secs[keep], [[c[k] for k in keep] for c in cols]
+
+
+def _cell_reader(gb, gran, start_sec, end_sec):
+    """The group-by kernel call for one grouping over one range."""
+    if isinstance(gb, WindowSpec) and gb.hopping:
+        return lambda w, keys: w.hop_group_by(
+            start_sec, end_sec, gb.width_sec, gb.slide_sec, keys
+        )
+    return lambda w, keys: w.group_by(start_sec, end_sec, gran, keys)
+
+
+_GROUP_GRANULARITIES = frozenset(GRANULARITY_SECONDS) | frozenset(
+    CALENDAR_GRANULARITIES
+)
+
+
+def _group_gate(gb, time_column):
+    """``(granularity, hopping)`` for a grouping the wheels answer — the
+    engine's time column at a named granularity or a window width — else
+    ``None`` (delegate: any other column would bucket the wrong axis)."""
+    if gb.column != time_column:
+        return None
+    if isinstance(gb, WindowSpec):
+        return gb.width_sec, gb.hopping
+    if gb.granularity not in _GROUP_GRANULARITIES:
+        return None
+    return gb.granularity, False
+
+
+def _landmark_span(wheels) -> tuple[int, int]:
+    """The occupied span of complete wheels — a landmark group-by's range."""
+    spans = [w for w in wheels if not w.empty]
+    if not spans:
+        return 0, 0
+    return (
+        min(w.low_sec for w in spans),
+        max(w.high_sec_exclusive for w in spans),
+    )
+
+
+def _gran_detail(gb, gran, hopping) -> str:
+    if hopping:
+        return f"window:{gb.width_sec}s/{gb.slide_sec}s"
+    return gran if isinstance(gran, str) else f"window:{gran}s"
 
 
 def _combine_interval_parts(key: str, parts: list[dict]):
@@ -177,8 +408,6 @@ def _combine_interval_parts(key: str, parts: list[dict]):
     if key == "avg":
         return float(total_sum) / vn
     total_sq = sum(p["_sumsq"] for p in parts)
-    from ..operators.lookup import _variance_states
-
     return _variance_states(float(total_sum), float(total_sq), vn)[key]
 
 
@@ -278,8 +507,6 @@ def _hybrid_agg_value(key: str, core: dict, up, low_bucket, low_at):
         return False, None
     if vn == 0:
         return True, None
-    from ..operators.lookup import _variance_states
-
     return True, _variance_states(float(s), float(sq), vn)[key]
 
 
@@ -314,8 +541,6 @@ def _combine_core_boundary(agg: AggSpec, core: dict, brow: dict):
     if vn == 0:
         return None
     total_sq = (core.get("_sumsq") or 0.0) + float(brow.get(f"__sumsq_{c}") or 0.0)
-    from ..operators.lookup import _variance_states
-
     return _variance_states(float(total_sum), total_sq, vn)[key]
 
 
@@ -661,18 +886,17 @@ class Router:
                 )
             wheels.append(w)
 
-        values: list[Any] = []
-        for agg, w in zip(q.aggs, wheels):
-            states = w.combine_range(rng.start_sec, rng.end_sec)
-            if states is None:  # outside indexed range → fall through (lib.rs:1498-1518)
-                return RouteDecision("delegate", detail={"reason": "range not covered"}), None
-            key = _state_key(agg)
-            if key not in states:  # state not built on this wheel (per-agg subset)
-                return (
-                    RouteDecision("delegate", detail={"reason": f"state {key} not indexed"}),
-                    None,
-                )
-            values.append(states[key])
+        # outside indexed range → fall through (lib.rs:1498-1518); a state
+        # not built on a wheel (per-agg subset) delegates too
+        values = _pick_values(
+            q.aggs,
+            _read_states(
+                q.aggs, wheels,
+                lambda w, keys: w.combine_range(rng.start_sec, rng.end_sec, keys),
+            ),
+        )
+        if isinstance(values, str):
+            return RouteDecision("delegate", detail={"reason": values}), None
 
         kind = (
             "count_range"
@@ -752,26 +976,18 @@ class Router:
         if q.group_key is not None:
             return self._try_dim_group_by(q, rng, residual)
         gb = q.group_by
-        if isinstance(gb, WindowSpec):
-            # Tumbling window(ts, 'w') — any second-aligned width answers
-            # from the wheel (the reference's R4 only maps five named
-            # date_trunc granularities, lib.rs:348-358; Spark's idiomatic
-            # temporal-rollup shape is this one). A slide != width makes it
-            # hopping — overlapping windows via WheelIndex.hop_group_by.
-            if gb.column != e.time_column:
-                return (
-                    RouteDecision("delegate", detail={"reason": "unsupported group expr"}),
-                    None,
-                )
-            gran = gb.width_sec
-        else:
-            supported = set(GRANULARITY_SECONDS) | set(CALENDAR_GRANULARITIES)
-            if gb.column != e.time_column or gb.granularity not in supported:
-                return (
-                    RouteDecision("delegate", detail={"reason": "unsupported group expr"}),
-                    None,
-                )
-            gran = gb.granularity
+        # Tumbling window(ts, 'w') — any second-aligned width answers from
+        # the wheel (the reference's R4 only maps five named date_trunc
+        # granularities, lib.rs:348-358; Spark's idiomatic temporal-rollup
+        # shape is this one). A slide != width makes it hopping —
+        # overlapping windows via WheelIndex.hop_group_by.
+        gate = _group_gate(gb, e.time_column)
+        if gate is None:
+            return (
+                RouteDecision("delegate", detail={"reason": "unsupported group expr"}),
+                None,
+            )
+        gran, hopping = gate
         if residual:
             hit = self._partition_in_match(residual)
             if hit is not None and canonical_filter_key(residual) not in e.count_wheels:
@@ -796,12 +1012,7 @@ class Router:
                     RouteDecision("delegate", detail={"reason": "no complete index", "fk": fk}),
                     None,
                 )
-            spans = [w for w in wheels if not w.empty]
-            if not spans:
-                start_sec, end_sec = 0, 0
-            else:
-                start_sec = min(w.low_sec for w in spans)
-                end_sec = max(w.high_sec_exclusive for w in spans)
+            start_sec, end_sec = _landmark_span(wheels)
             kind = "group_by_landmark"
         elif rng is None or not rng.routable:
             # BETWEEN / `<=` / `>` bounds on a GROUP BY: core cells from the
@@ -810,11 +1021,7 @@ class Router:
             # per cell — beyond both the reference, which approximates the
             # ops and has no such group surface, and the scalar-only r4
             # hybrid here).
-            if (
-                rng is not None
-                and rng.hybrid_routable
-                and not (isinstance(gb, WindowSpec) and gb.hopping)
-            ):
+            if rng is not None and rng.hybrid_routable and not hopping:
                 return self._try_group_by_hybrid(
                     q, gb, gran, rng, residual, wheels, fk
                 )
@@ -822,72 +1029,29 @@ class Router:
         else:
             start_sec, end_sec = rng.start_sec, rng.end_sec
 
-        hopping = isinstance(gb, WindowSpec) and gb.hopping
-
-        def _bucket_states(w):
-            if hopping:
-                return w.hop_group_by(start_sec, end_sec, gb.width_sec, gb.slide_sec)
-            return w.group_by(start_sec, end_sec, gran)
-
-        per_wheel = []
-        for agg, w in zip(q.aggs, wheels):
-            got = _bucket_states(w)
-            if got is None:
-                return RouteDecision("delegate", detail={"reason": "range not covered"}), None
-            key = _state_key(agg)
-            if got and key not in got[0][1]:  # state not built (per-agg subset)
+        # HAVING aggregates read per bucket from wheel states too — they
+        # need not be in the select list
+        hwheels = []
+        for spec, _op, _lit in q.having:
+            hw = self._resolve_wheel(spec, fk)
+            if hw is None:
                 return (
-                    RouteDecision("delegate", detail={"reason": f"state {key} not indexed"}),
+                    RouteDecision(
+                        "delegate", detail={"reason": f"no index for HAVING {spec.func}"}
+                    ),
                     None,
                 )
-            per_wheel.append({b: st[key] for b, st in got})
-
-        # All wheels sharing a filter key were built from the same filtered
-        # source, so their occupied buckets coincide; merge defensively anyway.
-        buckets = sorted(set().union(*per_wheel)) if per_wheel else []
-
-        if q.having:
-            # Evaluate each HAVING aggregate per bucket from wheel states —
-            # the aggregate need not be in the select list.
-            hconds = []
-            for spec, op, lit in q.having:
-                hw = self._resolve_wheel(spec, fk)
-                if hw is None:
-                    return (
-                        RouteDecision(
-                            "delegate", detail={"reason": f"no index for HAVING {spec.func}"}
-                        ),
-                        None,
-                    )
-                hgot = _bucket_states(hw)
-                if hgot is None:
-                    return RouteDecision("delegate", detail={"reason": "range not covered"}), None
-                hkey = _state_key(spec)
-                if hgot and hkey not in hgot[0][1]:
-                    return (
-                        RouteDecision(
-                            "delegate", detail={"reason": f"state {hkey} not indexed"}
-                        ),
-                        None,
-                    )
-                hconds.append(({b: st[hkey] for b, st in hgot}, op, lit))
-            buckets = [
-                b
-                for b in buckets
-                if all(_having_holds(hv.get(b), op, lit) for hv, op, lit in hconds)
-            ]
-        rows = []
-        for b in buckets:
-            row: list[Any] = []
-            for item in q.select_order:
-                if isinstance(item, AggSpec):
-                    idx = q.aggs.index(item)
-                    row.append(per_wheel[idx].get(b))
-                elif isinstance(item, WindowSpec) and item.field == "end":
-                    row.append(sec_to_datetime(b + gb.width_sec))
-                else:
-                    row.append(sec_to_datetime(b))
-            rows.append(tuple(row))
+            hwheels.append(hw)
+        specs = [*q.aggs, *(spec for spec, _op, _lit in q.having)]
+        got = _group_columns(
+            specs, wheels + hwheels, _cell_reader(gb, gran, start_sec, end_sec)
+        )
+        if isinstance(got, str):
+            return RouteDecision("delegate", detail={"reason": got}), None
+        secs, cols = got
+        n = len(q.aggs)
+        secs, agg_cols = _filter_rows(_having_keep(q, cols[n:]), secs, cols[:n])
+        rows = _group_rows(q, gb, secs, agg_cols)
 
         names, types = [], []
         for item in q.select_order:
@@ -897,25 +1061,16 @@ class Router:
             else:
                 types.append("TIMESTAMP")
         if q.order_by or q.limit is not None:
-            rows = _order_limit_rows(q, names, rows)
+            rows = _order_limit_rows(q, names, rows, _bucket_positions(q))
         df = self._constant_relation(names, types, rows)
         return (
             RouteDecision(
                 kind,
                 index_key=wheels[0].key,
-                detail={
-                    "granularity": (
-                        f"window:{gb.width_sec}s/{gb.slide_sec}s"
-                        if hopping
-                        else gran if isinstance(gran, str) else f"window:{gran}s"
-                    ),
-                    "fk": fk,
-                },
+                detail={"granularity": _gran_detail(gb, gran, hopping), "fk": fk},
             ),
             df,
         )
-
-
 
     def _try_approx(self, q, rng, residual):
         """OPT-IN routing of Spark's approximate aggregates to the sketch
@@ -1101,7 +1256,11 @@ class Router:
         n = 0
         for v in values:
             cw = pset["wheels"][v][None]
-            st = cw.landmark() if landmark else cw.combine_range(rng.start_sec, rng.end_sec)
+            st = (
+                cw.landmark()
+                if landmark
+                else cw.combine_range(rng.start_sec, rng.end_sec, ("count",))
+            )
             if st is None:
                 return (
                     RouteDecision("delegate", detail={"reason": "range not covered"}),
@@ -1154,16 +1313,6 @@ class Router:
             sel_values = hit[1]
         values = sel_values if sel_values is not None else list(pset["wheels"])
 
-        def wheel_for(v, agg):
-            fam = pset["wheels"][v]
-            if agg is None or (agg.func == "count" and agg.arg is None):
-                return fam[None]
-            col = (agg.arg or "").lower()
-            for c, w in fam.items():
-                if c is not None and c.lower() == col:
-                    return w
-            return None
-
         temporal_left = len(residual) != len(q.conjuncts)
         kind = "group_by"
         if rng is None and not temporal_left:
@@ -1179,78 +1328,56 @@ class Router:
                 None,
             )
 
-        def states_of(w):
+        def states_of(w, keys):
             if kind == "group_by_landmark":
                 return w.landmark()
-            return w.combine_range(rng.start_sec, rng.end_sec)
+            return w.combine_range(rng.start_sec, rng.end_sec, keys)
 
+        hspecs = [spec for spec, _op, _lit in q.having]
+        specs = [_COUNT_STAR, *q.aggs, *hspecs]
+        n = len(q.aggs)
         rows = []
         type_wheels: dict[int, WheelIndex] = {}
         for v in values:
-            cstates = states_of(pset["wheels"][v][None])
-            if cstates is None:
-                return (
-                    RouteDecision("delegate", detail={"reason": "range not covered"}),
-                    None,
-                )
-            if cstates["count"] == 0:
-                continue  # no rows for this key in range → no group
-            agg_vals = {}
-            for i, agg in enumerate(q.aggs):
-                w = wheel_for(v, agg)
-                if w is None:
-                    return (
-                        RouteDecision(
-                            "delegate", detail={"reason": f"no index for {agg.func}"}
-                        ),
-                        None,
-                    )
-                type_wheels[i] = w
-                st = states_of(w)
-                key = _state_key(agg)
-                if st is None:
+            wheels = [_family_wheel(pset["wheels"][v], spec) for spec in specs]
+            if None in wheels:
+                # a key without rows in range emits no group, whatever
+                # wheel it lacks
+                cstates = states_of(wheels[0], ("count",))
+                if cstates is None:
                     return (
                         RouteDecision("delegate", detail={"reason": "range not covered"}),
                         None,
                     )
-                if key not in st:
-                    return (
-                        RouteDecision(
-                            "delegate", detail={"reason": f"state {key} not indexed"}
-                        ),
-                        None,
-                    )
-                agg_vals[i] = st[key]
-            if q.having:
-                ok = True
-                for spec, op, lit in q.having:
-                    hw = wheel_for(v, spec)
-                    if hw is None:
-                        return (
-                            RouteDecision(
-                                "delegate",
-                                detail={"reason": f"no index for HAVING {spec.func}"},
-                            ),
-                            None,
-                        )
-                    hst = states_of(hw)
-                    hkey = _state_key(spec)
-                    if hst is None or hkey not in hst:
-                        return (
-                            RouteDecision(
-                                "delegate", detail={"reason": "HAVING state missing"}
-                            ),
-                            None,
-                        )
-                    if not _having_holds(hst[hkey], op, lit):
-                        ok = False
-                        break
-                if not ok:
+                if cstates["count"] == 0:
                     continue
+                i = wheels.index(None)
+                what = "" if i <= n else "HAVING "
+                return (
+                    RouteDecision(
+                        "delegate",
+                        detail={"reason": f"no index for {what}{specs[i].func}"},
+                    ),
+                    None,
+                )
+            got = _read_states(specs, wheels, states_of)
+            if isinstance(got, str):
+                return RouteDecision("delegate", detail={"reason": got}), None
+            if got[0]["count"] == 0:
+                continue  # no rows for this key in range → no group
+            vals = _pick_values(specs[1:], got[1:])
+            if isinstance(vals, str):
+                return RouteDecision("delegate", detail={"reason": vals}), None
+            type_wheels.update(enumerate(wheels[1 : n + 1]))
+            if not all(
+                _having_holds(val, op, lit)
+                for val, (_spec, op, lit) in zip(vals[n:], q.having)
+            ):
+                continue
             row = []
             for item in q.select_order:
                 if isinstance(item, AggSpec):
-                    row.append(agg_vals[q.aggs.index(item)])
+                    row.append(vals[q.aggs.index(item)])
                 else:  # ColRef — the key itself
                     row.append(v)
             rows.append(tuple(row))
@@ -1262,7 +1389,7 @@ class Router:
                 i = q.aggs.index(item)
                 tw = type_wheels.get(i)
                 if tw is None:  # zero emitted groups — type from any family
-                    tw = wheel_for(next(iter(pset["wheels"])), item)
+                    tw = _family_wheel(next(iter(pset["wheels"].values())), item)
                 if tw is None:
                     return (
                         RouteDecision(
@@ -1295,16 +1422,6 @@ class Router:
         gran = gb.width_sec if isinstance(gb, WindowSpec) else gb.granularity
         hopping = isinstance(gb, WindowSpec) and gb.hopping
 
-        def wheel_for(v, agg):
-            fam = pset["wheels"][v]
-            if agg.func == "count" and agg.arg is None:
-                return fam[None]
-            col = (agg.arg or "").lower()
-            for c, w in fam.items():
-                if c is not None and c.lower() == col:
-                    return w
-            return None
-
         kind = "group_by"
         if rng is None and len(q.conjuncts) == 1:  # IN residual only
             allw = [pset["wheels"][v][None] for v in values]
@@ -1313,12 +1430,7 @@ class Router:
                     RouteDecision("delegate", detail={"reason": "no complete index"}),
                     None,
                 )
-            spans = [w for w in allw if not w.empty]
-            if not spans:
-                start_sec, end_sec = 0, 0
-            else:
-                start_sec = min(w.low_sec for w in spans)
-                end_sec = max(w.high_sec_exclusive for w in spans)
+            start_sec, end_sec = _landmark_span(allw)
             kind = "group_by_landmark"
         elif rng is None or not rng.routable:
             return (
@@ -1328,60 +1440,28 @@ class Router:
         else:
             start_sec, end_sec = rng.start_sec, rng.end_sec
 
-        def _bucket_states(w):
-            if hopping:
-                return w.hop_group_by(start_sec, end_sec, gb.width_sec, gb.slide_sec)
-            return w.group_by(start_sec, end_sec, gran)
-
-        def merged(agg):
-            key = _state_key(agg)
-            per_bucket: dict[int, list] = {}
-            for v in values:
-                w = wheel_for(v, agg)
-                if w is None:
-                    return None, f"no index for {agg.func}"
-                got = _bucket_states(w)
-                if got is None:
-                    return None, "range not covered"
-                if got and key not in got[0][1]:
-                    return None, f"state {key} not indexed"
-                for b, st in got:
-                    per_bucket.setdefault(b, []).append(st)
-            return (
-                {b: _combine_interval_parts(key, parts) for b, parts in per_bucket.items()},
-                None,
-            )
-
-        per_agg = []
-        for agg in q.aggs:
-            m, err = merged(agg)
-            if m is None:
-                return RouteDecision("delegate", detail={"reason": err}), None
-            per_agg.append(m)
-        buckets = sorted(set().union(*per_agg)) if per_agg else []
-        if q.having:
-            hconds = []
-            for spec, op, lit in q.having:
-                m, err = merged(spec)
-                if m is None:
-                    return RouteDecision("delegate", detail={"reason": err}), None
-                hconds.append((m, op, lit))
-            buckets = [
-                b
-                for b in buckets
-                if all(_having_holds(hv.get(b), op, lit) for hv, op, lit in hconds)
-            ]
-        rows = []
-        for b in buckets:
-            row = []
-            for item in q.select_order:
-                if isinstance(item, AggSpec):
-                    row.append(per_agg[q.aggs.index(item)].get(b))
-                elif isinstance(item, WindowSpec) and item.field == "end":
-                    row.append(sec_to_datetime(b + gb.width_sec))
-                else:
-                    row.append(sec_to_datetime(b))
-            rows.append(tuple(row))
+        read = _cell_reader(gb, gran, start_sec, end_sec)
+        specs = [*q.aggs, *(spec for spec, _op, _lit in q.having)]
+        parts = []
+        for v in values:
+            wheels = [_family_wheel(pset["wheels"][v], spec) for spec in specs]
+            if None in wheels:
+                spec = specs[wheels.index(None)]
+                return (
+                    RouteDecision("delegate", detail={"reason": f"no index for {spec.func}"}),
+                    None,
+                )
+            got = _read_states(specs, wheels, read, _combine_keys)
+            if isinstance(got, str):
+                return RouteDecision("delegate", detail={"reason": got}), None
+            parts.append(got)
+        got = _merged_columns(specs, parts)
+        if isinstance(got, str):
+            return RouteDecision("delegate", detail={"reason": got}), None
+        secs, cols = got
+        n = len(q.aggs)
+        secs, agg_cols = _filter_rows(_having_keep(q, cols[n:]), secs, cols[:n])
+        rows = _group_rows(q, gb, secs, agg_cols)
         names, types = [], []
         any_key = next(iter(pset["wheels"]))
         for item in q.select_order:
@@ -1389,7 +1469,7 @@ class Router:
             if isinstance(item, AggSpec):
                 tw = None
                 for v in [*values, any_key]:
-                    tw = wheel_for(v, item)
+                    tw = _family_wheel(pset["wheels"][v], item)
                     if tw is not None:
                         break
                 if tw is None:
@@ -1403,7 +1483,7 @@ class Router:
             else:
                 types.append("TIMESTAMP")
         if q.order_by or q.limit is not None:
-            rows = _order_limit_rows(q, names, rows)
+            rows = _order_limit_rows(q, names, rows, _bucket_positions(q))
         df = self._constant_relation(names, types, rows)
         return (
             RouteDecision(
@@ -1412,11 +1492,7 @@ class Router:
                 detail={
                     "in_keys": len(values),
                     "partition_by": pset["key_column"],
-                    "granularity": (
-                        f"window:{gb.width_sec}s/{gb.slide_sec}s"
-                        if hopping
-                        else gran if isinstance(gran, str) else f"window:{gran}s"
-                    ),
+                    "granularity": _gran_detail(gb, gran, hopping),
                 },
             ),
             df,
@@ -1454,18 +1530,6 @@ class Router:
         the same combine as OR-of-ranges, applied across keys instead of
         intervals. ``rng=None`` means the keyed-IN landmark (no temporal
         bounds; every listed wheel must be complete)."""
-        fam0 = next(iter(pset["wheels"].values()))
-
-        def wheel_for(v, agg):
-            fam = pset["wheels"][v]
-            if agg.func == "count" and agg.arg is None:
-                return fam[None]
-            col = (agg.arg or "").lower()
-            for c, w in fam.items():
-                if c is not None and c.lower() == col:
-                    return w
-            return None
-
         if rng is None:
             for v in values:
                 if not pset["wheels"][v][None].complete:
@@ -1473,55 +1537,44 @@ class Router:
                         RouteDecision("delegate", detail={"reason": "no complete index"}),
                         None,
                     )
+            read = lambda w, keys: w.landmark()  # noqa: E731
         elif not rng.routable:
             return (
                 RouteDecision("delegate", detail={"reason": "no exact aligned range"}),
                 None,
             )
+        else:
+            read = lambda w, keys: w.combine_range(  # noqa: E731
+                rng.start_sec, rng.end_sec, keys
+            )
 
+        parts = []
+        for v in values:
+            wheels = [_family_wheel(pset["wheels"][v], agg) for agg in q.aggs]
+            if None in wheels:
+                agg = q.aggs[wheels.index(None)]
+                return (
+                    RouteDecision("delegate", detail={"reason": f"no index for {agg.func}"}),
+                    None,
+                )
+            got = _read_states(q.aggs, wheels, read, _combine_keys)
+            vals = _pick_values(q.aggs, got)  # availability gate
+            if isinstance(vals, str):
+                return RouteDecision("delegate", detail={"reason": vals}), None
+            parts.append(got)
+        # typed from the last listed family (every listed value absent —
+        # still typed, from any family)
+        type_fam = pset["wheels"][values[-1] if values else next(iter(pset["wheels"]))]
         out, wheels = [], []
-        for agg in q.aggs:
-            key = _state_key(agg)
-            parts = []
-            type_wheel = None
-            for v in values:
-                w = wheel_for(v, agg)
-                if w is None:
-                    return (
-                        RouteDecision(
-                            "delegate", detail={"reason": f"no index for {agg.func}"}
-                        ),
-                        None,
-                    )
-                type_wheel = w
-                if rng is None:
-                    st = w.landmark()
-                else:
-                    st = w.combine_range(rng.start_sec, rng.end_sec)
-                if st is None:
-                    return (
-                        RouteDecision("delegate", detail={"reason": "range not covered"}),
-                        None,
-                    )
-                if key not in st:
-                    return (
-                        RouteDecision(
-                            "delegate", detail={"reason": f"state {key} not indexed"}
-                        ),
-                        None,
-                    )
-                parts.append(st)
-            if type_wheel is None:  # every listed value absent — still typed
-                type_wheel = wheel_for(next(iter(pset["wheels"])), agg)
-                if type_wheel is None:
-                    return (
-                        RouteDecision(
-                            "delegate", detail={"reason": f"no index for {agg.func}"}
-                        ),
-                        None,
-                    )
-            out.append(_combine_interval_parts(key, parts))
-            wheels.append(type_wheel)
+        for i, agg in enumerate(q.aggs):
+            w = _family_wheel(type_fam, agg)
+            if w is None:
+                return (
+                    RouteDecision("delegate", detail={"reason": f"no index for {agg.func}"}),
+                    None,
+                )
+            out.append(_combine_interval_parts(_state_key(agg), [p[i] for p in parts]))
+            wheels.append(w)
         df = self._scalar_result(q.aggs, out, wheels, q)
         return (
             RouteDecision(
@@ -1568,23 +1621,13 @@ class Router:
                     None,
                 )
             sel_values = hit[1]
-        if isinstance(gb, WindowSpec):
-            if gb.column != e.time_column:
-                return (
-                    RouteDecision("delegate", detail={"reason": "unsupported group expr"}),
-                    None,
-                )
-            gran = gb.width_sec
-            hopping = gb.hopping
-        else:
-            supported = set(GRANULARITY_SECONDS) | set(CALENDAR_GRANULARITIES)
-            if gb.column != e.time_column or gb.granularity not in supported:
-                return (
-                    RouteDecision("delegate", detail={"reason": "unsupported group expr"}),
-                    None,
-                )
-            gran = gb.granularity
-            hopping = False
+        gate = _group_gate(gb, e.time_column)
+        if gate is None:
+            return (
+                RouteDecision("delegate", detail={"reason": "unsupported group expr"}),
+                None,
+            )
+        gran, hopping = gate
 
         if not pset["wheels"]:
             return (
@@ -1592,16 +1635,6 @@ class Router:
                 None,
             )
         values = sel_values if sel_values is not None else list(pset["wheels"])
-
-        def wheel_for(v, agg):
-            wheels = pset["wheels"][v]
-            if agg.func == "count" and agg.arg is None:
-                return wheels[None]
-            col = (agg.arg or "").lower()
-            for c, w in wheels.items():
-                if c is not None and c.lower() == col:
-                    return w
-            return None
 
         kind = "group_by"
         if rng is None and not q.conjuncts:
@@ -1611,105 +1644,44 @@ class Router:
                     RouteDecision("delegate", detail={"reason": "no complete index"}),
                     None,
                 )
-            spans = [w for w in allw if not w.empty]
-            if not spans:
-                start_sec, end_sec = 0, 0
-            else:
-                start_sec = min(w.low_sec for w in spans)
-                end_sec = max(w.high_sec_exclusive for w in spans)
+            start_sec, end_sec = _landmark_span(allw)
             kind = "group_by_landmark"
         elif rng is None or not rng.routable:
             return RouteDecision("delegate", detail={"reason": "no exact aligned range"}), None
         else:
             start_sec, end_sec = rng.start_sec, rng.end_sec
 
-        def _bucket_states(w):
-            if hopping:
-                return w.hop_group_by(start_sec, end_sec, gb.width_sec, gb.slide_sec)
-            return w.group_by(start_sec, end_sec, gran)
-
+        read = _cell_reader(gb, gran, start_sec, end_sec)
+        specs = [*q.aggs, *(spec for spec, _op, _lit in q.having)]
+        n = len(q.aggs)
         rows = []
         for v in values:
-            per_agg = []
-            for agg in q.aggs:
-                w = wheel_for(v, agg)
-                if w is None:
-                    return (
-                        RouteDecision(
-                            "delegate", detail={"reason": f"no index for {agg.func}"}
-                        ),
-                        None,
-                    )
-                got = _bucket_states(w)
-                if got is None:
-                    return (
-                        RouteDecision("delegate", detail={"reason": "range not covered"}),
-                        None,
-                    )
-                key = _state_key(agg)
-                if got and key not in got[0][1]:
-                    return (
-                        RouteDecision(
-                            "delegate", detail={"reason": f"state {key} not indexed"}
-                        ),
-                        None,
-                    )
-                per_agg.append({b: st[key] for b, st in got})
-            buckets = sorted(set().union(*per_agg)) if per_agg else []
-            if q.having:
-                hconds = []
-                for spec, op, lit in q.having:
-                    hw = wheel_for(v, spec)
-                    if hw is None:
-                        return (
-                            RouteDecision(
-                                "delegate",
-                                detail={"reason": f"no index for HAVING {spec.func}"},
-                            ),
-                            None,
-                        )
-                    hgot = _bucket_states(hw)
-                    if hgot is None:
-                        return (
-                            RouteDecision(
-                                "delegate", detail={"reason": "range not covered"}
-                            ),
-                            None,
-                        )
-                    hkey = _state_key(spec)
-                    if hgot and hkey not in hgot[0][1]:
-                        return (
-                            RouteDecision(
-                                "delegate",
-                                detail={"reason": f"state {hkey} not indexed"},
-                            ),
-                            None,
-                        )
-                    hconds.append(({b: st[hkey] for b, st in hgot}, op, lit))
-                buckets = [
-                    b
-                    for b in buckets
-                    if all(_having_holds(hv.get(b), op, lit) for hv, op, lit in hconds)
-                ]
-            for b in buckets:
-                row = []
-                for item in q.select_order:
-                    if isinstance(item, AggSpec):
-                        row.append(per_agg[q.aggs.index(item)].get(b))
-                    elif isinstance(item, ColRef):
-                        row.append(v)
-                    elif isinstance(item, WindowSpec) and item.field == "end":
-                        row.append(sec_to_datetime(b + gb.width_sec))
-                    else:
-                        row.append(sec_to_datetime(b))
-                rows.append(tuple(row))
+            wheels = [_family_wheel(pset["wheels"][v], spec) for spec in specs]
+            if None in wheels:
+                i = wheels.index(None)
+                what = "" if i < n else "HAVING "
+                return (
+                    RouteDecision(
+                        "delegate",
+                        detail={"reason": f"no index for {what}{specs[i].func}"},
+                    ),
+                    None,
+                )
+            got = _group_columns(specs, wheels, read)
+            if isinstance(got, str):
+                return RouteDecision("delegate", detail={"reason": got}), None
+            secs, cols = got
+            secs, agg_cols = _filter_rows(_having_keep(q, cols[n:]), secs, cols[:n])
+            rows += _group_rows(q, gb, secs, agg_cols, key_value=v)
 
         names, types = [], []
         for item in q.select_order:
             names.append(item.output_name)
             if isinstance(item, AggSpec):
                 w = next(
-                    w for v in values if (w := wheel_for(v, item)) is not None
+                    w
+                    for v in values
+                    if (w := _family_wheel(pset["wheels"][v], item)) is not None
                 )
                 types.append(_agg_sql_type(item, w))
             elif isinstance(item, ColRef):
@@ -1726,11 +1698,7 @@ class Router:
                 detail={
                     "partition_by": q.group_key,
                     "keys": len(values),
-                    "granularity": (
-                        f"window:{gb.width_sec}s/{gb.slide_sec}s"
-                        if hopping
-                        else gran if isinstance(gran, str) else f"window:{gran}s"
-                    ),
+                    "granularity": _gran_detail(gb, gran, hopping),
                 },
             ),
             df,
@@ -1820,7 +1788,7 @@ class Router:
         if q.group_by is not None:
             return self._try_or_group_by(q, merged, fk)
 
-        values, wheels = [], []
+        wheels = []
         for agg in q.aggs:
             w = self._resolve_wheel(agg, fk)
             if w is None:
@@ -1828,20 +1796,22 @@ class Router:
                     RouteDecision("delegate", detail={"reason": f"no index for {agg.func}", "fk": fk}),
                     None,
                 )
-            key = _state_key(agg)
-            parts = []
-            for s, t in merged:
-                st = w.combine_range(s, t)
-                if st is None:
-                    return RouteDecision("delegate", detail={"reason": "range not covered"}), None
-                if key not in st:
-                    return (
-                        RouteDecision("delegate", detail={"reason": f"state {key} not indexed"}),
-                        None,
-                    )
-                parts.append(st)
-            values.append(_combine_interval_parts(key, parts))
             wheels.append(w)
+        parts = []
+        for s, t in merged:
+            got = _read_states(
+                q.aggs, wheels,
+                lambda w, keys: w.combine_range(s, t, keys),  # noqa: B023
+                _combine_keys,
+            )
+            vals = _pick_values(q.aggs, got)  # availability gate
+            if isinstance(vals, str):
+                return RouteDecision("delegate", detail={"reason": vals}), None
+            parts.append(got)
+        values = [
+            _combine_interval_parts(_state_key(agg), [p[i] for p in parts])
+            for i, agg in enumerate(q.aggs)
+        ]
         df = self._scalar_result(q.aggs, values, wheels, q)
         return (
             RouteDecision(
@@ -1870,98 +1840,42 @@ class Router:
         # be the engine's time column (the wheel's buckets ARE that column
         # — grouping another timestamp here would silently bucket on the
         # wrong axis) at a supported granularity
-        if isinstance(gb, WindowSpec):
-            if gb.column != e.time_column:
-                return (
-                    RouteDecision(
-                        "delegate", detail={"reason": "unsupported group expr"}
-                    ),
-                    None,
-                )
-        else:
-            supported = set(GRANULARITY_SECONDS) | set(CALENDAR_GRANULARITIES)
-            if gb.column != e.time_column or gb.granularity not in supported:
-                return (
-                    RouteDecision(
-                        "delegate", detail={"reason": "unsupported group expr"}
-                    ),
-                    None,
-                )
-        gran = gb.width_sec if isinstance(gb, WindowSpec) else gb.granularity
-        hopping = isinstance(gb, WindowSpec) and gb.hopping
-
-        def merged_cells(agg):
-            w = self._resolve_wheel(agg, fk)
-            if w is None:
-                return None, None, f"no index for {agg.func}"
-            key = _state_key(agg)
-            per_bucket: dict[int, list] = {}
-            for s, t in merged:
-                got = (
-                    w.hop_group_by(s, t, gb.width_sec, gb.slide_sec)
-                    if hopping
-                    else w.group_by(s, t, gran)
-                )
-                if got is None:
-                    return None, None, "range not covered"
-                if got:
-                    # occupied cells prove state availability directly
-                    if key not in got[0][1]:
-                        return None, None, f"state {key} not indexed"
-                else:
-                    # empty interval: validate availability from the range
-                    # states (the empty-interval fabrication gate, same as
-                    # the hybrids) — only then does the probe cost a job
-                    probe = w.combine_range(s, t)
-                    if probe is None:
-                        return None, None, "range not covered"
-                    if key not in probe:
-                        return None, None, f"state {key} not indexed"
-                for b, st in got:
-                    per_bucket.setdefault(b, []).append(st)
+        gate = _group_gate(gb, e.time_column)
+        if gate is None:
             return (
-                {
-                    b: _combine_interval_parts(key, parts)
-                    for b, parts in per_bucket.items()
-                },
-                w,
+                RouteDecision("delegate", detail={"reason": "unsupported group expr"}),
                 None,
             )
-
-        per_agg, wheels = [], []
-        for agg in q.aggs:
-            cells, w, err = merged_cells(agg)
-            if cells is None:
-                return RouteDecision("delegate", detail={"reason": err, "fk": fk}), None
-            per_agg.append(cells)
+        gran, hopping = gate
+        specs = [*q.aggs, *(spec for spec, _op, _lit in q.having)]
+        wheels = []
+        for spec in specs:
+            w = self._resolve_wheel(spec, fk)
+            if w is None:
+                return (
+                    RouteDecision(
+                        "delegate", detail={"reason": f"no index for {spec.func}", "fk": fk}
+                    ),
+                    None,
+                )
             wheels.append(w)
-        buckets = sorted(set().union(*per_agg)) if per_agg else []
-        if q.having:
-            hconds = []
-            for spec, op, lit in q.having:
-                cells, _w, err = merged_cells(spec)
-                if cells is None:
-                    return (
-                        RouteDecision("delegate", detail={"reason": err, "fk": fk}),
-                        None,
-                    )
-                hconds.append((cells, op, lit))
-            buckets = [
-                b
-                for b in buckets
-                if all(_having_holds(hv.get(b), op, lit) for hv, op, lit in hconds)
-            ]
-        rows = []
-        for b in buckets:
-            row = []
-            for item in q.select_order:
-                if isinstance(item, AggSpec):
-                    row.append(per_agg[q.aggs.index(item)].get(b))
-                elif isinstance(item, WindowSpec) and item.field == "end":
-                    row.append(sec_to_datetime(b + gb.width_sec))
-                else:
-                    row.append(sec_to_datetime(b))
-            rows.append(tuple(row))
+        parts = []
+        for s, t in merged:
+            got = _read_states(
+                specs, wheels, _cell_reader(gb, gran, s, t), _combine_keys
+            )
+            if isinstance(got, str):
+                return RouteDecision("delegate", detail={"reason": got, "fk": fk}), None
+            # every state must be carried, occupied interval or not
+            for spec, (_secs, cols) in zip(specs, got):
+                if _state_key(spec) not in cols:
+                    reason = f"state {_state_key(spec)} not indexed"
+                    return RouteDecision("delegate", detail={"reason": reason, "fk": fk}), None
+            parts.append(got)
+        secs, cols = _merged_columns(specs, parts)  # states checked above
+        n = len(q.aggs)
+        secs, agg_cols = _filter_rows(_having_keep(q, cols[n:]), secs, cols[:n])
+        rows = _group_rows(q, gb, secs, agg_cols)
         names, types = [], []
         for item in q.select_order:
             names.append(item.output_name)
@@ -1970,7 +1884,7 @@ class Router:
             else:
                 types.append("TIMESTAMP")
         if q.order_by or q.limit is not None:
-            rows = _order_limit_rows(q, names, rows)
+            rows = _order_limit_rows(q, names, rows, _bucket_positions(q))
         df = self._constant_relation(names, types, rows)
         return (
             RouteDecision(
@@ -1995,7 +1909,7 @@ class Router:
             if (
                 w is None
                 or not getattr(w, "tracks_at_start", False)
-                or w.combine_range(sec, sec + bucket) is None  # span/alignment gate
+                or not w.covers(sec, sec + bucket)  # span/alignment gate
             ):
                 return (
                     RouteDecision("delegate", detail={"reason": "no at-start index", "fk": fk}),
@@ -2028,8 +1942,6 @@ class Router:
                         RouteDecision("delegate", detail={"reason": "state sumsq not indexed"}),
                         None,
                     )
-                from ..operators.lookup import _variance_states
-
                 values.append(
                     _variance_states(float(at["sum"]), float(at["sumsq"]), vn)[key]
                     if vn
@@ -2091,18 +2003,14 @@ class Router:
                 None,
             )
 
-        core_states: list[dict] = []
-        for agg, w in zip(q.aggs, wheels):
-            states = w.combine_range(core_start, core_end)
-            if states is None:
-                return RouteDecision("delegate", detail={"reason": "range not covered"}), None
-            key = _state_key(agg)
-            if key not in states:
-                return (
-                    RouteDecision("delegate", detail={"reason": f"state {key} not indexed"}),
-                    None,
-                )
-            core_states.append(states)
+        core_states = _read_states(
+            q.aggs, wheels,
+            lambda w, keys: w.combine_range(core_start, core_end, keys),
+            _combine_keys,
+        )
+        core_values = _pick_values(q.aggs, core_states)  # availability gate
+        if isinstance(core_values, str):
+            return RouteDecision("delegate", detail={"reason": core_values}), None
 
         # Preferred path: resolve the boundary slivers from the wheels' own
         # at-start states — zero Spark jobs, like every other routed answer.
@@ -2160,36 +2068,29 @@ class Router:
         if core_start > core_end:
             return _delegate("degenerate boundary range")
 
-        def _cell_values(agg, w):
-            """Per-cell hybrid-corrected values for one aggregate, or a
-            delegate reason string. Shared by the select list and HAVING."""
+        hwheels = []
+        for spec, _op, _lit in q.having:
+            # HAVING aggregates get the SAME hybrid-corrected per-cell
+            # values (the aggregate need not be in the select list)
+            hw = self._resolve_wheel(spec, fk)
+            if hw is None:
+                return _delegate(f"no index for HAVING {spec.func}")
+            hwheels.append(hw)
+        specs = [*q.aggs, *(spec for spec, _op, _lit in q.having)]
+
+        def _wheel_cells(w, keys):
+            """One wheel's core cells plus its boundary slivers and the
+            cells they land in, or a delegate reason string."""
             if not getattr(w, "tracks_at_start", False):
                 return "no at-start states"
-            got = w.group_by(core_start, core_end, gran)
-            if got is None:
+            core = w.group_by(core_start, core_end, gran, keys)
+            if core is None:
                 return "range not covered"
-            key = _state_key(agg)
-            # State availability must be validated independently of core
-            # occupancy: an empty core plus a non-empty boundary sliver
-            # would otherwise fabricate values from _EMPTY_CORE defaults on
-            # subset-state wheels.  combine_range emits keys for exactly
-            # the states this wheel carries, occupied or not — the same
-            # gate the scalar hybrid applies (group_by already proved the
-            # range covered, so the probe cannot be None).
-            probe = w.combine_range(core_start, core_end)
-            if probe is None or key not in probe:
-                return f"state {key} not indexed"
-            cells = dict(got)
-            up = low_bucket = low_at = None
-            up_cell = low_cell = None
+            up = low_bucket = low_at = up_cell = low_cell = None
             if rng.hi_op == "<=":
                 # same trust gate as the scalar path: the sliver bucket sits
                 # one bucket past the core, outside covers()'s vouching
-                if not (
-                    w.complete
-                    or w.combine_range(rng.end_sec, rng.end_sec + bucket)
-                    is not None
-                ):
+                if not (w.complete or w.covers(rng.end_sec, rng.end_sec + bucket)):
                     return "upper sliver not covered"
                 up = w.at_start(rng.end_sec)
                 if up is None:
@@ -2197,74 +2098,69 @@ class Router:
                 if up["count"] == 0:
                     up = None
                 else:
-                    g1 = w.group_by(rng.end_sec, rng.end_sec + bucket, gran)
-                    if not g1:
+                    g1 = w.group_by(rng.end_sec, rng.end_sec + bucket, gran, ())
+                    if g1 is None or not len(g1[0]):
                         return "upper sliver cell unresolved"
-                    up_cell = g1[0][0]
+                    up_cell = int(g1[0][0])
             if rng.lo_op == ">":
                 low_at = w.at_start(rng.start_sec)
                 low_bucket = w.combine_range(
-                    rng.start_sec, rng.start_sec + bucket
+                    rng.start_sec, rng.start_sec + bucket, keys
                 )
                 if low_bucket is None or low_at is None:
                     return "lower sliver not covered"
                 if low_bucket["count"] - low_at["count"] == 0:
                     low_bucket = low_at = None  # empty sliver
                 else:
-                    g0 = w.group_by(rng.start_sec, rng.start_sec + bucket, gran)
-                    if not g0:
+                    g0 = w.group_by(rng.start_sec, rng.start_sec + bucket, gran, ())
+                    if g0 is None or not len(g0[0]):
                         return "lower sliver cell unresolved"
-                    low_cell = g0[0][0]
-            all_cells = set(cells)
-            if up is not None:
-                all_cells.add(up_cell)
-            if low_bucket is not None:
-                all_cells.add(low_cell)
-            vals: dict = {}
-            for c in all_cells:
-                core = cells.get(c, _EMPTY_CORE)
-                u = up if (up is not None and c == up_cell) else None
-                lb = low_bucket if (low_bucket is not None and c == low_cell) else None
-                la = low_at if lb is not None else None
-                ok, v = _hybrid_agg_value(key, core, u, lb, la)
-                if not ok:
-                    return "boundary not derivable from states"
-                vals[c] = v
-            return vals
+                    low_cell = int(g0[0][0])
+            return core, up, up_cell, low_bucket, low_at, low_cell
 
-        per_wheel_vals: list[dict] = []
-        for agg, w in zip(q.aggs, wheels):
-            got = _cell_values(agg, w)
-            if isinstance(got, str):
-                return _delegate(got)
-            per_wheel_vals.append(got)
-
-        buckets = sorted(set().union(*per_wheel_vals)) if per_wheel_vals else []
-
-        if q.having:
-            # HAVING aggregates get the SAME hybrid-corrected per-cell
-            # values (the aggregate need not be in the select list)
-            for spec, op, lit in q.having:
-                hw = self._resolve_wheel(spec, fk)
-                if hw is None:
-                    return _delegate(f"no index for HAVING {spec.func}")
-                hv = _cell_values(spec, hw)
-                if isinstance(hv, str):
-                    return _delegate(hv)
-                buckets = [
-                    b for b in buckets if _having_holds(hv.get(b), op, lit)
-                ]
-        rows = []
-        for b in buckets:
-            row: list[Any] = []
-            for item in q.select_order:
-                if isinstance(item, AggSpec):
-                    row.append(per_wheel_vals[q.aggs.index(item)].get(b))
-                elif isinstance(item, WindowSpec) and item.field == "end":
-                    row.append(sec_to_datetime(b + gb.width_sec))
+        got = _read_states(specs, wheels + hwheels, _wheel_cells, _combine_keys)
+        if isinstance(got, str):
+            return _delegate(got)
+        cell_values: list[dict] = []
+        for spec, (core, up, up_cell, low_bucket, low_at, low_cell) in zip(specs, got):
+            secs, cols = core
+            key = _state_key(spec)
+            # State availability is validated independently of core
+            # occupancy: an empty core plus a non-empty boundary sliver
+            # would otherwise fabricate values from _EMPTY_CORE defaults on
+            # subset-state wheels (group_by answers every carried key,
+            # occupied or not — the same gate the scalar hybrid applies).
+            if key not in cols:
+                return _delegate(f"state {key} not indexed")
+            buckets = secs.tolist()
+            vals = dict(zip(buckets, cols[key]))
+            # only the (at most two) cells a sliver lands in need the
+            # hybrid algebra; every other cell is its core value
+            for c in dict.fromkeys(
+                c for c, part in ((up_cell, up), (low_cell, low_bucket))
+                if part is not None
+            ):
+                if c in vals:
+                    i = buckets.index(c)
+                    cell = {k: col[i] for k, col in cols.items()}
                 else:
-                    row.append(sec_to_datetime(b))
-            rows.append(tuple(row))
+                    cell = _EMPTY_CORE
+                lb = low_bucket if c == low_cell else None
+                ok, v = _hybrid_agg_value(
+                    key, cell, up if c == up_cell else None, lb,
+                    low_at if lb is not None else None,
+                )
+                if not ok:
+                    return _delegate("boundary not derivable from states")
+                vals[c] = v
+            cell_values.append(vals)
+
+        n = len(q.aggs)
+        buckets = sorted(set().union(*cell_values[:n]))
+        secs = np.asarray(buckets, dtype=np.int64)
+        cols = [[vals.get(b) for b in buckets] for vals in cell_values]
+        secs, agg_cols = _filter_rows(_having_keep(q, cols[n:]), secs, cols[:n])
+        rows = _group_rows(q, gb, secs, agg_cols)
         names, types = [], []
         for item in q.select_order:
             names.append(item.output_name)
@@ -2273,18 +2169,13 @@ class Router:
             else:
                 types.append("TIMESTAMP")
         if q.order_by or q.limit is not None:
-            rows = _order_limit_rows(q, names, rows)
+            rows = _order_limit_rows(q, names, rows, _bucket_positions(q))
         df = self._constant_relation(names, types, rows)
         return (
             RouteDecision(
                 "group_by_hybrid",
                 index_key=wheels[0].key,
-                detail={
-                    "granularity": (
-                        gran if isinstance(gran, str) else f"window:{gran}s"
-                    ),
-                    "fk": fk,
-                },
+                detail={"granularity": _gran_detail(gb, gran, False), "fk": fk},
             ),
             df,
         )
@@ -2301,12 +2192,13 @@ class Router:
           (no interior rows), the whole non-null bucket, or empty.
 
         Returns the per-aggregate values, or ``None`` when any aggregate is
-        not derivable (caller falls back to the pruned boundary scan)."""
-        values = []
-        for agg, w, core in zip(q.aggs, wheels, core_states):
+        not derivable (caller falls back to the pruned boundary scan).
+        Slivers are read once per wheel the core states came from."""
+        sources, reads = _lookup_plan(q.aggs, wheels, _combine_keys)
+        slivers = {}
+        for wid, (w, keys) in reads.items():
             if not getattr(w, "tracks_at_start", False):
                 return None
-            key = _state_key(agg)
             up = None
             if rng.hi_op == "<=":
                 # The upper sliver bucket (instant rng.end_sec) sits one
@@ -2318,19 +2210,21 @@ class Router:
                 # the wheel indexes the whole table or provably covers the
                 # sliver's bucket; otherwise fall back to the pruned
                 # boundary scan (reads the base table — always correct).
-                if not (
-                    w.complete
-                    or w.combine_range(rng.end_sec, rng.end_sec + bucket) is not None
-                ):
+                if not (w.complete or w.covers(rng.end_sec, rng.end_sec + bucket)):
                     return None
                 up = w.at_start(rng.end_sec)
             low_bucket = low_at = None
             if rng.lo_op == ">":
                 low_at = w.at_start(rng.start_sec)
-                low_bucket = w.combine_range(rng.start_sec, rng.start_sec + bucket)
+                low_bucket = w.combine_range(
+                    rng.start_sec, rng.start_sec + bucket, keys
+                )
                 if low_bucket is None or low_at is None:
                     return None
-            ok, v = _hybrid_agg_value(key, core, up, low_bucket, low_at)
+            slivers[wid] = (up, low_bucket, low_at)
+        values = []
+        for agg, w, core in zip(q.aggs, sources, core_states):
+            ok, v = _hybrid_agg_value(_state_key(agg), core, *slivers[id(w)])
             if not ok:
                 return None
             values.append(v)

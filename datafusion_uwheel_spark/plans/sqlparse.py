@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
 __all__ = [
     "ParseError",
@@ -67,46 +68,59 @@ AGG_FUNCS = {
 #: The approx-aggregate subset — single source for parser and router.
 APPROX_AGG_FUNCS = {"approx_count_distinct", "percentile_approx", "approx_percentile"}
 
+#: One alternative per token kind, tried in this order at every
+#: non-blank position; the last group catches any other character (a
+#: double quote, a backtick, ``;`` mid-query, ...), which is outside the
+#: grammar. Whitespace matches nothing, so ``findall`` skips it.
 _TOKEN_RE = re.compile(
     r"""
-    \s*(?:
-        (?P<string>'(?:[^']|'')*')
-      | (?P<number>-?\d+(?:\.\d+)?(?:[eE][+-]?\d+)?)
-      | (?P<ident>[A-Za-z_][A-Za-z_0-9]*)
-      | (?P<op><=|>=|<>|!=|=|<|>)
-      | (?P<punct>[(),.*])
-    )
+        ('(?:[^']|'')*')
+      | (-?\d+(?:\.\d+)?(?:[eE][+-]?\d+)?)
+      | ([A-Za-z_][A-Za-z_0-9]*)
+      | (<=|>=|<>|!=|=|<|>)
+      | ([(),.*])
+      | (\S)
     """,
     re.VERBOSE,
 )
 
 
-@dataclass(frozen=True)
-class Token:
-    kind: str
+class Token(NamedTuple):
+    kind: str  # string | number | ident | op | punct
     value: str
 
 
 def _tokenize(sql: str) -> list[Token]:
-    tokens: list[Token] = []
-    pos = 0
+    """Tokens of ``sql`` in one ``findall`` pass; raises
+    :class:`ParseError` at the first character outside the grammar.
+    String literals come back unquoted with ``''`` unescaped."""
     s = sql.strip().rstrip(";")
-    while pos < len(s):
-        m = _TOKEN_RE.match(s, pos)
-        if not m or m.end() == pos:
-            if s[pos:].strip() == "":
-                break
-            raise ParseError(f"unrecognized token at: {s[pos:pos+20]!r}")
-        pos = m.end()
-        kind = m.lastgroup
-        value = m.group(kind)
-        if kind == "ident":
-            tokens.append(Token("ident", value))
-        elif kind == "string":
-            tokens.append(Token("string", value[1:-1].replace("''", "'")))
+    tokens: list[Token] = []
+    for string, number, ident, op, punct, other in _TOKEN_RE.findall(s):
+        if ident:
+            tokens.append(Token("ident", ident))
+        elif punct:
+            tokens.append(Token("punct", punct))
+        elif op:
+            tokens.append(Token("op", op))
+        elif string:
+            tokens.append(Token("string", string[1:-1].replace("''", "'")))
+        elif number:
+            tokens.append(Token("number", number))
         else:
-            tokens.append(Token(kind, value))
+            raise ParseError(f"unrecognized token at: {_context(s)!r}")
     return tokens
+
+
+def _context(s: str) -> str:
+    """Up to 20 characters of ``s`` from the end of the last good token
+    before the first character outside the grammar."""
+    pos = 0
+    for m in _TOKEN_RE.finditer(s):
+        if m.group(6):
+            break
+        pos = m.end()
+    return s[pos : pos + 20]
 
 
 @dataclass(frozen=True)

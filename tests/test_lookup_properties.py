@@ -16,33 +16,110 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from datafusion_uwheel_spark.functions.timestamps import GRANULARITY_SECONDS
-from datafusion_uwheel_spark.operators.lookup import WheelIndex
+from datafusion_uwheel_spark.operators.lookup import (
+    INT_MAX_IDENTITY,
+    INT_MIN_IDENTITY,
+    WheelIndex,
+)
 
 BASE = 1_700_000_000  # arbitrary epoch anchor
 
 
-def build_wheel(events: list[tuple[int, float]], bucket_seconds: int = 1) -> WheelIndex:
-    """Exact analogue of the distributed rollup, in numpy."""
-    secs = np.array([s - s % bucket_seconds for s, _ in events], dtype=np.int64)
-    vals = np.array([v for _, v in events], dtype=np.float64)
-    order = np.argsort(secs, kind="stable")
-    secs, vals = secs[order], vals[order]
-    uniq, idx = np.unique(secs, return_index=True)
+def build_wheel(
+    events: list[tuple[int, float | None]],
+    bucket_seconds: int = 1,
+    integral: bool = False,
+) -> WheelIndex:
+    """Exact analogue of the distributed rollup, in plain Python: per
+    bucket COUNT(*), the non-NULL count and the sanitized value states
+    (all-NULL buckets hold the monoid identities, never NaN)."""
+    buckets: dict[int, list] = {}
+    for s, v in events:
+        buckets.setdefault(s - s % bucket_seconds, []).append(v)
+    secs = sorted(buckets)
+    vdtype = np.int64 if integral else np.float64
+    lo, hi = (INT_MIN_IDENTITY, INT_MAX_IDENTITY) if integral else (np.inf, -np.inf)
+    cnt, vcnt, sums, mins, maxs, sqs = [], [], [], [], [], []
+    for b in secs:
+        nn = [v for v in buckets[b] if v is not None]
+        cnt.append(len(buckets[b]))
+        vcnt.append(len(nn))
+        sums.append(sum(nn) if nn else 0)
+        mins.append(min(nn) if nn else lo)
+        maxs.append(max(nn) if nn else hi)
+        sqs.append(math.fsum(float(v) * float(v) for v in nn))
     return WheelIndex(
         "t",
         "v",
         "*_AGG",
-        uniq,
-        np.add.reduceat(np.ones_like(vals), idx).astype(np.int64),
-        sum_=np.add.reduceat(vals, idx),
-        min_=np.minimum.reduceat(vals, idx),
-        max_=np.maximum.reduceat(vals, idx),
-        sumsq_=np.add.reduceat(vals * vals, idx),
+        np.array(secs, dtype=np.int64),
+        np.array(cnt, dtype=np.int64),
+        sum_=np.array(sums, dtype=vdtype),
+        min_=np.array(mins, dtype=vdtype),
+        max_=np.array(maxs, dtype=vdtype),
+        sumsq_=np.array(sqs, dtype=np.float64),
+        vcnt_=np.array(vcnt, dtype=np.int64),
+        value_sql_type="BIGINT" if integral else "DOUBLE",
         min_ts_us=int(min(s for s, _ in events)) * 1_000_000,
         max_ts_us=int(max(s for s, _ in events)) * 1_000_000,
         complete=True,
         bucket_seconds=bucket_seconds,
     )
+
+
+#: Every state key a value wheel with all states answers.
+ALL_STATES = (
+    "count", "count_col", "sum", "avg", "min", "max", "_sumsq",
+    "var_pop", "var_samp", "stddev_pop", "stddev_samp",
+)
+
+
+def expect_states(vals: list, integral: bool) -> dict:
+    """Brute-force SQL states of one group of raw values (None = NULL)."""
+    nn = [v for v in vals if v is not None]
+    out = {"count": len(vals), "count_col": len(nn)}
+    if not nn:
+        out.update({k: None for k in ALL_STATES[2:]})
+        out["_sumsq"] = 0.0
+        return out
+    n = len(nn)
+    total = sum(nn) if integral else math.fsum(nn)
+    mean = math.fsum(nn) / n
+    m2 = math.fsum((x - mean) ** 2 for x in nn)
+    out.update(
+        sum=total,
+        avg=math.fsum(nn) / n,
+        min=min(nn),
+        max=max(nn),
+        _sumsq=math.fsum(float(x) * float(x) for x in nn),
+        var_pop=m2 / n,
+        stddev_pop=math.sqrt(m2 / n),
+        var_samp=m2 / (n - 1) if n >= 2 else None,
+        stddev_samp=math.sqrt(m2 / (n - 1)) if n >= 2 else None,
+    )
+    return out
+
+
+def assert_states(got: dict, want: dict, keys, integral: bool) -> None:
+    """Values within float tolerance (ints exact) and the Python types the
+    delegate's result schema implies: COUNTs int, SUM/MIN/MAX int on an
+    integral wheel else float, AVG/sumsq/variance float, NULL as None."""
+    assert set(got) == set(keys), (set(got), keys)
+    for k in keys:
+        g, w = got[k], want[k]
+        if w is None:
+            assert g is None, (k, g)
+            continue
+        if k in ("count", "count_col") or (integral and k in ("sum", "min", "max")):
+            assert type(g) is int and g == w, (k, g, w)
+        else:
+            assert type(g) is float, (k, type(g))
+            if k in ("min", "max"):
+                assert g == w, (k, g, w)
+            elif k in ("var_pop", "var_samp", "stddev_pop", "stddev_samp", "_sumsq"):
+                assert math.isclose(g, w, rel_tol=1e-6, abs_tol=1e-3), (k, g, w)
+            else:
+                assert math.isclose(g, w, rel_tol=1e-9, abs_tol=1e-6), (k, g, w)
 
 
 events_strategy = st.lists(
@@ -54,56 +131,160 @@ events_strategy = st.lists(
     max_size=300,
 )
 
+#: Rows with NULLs, over a week, either float or integral values — the
+#: integral draw keeps squares exact in float64.
+nullable_events = st.booleans().flatmap(
+    lambda integral: st.tuples(
+        st.just(integral),
+        st.lists(
+            st.tuples(
+                st.integers(min_value=BASE, max_value=BASE + 7 * 86400),
+                st.one_of(
+                    st.none(),
+                    st.integers(min_value=-10**6, max_value=10**6)
+                    if integral
+                    else st.floats(-1e6, 1e6, allow_nan=False, width=32),
+                ),
+            ),
+            min_size=1,
+            max_size=300,
+        ),
+    )
+)
+
+#: A requested-state subset, or ``None`` (every carried state).
+state_requests = st.one_of(
+    st.none(), st.sets(st.sampled_from(ALL_STATES), min_size=1)
+)
+
 
 @given(
-    events=events_strategy,
-    a=st.integers(min_value=-100, max_value=7300),
-    width=st.integers(min_value=0, max_value=7400),
+    data=nullable_events,
+    a=st.integers(min_value=-100, max_value=7 * 86400 + 100),
+    width=st.integers(min_value=0, max_value=7 * 86400),
+    states=state_requests,
 )
 @settings(max_examples=200, deadline=None)
-def test_combine_range_matches_bruteforce(events, a, width):
-    w = build_wheel(events)
+def test_combine_range_matches_bruteforce(data, a, width, states):
+    integral, events = data
+    w = build_wheel(events, integral=integral)
     start, end = BASE + a, BASE + a + width
-    got = w.combine_range(start, end)
+    got = w.combine_range(start, end, states)
     assert got is not None  # complete wheel answers any valid range
-    in_range = [v for s, v in events if start <= s < end]
-    assert got["count"] == len(in_range)
-    if in_range:
-        assert math.isclose(got["sum"], math.fsum(in_range), rel_tol=1e-9, abs_tol=1e-6)
-        assert got["min"] == min(in_range)
-        assert got["max"] == max(in_range)
-        assert math.isclose(
-            got["avg"], math.fsum(in_range) / len(in_range), rel_tol=1e-9, abs_tol=1e-6
+    want = expect_states([v for s, v in events if start <= s < end], integral)
+    assert_states(got, want, ALL_STATES if states is None else states, integral)
+
+
+def _check_group_by(w, events, integral, start, end, gran, states, bucket_of):
+    got = w.group_by(start, end, gran, states)
+    assert got is not None
+    secs, cols = got
+    assert secs.dtype == np.int64
+    expect: dict[int, list] = {}
+    for s, v in events:
+        if start <= s < end:
+            expect.setdefault(bucket_of(s), []).append(v)
+    assert secs.tolist() == sorted(expect)
+    keys = ALL_STATES if states is None else states
+    assert set(cols) == set(keys)
+    for i, b in enumerate(secs.tolist()):
+        assert_states(
+            {k: cols[k][i] for k in cols}, expect_states(expect[b], integral), keys,
+            integral,
         )
-        mean = math.fsum(in_range) / len(in_range)
-        vp = math.fsum((x - mean) ** 2 for x in in_range) / len(in_range)
-        assert math.isclose(got["var_pop"], vp, rel_tol=1e-6, abs_tol=1e-3)
-    else:
-        assert got["sum"] is None and got["min"] is None
 
 
 @given(
-    events=events_strategy,
-    gran=st.sampled_from(["second", "minute", "hour"]),
+    data=nullable_events,
+    gran=st.sampled_from(["second", "minute", "hour", "day", "week"]),
+    states=state_requests,
 )
 @settings(max_examples=100, deadline=None)
-def test_group_by_matches_bruteforce(events, gran):
-    w = build_wheel(events)
+def test_group_by_matches_bruteforce(data, gran, states):
+    from datafusion_uwheel_spark.functions.timestamps import bucket_starts
+
+    integral, events = data
+    w = build_wheel(events, integral=integral)
     gs = GRANULARITY_SECONDS[gran]
-    start = BASE - BASE % gs
-    end = start + 7200 + gs
-    got = w.group_by(start, end, gran)
-    assert got is not None
-    expect: dict[int, list[float]] = {}
-    for s, v in events:
-        expect.setdefault(s - s % gs, []).append(v)
-    assert [b for b, _ in got] == sorted(expect)
-    for b, states in got:
-        vals = expect[b]
-        assert states["count"] == len(vals)
-        assert math.isclose(states["sum"], math.fsum(vals), rel_tol=1e-9, abs_tol=1e-6)
-        assert states["min"] == min(vals)
-        assert states["max"] == max(vals)
+    start = BASE - BASE % gs - gs
+    end = BASE + 8 * 86400 - (BASE + 8 * 86400) % gs + gs
+    _check_group_by(
+        w, events, integral, start, end, gran, states,
+        lambda s: int(bucket_starts(np.array([s], dtype=np.int64), gran)[0]),
+    )
+
+
+@given(
+    data=nullable_events,
+    gran=st.sampled_from(["month", "quarter", "year", 60, 900, 7200, 86400, 3 * 86400]),
+    states=state_requests,
+)
+@settings(max_examples=100, deadline=None)
+def test_group_by_calendar_and_window_widths(data, gran, states):
+    """Calendar granularities and int tumbling widths, sliced mid-week."""
+    from datafusion_uwheel_spark.functions.timestamps import bucket_starts
+
+    integral, events = data
+    w = build_wheel(events, integral=integral)
+    start, end = BASE - BASE % 60 + 3600, BASE + 5 * 86400
+    _check_group_by(
+        w, events, integral, start, end, gran, states,
+        lambda s: int(bucket_starts(np.array([s], dtype=np.int64), gran)[0]),
+    )
+
+
+@given(
+    data=nullable_events,
+    states=state_requests,
+    cut_hours=st.integers(min_value=0, max_value=7 * 24),
+)
+@settings(max_examples=100, deadline=None)
+def test_tiered_wheel_matches_bruteforce(data, states, cut_hours):
+    """A compacted wheel (hour tier behind the cutoff, seconds after) —
+    range states and hour group-bys stay exact over its coarse prefix."""
+    integral, events = data
+    w = build_wheel(events, integral=integral)
+    base_hour = BASE - BASE % 3600
+    w.compact_before(base_hour + cut_hours * 3600, 3600)
+    start, end = base_hour, base_hour + 8 * 86400
+    got = w.combine_range(start, end, states)
+    want = expect_states([v for s, v in events if start <= s < end], integral)
+    assert_states(got, want, ALL_STATES if states is None else states, integral)
+    _check_group_by(
+        w, events, integral, start, end, "hour", states, lambda s: s - s % 3600
+    )
+    # a second-precision bound inside the hour tier would split a bucket
+    if cut_hours:
+        assert w.combine_range(start + 1, end, states) is None
+        assert w.group_by(start, end, "second", states) is None
+
+
+def test_all_null_buckets_answer_null_states():
+    """Buckets whose every value is NULL count their rows, answer NULL for
+    the value states and a zero raw sum-of-squares."""
+    events = [(BASE, None), (BASE, None), (BASE + 60, 2.0), (BASE + 61, None)]
+    for integral in (False, True):
+        w = build_wheel(events, integral=integral)
+        secs, cols = w.group_by(BASE - BASE % 60, BASE + 3600, "minute")
+        first = {k: cols[k][0] for k in cols}
+        assert first["count"] == 2 and first["count_col"] == 0
+        assert first["_sumsq"] == 0.0
+        assert all(first[k] is None for k in ALL_STATES if k not in ("count", "count_col", "_sumsq"))
+        got = w.combine_range(BASE, BASE + 1, ("sum", "avg", "var_pop", "count"))
+        assert got == {"sum": None, "avg": None, "var_pop": None, "count": 2}
+
+
+def test_lookups_answer_only_requested_and_carried_states():
+    """Requested keys a wheel does not carry are absent (the router
+    delegates on them); empty ranges still name every carried key."""
+    w = build_wheel([(BASE, 1.0), (BASE + 5, 3.0)])
+    w.sumsq_ = None  # a per-aggregate build without sum-of-squares
+    assert w.combine_range(BASE, BASE + 10, ("sum", "var_pop")) == {"sum": 4.0}
+    secs, cols = w.group_by(BASE, BASE + 10, "second", ("min", "stddev_samp"))
+    assert secs.tolist() == [BASE, BASE + 5] and cols == {"min": [1.0, 3.0]}
+    secs, cols = w.group_by(BASE + 100, BASE + 200, "second", ("max", "_sumsq"))
+    assert secs.size == 0 and cols == {"max": []}
+    assert w.combine_range(BASE, BASE + 10, ()) == {}
 
 
 @given(

@@ -284,7 +284,8 @@ def test_compaction_property_random_timelines(data):
     res = w.group_by(0, ((span // g) + 1) * g, g)
     if w._max_width_in(0, span) <= g:
         assert res is not None
-        got = {k: s["count"] for k, s in res}
+        secs, cols = res
+        got = dict(zip(secs.tolist(), cols["count"]))
         want: dict[int, int] = {}
         for s, _v in rows:
             want[s - s % g] = want.get(s - s % g, 0) + 1

@@ -152,3 +152,87 @@ def test_time_range_restricted_sliver_gating(spark, backend):
     got = eng.sql(sql).collect()
     want = spark.sql(sql).collect()
     assert got == want  # rows at the restricted boundary are never dropped
+
+
+# ------------------------------------------- the column-wise lookup contract
+@pytest.fixture(scope="module")
+def null_rows(spark):
+    """Three days of rows with NULL values (one whole hour all-NULL) in a
+    float and an integral column, as a DataFrame plus the raw tuples."""
+    import random
+    from datetime import datetime, timedelta
+
+    rng = random.Random(5)
+    base = datetime(2024, 5, 10)
+    rows = []
+    for _ in range(400):
+        t = base + timedelta(seconds=rng.randrange(0, 3 * 86400))
+        f = None if rng.random() < 0.25 else rng.uniform(-100, 100)
+        n = None if rng.random() < 0.25 else rng.randint(-1000, 1000)
+        rows.append((t, f, n))
+    rows += [(base + timedelta(hours=5, seconds=s), None, None) for s in (3, 9, 9)]
+    df = spark.createDataFrame(rows, "ts timestamp, f double, n bigint")
+    return df, rows
+
+
+def _epoch(t) -> int:
+    import calendar
+
+    return calendar.timegm(t.timetuple())
+
+
+@pytest.mark.parametrize("column,integral", [("f", False), ("n", True)])
+def test_spark_rollup_lookups_match_bruteforce(null_rows, column, integral):
+    """SparkRollupWheel answers the same contract as the driver wheel:
+    ``combine_range(..., states)`` returns exactly the requested carried
+    keys, ``group_by(..., states)`` returns ``(bucket_secs, {key: column})``
+    — every state key's values and Python types against brute force, over
+    all-NULL buckets, calendar granularities, int window widths and a
+    compacted (tiered) rollup."""
+    import numpy as np
+    from test_lookup_properties import ALL_STATES, assert_states, expect_states
+
+    from datafusion_uwheel_spark.functions.timestamps import bucket_starts
+    from datafusion_uwheel_spark.operators.rollup_table import SparkRollupWheel
+    from datafusion_uwheel_spark.operators.rollups import build_wheel_indices
+
+    df, rows = null_rows
+    idx = 1 if column == "f" else 2
+    raw = [(_epoch(r[0]), r[idx]) for r in rows]
+    w = build_wheel_indices(df, "nr", "ts", [column], backend="spark")[column]
+    assert isinstance(w, SparkRollupWheel)
+    base = _epoch(rows[0][0].replace(hour=0, minute=0, second=0))
+
+    def check_range(a, b, states):
+        got = w.combine_range(a, b, states)
+        want = expect_states([v for s, v in raw if a <= s < b], integral)
+        assert_states(got, want, ALL_STATES if states is None else states, integral)
+
+    def check_groups(a, b, gran, states):
+        secs, cols = w.group_by(a, b, gran, states)
+        keys = ALL_STATES if states is None else states
+        assert set(cols) == set(keys) and secs.dtype == np.int64
+        groups: dict[int, list] = {}
+        for s, v in raw:
+            if a <= s < b:
+                b0 = int(bucket_starts(np.array([s], dtype=np.int64), gran)[0])
+                groups.setdefault(b0, []).append(v)
+        assert secs.tolist() == sorted(groups)
+        for i, b0 in enumerate(secs.tolist()):
+            assert_states(
+                {k: cols[k][i] for k in cols}, expect_states(groups[b0], integral),
+                keys, integral,
+            )
+
+    hour5 = base + 5 * 3600
+    check_range(hour5, hour5 + 3600, None)  # all-NULL bucket: NULL states
+    check_range(base, base + 3 * 86400, ("sum", "var_samp", "count_col"))
+    assert w.combine_range(base, base + 60, ()) == {}
+    check_groups(base, base + 3 * 86400, "hour", None)
+    check_groups(base, base + 3 * 86400, "month", ("count", "avg", "_sumsq"))
+    check_groups(base + 3600, base + 2 * 86400, 7200, ("min", "max", "stddev_pop"))
+    w.compact_before(base + 86400, 3600)  # hour tier over the first day
+    check_range(base, base + 3 * 86400, None)
+    check_groups(base, base + 3 * 86400, "day", ("count", "sum", "stddev_samp"))
+    assert w.group_by(base, base + 86400, "minute", ("count",)) is None
+    w.rollup.unpersist()

@@ -8,7 +8,7 @@ import random
 
 import pytest
 
-from datafusion_uwheel_spark.plans.sqlparse import ParseError, parse_select
+from datafusion_uwheel_spark.plans.sqlparse import ParseError, _tokenize, parse_select
 
 SEEDS = [
     "SELECT COUNT(*) AS n FROM t WHERE ts >= '2024-01-01 00:00:00' AND ts < '2024-01-02 00:00:00'",
@@ -40,6 +40,72 @@ def _try(sql: str) -> None:
 def test_seed_queries_parse():
     for s in SEEDS:
         parse_select(s)
+
+
+#: Token (kind, value) lists of SEEDS, as the per-token-regex tokenizer
+#: produced them — the one-pass tokenizer must reproduce them exactly.
+SEED_TOKENS = [
+    [("ident", "SELECT"), ("ident", "COUNT"), ("punct", "("), ("punct", "*"),
+     ("punct", ")"), ("ident", "AS"), ("ident", "n"), ("ident", "FROM"),
+     ("ident", "t"), ("ident", "WHERE"), ("ident", "ts"), ("op", ">="),
+     ("string", "2024-01-01 00:00:00"), ("ident", "AND"), ("ident", "ts"),
+     ("op", "<"), ("string", "2024-01-02 00:00:00")],
+    [("ident", "SELECT"), ("ident", "date_trunc"), ("punct", "("),
+     ("string", "hour"), ("punct", ","), ("ident", "ts"), ("punct", ")"),
+     ("ident", "AS"), ("ident", "b"), ("punct", ","), ("ident", "SUM"),
+     ("punct", "("), ("ident", "v"), ("punct", ")"), ("ident", "AS"),
+     ("ident", "s"), ("ident", "FROM"), ("ident", "t"), ("ident", "GROUP"),
+     ("ident", "BY"), ("ident", "date_trunc"), ("punct", "("),
+     ("string", "hour"), ("punct", ","), ("ident", "ts"), ("punct", ")"),
+     ("ident", "HAVING"), ("ident", "SUM"), ("punct", "("), ("ident", "v"),
+     ("punct", ")"), ("op", ">"), ("number", "3"), ("ident", "ORDER"),
+     ("ident", "BY"), ("ident", "b"), ("ident", "DESC"), ("ident", "LIMIT"),
+     ("number", "5")],
+    [("ident", "SELECT"), ("ident", "AVG"), ("punct", "("), ("ident", "v"),
+     ("punct", ")"), ("ident", "AS"), ("ident", "a"), ("ident", "FROM"),
+     ("ident", "t"), ("ident", "WHERE"), ("punct", "("), ("ident", "ts"),
+     ("op", ">="), ("string", "2024-01-01"), ("ident", "AND"), ("ident", "ts"),
+     ("op", "<="), ("string", "2024-01-02"), ("punct", ")"), ("ident", "OR"),
+     ("punct", "("), ("ident", "ts"), ("op", ">"), ("string", "2024-02-01"),
+     ("ident", "AND"), ("ident", "ts"), ("op", "<"), ("string", "2024-02-02"),
+     ("punct", ")")],
+    [("ident", "SELECT"), ("punct", "*"), ("ident", "FROM"), ("ident", "t"),
+     ("ident", "WHERE"), ("ident", "ts"), ("ident", "BETWEEN"),
+     ("string", "2024-01-01"), ("ident", "AND"), ("string", "2024-01-02"),
+     ("ident", "AND"), ("ident", "v"), ("op", ">"), ("number", "5.5")],
+    [("ident", "SELECT"), ("ident", "MIN"), ("punct", "("), ("ident", "v"),
+     ("punct", ")"), ("ident", "AS"), ("ident", "mn"), ("punct", ","),
+     ("ident", "MAX"), ("punct", "("), ("ident", "v"), ("punct", ")"),
+     ("ident", "AS"), ("ident", "mx"), ("punct", ","), ("ident", "STDDEV"),
+     ("punct", "("), ("ident", "v"), ("punct", ")"), ("ident", "AS"),
+     ("ident", "sd"), ("ident", "FROM"), ("ident", "t"), ("ident", "WHERE"),
+     ("ident", "ts"), ("op", "="), ("string", "2024-01-01 12:00:00")],
+]
+
+
+def test_tokenizer_pins_kinds_values_and_rejects():
+    """The one-pass tokenizer: seed tokens as recorded, ``''`` escapes
+    round-trip, and any character outside the grammar raises ParseError
+    (the engine then delegates the text to Spark untouched)."""
+    for sql, want in zip(SEEDS, SEED_TOKENS):
+        assert [(t.kind, t.value) for t in _tokenize(sql)] == want
+    toks = _tokenize("SELECT 'it''s', '''', '', 'a''''b' ;;")
+    assert [t.value for t in toks if t.kind == "string"] == ["it's", "'", "", "a''b"]
+    q = parse_select(
+        "SELECT COUNT(*) AS n FROM t WHERE k = 'O''Brien' AND "
+        "ts >= '2024-01-01' AND ts < '2024-01-02'"
+    )
+    assert [c.value for c in q.conjuncts if c.column == "k"] == ["O'Brien"]
+    for bad in (
+        'SELECT COUNT(*) AS "n" FROM t',
+        "SELECT COUNT(*) AS n FROM `t`",
+        "SELECT COUNT(*) AS n FROM t WHERE v > 1 + 2",
+        "SELECT COUNT(*) AS n FROM t; DROP TABLE t",
+        "SELECT COUNT(*) AS n FROM t WHERE k = 'open",
+        "SELECT COUNT(*) AS n FROM t WHERE v % 2 = 0",
+    ):
+        with pytest.raises(ParseError, match="unrecognized token"):
+            parse_select(bad)
 
 
 def test_random_token_soup_never_crashes():

@@ -21,6 +21,7 @@ from datafusion_uwheel_spark.functions.timestamps import (
     datetime_to_us,
     parse_ts_literal,
     sec_to_datetime,
+    secs_to_datetimes,
 )
 
 
@@ -87,3 +88,10 @@ def test_week_is_monday_aligned():
 def test_sec_to_datetime_is_naive_utc():
     dt = sec_to_datetime(1_715_299_200)
     assert dt == datetime(2024, 5, 10) and dt.tzinfo is None
+
+
+@given(st.lists(st.integers(min_value=-2_000_000_000, max_value=4_000_000_000)))
+def test_secs_to_datetimes_matches_scalar(secs):
+    got = secs_to_datetimes(np.array(secs, dtype=np.int64))
+    assert got == [sec_to_datetime(s) for s in secs]
+    assert all(type(d) is datetime and d.tzinfo is None for d in got)
