@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .engine import WheelEngine, _memo_get, _memo_put
+from .engine import ParseMemo, WheelEngine, _rows
 from .plans.router import RouteDecision
 from .plans.sqlparse import ParseError, parse_select, split_with_ctes
 
@@ -27,8 +27,6 @@ _CTE_VIEW_SEQ = 0
 
 class WheelCatalog:
     def __init__(self, spark: SparkSession):
-        from collections import OrderedDict
-
         self.spark = spark
         self.engines: dict[str, WheelEngine] = {}
         self.sim_engines: dict[str, object] = {}
@@ -40,11 +38,10 @@ class WheelCatalog:
         #: query text → splice snapshot (parts/views/rewritten + the
         #: owning engines' epochs); see ``_route_ctes``.
         self._cte_splice_memo: dict[str, dict] = {}
-        #: query text → ParsedQuery | ParseError: the catalog's dispatch
-        #: parse, memoized like the engines' (it survives index mutations —
-        #: parses depend on text alone) so the direct path pays one
-        #: tokenize total, amortized to zero for repeated dashboard text.
-        self._parse_cache: OrderedDict[str, object] = OrderedDict()
+        #: The catalog's dispatch parse, memoized like the engines' (it
+        #: survives index mutations — parses depend on text alone); the
+        #: engine reuses it, so the direct path parses once.
+        self._parse_memo = ParseMemo()
 
     def register(self, name: str, source, time_column: str, **kwargs) -> WheelEngine:
         """Create and own an engine for ``name`` (same parameters as
@@ -59,20 +56,6 @@ class WheelCatalog:
         catalog front door without rebuilding indexes."""
         self.engines[engine.name.lower()] = engine
         return engine
-
-    def _parse(self, query: str):
-        hit = _memo_get(self._parse_cache, query)
-        if hit is not None:
-            if isinstance(hit, ParseError):
-                raise hit
-            return hit
-        try:
-            parsed = parse_select(query)
-        except ParseError as err:
-            _memo_put(self._parse_cache, query, err)
-            raise
-        _memo_put(self._parse_cache, query, parsed)
-        return parsed
 
     def engine(self, name: str) -> WheelEngine:
         return self.engines[name.lower()]
@@ -103,7 +86,7 @@ class WheelCatalog:
         broadcasts them into the surrounding join for free.
         """
         try:
-            parsed = self._parse(query)
+            parsed = parse_select(query, self._parse_memo)
         except ParseError as err:
             routed = self._route_ctes(query)
             if routed is not None:
@@ -133,18 +116,15 @@ class WheelCatalog:
         to hand back). Identical rows to ``self.sql(query).collect()`` in
         every case."""
         try:
-            parsed = self._parse(query)
+            parsed = parse_select(query, self._parse_memo)
         except ParseError as err:
             routed = self._route_ctes(query, _want_df=False)
             ev = self._last_cte_eval
             if ev is not None:
                 # driver-evaluated outer query: identical rows to the
                 # LocalRelation collect, zero JVM round trips (r15)
-                from pyspark.sql import Row
-
                 names, _types, rows = ev
-                factory = Row(*names)
-                return [factory(*r) for r in rows]
+                return _rows(names, rows)
             if routed is not None:
                 return routed.collect()
             self.last_route = RouteDecision("delegate", detail={"reason": str(err)})

@@ -83,16 +83,18 @@ def _attach_foreach(dedup, stream_df: DataFrame, sink, **start_kwargs):
     )
 
 
-def _overwrite_partitions(spark, df: DataFrame, col: str, path: str) -> None:
-    """Per-partition dynamic overwrite with conf save/restore — the shared
-    compact() write (readers of the OLD state see a full set throughout;
-    only the rewritten partition dirs swap)."""
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.repartition(col).write.mode("overwrite").partitionBy(col).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+def _overwrite_partitions(df: DataFrame, col: str, path: str) -> None:
+    """Per-partition dynamic overwrite — the shared compact() write
+    (readers of the OLD state see a full set throughout; only the
+    rewritten partition dirs swap). The mode is a per-write option, so the
+    session's ``partitionOverwriteMode`` never changes under other work."""
+    (
+        df.repartition(col)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(col)
+        .parquet(path)
+    )
 
 
 class PendingState:
@@ -241,9 +243,7 @@ class CorpusDedup:
         s = self._state()
         if s is None:
             return
-        _overwrite_partitions(
-            self.spark, s.dropDuplicates(["digest"]), "bucket", self.state_dir
-        )
+        _overwrite_partitions(s.dropDuplicates(["digest"]), "bucket", self.state_dir)
 
     # ---------------------------------------------------------- streaming
 
@@ -524,7 +524,6 @@ class NearCorpusDedup:
         bands = self._read_state("bands", self._BANDS_SCHEMA)
         if bands is not None:
             _overwrite_partitions(
-                self.spark,
                 bands.dropDuplicates(["owner", "band", "key"]),
                 "hb",
                 os.path.join(self.state_dir, "bands"),
@@ -532,7 +531,6 @@ class NearCorpusDedup:
         sigs = self._read_state("sigs", self._SIGS_SCHEMA)
         if sigs is not None:
             _overwrite_partitions(
-                self.spark,
                 sigs.dropDuplicates(["owner"]),
                 "sb",
                 os.path.join(self.state_dir, "sigs"),
@@ -855,7 +853,6 @@ class SemanticCorpusDedup:
         if s is None:
             return
         _overwrite_partitions(
-            self.spark,
             s.dropDuplicates(),
             "cell",
             os.path.join(self.state_dir, "vectors"),

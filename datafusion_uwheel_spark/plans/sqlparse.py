@@ -33,6 +33,9 @@ __all__ = [
     "Comparison",
     "ParsedQuery",
     "parse_select",
+    "split_shape",
+    "prepare",
+    "Template",
     "parse_interval_seconds",
     "split_with_ctes",
 ]
@@ -74,7 +77,7 @@ APPROX_AGG_FUNCS = {"approx_count_distinct", "percentile_approx", "approx_percen
 #: grammar. Whitespace matches nothing, so ``findall`` skips it.
 _TOKEN_RE = re.compile(
     r"""
-        ('(?:[^']|'')*')
+        ('[^']*(?:''[^']*)*')
       | (-?\d+(?:\.\d+)?(?:[eE][+-]?\d+)?)
       | ([A-Za-z_][A-Za-z_0-9]*)
       | (<=|>=|<>|!=|=|<|>)
@@ -83,6 +86,10 @@ _TOKEN_RE = re.compile(
     """,
     re.VERBOSE,
 )
+
+
+#: Largest literal Spark types as INT (LIMIT takes nothing wider).
+_INT_MAX = 2**31 - 1
 
 
 class Token(NamedTuple):
@@ -469,8 +476,16 @@ class _Parser:
                     break
         if self.accept_kw("limit"):
             t = self.next()
-            if t.kind != "number" or "." in t.value:
-                raise ParseError("LIMIT must be an integer literal")
+            # Spark takes an unsigned INT literal only: a negative, decimal,
+            # exponent or BIGINT-sized LIMIT is its own analysis error
+            # (INVALID_LIMIT_LIKE_EXPRESSION), so those delegate to raise it
+            if not (
+                t.kind == "number"
+                and t.value.isascii()
+                and t.value.isdigit()
+                and int(t.value) <= _INT_MAX
+            ):
+                raise ParseError("LIMIT must be an unsigned INT literal")
             q.limit = int(t.value)
         if self.peek() is not None:
             raise ParseError(f"trailing tokens: {self.peek().value!r}")
@@ -730,9 +745,163 @@ class _Parser:
         raise ParseError(f"unsupported literal: {t.value!r}")
 
 
-def parse_select(sql: str) -> ParsedQuery:
-    """Parse a routable SELECT; raise :class:`ParseError` otherwise."""
+def parse_select(sql: str, memo=None) -> ParsedQuery:
+    """Parse a routable SELECT; raise :class:`ParseError` otherwise.
+
+    With a ``memo`` (the engine's :class:`..engine.ParseMemo`) the text is
+    served from its prepared shape when one matches — the same
+    :class:`ParsedQuery`, field for field, as the plain parse."""
+    if memo is not None:
+        return memo.parse(sql)
     return _Parser(_tokenize(sql)).parse()
+
+
+# ------------------------------------------------------- prepared shapes
+#: The literals of a text, in order: quoted strings (``''`` escapes
+#: included) and numbers in the tokenizer's own number syntax. A number
+#: must not follow an identifier character, so the digits of ``x1`` stay
+#: in the shape (the lookahead lets the scan skip every other character
+#: quickly). Where this split and the tokenizer still disagree
+#: (``x-5`` is one ``-5`` token but splits as ``5``), :func:`prepare`
+#: refuses the shape.
+_LITERAL_RE = re.compile(
+    r"(?=['0-9-])('[^']*(?:''[^']*)*'|(?<![A-Za-z_0-9])-?\d+(?:\.\d+)?(?:[eE][+-]?\d+)?)"
+)
+
+
+def split_shape(sql: str) -> tuple[tuple[str, str], list[str]]:
+    """``(shape key, literal texts)`` of ``sql`` in one regex split. The key
+    is the text with its literals cut out plus each literal's kind
+    (``s`` string, ``n`` number); texts that differ only in literal values
+    share it."""
+    parts = _LITERAL_RE.split(sql)
+    lits = parts[1::2]
+    kinds = "".join(["s" if lit[0] == "'" else "n" for lit in lits])
+    return ("\0".join(parts[0::2]), kinds), lits
+
+
+def _unquote(lit: str) -> str:
+    return lit[1:-1].replace("''", "'")
+
+
+def _same(lit: str) -> str:
+    return lit
+
+
+class _RecordingParser(_Parser):
+    """:class:`_Parser` that notes, for every :class:`Comparison` it makes,
+    which literal tokens became its value and through which converter —
+    ``float`` for a number, :func:`_unquote` for a string, :func:`_same`
+    for the raw number text under ``CAST(... AS TIMESTAMP)``."""
+
+    def __init__(self, tokens: list[Token]):
+        super().__init__(tokens)
+        self.used: list[tuple[int, object]] = []  # (token index, converter)
+        #: id(Comparison) → (Comparison, its (token index, converter)s);
+        #: holding the Comparison keeps its id from being reused
+        self.sources: dict[int, tuple[Comparison, list]] = {}
+
+    def literal(self) -> tuple[object, str]:
+        j = self.i
+        v, k = super().literal()
+        while self.toks[j].kind not in ("string", "number"):
+            j += 1  # past TIMESTAMP / CAST (
+        if self.toks[j].kind == "string":
+            conv = _unquote
+        else:
+            conv = float if isinstance(v, float) else _same
+        self.used.append((j, conv))
+        return v, k
+
+    def comparison(self) -> list[Comparison]:
+        n0 = len(self.used)
+        out = super().comparison()
+        used = self.used[n0:]
+        if len(out) == len(used):  # one literal each (BETWEEN makes two)
+            for c, u in zip(out, used):
+                self.sources[id(c)] = (c, [u])
+        else:  # IN (...): one comparison over all its literals
+            self.sources[id(out[0])] = (out[0], used)
+        return out
+
+
+class Template:
+    """A parsed shape, ready to take the literals of another text of it.
+
+    ``fixed`` holds the literals that must recur verbatim — every literal
+    that is not a WHERE value (the ``date_trunc`` unit, ``window``
+    intervals, the percentile, HAVING numbers, LIMIT) — and ``conjuncts``
+    / ``branches`` one binder per :class:`Comparison`. :meth:`bind` shares
+    the template query's immutable parts and makes fresh comparison
+    lists, so ``bind(lits) == parse_select(text)`` field for field."""
+
+    __slots__ = ("fields", "fixed", "conjuncts", "branches")
+
+    def __init__(self, q: ParsedQuery, fixed, conjuncts, branches):
+        self.fields = q.__dict__
+        self.fixed = fixed
+        self.conjuncts = conjuncts
+        self.branches = branches
+
+    def bind(self, lits: list[str]) -> ParsedQuery | None:
+        """The query for a text with these literals; ``None`` when a fixed
+        literal differs (the caller parses that text in full)."""
+        for i, text in self.fixed:
+            if lits[i] != text:
+                return None
+        q = ParsedQuery.__new__(ParsedQuery)
+        q.__dict__ = {
+            **self.fields,
+            "conjuncts": [make(lits) for make in self.conjuncts],
+            "or_branches": [[make(lits) for make in b] for b in self.branches],
+        }
+        return q
+
+
+def _binder(c: Comparison, slots: list):
+    """Rebuild ``c`` from the literal texts of a bound text."""
+    col, op, kind = c.column, c.op, c.value_kind
+    if op == "in":
+        slots = tuple(slots)
+        return lambda lits: Comparison(col, op, tuple(f(lits[i]) for i, f in slots), kind)
+    ((i, f),) = slots
+    return lambda lits: Comparison(col, op, f(lits[i]), kind)
+
+
+def prepare(sql: str, lits: list[str]) -> tuple[ParsedQuery, Template | None]:
+    """Parse ``sql`` (raising :class:`ParseError` like :func:`parse_select`)
+    and build the template of its shape. ``lits`` is the split of ``sql``
+    from :func:`split_shape`; the template is ``None`` when that split
+    does not name exactly the tokenizer's literal tokens, and such a
+    shape is always parsed in full."""
+    toks = _tokenize(sql)
+    p = _RecordingParser(toks)
+    q = p.parse()
+    at = [j for j, (kind, _) in enumerate(toks) if kind == "string" or kind == "number"]
+    if len(at) != len(lits):
+        return q, None
+    for j, lit in zip(at, lits):
+        kind, value = toks[j]
+        if kind == "string":
+            if lit[0] != "'" or _unquote(lit) != value:
+                return q, None
+        elif lit != value:
+            return q, None
+    ordinal = {j: i for i, j in enumerate(at)}
+    bound: set[int] = set()
+
+    def binders(cs: list[Comparison]):
+        out = []
+        for c in cs:
+            slots = [(ordinal[j], f) for j, f in p.sources[id(c)][1]]
+            bound.update(i for i, _ in slots)
+            out.append(_binder(c, slots))
+        return tuple(out)
+
+    conjuncts = binders(q.conjuncts)
+    branches = tuple(binders(b) for b in q.or_branches)
+    fixed = tuple((i, lit) for i, lit in enumerate(lits) if i not in bound)
+    return q, Template(q, fixed, conjuncts, branches)
 
 
 def parse_conjunction(sql: str) -> list[Comparison]:

@@ -15,10 +15,11 @@ over the session tilts neither side.
 Per metric it prints each side's median and quartiles, the base's
 interquartile range, the median of the per-pair differences, and how many
 pairs the change won (direction from ``BENCHMARK.json``'s ``better``), then
-each side's ``failed`` counts. A claimed gain holds when the change wins
-nearly every pair and the median difference exceeds the base's
-interquartile range. ``--out FILE`` also writes every run's raw result as
-JSON. Nothing under ``perfbench/`` is modified.
+each side's ``failed`` counts. Each end-to-end metric also gets one verdict
+(:func:`verdict`): ``gain``, ``regression``, ``unresolved`` or ``flat``.
+The exit status is 1 when any run failed an operation or an answer check.
+``--out FILE`` also writes every run's raw result as JSON. Nothing under
+``perfbench/`` or ``BENCHMARK.json`` is modified.
 """
 
 from __future__ import annotations
@@ -78,13 +79,16 @@ def run_side(root: str, args, seed: int) -> dict:
     return json.loads(lines[-1])
 
 
-def directions() -> dict[str, str]:
+def benchmark_spec() -> tuple[dict[str, str], dict[str, float]]:
+    """``({metric: better}, {end-to-end metric: bound})`` from the
+    read-only ``BENCHMARK.json``."""
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         spec = json.load(f)
-    return {
+    better = {
         m["name"]: m["better"]
         for m in spec.get("end_to_end", []) + spec.get("per_layer", [])
     }
+    return better, {m["name"]: m["bound"] for m in spec.get("end_to_end", [])}
 
 
 def quartiles(vs: list[float]) -> tuple[float, float, float]:
@@ -94,7 +98,32 @@ def quartiles(vs: list[float]) -> tuple[float, float, float]:
     return q1, q2, q3
 
 
-def report(runs: list[dict], better: dict[str, str]) -> None:
+def verdict(base: list[float], change: list[float], lower: bool, bound: float) -> str:
+    """One word per end-to-end metric, checked in this order:
+
+    - ``regression``: the change's median is worse than the base median by
+      more than ``bound`` (relative, as ``BENCHMARK.json`` states it);
+    - ``unresolved``: the base runs spread (IQR / median) wider than
+      ``bound``, too widely to tell;
+    - ``gain``: the change won at least 9 in 10 pairs and its median
+      difference is larger than the base IQR;
+    - ``flat``: anything else."""
+    bq, cq = quartiles(base), quartiles(change)
+    sign = 1 if lower else -1
+    if bq[1] and sign * (cq[1] - bq[1]) / bq[1] > bound:
+        return "regression"
+    if bq[1] and (bq[2] - bq[0]) / bq[1] > bound:
+        return "unresolved"
+    diffs = [sign * (y - x) for x, y in zip(base, change)]
+    wins = sum(d < 0 for d in diffs)
+    if 10 * wins >= 9 * len(diffs) and -statistics.median(diffs) > bq[2] - bq[0]:
+        return "gain"
+    return "flat"
+
+
+def report(runs: list[dict], better: dict[str, str], bounds: dict[str, float]) -> bool:
+    """Print the table, the verdicts and each side's failures; ``True``
+    when every run of both sides passed every check."""
     names = [k for k in runs[0]["base"]["metrics"] if k in runs[0]["change"]["metrics"]]
     print(
         f"{'metric':40s} {'base q1/med/q3':>32s} {'change q1/med/q3':>32s} "
@@ -113,10 +142,19 @@ def report(runs: list[dict], better: dict[str, str]) -> None:
             f"{bq[2] - bq[0]:10.4g} {statistics.median(diffs):10.4g} "
             f"{wins:3d}/{len(runs)}"
         )
+    for k in names:
+        if k in bounds:
+            b = [r["base"]["metrics"][k]["value"] for r in runs]
+            c = [r["change"]["metrics"][k]["value"] for r in runs]
+            lower = better.get(k, "lower") == "lower"
+            print(f"verdict {k}: {verdict(b, c, lower, bounds[k])}")
+    ok = True
     for side in ("base", "change"):
         failed = [r[side]["failed"] for r in runs]
         correct = all(r[side]["correct"] for r in runs)
+        ok = ok and correct and not any(failed)
         print(f"{side} failed per run: {failed} (correct in every run: {correct})")
+    return ok
 
 
 def main(argv=None) -> int:
@@ -157,11 +195,11 @@ def main(argv=None) -> int:
                 json.dump({"base": sha, "workload": args.workload, "runs": runs}, f)
         print(f"A/B {args.workload}: base {sha[:12]} vs this checkout, "
               f"{args.pairs} pairs from seed {args.seed}, trace {args.trace}")
-        report(runs, directions())
+        ok = report(runs, *benchmark_spec())
     finally:
         if not args.workdir:
             shutil.rmtree(workdir, ignore_errors=True)
-    return 0
+    return 0 if ok else 1
 
 
 if __name__ == "__main__":

@@ -177,31 +177,53 @@ def test_rows_prune_empty(eng):
     assert rows == []
 
 
-def test_parse_cache_survives_epoch_bump(eng):
+def _count_tokenize(monkeypatch):
+    """Count calls of the tokenizer every full parse starts with."""
+    from datafusion_uwheel_spark.plans import sqlparse
+
+    calls = []
+    real = sqlparse._tokenize
+
+    def counted(sql):
+        calls.append(sql)
+        return real(sql)
+
+    monkeypatch.setattr(sqlparse, "_tokenize", counted)
+    return calls
+
+
+def test_parse_cache_survives_epoch_bump(eng, monkeypatch):
     """The streaming case the parse memo exists for: an index mutation
     invalidates the ANSWER memo but not the parse — re-routing the same
-    text must hit the parse cache and still produce correct values."""
-    sql = ROUTED[1]
+    text (and a fresh text of the same shape) must not tokenize again and
+    must still produce correct values."""
+    sql = ROUTED[0]
+    other = sql.replace(B, "2024-01-09 00:00:00")
+    for day in ("04", "05"):  # two fresh texts: the shape is prepared
+        eng.sql_rows(other.replace(A, f"2024-01-{day} 00:00:00"))
     r1 = eng.sql_rows(sql)
-    assert sql in eng._parse_cache
-    parsed_obj = eng._parse_cache[sql]
+    calls = _count_tokenize(monkeypatch)
     eng.index_epoch += 1  # what a streaming merge does
     r2 = eng.sql_rows(sql)
     assert r2 == r1
-    assert eng._parse_cache[sql] is parsed_obj  # no re-tokenize
+    r3 = eng.sql_rows(other)
+    assert eng.last_route.rewritten
+    assert r3 == [tuple(r) for r in eng.spark.sql(other).collect()]
+    assert calls == []  # no re-tokenize
 
 
-def test_parse_cache_caches_failures(eng):
+def test_parse_cache_caches_failures(eng, monkeypatch):
     bad = "SELECT FROM WHERE nonsense ~~ rows_events"
+    calls = _count_tokenize(monkeypatch)
     # unparseable → delegate; spark.sql raises its own analysis error
     with pytest.raises(Exception):
         eng.sql_rows(bad)
-    assert bad in eng._parse_cache
-    from datafusion_uwheel_spark.plans.sqlparse import ParseError
-
-    assert isinstance(eng._parse_cache[bad], ParseError)
+    assert eng.last_route.kind == "delegate"
+    assert len(calls) == 1
     with pytest.raises(Exception):  # the memoized error path delegates again
         eng.sql_rows(bad)
+    assert eng.last_route.kind == "delegate"
+    assert len(calls) == 1  # the failure came from the memo
 
 
 def test_memo_lru_evicts_oldest_keeps_hot(monkeypatch):
@@ -217,3 +239,72 @@ def test_memo_lru_evicts_oldest_keeps_hot(monkeypatch):
     engine_mod._memo_put(cache, "d", "D")  # evicts b (LRU), not a
     assert list(cache) == ["c", "a", "d"]
     assert engine_mod._memo_get(cache, "b") is None
+
+
+def test_memo_get_tolerates_concurrent_eviction():
+    """``get`` then ``move_to_end`` is not atomic: another thread may evict
+    the key in between. The memo read must still return the value."""
+    from datafusion_uwheel_spark import engine as engine_mod
+
+    class EvictingDict(engine_mod.OrderedDict):
+        def get(self, key, default=None):
+            v = super().get(key, default)
+            self.pop(key, None)  # the other thread's eviction
+            return v
+
+    cache = EvictingDict()
+    cache["a"] = "A"
+    assert engine_mod._memo_get(cache, "a") == "A"
+    assert "a" not in cache
+    assert engine_mod._memo_get(cache, "a") is None
+
+
+def test_fast_rows_equal_row_factory():
+    """The answer rows are built without ``Row.__call__``; they must be the
+    same objects ``Row(*names)(*values)`` makes."""
+    import pickle
+
+    from pyspark.sql import Row
+
+    from datafusion_uwheel_spark.engine import _rows
+
+    names = ["b", "n", "s"]
+    values = [(1, 2, 3.5), ("x", None, float("inf")), (None, 0, -1.0)]
+    fast = _rows(names, values)
+    slow = [Row(*names)(*v) for v in values]
+    assert fast == slow
+    for f, s in zip(fast, slow):
+        assert type(f) is type(s) is Row
+        assert repr(f) == repr(s)
+        assert f.asDict() == s.asDict()
+        assert (f.b, f["n"], f[2]) == (s.b, s["n"], s[2])
+        assert f.__fields__ == s.__fields__ == tuple(names)
+        assert f.__fields__ is fast[0].__fields__  # one shared names Row
+        assert pickle.loads(pickle.dumps(f)) == s
+        assert repr(pickle.loads(pickle.dumps(f))) == repr(s)
+    assert _rows(names, []) == []
+
+
+@pytest.mark.parametrize("limit", ["-1", "1e3"])
+def test_invalid_limit_delegates_to_spark_error(eng, limit):
+    """Spark takes only an unsigned INT literal as LIMIT. A negative or an
+    exponent LIMIT on a routable group-by must delegate and raise the
+    error class plain ``spark.sql`` raises — not answer (``-1`` used to
+    drop the last row) and not escape as a ``ValueError``."""
+    sql = (
+        f"SELECT date_trunc('day', ts) AS b, COUNT(*) AS n FROM rows_events "
+        f"WHERE ts >= '{A}' AND ts < '{B}' GROUP BY date_trunc('day', ts) "
+        f"ORDER BY b LIMIT {limit}"
+    )
+
+    def condition(call):
+        with pytest.raises(Exception) as info:
+            call()
+        return info.value.getCondition()
+
+    want = condition(lambda: eng.spark.sql(sql).collect())
+    assert want.startswith("INVALID_LIMIT_LIKE_EXPRESSION")
+    assert condition(lambda: eng.sql_rows(sql)) == want
+    assert eng.last_route.kind == "delegate"
+    assert condition(lambda: eng.sql(sql).collect()) == want
+    assert eng.last_route.kind == "delegate"

@@ -8,6 +8,7 @@ import random
 
 import pytest
 
+from datafusion_uwheel_spark.engine import ParseMemo
 from datafusion_uwheel_spark.plans.sqlparse import ParseError, _tokenize, parse_select
 
 SEEDS = [
@@ -25,16 +26,26 @@ TOKENS = [
     "AND", "OR", "BETWEEN", "AS", "DESC", "ASC", "COUNT", "SUM", "AVG",
     "date_trunc", "(", ")", ",", "*", ".", "'a'", "'2024-01-01'", "ts", "v",
     "t", "5", "5.5", ">=", "<", "<=", ">", "=", "!=", "<>", "''", "CAST",
-    "TIMESTAMP", "0x", ";", "--", "🦉",
+    "TIMESTAMP", "0x", ";", "--", "🦉", "1e3", "-1", "1.5e-2",
 ]
+
+
+#: Shared across the fuzz tests, so mutated texts also bind into the
+#: templates of shapes seen before.
+_MEMO = ParseMemo()
 
 
 def _try(sql: str) -> None:
     try:
-        parse_select(sql)
+        want = parse_select(sql)
     except ParseError:
-        pass  # delegation path — fine
+        want = ParseError  # delegation path — fine
     # any other exception propagates and fails the test
+    try:
+        got = parse_select(sql, _MEMO)
+    except ParseError:
+        got = ParseError
+    assert got == want and repr(got) == repr(want)
 
 
 def test_seed_queries_parse():
@@ -120,12 +131,14 @@ def test_mutated_seeds_never_crash():
     for _ in range(3000):
         s = list(rng.choice(SEEDS))
         for _ in range(rng.randrange(1, 6)):
-            op = rng.randrange(3)
+            op = rng.randrange(4)
             i = rng.randrange(len(s)) if s else 0
             if op == 0 and s:
                 del s[i]
             elif op == 1:
                 s.insert(i, rng.choice("()'\",*<>=; abc123"))
+            elif op == 2:
+                s.insert(i, f" {rng.choice(TOKENS)} ")
             elif s:
                 s[i] = rng.choice("()'\",*<>=; abc123")
         _try("".join(s))
@@ -145,6 +158,9 @@ def test_pathological_shapes():
         "SELECT COUNT(*) FROM t ORDER BY",
         "SELECT COUNT(*) FROM t LIMIT",
         "SELECT COUNT(*) FROM t LIMIT 1.5",
+        "SELECT COUNT(*) FROM t LIMIT -1",
+        "SELECT COUNT(*) FROM t LIMIT 1e3",
+        "SELECT COUNT(*) FROM t LIMIT 2147483648",
         "SELECT COUNT(*) FROM t HAVING",
         "(((((((((",
         "SELECT COUNT(*) FROM t WHERE ts BETWEEN",

@@ -61,11 +61,23 @@ def test_null_text_passes_through_unrecorded(spark, dedup):
     assert ids(out2) == [3]  # NULL passes again; 'x' is seen
 
 
-def test_compact_folds_state_without_changing_answers(spark, dedup):
+def test_compact_folds_state_without_changing_answers(spark, dedup, monkeypatch):
     for i in range(4):
         dedup.filter_batch(docs(spark, [(i * 10 + j, f"t{i}-{j}") for j in range(5)]))
     before = dedup.seen_count()
+    key = "spark.sql.sources.partitionOverwriteMode"
+    mode = spark.conf.get(key, None)
+    conf_type = type(spark.conf)
+    writes = []
+    real_set = conf_type.set
+    monkeypatch.setattr(
+        conf_type, "set", lambda self, k, v: writes.append(k) or real_set(self, k, v)
+    )
     dedup.compact()
+    # the dynamic overwrite is a per-write option: the session-global
+    # conf other work reads is never written, not even for the write
+    assert key not in writes
+    assert spark.conf.get(key, None) == mode
     assert dedup.seen_count() == before == 20
     # previously seen content still filtered after the rewrite
     assert ids(dedup.filter_batch(docs(spark, [(99, "t0-0"), (100, "fresh")]))) == [100]
