@@ -1357,7 +1357,7 @@ def main() -> None:
         ),
         (
             # the dashboard shape: GROUP BY date_trunc rows straight off the
-            # router's capture — no LocalRelation build, no py4j
+            # router's answer — no LocalRelation build, no py4j
             "uw_groupby_hour_direct",
             lambda a, b: (
                 "SELECT date_trunc('hour', ts) AS bucket, COUNT(*) AS n, "
@@ -1385,7 +1385,7 @@ def main() -> None:
         for i in range(N_INDEXED):
             a, b = dranges[i]
             q = sql_of(a, b)
-            eng._rows_cache.pop(q, None)  # time the full route, not the memo
+            eng._route_memo.pop(q, None)  # time the full route, not the memo
             t0 = time.perf_counter()
             eng.sql_rows(q)
             dtimes.append(time.perf_counter() - t0)
@@ -1415,7 +1415,7 @@ def main() -> None:
         eng.sql_rows(q)  # warm the parse memo
         rtimes = []
         for _ in range(N_INDEXED):
-            eng._rows_cache.pop(q, None)
+            eng._route_memo.pop(q, None)
             t0 = time.perf_counter()
             eng.sql_rows(q)
             rtimes.append(time.perf_counter() - t0)
@@ -1442,7 +1442,7 @@ def main() -> None:
     for i in range(N_INDEXED):
         a, b = ranges_sec[i]
         q = f"SELECT COUNT(*) AS n FROM events WHERE ts >= '{a}' AND ts < '{b}'"
-        eng._rows_cache.pop(q, None)
+        eng._route_memo.pop(q, None)
         t0 = time.perf_counter()
         cat.sql_rows(q)
         ctimes.append(time.perf_counter() - t0)
@@ -1575,7 +1575,7 @@ def main() -> None:
         cat.sql(cte_sql).collect()
         assert cat.last_route.kind == "cte_rewrite", cat.last_route
         # r15: the outer join/filter/sort is evaluated DRIVER-side over
-        # the captured CTE answers (plans/cte_eval) — zero Spark jobs;
+        # the routed CTE answers (plans/cte_eval) — zero Spark jobs;
         # assert it so a silent fallback to the splice can't masquerade
         # as a slow box. uw_cte_join_floor below still prices the splice.
         assert cat.last_route.detail.get("evaluated") == "driver", (
@@ -1865,7 +1865,7 @@ def main() -> None:
         dtimes = []
         for a, b in s_ranges:
             q = f"SELECT COUNT(*) AS n FROM events_sf1 WHERE ts >= '{a}' AND ts < '{b}'"
-            eng1._rows_cache.pop(q, None)
+            eng1._route_memo.pop(q, None)
             t0 = time.perf_counter()
             eng1.sql_rows(q)
             dtimes.append(time.perf_counter() - t0)
@@ -2145,7 +2145,7 @@ def main() -> None:
                     f"SELECT COUNT(*) AS n FROM events_sf10 "
                     f"WHERE ts >= '{a}' AND ts < '{b}'"
                 )
-                eng10._rows_cache.pop(q, None)
+                eng10._route_memo.pop(q, None)
                 t0 = time.perf_counter()
                 eng10.sql_rows(q)
                 dtimes.append(time.perf_counter() - t0)

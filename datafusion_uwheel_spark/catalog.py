@@ -12,17 +12,21 @@ surface keeps working across tables.
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import DataFrame, SparkSession
 
 from .engine import ParseMemo, WheelEngine, _rows
-from .plans.router import RouteDecision
+from .plans import router
+from .plans.router import Answer, RouteDecision
 from .plans.sqlparse import ParseError, parse_select, split_with_ctes
 
 __all__ = ["WheelCatalog"]
 
 #: Monotonic suffix for routed-CTE temp views — keeps concurrent catalogs
-#: (or re-entrant .sql calls) from clobbering each other's views.
-_CTE_VIEW_SEQ = 0
+#: (or re-entrant .sql calls) from clobbering each other's views; each
+#: ``next`` is one atomic step, so two threads never draw the same name.
+_CTE_VIEW_SEQ = itertools.count(1)
 
 
 class WheelCatalog:
@@ -31,10 +35,6 @@ class WheelCatalog:
         self.engines: dict[str, WheelEngine] = {}
         self.sim_engines: dict[str, object] = {}
         self.last_route: RouteDecision | None = None
-        #: Captured ``(names, sql_types, rows)`` of the most recent
-        #: driver-evaluated CTE outer query (``None`` when the last WITH
-        #: spliced) — lets ``sql_rows`` skip the LocalRelation build.
-        self._last_cte_eval: tuple | None = None
         #: query text → splice snapshot (parts/views/rewritten + the
         #: owning engines' epochs); see ``_route_ctes``.
         self._cte_splice_memo: dict[str, dict] = {}
@@ -73,6 +73,29 @@ class WheelCatalog:
     def similarity(self, name: str):
         return self.sim_engines[name.lower()]
 
+    def _dispatch(self, query: str):
+        """``(engine, answer)`` for ``query``, recording ``last_route``:
+        the owning engine and its answer-memo entry for a single-table
+        text, else no engine and the CTE splicer's answer (a
+        driver-evaluated :class:`Answer` or a spliced DataFrame). The
+        answer is ``None`` when the text delegates whole."""
+        try:
+            parsed = parse_select(query, self._parse_memo)
+        except ParseError as err:
+            got = self._route_ctes(query)
+            if got is None:
+                self.last_route = RouteDecision("delegate", detail={"reason": str(err)})
+            return None, got
+        eng = self.engines.get(parsed.table.lower())
+        if eng is None:
+            self.last_route = RouteDecision(
+                "delegate", detail={"reason": f"unregistered table {parsed.table!r}"}
+            )
+            return None, None
+        decision, entry = eng._route(query, parsed)
+        self.last_route = eng.last_route = decision
+        return eng, entry
+
     def sql(self, query: str) -> DataFrame:
         """Route to the owning engine's wheel lookups, else delegate.
 
@@ -85,23 +108,12 @@ class WheelCatalog:
         The routed answers are tiny driver-built frames, so Catalyst
         broadcasts them into the surrounding join for free.
         """
-        try:
-            parsed = parse_select(query, self._parse_memo)
-        except ParseError as err:
-            routed = self._route_ctes(query)
-            if routed is not None:
-                return routed
-            self.last_route = RouteDecision("delegate", detail={"reason": str(err)})
+        eng, got = self._dispatch(query)
+        if got is None:
             return self.spark.sql(query)
-        eng = self.engines.get(parsed.table.lower())
-        if eng is None:
-            self.last_route = RouteDecision(
-                "delegate", detail={"reason": f"unregistered table {parsed.table!r}"}
-            )
-            return self.spark.sql(query)
-        df = eng.sql(query)
-        self.last_route = eng.last_route
-        return df
+        if eng is not None:
+            return eng._df_of(got)
+        return router.constant_df(self.spark, *got) if isinstance(got, Answer) else got
 
     def sql_rows(self, query: str) -> list:
         """:meth:`sql` with the DataFrame layer peeled off — the catalog
@@ -111,61 +123,42 @@ class WheelCatalog:
         multi-table dashboard needs no per-engine handles to get the direct
         path. Unregistered tables and unparseable SQL run
         ``spark.sql(...).collect()``; a ``WITH`` query goes through the CTE
-        splicer first (its routed CTEs skip the table scans, but the outer
-        join still executes on the JVM — there is nothing driver-resident
-        to hand back). Identical rows to ``self.sql(query).collect()`` in
-        every case."""
-        try:
-            parsed = parse_select(query, self._parse_memo)
-        except ParseError as err:
-            routed = self._route_ctes(query, _want_df=False)
-            ev = self._last_cte_eval
-            if ev is not None:
-                # driver-evaluated outer query: identical rows to the
-                # LocalRelation collect, zero JVM round trips (r15)
-                names, _types, rows = ev
-                return _rows(names, rows)
-            if routed is not None:
-                return routed.collect()
-            self.last_route = RouteDecision("delegate", detail={"reason": str(err)})
+        splicer first (a driver-evaluated outer query comes back with zero
+        JVM round trips; a spliced one still executes its outer join on the
+        JVM). Identical rows to ``self.sql(query).collect()`` in every
+        case."""
+        eng, got = self._dispatch(query)
+        if got is None:
             return self.spark.sql(query).collect()
-        eng = self.engines.get(parsed.table.lower())
-        if eng is None:
-            self.last_route = RouteDecision(
-                "delegate", detail={"reason": f"unregistered table {parsed.table!r}"}
-            )
-            return self.spark.sql(query).collect()
-        out = eng.sql_rows(query, _parsed=parsed)
-        self.last_route = eng.last_route
-        return out
+        if eng is not None:
+            return eng._rows_of(got)
+        return _rows(got.names, got.rows) if isinstance(got, Answer) else got.collect()
 
-    def _route_ctes(self, query: str, _want_df: bool = True) -> DataFrame | None:
-        """Wheel-answer the routable CTEs of a ``WITH`` query; ``None`` if
-        the query isn't a splittable WITH or no CTE routed (caller then
-        delegates the original text untouched).
+    def _route_ctes(self, query: str) -> Answer | DataFrame | None:
+        """Wheel-answer the routable CTEs of a ``WITH`` query: the spliced
+        DataFrame, or ``None`` if the query isn't a splittable WITH or no
+        CTE routed (caller then delegates the original text untouched).
 
         When EVERY CTE routes, the outer query is additionally tried
         against the driver-side evaluator (:mod:`.plans.cte_eval`, r15):
-        the captured answers are tiny driver-resident row lists, so a
+        the routed answers are tiny driver-resident row lists, so a
         recognized join/filter/order shape is computed in pure Python and
-        returned as one constant LocalRelation — zero Spark jobs — instead
-        of paying the splice's three tiny jobs (scalar subquery, broadcast
-        build, final collect; measured at ~1 s of fixed scheduling cost on
-        a contended box for a 24-row answer). Unrecognized shapes splice
+        returned as one constant :class:`Answer` — zero Spark jobs —
+        instead of paying the splice's three tiny jobs (scalar subquery,
+        broadcast build, final collect; measured at ~1 s of fixed scheduling
+        cost on a contended box for a 24-row answer). Unrecognized shapes splice
         exactly as before. ``detail['sql']`` always carries the spliced
         text (with live temp views) so floor probes can still price the
         splice; ``detail['evaluated']`` says which path answered."""
-        global _CTE_VIEW_SEQ
         try:
             ctes, main = split_with_ctes(query)
         except ParseError:
             return None
-        self._last_cte_eval = None
         # Splice memo (r15): the view registration + body routing for a
         # given query text is invariant while the owning engines and
         # their index epochs are — repeated dashboard text skips the
         # per-call temp-view py4j round trips. Answers are NOT memoized
-        # here: routed_answer re-validates its own epoch per call.
+        # here: each engine's answer memo re-validates its epoch per call.
         memo = self._cte_splice_memo.get(query)
         if memo is not None and all(
             self.engines.get(t) is e and (e is None or e.index_epoch == ep)
@@ -186,20 +179,20 @@ class WheelCatalog:
                 eng = None
                 table = None
                 try:
-                    table = parse_select(body).table.lower()
+                    parsed = parse_select(body, self._parse_memo)
+                    table = parsed.table.lower()
                     eng = self.engines.get(table)
                 except ParseError:
                     pass
                 if eng is not None:
-                    df = eng.sql(body)
-                    if eng.last_route is not None and eng.last_route.rewritten:
-                        _CTE_VIEW_SEQ += 1
-                        view = f"__uw_cte_{_CTE_VIEW_SEQ}"
-                        df.createOrReplaceTempView(view)
+                    decision, entry = eng._route(body, parsed)
+                    if entry is not None:
+                        view = f"__uw_cte_{next(_CTE_VIEW_SEQ)}"
+                        eng._df_of(entry).createOrReplaceTempView(view)
                         # Swap only the body: the CTE keeps its name, so the
                         # main query text never needs identifier rewriting.
                         parts.append(f"{name} AS (SELECT * FROM {view})")
-                        routed[name] = eng.last_route.kind
+                        routed[name] = decision.kind
                         routed_bodies.append((name, body, eng))
                         engines_snapshot.append((table, eng, eng.index_epoch))
                         continue
@@ -230,20 +223,15 @@ class WheelCatalog:
         detail = {"routed": routed, "delegated": delegated, "sql": rewritten}
         if len(routed_data) == len(ctes):
             from .plans.cte_eval import evaluate_outer, parse_outer
-            from .plans.router import constant_df
 
             spec = parse_outer(main)
             ev = (
                 evaluate_outer(spec, routed_data) if spec is not None else None
             )
             if ev is not None:
-                names, types, rows = ev
                 detail["evaluated"] = "driver"
                 self.last_route = RouteDecision("cte_rewrite", detail=detail)
-                self._last_cte_eval = ev
-                if not _want_df:  # sql_rows: the caller hands rows back
-                    return None  # without building the LocalRelation
-                return constant_df(self.spark, names, types, rows)
+                return Answer(*ev)
         detail["evaluated"] = "splice"
         self.last_route = RouteDecision("cte_rewrite", detail=detail)
         return self.spark.sql(rewritten)

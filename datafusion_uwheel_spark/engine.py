@@ -22,11 +22,14 @@ from collections import OrderedDict
 
 from pyspark.sql import Column, DataFrame, Row, SparkSession
 
+from .functions.timestamps import parse_ts_literal
 from .operators.lookup import STAR_AGGREGATION_ALIAS, WheelIndex
 from .operators.rollups import build_wheel_indices
-from .plans.router import RouteDecision, Router
-from .plans import sqlparse
-from .plans.sqlparse import ParseError, parse_conjunction, parse_select, prepare, split_shape
+from .plans.router import EMPTY, RouteDecision, Router
+from .plans import router, sqlparse
+from .plans.sqlparse import (
+    ParseError, Template, parse_conjunction, parse_select, prepare, split_shape,
+)
 from .plans.predicates import canonical_filter_key
 
 __all__ = ["WheelEngine"]
@@ -35,10 +38,10 @@ __all__ = ["WheelEngine"]
 #: None must mean DISABLE the cap, matching the operator layer's meaning
 _KEYS_DEFAULT = object()
 
-#: Per-engine cap for the query-string memos (routed answers, routed rows,
-#: parses). LRU-evicted at the cap: a dashboard cycling >512 distinct query
-#: strings keeps its hot set warm instead of re-deriving everything each
-#: cycle (the old overflow behavior cleared the whole dict).
+#: Per-engine cap for the query-string memos (routed answers, parses).
+#: LRU-evicted at the cap: a dashboard cycling >512 distinct query strings
+#: keeps its hot set warm instead of re-deriving everything each cycle
+#: (the old overflow behavior cleared the whole dict).
 _MEMO_CAP = 512
 
 
@@ -67,9 +70,10 @@ class ParseMemo:
     query *shape* (the text with its literals cut out), LRU-bounded at
     ``_MEMO_CAP``. A text whose shape is prepared binds its literals into
     the template instead of being tokenized and parsed. A shape is parsed
-    plainly the first time it is seen and prepared the second time (a
-    shape whose literals the split cannot name exactly stays unprepared
-    and is parsed in full). A :class:`ParseError` is memoized under its
+    plainly the first time it is seen and prepared the second time; a
+    shape whose literals the split cannot name exactly gets no template
+    and every later text of it is parsed plainly, without another try at
+    preparing it. A :class:`ParseError` is memoized under its
     exact text. Nothing here depends on the indexes, so the memo outlives
     index mutations (a streaming merge re-routes its dashboard's texts
     without parsing them again)."""
@@ -80,7 +84,7 @@ class ParseMemo:
     def parse(self, sql: str):
         key, lits = split_shape(sql)
         tmpl = _memo_get(self.cache, key)
-        if tmpl is not None and tmpl is not _SEEN:
+        if tmpl.__class__ is Template:
             q = tmpl.bind(lits)
             if q is not None:
                 return q
@@ -88,26 +92,30 @@ class ParseMemo:
         if err is not None:
             raise err.with_traceback(None)
         try:
-            if tmpl is None:
+            if tmpl is None or tmpl is _PLAIN:
                 # first sighting: a plain parse, so a stream of one-off
                 # shapes pays no template builds (called through the
                 # module: this module's own ``parse_select`` is the name
                 # the traced benchmark wraps, once per parse)
-                q, tmpl = sqlparse.parse_select(sql), _SEEN
+                q, tmpl = sqlparse.parse_select(sql), (_SEEN if tmpl is None else _PLAIN)
             else:
                 q, tmpl = prepare(sql, lits)
+                if tmpl is None:
+                    tmpl = _PLAIN
         except ParseError as e:
             # kept without its traceback, whose frames would pin the
             # parser and its token list for as long as the memo holds it
             _memo_put(self.cache, sql, e.with_traceback(None))
             raise
-        if tmpl is not None:
-            _memo_put(self.cache, key, tmpl)
+        _memo_put(self.cache, key, tmpl)
         return q
 
 
 #: Memo value of a shape seen once: the next text of it is prepared.
 _SEEN = object()
+#: Memo value of a shape :func:`~.plans.sqlparse.prepare` could not
+#: template: its texts are parsed plainly from then on.
+_PLAIN = object()
 
 
 def _rows(names, values) -> list:
@@ -123,6 +131,33 @@ def _rows(names, values) -> list:
         row.__dict__["__fields__"] = fields  # Row.__setattr__, minus the call
         out.append(row)
     return out
+
+
+class _Routed:
+    """One answer-memo entry: the index epoch it was routed at, the
+    :class:`RouteDecision`, the router's answer (an ``Answer`` or
+    :data:`EMPTY`), and the door forms built from it on first use — the
+    ``sql()`` DataFrame and the ``sql_rows()`` Row list."""
+
+    __slots__ = ("epoch", "decision", "answer", "df", "rows")
+
+    def __init__(self, epoch: int, decision: RouteDecision, answer):
+        self.epoch = epoch
+        self.decision = decision
+        self.answer = answer
+        self.df = None
+        self.rows = None
+
+
+def _bound_sec(x, default) -> int:
+    """Epoch second of a second-aligned timestamp bound (``default`` for
+    ``None``) — the bounds of the zero-job monitor asks."""
+    if x is None:
+        return default
+    lit = parse_ts_literal(str(x))
+    if lit is None or not lit.second_aligned:
+        raise ValueError(f"bound {x!r} is not a second-aligned timestamp")
+    return lit.epoch_us // 1_000_000
 
 
 class WheelEngine:
@@ -345,23 +380,16 @@ class WheelEngine:
         self.last_route: RouteDecision | None = None
         self._time_range = time_range
         #: Bumped whenever any wheel's contents change (build_index,
-        #: streaming merges) — invalidates the routed-answer cache.
+        #: streaming merges) — invalidates the answer memo.
         self.index_epoch = 0
-        self._route_cache: OrderedDict[str, tuple[int, RouteDecision, DataFrame]] = (
-            OrderedDict()
-        )
-        self._rows_cache: OrderedDict[str, tuple[int, RouteDecision, list]] = (
-            OrderedDict()
-        )
-        #: query text → (epoch, RouteDecision, (names, sql_types, rows)) —
-        #: the raw captured triple for consumers that need the SQL types
-        #: next to the values (the catalog's driver-evaluated CTE outer
-        #: queries, r15); same epoch discipline as ``_rows_cache``.
-        self._answer_cache: OrderedDict[str, tuple[int, RouteDecision, tuple]] = (
-            OrderedDict()
-        )
+        #: query text → :class:`_Routed`: the one answer memo behind every
+        #: door (see :meth:`_route`).
+        self._route_memo: OrderedDict[str, _Routed] = OrderedDict()
+        #: The empty frame of ``self.df`` that pruned ``sql()`` answers
+        #: share; built on first use.
+        self._empty_df: DataFrame | None = None
         #: Prepared query shapes (see :class:`ParseMemo`). Unlike the
-        #: answer memos this is NOT epoch-keyed: a parse depends only on
+        #: answer memo this is NOT epoch-keyed: a parse depends only on
         #: the SQL text. Safe to share because nothing downstream mutates
         #: a ParsedQuery (list fields are only appended to inside the
         #: parser itself).
@@ -856,24 +884,14 @@ class WheelEngine:
 
         Requires an unfiltered wheel for ``column`` (KeyError if none) with
         NULL tracking (every wheel built since r2 has it)."""
-        from .functions.timestamps import parse_ts_literal
-
         w = self.agg_wheels[(column, STAR_AGGREGATION_ALIAS)]
         if w.vcnt_ is None:
             raise ValueError(
                 f"wheel for {column!r} predates NULL tracking — rebuild it"
             )
 
-        def to_sec(x, default):
-            if x is None:
-                return default
-            lit = parse_ts_literal(str(x))
-            if lit is None or not lit.second_aligned:
-                raise ValueError(f"bound {x!r} is not a second-aligned timestamp")
-            return lit.epoch_us // 1_000_000
-
-        a = to_sec(start, w.low_sec)
-        b = to_sec(end, w.high_sec_exclusive)
+        a = _bound_sec(start, w.low_sec)
+        b = _bound_sec(end, w.high_sec_exclusive)
         states = w.combine_range(a, b, ("count", "count_col"))
         if states is None:
             raise ValueError(
@@ -895,7 +913,7 @@ class WheelEngine:
         for occupied buckets at a named ``date_trunc`` granularity or an
         integer tumbling width in seconds. Zero jobs; the result is a tiny
         constant relation assembled from the wheel states."""
-        from .functions.timestamps import parse_ts_literal, secs_to_datetimes
+        from .functions.timestamps import secs_to_datetimes
 
         w = self.agg_wheels[(column, STAR_AGGREGATION_ALIAS)]
         if w.vcnt_ is None:
@@ -903,16 +921,8 @@ class WheelEngine:
                 f"wheel for {column!r} predates NULL tracking — rebuild it"
             )
 
-        def to_sec(x, default):
-            if x is None:
-                return default
-            lit = parse_ts_literal(str(x))
-            if lit is None or not lit.second_aligned:
-                raise ValueError(f"bound {x!r} is not a second-aligned timestamp")
-            return lit.epoch_us // 1_000_000
-
-        a = to_sec(start, w.low_sec)
-        b = to_sec(end, w.high_sec_exclusive)
+        a = _bound_sec(start, w.low_sec)
+        b = _bound_sec(end, w.high_sec_exclusive)
         groups = w.group_by(a, b, granularity, ("count", "count_col"))
         if groups is None:
             raise ValueError(
@@ -936,22 +946,12 @@ class WheelEngine:
         ``(key, rows, nulls, null_ratio)`` per key value with rows in the
         range — zero jobs, key-complete (NULL keys included; values with no
         rows in range are omitted, matching a delegated GROUP BY)."""
-        from .functions.timestamps import parse_ts_literal
-
         ps = self.partition_sets[key_column.lower()]
         self._ensure_base()
         star = self.count_wheels[STAR_AGGREGATION_ALIAS]
 
-        def to_sec(x, default):
-            if x is None:
-                return default
-            lit = parse_ts_literal(str(x))
-            if lit is None or not lit.second_aligned:
-                raise ValueError(f"bound {x!r} is not a second-aligned timestamp")
-            return lit.epoch_us // 1_000_000
-
-        a = to_sec(start, star.low_sec)
-        b = to_sec(end, star.high_sec_exclusive)
+        a = _bound_sec(start, star.low_sec)
+        b = _bound_sec(end, star.high_sec_exclusive)
         rows = []
         for v, fam in sorted(
             ps["wheels"].items(), key=lambda kv: (kv[0] is None, str(kv[0]))
@@ -990,7 +990,7 @@ class WheelEngine:
         from the wheel's min/max states, zero jobs. All-NULL buckets emit
         NULL bounds (SQL aggregate semantics). Outlier injections show up
         as envelope jumps without ever scanning the table."""
-        from .functions.timestamps import parse_ts_literal, secs_to_datetimes
+        from .functions.timestamps import secs_to_datetimes
 
         w = self.agg_wheels[(column, STAR_AGGREGATION_ALIAS)]
         if w.min_ is None or w.max_ is None:
@@ -999,16 +999,8 @@ class WheelEngine:
                 "aggs=None or aggs including 'min'/'max'"
             )
 
-        def to_sec(x, default):
-            if x is None:
-                return default
-            lit = parse_ts_literal(str(x))
-            if lit is None or not lit.second_aligned:
-                raise ValueError(f"bound {x!r} is not a second-aligned timestamp")
-            return lit.epoch_us // 1_000_000
-
-        a = to_sec(start, w.low_sec)
-        b = to_sec(end, w.high_sec_exclusive)
+        a = _bound_sec(start, w.low_sec)
+        b = _bound_sec(end, w.high_sec_exclusive)
         groups = w.group_by(a, b, granularity, ("min", "max"))
         if groups is None:
             raise ValueError(
@@ -1140,125 +1132,112 @@ class WheelEngine:
         return indices[column].key
 
     # ------------------------------------------------------------- queries
+    def _route(self, query: str, parsed=None) -> tuple[RouteDecision, _Routed | None]:
+        """The one route behind every door: ``(decision, entry)``, where
+        ``entry`` holds the router's answer and ``None`` means delegate.
+        ``parsed`` skips the parse when the caller already holds it (the
+        catalog parses to find the owning engine).
+
+        Routed answers are memoized per query string until any index
+        mutates (``index_epoch``), so a text asked through one door is
+        served to every other door from the same entry. Delegated queries
+        are never memoized — the underlying table may change outside the
+        engine's view."""
+        entry = _memo_get(self._route_memo, query)
+        if entry is not None and entry.epoch == self.index_epoch:
+            return entry.decision, entry
+        if parsed is None:
+            try:
+                parsed = parse_select(query, self._parse_memo)
+            except ParseError as err:
+                return RouteDecision("delegate", detail={"reason": str(err)}), None
+        decision, answer = self.router.try_rewrite(parsed)
+        if answer is None:
+            return decision, None
+        entry = _Routed(self.index_epoch, decision, answer)
+        # approx_agg answers come from the SKETCH rollups, which mutate
+        # through their own handles (merge_batch/compact) without bumping
+        # index_epoch — never memoize them here; the rollup's ask memo
+        # (which those mutations DO invalidate) prices repeats
+        if decision.kind != "approx_agg":
+            _memo_put(self._route_memo, query, entry)
+        return decision, entry
+
+    def _df_of(self, entry: _Routed) -> DataFrame:
+        """The entry's answer as a DataFrame, built once: a constant
+        LocalRelation, or the table's empty frame for a pruned scan. Zero
+        Spark jobs either way."""
+        if entry.df is None:
+            if entry.answer is EMPTY:
+                if self._empty_df is None:
+                    self._empty_df = self.df.where("FALSE")
+                entry.df = self._empty_df
+            else:
+                entry.df = router.constant_df(self.spark, *entry.answer)
+        return entry.df
+
+    def _rows_of(self, entry: _Routed) -> list:
+        """The entry's answer as a fresh ``Row`` list (the cached list is
+        built once; callers get a copy, so their mutations can't poison
+        the memo)."""
+        if entry.rows is None:
+            ans = entry.answer
+            entry.rows = [] if ans is EMPTY else _rows(ans.names, ans.rows)
+        return list(entry.rows)
+
     def sql(self, query: str) -> DataFrame:
         """Route-or-delegate, the engine's main entry point (§3.1).
 
         On a match the answer is a LocalRelation built from a driver-side
         wheel lookup — no Spark job runs. Otherwise the untouched SQL goes to
         ``spark.sql`` (full Catalyst surface). ``self.last_route`` records
-        the decision for tests and benchmarks.
-
-        Routed answers are memoized per query string until any index mutates
-        (``index_epoch``): repeated dashboard-style queries skip even the
-        constant-plan construction. Delegated queries are never cached — the
-        underlying table may change outside the engine's view.
+        the decision for tests and benchmarks. A repeated routed text
+        returns the same DataFrame until any index mutates (see
+        :meth:`_route`).
         """
-        cached = _memo_get(self._route_cache, query)
-        if cached is not None and cached[0] == self.index_epoch:
-            self.last_route = cached[1]
-            return cached[2]
-        try:
-            parsed = parse_select(query, self._parse_memo)
-        except ParseError as err:
-            self.last_route = RouteDecision("delegate", detail={"reason": str(err)})
-            return self.spark.sql(query)
-        decision, df = self.router.try_rewrite(parsed)
+        decision, entry = self._route(query)
         self.last_route = decision
-        if df is not None:
-            # approx_agg answers come from the SKETCH rollups, which mutate
-            # through their own handles (merge_batch/compact) without
-            # bumping index_epoch — never memoize them here; the rollup's
-            # ask memo (which those mutations DO invalidate) prices repeats
-            if decision.kind != "approx_agg":
-                _memo_put(self._route_cache, query, (self.index_epoch, decision, df))
-            return df
-        return self.spark.sql(query)
+        return self.spark.sql(query) if entry is None else self._df_of(entry)
 
-    def sql_rows(self, query: str, _parsed=None) -> list:
+    def sql_rows(self, query: str) -> list:
         """:meth:`sql` with the DataFrame layer peeled off: routed answers
         come back as plain ``Row`` lists with **zero JVM round trips** — no
         VALUES parse, no ``collect()`` — so a wheel-served dashboard query
         costs microseconds of Python instead of the ~5-10 ms py4j floor
         every DataFrame materialization pays (the reference's µs-level
         latencies are py4j-free for the same reason: the answer is already
-        driver-resident). Delegated queries run ``spark.sql(...).collect()``
-        — identical rows either way (same values, names, and ordering; a
+        driver-resident). A pruned ``SELECT *`` returns ``[]`` without a
+        JVM call. Delegated queries run ``spark.sql(...).collect()`` —
+        identical rows either way (same values, names, and ordering; a
         routed answer without ORDER BY has the same deterministic order the
-        LocalRelation would). ``self.last_route`` records the decision, and
-        answers are memoized per query string until any index mutates."""
-        cached = _memo_get(self._rows_cache, query)
-        if cached is not None and cached[0] == self.index_epoch:
-            self.last_route = cached[1]
-            return list(cached[2])  # a copy: caller mutation can't poison the memo
-        try:
-            # _parsed: the catalog front door already parsed the text to
-            # find the owning engine — don't tokenize twice on its path.
-            parsed = parse_select(query, self._parse_memo) if _parsed is None else _parsed
-        except ParseError as err:
-            self.last_route = RouteDecision("delegate", detail={"reason": str(err)})
-            return self.spark.sql(query).collect()
-        r = self.router
-        r.capture_rows = True
-        try:
-            decision, df = r.try_rewrite(parsed)
-        finally:
-            r.capture_rows = False
+        LocalRelation would). ``self.last_route`` records the decision."""
+        # the memo hit, inline: the hot dashboard path enters no other layer
+        entry = _memo_get(self._route_memo, query)
+        if entry is not None and entry.epoch == self.index_epoch and entry.rows is not None:
+            self.last_route = entry.decision
+            return list(entry.rows)
+        decision, entry = self._route(query)
         self.last_route = decision
-        if r.captured is not None:
-            names, _types, rows = r.captured
-            out = _rows(names, rows)
-            if decision.kind != "approx_agg":  # see sql(): rollup-owned state
-                _memo_put(self._rows_cache, query, (self.index_epoch, decision, out))
-            return list(out)
-        if df is not None:
-            # rewritten, but not via a constant relation (scan-pruning
-            # empty results carry the table's schema): collect the tiny
-            # LocalRelation
-            return df.collect()
-        return self.spark.sql(query).collect()
+        return self.spark.sql(query).collect() if entry is None else self._rows_of(entry)
 
     def routed_answer(self, query: str) -> tuple | None:
         """``(names, sql_types, rows)`` for a ROUTED constant answer, else
         ``None`` (delegates, parse failures, and scan-pruning rewrites that
         carry a full table schema all return ``None`` — the caller keeps
-        its own fallback). The capture sibling of :meth:`sql_rows` that
-        keeps the SQL types next to the values; used by the catalog to
-        evaluate a routed-CTE outer query driver-side (r15). Memoized per
-        text until any index mutates; ``last_route`` records the decision
-        exactly as :meth:`sql_rows` would."""
-        cached = _memo_get(self._answer_cache, query)
-        if cached is not None and cached[0] == self.index_epoch:
-            self.last_route = cached[1]
-            return cached[2]
-        try:
-            parsed = parse_select(query, self._parse_memo)
-        except ParseError as err:
-            self.last_route = RouteDecision("delegate", detail={"reason": str(err)})
-            return None
-        r = self.router
-        r.capture_rows = True
-        try:
-            decision, _df = r.try_rewrite(parsed)
-        finally:
-            r.capture_rows = False
+        its own fallback). The form of :meth:`sql_rows` that keeps the SQL
+        types next to the values; used by the catalog to evaluate a
+        routed-CTE outer query driver-side (r15). ``last_route`` records
+        the decision exactly as :meth:`sql_rows` would."""
+        decision, entry = self._route(query)
         self.last_route = decision
-        cap = r.captured
-        if cap is None:
+        if entry is None or entry.answer is EMPTY:
             return None
-        names, types, rows = cap
-        out = (list(names), list(types), [tuple(row) for row in rows])
-        if decision.kind != "approx_agg":  # see sql(): rollup-owned state
-            _memo_put(self._answer_cache, query, (self.index_epoch, decision, out))
-        return out
+        names, types, rows = entry.answer
+        return list(names), list(types), list(rows)
 
     def explain_route(self, query: str) -> RouteDecision:
         """Routing decision without executing the delegate path."""
-        try:
-            parsed = parse_select(query, self._parse_memo)
-        except ParseError as err:
-            return RouteDecision("delegate", detail={"reason": str(err)})
-        decision, _ = self.router.try_rewrite(parsed)
-        return decision
+        return self._route(query)[0]
 
     def table(self) -> DataFrame:
         """The wrapped DataFrame (reference ``optimizer.provider()``,
@@ -1368,7 +1347,7 @@ class WheelEngine:
         The whole call is all-or-nothing: every index validates the shape
         before any mutates. Re-register shim views after compacting — the
         exported ``bucket_sec`` becomes the coarsest tier width."""
-        from .functions.timestamps import GRANULARITY_SECONDS, parse_ts_literal
+        from .functions.timestamps import GRANULARITY_SECONDS
 
         if isinstance(granularity, str):
             if granularity not in GRANULARITY_SECONDS:
@@ -1438,9 +1417,7 @@ class WheelEngine:
             reclaimed += w.compact_before(cutoff, width)
         if reclaimed:
             self.index_epoch += 1
-            self._route_cache.clear()
-            self._rows_cache.clear()
-            self._answer_cache.clear()
+            self._route_memo.clear()
         return reclaimed
 
     def _all_wheels(self):

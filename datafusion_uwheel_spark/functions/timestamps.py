@@ -121,7 +121,7 @@ class TsLiteral:
         return self.epoch_us % MICROS_PER_SECOND == 0
 
 
-_DATE_RE = re.compile(r"^\d{4}-\d{2}-\d{2}$")
+_DATE_RE = re.compile(r"^\d{4}-\d{2}-\d{2}$", re.ASCII)
 
 
 def parse_ts_literal(text: str) -> TsLiteral | None:
@@ -136,7 +136,10 @@ def parse_ts_literal(text: str) -> TsLiteral | None:
     """
     s = text.strip()
     if _DATE_RE.match(s):
-        d = date.fromisoformat(s)
+        try:
+            d = date.fromisoformat(s)
+        except ValueError:  # date-shaped but no calendar date ('2024-13-45')
+            return None
         dt = datetime(d.year, d.month, d.day, tzinfo=timezone.utc)
         return TsLiteral(datetime_to_us(dt))
     try:

@@ -838,7 +838,7 @@ def _pinned_checkpoint(df: DataFrame) -> DataFrame:
     """``localCheckpoint(eager=True)`` that actually pins the partitioning.
 
     Under AQE (r15 find, pinned by ``tests/test_dup_clusters.py``), the
-    checkpoint's ``LogicalRDD`` is captured from an
+    checkpoint's ``LogicalRDD`` is taken from an
     ``AdaptiveSparkPlanExec`` whose output partitioning is not yet final —
     it lands as unknown, so every downstream consumer keyed on the
     checkpoint's layout re-shuffles it (the dup_clusters loop paid a full

@@ -282,7 +282,7 @@ def _spark_str_to_bool(s: str):
 
 
 class _Caches:
-    """A writer-captured ``(kept_df, err_df)`` pair with lazily built,
+    """A writer-held ``(kept_df, err_df)`` pair with lazily built,
     internally memoized driver mirrors. The writer (merge / compact /
     build / load) owns both frames when it captures, so BOTH halves built
     off one `_Caches` object form a MATCHED snapshot no matter how reads

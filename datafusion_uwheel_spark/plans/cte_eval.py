@@ -10,7 +10,7 @@ cost dominates the answer by orders of magnitude — the bench's routed
 and vanilla's 1.05 s on the driver's box, a 1.13× margin for the one
 "wheel-accelerated" family with no decisive win (r14 verdict #1). This
 module evaluates a NARROW outer-query grammar in pure Python over the
-captured answers — the same thesis as the router's LocalRelation answers,
+routed answers — the same thesis as the router's constant answers,
 extended to the one multi-table shape the CTE splicer creates — and
 returns ``None`` for anything it does not recognize, so the caller falls
 back to the Spark splice and coverage is never lost, only the job floor.
@@ -57,7 +57,7 @@ _TOKEN_RE = re.compile(
       | (?P<punct>[(),.*+\-])
     )
     """,
-    re.VERBOSE,
+    re.VERBOSE | re.ASCII,
 )
 
 #: Day-time interval units (exact second widths — a TIMESTAMP plus any of
@@ -217,11 +217,11 @@ def _interval_us(cur: _Cursor) -> int:
     """``INTERVAL <n> <unit>`` / ``INTERVAL '<n>' <unit>`` → µs (>0)."""
     kind, val = cur.next()
     if kind == "number":
-        if not re.fullmatch(r"\d+", val):
+        if not re.fullmatch(r"\d+", val, re.ASCII):
             raise _Fallback(f"non-integer interval {val!r}")
         n = int(val)
     elif kind == "string":
-        if not re.fullmatch(r"\d+", val.strip()):
+        if not re.fullmatch(r"\d+", val.strip(), re.ASCII):
             raise _Fallback(f"unsupported interval literal {val!r}")
         n = int(val.strip())
     else:
@@ -284,7 +284,7 @@ def _where_rhs(cur: _Cursor):
     kind, val = cur.peek()
     if kind == "number":
         cur.next()
-        return int(val) if re.fullmatch(r"-?\d+", val) else float(val)
+        return int(val) if re.fullmatch(r"-?\d+", val, re.ASCII) else float(val)
     if kind == "punct" and val == "(":
         cur.next()
         return _scalar_sub(cur)
@@ -388,7 +388,7 @@ def _resolve(names: list[str], col: str) -> int:
 
 
 def _sub_value(sub: ScalarSub, data: dict) -> tuple[object, str]:
-    """Evaluate a scalar subquery over a captured relation with Spark's
+    """Evaluate a scalar subquery over a routed relation with Spark's
     single-partition fold semantics. Returns ``(value, sql_type)``."""
     if sub.rel not in data:
         raise _Fallback(f"subquery over unrouted relation {sub.rel!r}")

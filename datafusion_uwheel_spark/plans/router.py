@@ -6,9 +6,11 @@ This is the engine-level equivalent of the reference's single
 a Catalyst rule (that needs JVM classes via
 ``SparkSessionExtensions.injectOptimizerRule``), so the match happens *before*
 Spark parses the query (SURVEY.md §7.3.1) — semantically identical: on a
-match the entire plan is replaced by a LocalRelation holding the precomputed
-answer (the reference's constant ``MemTable`` scan, ``lib.rs:871-881``); on
-no-match the original SQL goes to ``spark.sql`` untouched (``lib.rs:863-867``).
+match :meth:`Router.try_rewrite` returns the precomputed answer as a value
+(the reference's constant ``MemTable`` scan, ``lib.rs:871-881``), which the
+engine's doors materialize as Rows or as a LocalRelation (:func:`constant_df`);
+on no-match it returns ``None`` and the original SQL goes to ``spark.sql``
+untouched (``lib.rs:863-867``).
 
 Rewrites implemented (SURVEY.md §2.1):
 
@@ -21,7 +23,7 @@ Rewrites implemented (SURVEY.md §2.1):
 * R7 MIN/MAX-based pruning (``maybe_min_max_filter``, ``lib.rs:621-649``)
 
 A matched answer launches **no Spark job at all** — the wheel lookup runs on
-the driver in microseconds and the result is a LocalRelation; this mirrors
+the driver in microseconds and the result is a constant row list; this mirrors
 the reference's plan-time lookup (§3.1) and is what the BASELINE latency
 numbers measure.
 """
@@ -29,7 +31,7 @@ numbers measure.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import TYPE_CHECKING, Any
+from typing import TYPE_CHECKING, Any, NamedTuple
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -65,7 +67,7 @@ from .sqlparse import (
 if TYPE_CHECKING:  # pragma: no cover
     from ..engine import WheelEngine
 
-__all__ = ["Router", "RouteDecision"]
+__all__ = ["Answer", "EMPTY", "Router", "RouteDecision"]
 
 
 @dataclass
@@ -81,6 +83,20 @@ class RouteDecision:
     @property
     def rewritten(self) -> bool:
         return self.kind != "delegate"
+
+
+class Answer(NamedTuple):
+    """A routed constant answer: column names, their Spark SQL types and
+    the row tuples — what a delegated ``spark.sql`` would return."""
+
+    names: list[str]
+    sql_types: list[str]
+    rows: list[tuple]
+
+
+#: The answer of a provably empty ``SELECT *``: no rows, the table's own
+#: schema (``empty_table_scan``, ``lib.rs:817-824``).
+EMPTY = object()
 
 
 _AGG_STATE = {
@@ -619,15 +635,14 @@ def _shim_constant_df(spark, names, sql_types, rows):
 
 def constant_df(spark, names, sql_types, rows) -> DataFrame:
     """Constant ``(names, sql_types, rows)`` answer → LocalRelation
-    DataFrame — the module-level body of ``Router._constant_relation``
-    (shared with the catalog's driver-evaluated CTE answers, r15): shim
-    ``UwheelLocalRelation`` first (one py4j call, zero jobs at ANY row
-    count), then the VALUES fold (zero jobs; JVM parse cost grows with
-    the rendered text). The r14 Arrow ``createDataFrame`` branch for
-    >32-row answers is retired (r15 verdict #8): it was dead code on shim
-    sessions — the shim path serves every row count — and on the rare
-    shim-less/non-UTC session a large VALUES parse is slower but exactly
-    as correct, one code path fewer."""
+    DataFrame, for routed answers and the catalog's driver-evaluated CTE
+    answers alike: shim ``UwheelLocalRelation`` first (one py4j call, zero
+    jobs at ANY row count), then the VALUES fold (zero jobs; JVM parse
+    cost grows with the rendered text). The r14 Arrow ``createDataFrame``
+    branch for >32-row answers is retired (r15 verdict #8): it was dead
+    code on shim sessions — the shim path serves every row count — and on
+    the rare shim-less/non-UTC session a large VALUES parse is slower but
+    exactly as correct, one code path fewer."""
     fast = _shim_constant_df(spark, names, sql_types, rows)
     if fast is not None:
         return fast
@@ -688,48 +703,15 @@ def _is_empty_range(pred: MinMaxPredicate, lo: float, hi: float) -> bool:
 class Router:
     def __init__(self, engine: "WheelEngine"):
         self.engine = engine
-        import threading
-
-        # created eagerly: a lazy first-touch init could race two threads
-        # into separate threading.local objects, dropping one's capture flag
-        self._capture_tl = threading.local()
 
     # ------------------------------------------------------------------ api
-    #: Thread-local capture channel for ``engine.sql_rows``: when
-    #: ``capture_rows`` is set on the CALLING thread, ``_constant_relation``
-    #: records ``(names, types, rows)`` in ``captured`` and skips building
-    #: the DataFrame — zero JVM round trips for routed answers. Thread-local
-    #: because routing can release the GIL mid-rewrite (Spark-backed wheels
-    #: run jobs inside try_rewrite); a shared flag would let a concurrent
-    #: call on the same engine steal or poison another query's rows.
-    @property
-    def _capture(self):
-        tl = self._capture_tl
-        if not hasattr(tl, "on"):
-            tl.on, tl.captured = False, None
-        return tl
-
-    @property
-    def capture_rows(self) -> bool:
-        return self._capture.on
-
-    @capture_rows.setter
-    def capture_rows(self, v: bool) -> None:
-        self._capture.on = v
-
-    @property
-    def captured(self):
-        return self._capture.captured
-
-    @captured.setter
-    def captured(self, v) -> None:
-        self._capture.captured = v
-
-    def try_rewrite(self, q: ParsedQuery) -> tuple[RouteDecision, DataFrame | None]:
+    def try_rewrite(
+        self, q: ParsedQuery
+    ) -> tuple[RouteDecision, Answer | object | None]:
         """Pattern-match the parsed query against the plan-shape guards
-        (SURVEY.md §2.3) and produce a LocalRelation answer, or ``None`` to
-        delegate."""
-        self.captured = None
+        (SURVEY.md §2.3). The answer is a constant :class:`Answer`,
+        :data:`EMPTY` for a provably empty ``SELECT *``, or ``None`` to
+        delegate; the caller materializes it (no DataFrame is built here)."""
         e = self.engine
         if q.table.lower() != e.name.lower():
             return RouteDecision("delegate", detail={"reason": "unknown table"}), None
@@ -903,8 +885,8 @@ class Router:
             if len(q.aggs) == 1 and q.aggs[0].func == "count" and q.aggs[0].arg is None
             else ("single_agg" if len(q.aggs) == 1 else "multi_agg")
         )
-        df = self._scalar_result(q.aggs, values, wheels, q)
-        return RouteDecision(kind, index_key=wheels[0].key, detail={"fk": fk}), df
+        ans = self._scalar_result(q.aggs, values, wheels, q)
+        return RouteDecision(kind, index_key=wheels[0].key, detail={"fk": fk}), ans
 
     # ------------------------------------------------------------- helpers
     def _resolve_wheel(self, agg: AggSpec, filter_key: str) -> WheelIndex | None:
@@ -930,45 +912,19 @@ class Router:
                     return cand
         return w
 
-    def _constant_relation(
-        self, names: list[str], sql_types: list[str], rows: list[tuple]
-    ) -> DataFrame:
-        """Materialize a constant answer as a true LocalRelation.
-
-        The reference replaces the plan with a constant ``MemTable`` scan
-        (``mem_table_as_table_scan``, ``lib.rs:871-881``). The Spark
-        equivalent with the same no-job property is an inline ``VALUES``
-        relation: Catalyst folds it to a LocalRelation, so ``collect()``
-        runs driver-local with **zero Spark jobs**. Measured against every
-        alternative (Spark 4.1, local): parameterized ``spark.sql(..., args)``
-        69 ms; ``selectExpr`` over a cached one-row LocalRelation 60 ms + a
-        job per collect; no-FROM ``SELECT CAST(...)`` 59 ms + a job (only the
-        VALUES form folds to LocalRelation; OneRowRelation plans schedule a
-        task); Arrow ``createDataFrame`` ~17 ms + a job. This path: ~10-12 ms
-        p50 for a *distinct* query (≈4.5 ms JVM parse + ≈5 ms collect — the
-        py4j floor), and the engine's route cache answers *repeated* queries
-        at ~4.7 ms p50 (collect only).
-        """
-        if self.capture_rows:
-            # the sql_rows direct path: hand the Python values straight
-            # back — the caller never touches the JVM for a routed answer
-            self.captured = (names, sql_types, rows)
-            return None
-        return constant_df(self.engine.spark, names, sql_types, rows)
-
     def _scalar_result(
         self,
         aggs: list[AggSpec],
         values: list[Any],
         wheels: list[WheelIndex],
         q=None,
-    ) -> DataFrame:
+    ) -> Answer:
         names = [a.output_name for a in aggs]
         types = [_agg_sql_type(a, w) for a, w in zip(aggs, wheels)]
         rows = [tuple(values)]
         if q is not None and (q.order_by or q.limit is not None):
             rows = _order_limit_rows(q, names, rows)
-        return self._constant_relation(names, types, rows)
+        return Answer(names, types, rows)
 
     # ------------------------------------------------------------ group by
     def _try_group_by(self, q, rng, residual):
@@ -1062,14 +1018,14 @@ class Router:
                 types.append("TIMESTAMP")
         if q.order_by or q.limit is not None:
             rows = _order_limit_rows(q, names, rows, _bucket_positions(q))
-        df = self._constant_relation(names, types, rows)
+        ans = Answer(names, types, rows)
         return (
             RouteDecision(
                 kind,
                 index_key=wheels[0].key,
                 detail={"granularity": _gran_detail(gb, gran, hopping), "fk": fk},
             ),
-            df,
+            ans,
         )
 
     def _try_approx(self, q, rng, residual):
@@ -1194,14 +1150,14 @@ class Router:
         rows = [(value,)]
         if q.order_by or q.limit is not None:
             rows = _order_limit_rows(q, names, rows)
-        df = self._constant_relation(names, [sql_type], rows)
+        ans = Answer(names, [sql_type], rows)
         return (
             RouteDecision(
                 "approx_agg",
                 index_key=f"{e.name}.{agg.arg}.{agg.func}",
                 detail={"width": width},
             ),
-            df,
+            ans,
         )
 
     def _try_count_distinct(self, q, rng, residual):
@@ -1269,14 +1225,14 @@ class Router:
             if st["count"] > 0:
                 n += 1
         any_cw = next(iter(pset["wheels"].values()))[None]
-        df = self._scalar_result([agg], [n], [any_cw], q)
+        ans = self._scalar_result([agg], [n], [any_cw], q)
         return (
             RouteDecision(
                 "count_distinct",
                 index_key=f"{e.name}.{agg.arg}",
                 detail={"partition_by": pset["key_column"], "keys": len(values)},
             ),
-            df,
+            ans,
         )
 
     def _try_key_group_by(self, q, rng, residual):
@@ -1402,14 +1358,14 @@ class Router:
                 types.append(pset["key_sql_type"])
         if q.order_by or q.limit is not None:
             rows = _order_limit_rows(q, names, rows)
-        df = self._constant_relation(names, types, rows)
+        ans = Answer(names, types, rows)
         return (
             RouteDecision(
                 kind,
                 index_key=f"{e.name}.{q.group_key}",
                 detail={"partition_by": q.group_key, "keys": len(values)},
             ),
-            df,
+            ans,
         )
 
     def _try_in_group_by(self, q, rng, pset, values):
@@ -1484,7 +1440,7 @@ class Router:
                 types.append("TIMESTAMP")
         if q.order_by or q.limit is not None:
             rows = _order_limit_rows(q, names, rows, _bucket_positions(q))
-        df = self._constant_relation(names, types, rows)
+        ans = Answer(names, types, rows)
         return (
             RouteDecision(
                 kind,
@@ -1495,7 +1451,7 @@ class Router:
                     "granularity": _gran_detail(gb, gran, hopping),
                 },
             ),
-            df,
+            ans,
         )
 
     def _partition_in_match(self, residual):
@@ -1575,14 +1531,14 @@ class Router:
                 )
             out.append(_combine_interval_parts(_state_key(agg), [p[i] for p in parts]))
             wheels.append(w)
-        df = self._scalar_result(q.aggs, out, wheels, q)
+        ans = self._scalar_result(q.aggs, out, wheels, q)
         return (
             RouteDecision(
                 "landmark" if rng is None else "single_agg" if len(q.aggs) == 1 else "multi_agg",
                 index_key=f"{self.engine.name}.{pset['key_column']}",
                 detail={"in_keys": len(values), "partition_by": pset["key_column"]},
             ),
-            df,
+            ans,
         )
 
     def _try_dim_group_by(self, q, rng, residual):
@@ -1690,7 +1646,7 @@ class Router:
                 types.append("TIMESTAMP")
         if q.order_by or q.limit is not None:
             rows = _order_limit_rows(q, names, rows)
-        df = self._constant_relation(names, types, rows)
+        ans = Answer(names, types, rows)
         return (
             RouteDecision(
                 kind,
@@ -1701,7 +1657,7 @@ class Router:
                     "granularity": _gran_detail(gb, gran, hopping),
                 },
             ),
-            df,
+            ans,
         )
 
     # ------------------------------------------------------------ landmark
@@ -1735,10 +1691,10 @@ class Router:
                 )
             values.append(states[key])
             wheels.append(w)
-        df = self._scalar_result(q.aggs, values, wheels, q)
+        ans = self._scalar_result(q.aggs, values, wheels, q)
         return (
             RouteDecision("landmark", index_key=wheels[0].key, detail={"fk": filter_key}),
-            df,
+            ans,
         )
 
     # ---------------------------------------------------------- OR ranges
@@ -1812,14 +1768,14 @@ class Router:
             _combine_interval_parts(_state_key(agg), [p[i] for p in parts])
             for i, agg in enumerate(q.aggs)
         ]
-        df = self._scalar_result(q.aggs, values, wheels, q)
+        ans = self._scalar_result(q.aggs, values, wheels, q)
         return (
             RouteDecision(
                 "or_ranges",
                 index_key=wheels[0].key,
                 detail={"fk": fk, "intervals": [tuple(m) for m in merged]},
             ),
-            df,
+            ans,
         )
 
     def _try_or_group_by(self, q, merged, fk):
@@ -1885,14 +1841,14 @@ class Router:
                 types.append("TIMESTAMP")
         if q.order_by or q.limit is not None:
             rows = _order_limit_rows(q, names, rows, _bucket_positions(q))
-        df = self._constant_relation(names, types, rows)
+        ans = Answer(names, types, rows)
         return (
             RouteDecision(
                 "or_group_by",
                 index_key=wheels[0].key,
                 detail={"fk": fk, "intervals": [tuple(m) for m in merged]},
             ),
-            df,
+            ans,
         )
 
     # -------------------------------------------------------------- point
@@ -1948,10 +1904,10 @@ class Router:
                     else None
                 )
             wheels.append(w)
-        df = self._scalar_result(q.aggs, values, wheels, q)
+        ans = self._scalar_result(q.aggs, values, wheels, q)
         return (
             RouteDecision("point_agg", index_key=wheels[0].key, detail={"fk": fk, "sec": sec}),
-            df,
+            ans,
         )
 
     # ------------------------------------------------------------- hybrid
@@ -2016,14 +1972,14 @@ class Router:
         # at-start states — zero Spark jobs, like every other routed answer.
         values = self._boundary_from_wheels(q, rng, wheels, core_states, bucket)
         if values is not None:
-            df = self._scalar_result(q.aggs, values, wheels, q)
+            ans = self._scalar_result(q.aggs, values, wheels, q)
             return (
                 RouteDecision(
                     "hybrid_agg",
                     index_key=wheels[0].key,
                     detail={"fk": fk, "boundary": "wheel"},
                 ),
-                df,
+                ans,
             )
 
         # Fallback (at-start states absent — spark backend / legacy wheel —
@@ -2034,14 +1990,14 @@ class Router:
             _combine_core_boundary(agg, core, brow)
             for agg, core in zip(q.aggs, core_states)
         ]
-        df = self._scalar_result(q.aggs, values, wheels, q)
+        ans = self._scalar_result(q.aggs, values, wheels, q)
         return (
             RouteDecision(
                 "hybrid_agg",
                 index_key=wheels[0].key,
                 detail={"fk": fk, "boundary": cond},
             ),
-            df,
+            ans,
         )
 
     def _try_group_by_hybrid(self, q, gb, gran, rng, residual, wheels, fk):
@@ -2170,14 +2126,14 @@ class Router:
                 types.append("TIMESTAMP")
         if q.order_by or q.limit is not None:
             rows = _order_limit_rows(q, names, rows, _bucket_positions(q))
-        df = self._constant_relation(names, types, rows)
+        ans = Answer(names, types, rows)
         return (
             RouteDecision(
                 "group_by_hybrid",
                 index_key=wheels[0].key,
                 detail={"granularity": _gran_detail(gb, gran, False), "fk": fk},
             ),
-            df,
+            ans,
         )
 
     def _boundary_from_wheels(self, q, rng, wheels, core_states, bucket: int):
@@ -2258,8 +2214,8 @@ class Router:
 
     # ------------------------------------------------------------- pruning
     def _try_pruning(self, q, rng, residual):
-        """R6/R7: ``SELECT *`` whose result is provably empty → empty
-        LocalRelation, skipping the scan entirely. Anything not *provably*
+        """R6/R7: ``SELECT *`` whose result is provably empty →
+        :data:`EMPTY`, skipping the scan entirely. Anything not *provably*
         empty must fall through to a real scan."""
         e = self.engine
         if rng is None or not rng.routable:
@@ -2273,7 +2229,7 @@ class Router:
             if n == 0:
                 return (
                     RouteDecision("prune_count", index_key=count_wheel.key),
-                    self._empty_table(),
+                    EMPTY,
                 )
             return RouteDecision("delegate", detail={"reason": "rows exist", "count": n}), None
 
@@ -2287,7 +2243,7 @@ class Router:
             if n == 0:
                 return (
                     RouteDecision("prune_count", index_key=keyed_cw.key, detail={"fk": fk}),
-                    self._empty_table(),
+                    EMPTY,
                 )
 
         pred = extract_min_max_predicate(residual)
@@ -2299,7 +2255,7 @@ class Router:
         # Zero rows in range → empty regardless of the residual predicate.
         n = count_wheel.count_range(rng.start_sec, rng.end_sec)
         if n == 0:
-            return RouteDecision("prune_count", index_key=count_wheel.key), self._empty_table()
+            return RouteDecision("prune_count", index_key=count_wheel.key), EMPTY
         bounds = mm.min_max_range(rng.start_sec, rng.end_sec)
         if bounds is not None and _is_empty_range(pred, *bounds):
             return (
@@ -2308,14 +2264,6 @@ class Router:
                     index_key=mm.key,
                     detail={"pred": f"{pred.column} {pred.op} {pred.value}", "bounds": bounds},
                 ),
-                self._empty_table(),
+                EMPTY,
             )
         return RouteDecision("delegate", detail={"reason": "not provably empty"}), None
-
-    def _empty_table(self) -> DataFrame:
-        """Empty scan with the original table schema (``empty_table_scan``,
-        ``lib.rs:817-824``). ``WHERE FALSE`` folds to an empty
-        ``LocalTableScan`` via Catalyst's PropagateEmptyRelation — zero jobs,
-        no file listing."""
-        e = self.engine
-        return e.spark.sql(f"SELECT * FROM `{e.name}` WHERE FALSE")

@@ -74,7 +74,10 @@ APPROX_AGG_FUNCS = {"approx_count_distinct", "percentile_approx", "approx_percen
 #: One alternative per token kind, tried in this order at every
 #: non-blank position; the last group catches any other character (a
 #: double quote, a backtick, ``;`` mid-query, ...), which is outside the
-#: grammar. Whitespace matches nothing, so ``findall`` skips it.
+#: grammar. Whitespace matches nothing, so ``findall`` skips it. ASCII
+#: mode: a number is ASCII digits only, as in Spark's lexer (``\d`` would
+#: take ``٣٠`` too, which Spark refuses), and any non-ASCII character is a
+#: stray one, so such texts delegate.
 _TOKEN_RE = re.compile(
     r"""
         ('[^']*(?:''[^']*)*')
@@ -84,7 +87,7 @@ _TOKEN_RE = re.compile(
       | ([(),.*])
       | (\S)
     """,
-    re.VERBOSE,
+    re.VERBOSE | re.ASCII,
 )
 
 
@@ -192,7 +195,7 @@ def parse_interval_seconds(text: str) -> int:
         raise ParseError(f"unsupported interval: {text!r}")
     total = 0
     for n, unit in zip(parts[::2], parts[1::2]):
-        if not re.fullmatch(r"\d+", n):
+        if not re.fullmatch(r"\d+", n, re.ASCII):
             raise ParseError(f"unsupported interval: {text!r}")
         u = unit[:-1] if unit.endswith("s") and len(unit) > 1 else unit
         if u not in _INTERVAL_UNIT_SECONDS:
@@ -765,7 +768,8 @@ def parse_select(sql: str, memo=None) -> ParsedQuery:
 #: (``x-5`` is one ``-5`` token but splits as ``5``), :func:`prepare`
 #: refuses the shape.
 _LITERAL_RE = re.compile(
-    r"(?=['0-9-])('[^']*(?:''[^']*)*'|(?<![A-Za-z_0-9])-?\d+(?:\.\d+)?(?:[eE][+-]?\d+)?)"
+    r"(?=['0-9-])('[^']*(?:''[^']*)*'|(?<![A-Za-z_0-9])-?\d+(?:\.\d+)?(?:[eE][+-]?\d+)?)",
+    re.ASCII,
 )
 
 

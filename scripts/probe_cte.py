@@ -31,7 +31,7 @@ cte_sql = (
 )
 
 cat = WheelCatalog(spark)
-cat.engines["events"] = eng
+cat.adopt(eng)
 
 # routed (driver-evaluated) path
 got = cat.sql(cte_sql)
@@ -57,7 +57,7 @@ assert rows_fast == rows_splice, (rows_fast[:3], rows_splice[:3])
 assert rows_fast == rows_vanilla, (rows_fast[:3], rows_vanilla[:3])
 print("PARITY OK")
 
-# sql_rows parity + zero JVM
+# sql_rows parity: the same routed CTE answers, as Rows
 rows_sr = [tuple(r) for r in cat.sql_rows(cte_sql)]
 assert rows_sr == rows_fast
 print("sql_rows PARITY OK")

@@ -178,7 +178,7 @@ def main():
     # run the direct calls alone and require NO new jobs from them
     jobs_before = len(sc.statusTracker().getJobIdsForGroup(None) or [])
     for sql in direct_sqls:
-        eng._rows_cache.clear()
+        eng._route_memo.clear()
         eng.sql_rows(sql)
     jobs_after = len(sc.statusTracker().getJobIdsForGroup(None) or [])
     check("sql_rows zero jobs", jobs_after == jobs_before, f"{jobs_before}->{jobs_after}")

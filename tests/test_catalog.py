@@ -170,7 +170,7 @@ def test_catalog_sql_rows_zero_jobs(catalog):
     sc = catalog.spark.sparkContext
     before = len(sc.statusTracker().getJobIdsForGroup(None) or [])
     for _ in range(10):
-        eng._rows_cache.clear()  # fresh route each time; parse memo stays
+        eng._route_memo.clear()  # fresh route each time; parse memo stays
         assert catalog.sql_rows(sql)[0]["s"] == 55.0
     after = len(sc.statusTracker().getJobIdsForGroup(None) or [])
     assert after == before

@@ -84,12 +84,12 @@ def test_routed_answers_identical_with_and_without_fastpath(spark, sf_small_dir)
     had = getattr(spark, "_uw_localrel_ok", None)
     try:
         for q in queries:
-            eng._route_cache.clear()
+            eng._route_memo.clear()
             spark._uw_localrel_ok = None  # re-probe: fast path on
             fast = eng.sql(q)
             assert eng.last_route.kind in ("count_range", "single_agg", "multi_agg", "group_by")
             fast_rows, fast_schema = fast.collect(), fast.schema
-            eng._route_cache.clear()
+            eng._route_memo.clear()
             spark._uw_localrel_ok = False  # legacy VALUES/Arrow path
             ref = eng.sql(q)
             assert sorted(map(repr, fast_rows)) == sorted(map(repr, ref.collect()))

@@ -172,6 +172,25 @@ def test_split_that_disagrees_with_tokens_never_binds():
             memo.parse(text)
 
 
+def test_untemplatable_shape_is_prepared_once(monkeypatch):
+    """A shape ``prepare`` cannot template is tried once; its later texts
+    take the plain parse."""
+    from datafusion_uwheel_spark import engine as engine_mod
+
+    calls = []
+    real = engine_mod.prepare
+    monkeypatch.setattr(
+        engine_mod, "prepare", lambda sql, lits: calls.append(sql) or real(sql, lits)
+    )
+    memo = ParseMemo()
+    texts = [
+        f"SELECT COUNT(*) AS n FROM t WHERE v BETWEEN-{i} AND {i + 3}" for i in range(1, 7)
+    ]
+    for text in texts:
+        assert memo.parse(text) == parse_select(text)
+    assert len(calls) <= 1
+
+
 def test_split_keeps_identifier_digits_in_the_shape():
     key, lits = split_shape("SELECT SUM(x1) AS s2 FROM t3 WHERE x1 > 5 AND y = 'a''b'")
     assert lits == ["5", "'a''b'"]
@@ -256,10 +275,8 @@ def engine_texts(draw):
 
 def _answer(eng, text):
     """(route kind, names/types/rows of a routed answer or None), asked
-    with empty answer memos so the text is parsed and routed."""
-    eng._route_cache.clear()
-    eng._rows_cache.clear()
-    eng._answer_cache.clear()
+    with an empty answer memo so the text is parsed and routed."""
+    eng._route_memo.clear()
     return eng.routed_answer(text), eng.last_route.kind
 
 

@@ -104,7 +104,7 @@ def test_dim_and_or_grouped_direct_zero_jobs(eng, spark):
     sc = spark.sparkContext
     before = len(sc.statusTracker().getJobIdsForGroup(None) or [])
     for sql, _kind in GROUPED_DIRECT[:2]:
-        eng._rows_cache.clear()
+        eng._route_memo.clear()
         eng.sql_rows(sql)
     after = len(sc.statusTracker().getJobIdsForGroup(None) or [])
     assert after == before
@@ -130,7 +130,7 @@ def test_rows_zero_spark_jobs_and_fast(eng, spark):
     before = len(sc.statusTracker().getJobIdsForGroup(None) or [])
     t0 = time.perf_counter()
     for _ in range(50):
-        eng._rows_cache.clear()  # force full route every iteration
+        eng._route_memo.clear()  # force full route every iteration
         eng.sql_rows(sql)
     dt = (time.perf_counter() - t0) / 50
     after = len(sc.statusTracker().getJobIdsForGroup(None) or [])
@@ -143,7 +143,7 @@ def test_rows_zero_spark_jobs_and_fast(eng, spark):
 def test_rows_cache_and_epoch_invalidation(eng):
     sql = ROUTED[0]
     r1 = eng.sql_rows(sql)
-    assert eng._rows_cache  # memoized
+    assert eng._route_memo  # memoized
     r2 = eng.sql_rows(sql)
     assert r1 == r2 and r1 is not r2  # cache hit returns a COPY
     r2.clear()  # caller mutation must not poison the memo
@@ -307,4 +307,212 @@ def test_invalid_limit_delegates_to_spark_error(eng, limit):
     assert condition(lambda: eng.sql_rows(sql)) == want
     assert eng.last_route.kind == "delegate"
     assert condition(lambda: eng.sql(sql).collect()) == want
+    assert eng.last_route.kind == "delegate"
+
+
+# ------------------------------------------------- one answer, every door
+#: A routed CTE join the catalog evaluates on the driver.
+CTE = (
+    "WITH cur AS (SELECT date_trunc('day', ts) AS b, COUNT(*) AS n FROM rows_events "
+    f"WHERE ts >= '2024-01-06 00:00:00' AND ts < '{B}' GROUP BY date_trunc('day', ts)), "
+    "prev AS (SELECT date_trunc('day', ts) AS b, COUNT(*) AS n FROM rows_events "
+    "WHERE ts >= '2024-01-02 00:00:00' AND ts < '2024-01-06 00:00:00' "
+    "GROUP BY date_trunc('day', ts)) "
+    "SELECT cur.b AS b, cur.n AS n, prev.n AS prev_n FROM cur JOIN prev "
+    "ON prev.b = cur.b - INTERVAL 4 DAYS ORDER BY b"
+)
+
+
+@pytest.fixture(scope="module")
+def cat(spark, eng):
+    from datafusion_uwheel_spark import WheelCatalog
+
+    c = WheelCatalog(spark)
+    c.adopt(eng)
+    return c
+
+
+def _fields(rows):
+    return list(rows[0].__fields__)
+
+
+def _door_answers(eng, cat, sql):
+    """``door → (route kind, names, row tuples)`` for each door that can
+    answer ``sql``."""
+
+    def df_door():
+        df = eng.sql(sql)
+        return eng.last_route.kind, df.columns, [tuple(r) for r in df.collect()]
+
+    def rows_door():
+        rows = eng.sql_rows(sql)
+        return eng.last_route.kind, _fields(rows), [tuple(r) for r in rows]
+
+    def answer_door():
+        names, _types, rows = eng.routed_answer(sql)
+        return eng.last_route.kind, names, [tuple(r) for r in rows]
+
+    def catalog_door():
+        rows = cat.sql_rows(sql)
+        return cat.last_route.kind, _fields(rows), [tuple(r) for r in rows]
+
+    return [df_door, rows_door, answer_door, catalog_door]
+
+
+@pytest.mark.parametrize("reverse", [False, True], ids=["df_first", "catalog_first"])
+def test_every_door_serves_the_same_answer(eng, cat, reverse):
+    """``sql().collect()``, ``sql_rows()``, ``routed_answer()`` and the
+    catalog's ``sql_rows()`` agree on names, values, order and route kind,
+    served from one memo entry whichever door fills it first."""
+    for sql in ROUTED:
+        eng._route_memo.clear()
+        doors = _door_answers(eng, cat, sql)
+        got = []
+        for door in reversed(doors) if reverse else doors:
+            got.append(door())
+            entry = eng._route_memo[sql]
+            assert eng._route_memo[sql] is entry  # routed once, one entry
+        assert got[0][0] != "delegate", sql
+        assert all(g == got[0] for g in got), (sql, got)
+    # a routed CTE: the catalog's two doors and the delegated text agree
+    for first, second in ((cat.sql_rows, cat.sql), (cat.sql, cat.sql_rows)):
+        eng._route_memo.clear()
+        a = first(CTE)
+        a = a.collect() if hasattr(a, "collect") else a
+        assert cat.last_route.kind == "cte_rewrite"
+        assert cat.last_route.detail["evaluated"] == "driver"
+        b = second(CTE)
+        b = b.collect() if hasattr(b, "collect") else b
+        want = eng.spark.sql(CTE).collect()
+        assert want and [tuple(r) for r in a] == [tuple(r) for r in b] == [
+            tuple(r) for r in want
+        ]
+        assert _fields(a) == _fields(b) == _fields(want)
+
+
+def test_doors_answer_correctly_across_threads(eng, cat):
+    """Four threads route distinct texts through one engine and distinct
+    CTE texts through one catalog at once; each answer equals its serial
+    answer (no answer travels through shared per-engine or per-catalog
+    state)."""
+    import threading
+
+    def texts(i):
+        end = f"2024-01-{11 + i} 00:00:00"
+        return [t.replace(B, end) for t in ROUTED if B in t], CTE.replace(B, end)
+
+    serial = {}
+    for i in range(4):
+        sqls, cte = texts(i)
+        for sql in sqls:
+            serial[sql] = [tuple(r) for r in eng.sql_rows(sql)]
+            assert eng.last_route.rewritten
+        serial[cte] = [tuple(r) for r in cat.sql_rows(cte)]
+        assert cat.last_route.detail["evaluated"] == "driver"
+    eng._route_memo.clear()
+    cat._cte_splice_memo.clear()
+    start = threading.Barrier(4)
+    got, errors = [], []
+
+    def work(i):
+        sqls, cte = texts(i)
+        try:
+            start.wait()
+            for _ in range(3):
+                for sql in sqls:
+                    got.append((sql, [tuple(r) for r in eng.sql_rows(sql)]))
+                    got.append((sql, [tuple(r) for r in eng.routed_answer(sql)[2]]))
+                got.append((cte, [tuple(r) for r in cat.sql_rows(cte)]))
+        except Exception as e:  # surfaced below, with the thread's text
+            errors.append((i, e))
+
+    threads = [threading.Thread(target=work, args=(i,)) for i in range(4)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert errors == []
+    assert len(got) == 4 * 3 * (2 * len(texts(0)[0]) + 1)
+    for sql, rows in got:
+        assert rows == serial[sql], sql
+
+
+def test_pruned_sql_shares_one_empty_frame_with_zero_jobs(eng, spark):
+    """A provably empty ``SELECT *`` answers from one empty frame of the
+    engine's table: the schema of ``SELECT * ... WHERE FALSE``, no Spark
+    job to collect it, and ``[]`` on the Row door without a JVM call."""
+    pruned = [
+        f"SELECT * FROM rows_events WHERE ts >= '{A}' AND ts < '{B}' AND value > {v}"
+        for v in ("1000.0", "2000.0", "3000.0")
+    ]
+    sc = spark.sparkContext
+
+    def jobs():
+        return len(sc.statusTracker().getJobIdsForGroup(None) or [])
+
+    df = eng.sql(pruned[0])
+    assert eng.last_route.kind == "prune_minmax"
+    ref = spark.sql("SELECT * FROM rows_events WHERE FALSE")
+    assert df.dtypes == ref.dtypes
+    assert df.schema == ref.schema
+    assert eng.sql(pruned[1]) is df
+    j0 = jobs()
+    assert df.collect() == []
+    assert jobs() == j0
+    assert eng.sql_rows(pruned[2]) == []
+    assert eng.last_route.kind == "prune_minmax"
+    assert jobs() == j0
+
+
+@pytest.mark.parametrize(
+    "sql",
+    [
+        # a bound past the column's max: with ٣٠٠٠ read as 3000 the text
+        # would prune instead of failing as Spark does
+        f"SELECT * FROM rows_events WHERE ts >= '{A}' AND ts < '{B}' AND value > ٣٠٠٠",
+        f"SELECT COUNT(*) AS c FROM rows_events WHERE ts >= '{A}' AND ts < '{B}' "
+        "AND value > ٣٠",
+        f"SELECT date_trunc('day', ts) AS b, COUNT(*) AS n FROM rows_events "
+        f"WHERE ts >= '{A}' AND ts < '{B}' GROUP BY date_trunc('day', ts) "
+        "ORDER BY b LIMIT ٣",
+    ],
+    ids=["prune", "value", "limit"],
+)
+def test_unicode_digits_delegate_to_spark_error(eng, sql):
+    """Spark's lexer reads ASCII digits only: a number written in other
+    Unicode digits is a syntax error there, so the text must delegate
+    and raise that error, not route."""
+
+    def condition(call):
+        with pytest.raises(Exception) as info:
+            call()
+        return info.value.getCondition()
+
+    want = condition(lambda: eng.spark.sql(sql).collect())
+    assert want == "PARSE_SYNTAX_ERROR"
+    assert condition(lambda: eng.sql_rows(sql)) == want
+    assert eng.last_route.kind == "delegate"
+    assert condition(lambda: eng.sql(sql).collect()) == want
+    assert eng.last_route.kind == "delegate"
+
+
+def _outcome(call):
+    """``("rows", row tuples)`` or ``("error", Spark error condition or
+    exception type)`` of one ask."""
+    try:
+        return "rows", [tuple(r) for r in call()]
+    except Exception as e:  # noqa: BLE001 — the outcome IS the exception
+        return "error", getattr(e, "getCondition", lambda: type(e).__name__)()
+
+
+@pytest.mark.parametrize("lit", ["٢٠٢٤-01-03", "2024-13-45"], ids=["unicode", "month13"])
+def test_date_shaped_non_dates_delegate(eng, lit):
+    """A literal shaped like a date that names no calendar date is no time
+    bound: the text delegates and answers exactly as Spark does, instead
+    of escaping the engine as a ``ValueError``."""
+    sql = f"SELECT COUNT(*) AS c FROM rows_events WHERE ts >= '{lit}' AND ts < '{B}'"
+    want = _outcome(lambda: eng.spark.sql(sql).collect())
+    assert _outcome(lambda: eng.sql_rows(sql)) == want
+    assert eng.last_route.kind == "delegate"
+    assert _outcome(lambda: eng.sql(sql).collect()) == want
     assert eng.last_route.kind == "delegate"

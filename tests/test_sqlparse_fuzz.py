@@ -26,7 +26,7 @@ TOKENS = [
     "AND", "OR", "BETWEEN", "AS", "DESC", "ASC", "COUNT", "SUM", "AVG",
     "date_trunc", "(", ")", ",", "*", ".", "'a'", "'2024-01-01'", "ts", "v",
     "t", "5", "5.5", ">=", "<", "<=", ">", "=", "!=", "<>", "''", "CAST",
-    "TIMESTAMP", "0x", ";", "--", "🦉", "1e3", "-1", "1.5e-2",
+    "TIMESTAMP", "0x", ";", "--", "🦉", "1e3", "-1", "1.5e-2", "٣٠",
 ]
 
 
