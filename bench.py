@@ -2089,10 +2089,6 @@ def main() -> None:
             # Spark scan+rollup+Arrow collect, and the driver numpy mirror
             # construction. Phase rows are [min, max] spreads like the
             # parent row.
-            from datafusion_uwheel_spark.operators.rollups import (
-                LAST_BUILD_PHASES,
-            )
-
             phases: dict = {"ctor": [], "scan": [], "mirror": []}
 
             def build_sf10(i):
@@ -2105,12 +2101,8 @@ def main() -> None:
                 )
                 phases["ctor"].append(time.perf_counter() - t0)
                 e.build_index("value", aggs=("count",))
-                phases["scan"].append(
-                    LAST_BUILD_PHASES["scan_rollup_collect_s"]
-                )
-                phases["mirror"].append(
-                    LAST_BUILD_PHASES["mirror_construct_s"]
-                )
+                phases["scan"].append(e.last_build["scan_rollup_collect_s"])
+                phases["mirror"].append(e.last_build["mirror_construct_s"])
                 return e
 
             eng10 = timed_build("index_build_sf10", build_sf10)
@@ -2127,7 +2119,7 @@ def main() -> None:
                 "index_build_sf10 phases (per-sample): ctor "
                 f"{phases['ctor']}, agg scan+rollup+collect "
                 f"{phases['scan']}, mirror {phases['mirror']} "
-                f"({LAST_BUILD_PHASES.get('rollup_rows')} rollup rows)"
+                f"({eng10.last_build.get('rollup_rows')} rollup rows)"
             )
             # r15 (verdict #2): the mirror's named sub-steps, recorded by
             # _indices_from_rollup itself. The isolated probe
@@ -2137,7 +2129,7 @@ def main() -> None:
             # stall (allocator/scheduler), not driver numpy work.
             log(
                 "index_build_sf10 mirror sub-steps (last sample): "
-                f"{LAST_BUILD_PHASES.get('mirror_steps')}"
+                f"{eng10.last_build.get('mirror_steps')}"
             )
             dtimes = []
             for a, b in s_ranges:

@@ -3,10 +3,12 @@ query router together.
 
 The reference couples these in ``UWheelOptimizer`` (provider + time column +
 wheel registry + rewrite rule, ``datafusion-uwheel/src/lib.rs:72-146``) built
-via a fluent ``Builder`` (``builder.rs:59-252``). Construction scans the
-table once and builds the COUNT wheel and any requested MIN/MAX wheels
-(``lib.rs:909-965``); ``build_index`` adds per-(column, aggregate, filter)
-wheels (``lib.rs:153-239``).
+via a fluent ``Builder`` (``builder.rs:59-252``). The reference's
+construction scans the table once for the COUNT wheel and any requested
+MIN/MAX wheels (``lib.rs:909-965``); here that scan is deferred and
+usually never runs on its own — the first unfiltered ``build_index``
+(per-(column, aggregate, filter) wheels, ``lib.rs:153-239``) computes the
+same states and seeds them.
 
 Spark-first shape: the table is a DataFrame (parquet path or any DataFrame);
 index builds are single declarative aggregation jobs (see
@@ -179,8 +181,9 @@ class WheelEngine:
         The designated time column all indices are built on
         (``lib.rs:78-79``); must exist (asserted like ``lib.rs:928-933``).
     min_max_columns:
-        Columns to build MIN/MAX pruning wheels for at construction
-        (``Builder::with_min_max_wheels``).
+        Columns to keep MIN/MAX pruning wheels for
+        (``Builder::with_min_max_wheels``): seeded by the first unfiltered
+        ``build_index`` of the column, else built at first use.
     time_range:
         Optional ``(start, end)`` restriction on the indexed span
         (``Builder::with_time_range``, ``builder.rs:177-191``) — the 100 TB
@@ -279,16 +282,25 @@ class WheelEngine:
             self.df = self.df.withColumn(time_column, _F.expr(conv[time_unit]))
         self.df.createOrReplaceTempView(name)
 
-        #: r14 (guide §1.2 — the distributed algorithm first): when True the
-        #: base COUNT wheel's table scan has been DEFERRED. Every
-        #: ``build_index``/``build_indexes`` pass computes the identical
-        #: unfiltered count rollup anyway (``indices[None]``), so the
-        #: standard ctor-then-build sequence used to pay the same full scan
-        #: twice; the first unfiltered build now seeds the base wheel for
-        #: free and any reader that arrives earlier materializes it through
-        #: :meth:`_ensure_base` (identical wheel, identical answers — just
-        #: built at first use instead of construction).
+        #: The ctor DEFERS its own table scan: when True the base COUNT
+        #: wheel has not been built yet, and ``_min_max_pending`` names the
+        #: ``min_max_columns`` whose pruning wheels are still owed. The
+        #: first unfiltered ``build_index``/``build_indexes`` over the
+        #: engine's span computes the identical count rollup and a superset
+        #: of the min/max states anyway, so it seeds both for free
+        #: (``build_partitioned_index`` seeds only the base wheel); any
+        #: reader that arrives earlier materializes everything pending in
+        #: ONE pass through :meth:`_ensure_base` (identical wheels,
+        #: identical answers — just built at first use).
         self._base_pending = False
+        self._min_max_pending: tuple[str, ...] = ()
+        #: Phases of the engine's most recent driver-backend wheel build:
+        #: ``scan_rollup_collect_s`` (the Spark scan + bucket rollup +
+        #: Arrow collect, one action), ``mirror_construct_s`` (the driver
+        #: numpy mirror), ``rollup_rows`` and ``mirror_steps`` (the
+        #: mirror's named sub-steps). Diagnostics only; never read by
+        #: query paths.
+        self.last_build: dict = {}
         if load_indexes is not None:
             # Build-once path: restore persisted rollups (driver-side parquet
             # read, no Spark job — the 100 TB restart story, see
@@ -299,43 +311,28 @@ class WheelEngine:
             self.count_wheels = dict(wheels["count"])
             self.min_max_wheels = dict(wheels["min_max"])
             self.agg_wheels = dict(wheels["agg"])
-        elif min_max_columns:
-            # Pruning wheels only ever serve min_max_range — build just those
-            # two states (~3× smaller than a full wheel; the reference's
-            # F64MinMaxAggregator wheels are likewise min/max-only,
-            # lib.rs:967-1017). The count wheel rides the same single pass,
-            # so there is nothing to defer here.
-            indices = build_wheel_indices(
-                self.df, name, time_column, list(min_max_columns),
-                time_range=time_range, bucket_seconds=self.bucket_seconds,
-                backend=index_backend,
-                states=("min", "max"),
-            )
-            #: filter_key → COUNT wheel (unfiltered under ``*_AGG``; keyed
-            #: wheels are added by :meth:`build_index`).
-            self.count_wheels: dict[str, WheelIndex] = {
-                STAR_AGGREGATION_ALIAS: indices[None]
-            }
-            #: column → MIN/MAX pruning wheel (``BuiltInWheels.min_max``).
-            self.min_max_wheels: dict[str, WheelIndex] = {
-                c: indices[c] for c in min_max_columns
-            }
-            #: (column, filter_key) → aggregate wheel (sum/avg/min/max states).
-            self.agg_wheels: dict[tuple[str, str], WheelIndex] = {}
         else:
-            # No pruning wheels requested: the ctor's only product would be
-            # the base COUNT wheel — defer its scan (see _base_pending).
-            # The time-column TYPE refusal must NOT defer with it: an
-            # un-normalized BIGINT time column is a construction error
-            # (pre-existing contract — never silently mis-bucket), and the
-            # check is schema-only, no job.
-            from .operators.rollups import time_sec_col
+            # Defer the scan (see _base_pending), but not the refusals: an
+            # un-normalized BIGINT time column or a non-numeric pruning
+            # column is a construction error (never silently mis-bucket),
+            # and both checks are schema-only, no job.
+            from .operators.rollups import column_sql_type, time_sec_col
 
             time_sec_col(self.df, time_column)
-            self.count_wheels = {}
-            self.min_max_wheels = {}
-            self.agg_wheels = {}
+            for c in min_max_columns:
+                column_sql_type(self.df, c)
+            #: filter_key → COUNT wheel (unfiltered under ``*_AGG``; keyed
+            #: wheels are added by :meth:`build_index`).
+            self.count_wheels: dict[str, WheelIndex] = {}
+            #: column → MIN/MAX pruning wheel (``BuiltInWheels.min_max``).
+            #: A seeded entry may be the same object as
+            #: ``agg_wheels[(column, "*_AGG")]``: usage, compaction and
+            #: maintenance de-duplicate by identity.
+            self.min_max_wheels: dict[str, WheelIndex] = {}
+            #: (column, filter_key) → aggregate wheel (sum/avg/min/max states).
+            self.agg_wheels: dict[tuple[str, str], WheelIndex] = {}
             self._base_pending = True
+            self._min_max_pending = tuple(min_max_columns)
         #: column → cached HLL sketch rollup (:meth:`build_distinct_index`);
         #: initialized here so :meth:`approx_distinct` raises the documented
         #: KeyError (not AttributeError) when no rollup was ever built.
@@ -437,19 +434,28 @@ class WheelEngine:
 
     # -------------------------------------------------------------- builds
     def _ensure_base(self) -> None:
-        """Materialize the deferred base COUNT wheel (see ``_base_pending``
-        in ``__init__``). No-op once built or seeded; the wheel is
-        bit-identical to the one the ctor used to build eagerly (same
-        rollup expressions over the same source)."""
-        if not self._base_pending:
+        """Materialize what the ctor deferred (see ``_base_pending`` in
+        ``__init__``): the base COUNT wheel and every pending pruning wheel,
+        in ONE pass. Pruning wheels only ever serve ``min_max_range``, so
+        that pass builds just those two states (~3× smaller than a full
+        wheel; the reference's F64MinMaxAggregator wheels are likewise
+        min/max-only, lib.rs:967-1017). No-op once built or seeded. The
+        count wheel and the min/max states equal what a seeding build
+        computes (same rollup expressions over the same source)."""
+        if not (self._base_pending or self._min_max_pending):
             return
-        self._base_pending = False
+        cols = list(self._min_max_pending)
+        phases: dict = {}
         indices = build_wheel_indices(
-            self.df, self.name, self.time_column, [],
+            self.df, self.name, self.time_column, cols,
             time_range=self._time_range, bucket_seconds=self.bucket_seconds,
-            backend=self.index_backend, states=(),
+            backend=self.index_backend, states=("min", "max"), phases=phases,
         )
+        self._base_pending, self._min_max_pending = False, ()
+        self.last_build = phases
         self.count_wheels.setdefault(STAR_AGGREGATION_ALIAS, indices[None])
+        for c in cols:
+            self.min_max_wheels.setdefault(c, indices[c])
         self.index_epoch += 1
 
     def build_index(
@@ -472,64 +478,9 @@ class WheelEngine:
         residual (non-temporal) predicate canonicalizes to the same string are
         answered from it (``lib.rs:310-321``). Returns the index key.
         """
-        from .operators.rollups import physical_states_for
-
-        if filter is not None:
-            conjuncts = parse_conjunction(filter)
-            fk = canonical_filter_key(conjuncts)
-            filter_expr: Column | str | None = filter
-        else:
-            fk = STAR_AGGREGATION_ALIAS
-            filter_expr = None
-        indices = build_wheel_indices(
-            self.df,
-            self.name,
-            self.time_column,
-            [column],
-            filter_expr=filter_expr,
-            filter_key=fk,
-            time_range=time_range or self._time_range,
-            bucket_seconds=self.bucket_seconds,
-            backend=self.index_backend,
-            states=physical_states_for(aggs),
-        )
-        if filter is None and time_range is None and self._base_pending:
-            # this unfiltered pass's count rollup IS the deferred base
-            # wheel — seed it for free (see _base_pending in __init__)
-            self._base_pending = False
-        # A keyed/filtered wheel is answerable over the whole *base table*
-        # span, not just the span of rows matching the filter: a sub-range
-        # with zero matching rows is a correct (empty) aggregate, not an
-        # unknown. The reference is narrower here (keyed wheels watermark at
-        # the filtered data's min, lib.rs:1046), which silently forfeits
-        # full-span keyed queries; we deliberately widen. When the build was
-        # time_range-restricted, keep the wheel's own (restricted) bounds.
-        if time_range is None and self._time_range is None:
-            self._ensure_base()
-            base = self.count_wheels.get(STAR_AGGREGATION_ALIAS, indices[None])
-            if not base.empty:
-                for w in indices.values():
-                    if not w.empty:
-                        w.min_ts_us = min(w.min_ts_us, base.min_ts_us)
-                        w.max_ts_us = max(w.max_ts_us, base.max_ts_us)
-        # A time_range-restricted unfiltered build must NOT become the
-        # deferred STAR base: its count wheel is span-restricted
-        # (complete=False) while the base contract is the full table. In
-        # the eager-ctor era the setdefault below no-op'd against the
-        # already-built base and the restricted count wheel was discarded;
-        # with the base deferred it would install, and _ensure_base's own
-        # setdefault could never replace it — full-span COUNTs would
-        # delegate forever and span-defaulted asks silently narrow.
-        if not (
-            time_range is not None
-            and fk == STAR_AGGREGATION_ALIAS
-            and self._base_pending
-        ):
-            self.count_wheels.setdefault(fk, indices[None])
-        wheel = indices[column]
-        self.agg_wheels[(column, fk)] = wheel
-        self.index_epoch += 1
-        return wheel.key
+        return self.build_indexes(
+            [column], filter=filter, time_range=time_range, aggs=aggs
+        )[0]
 
     def build_partitioned_index(
         self,
@@ -569,6 +520,7 @@ class WheelEngine:
         if len({c.lower() for c in columns}) != len(columns):
             # fail here, not as pyarrow's obscure duplicate-field KeyError
             raise ValueError(f"duplicate columns in {columns!r}")
+        phases: dict = {}
         fam, ktype, star = build_partitioned_wheel_indices(
             self.df,
             self.name,
@@ -579,6 +531,7 @@ class WheelEngine:
             states=physical_states_for(aggs),
             max_keys=max_keys,
             time_range=self._time_range,
+            phases=phases,
         )
         self.partition_sets[partition_by.lower()] = {
             "key_column": partition_by,
@@ -601,11 +554,15 @@ class WheelEngine:
         # setdefault: an explicitly built STAR wheel (exact float add
         # order) keeps precedence over the derived one.
         self.count_wheels.setdefault(STAR_AGGREGATION_ALIAS, star[None])
-        # the derived star count wheel covers the deferred base's contract
+        # the derived star count wheel covers the deferred base's contract;
+        # its min/max states do NOT seed pending pruning wheels: the
+        # driver-side fold skips NaN where Spark's MAX returns it, and a
+        # pruning wheel must never under-state a bound
         self._base_pending = False
         for c in columns:
             self.agg_wheels.setdefault((c, STAR_AGGREGATION_ALIAS), star[c])
         self.index_epoch += 1
+        self.last_build = phases
         return len(fam)
 
     def build_indexes(
@@ -631,6 +588,8 @@ class WheelEngine:
         else:
             fk = STAR_AGGREGATION_ALIAS
             filter_expr = None
+        phases: dict = {}
+        states = physical_states_for(aggs)
         indices = build_wheel_indices(
             self.df,
             self.name,
@@ -641,21 +600,48 @@ class WheelEngine:
             time_range=time_range or self._time_range,
             bucket_seconds=self.bucket_seconds,
             backend=self.index_backend,
-            states=physical_states_for(aggs),
+            states=states,
+            phases=phases,
         )
-        if filter is None and time_range is None and self._base_pending:
-            # see build_index: the unfiltered pass seeds the deferred base
+        if fk == STAR_AGGREGATION_ALIAS and time_range is None:
+            # An unfiltered pass over the engine's span carries what the
+            # ctor deferred: its count rollup IS the base wheel (installed
+            # below), and a value wheel with min AND max states answers
+            # min_max_range exactly like a min/max-only pruning wheel (same
+            # buckets, same per-bucket extremes — the other states ride
+            # along), so it becomes that column's pruning wheel as is.
             self._base_pending = False
+            if "min" in states and "max" in states:
+                for c in self._min_max_pending:
+                    if c in indices:
+                        self.min_max_wheels.setdefault(c, indices[c])
+                self._min_max_pending = tuple(
+                    c for c in self._min_max_pending if c not in indices
+                )
+        # A keyed/filtered wheel is answerable over the whole *base table*
+        # span, not just the span of rows matching the filter: a sub-range
+        # with zero matching rows is a correct (empty) aggregate, not an
+        # unknown. The reference is narrower here (keyed wheels watermark at
+        # the filtered data's min, lib.rs:1046), which silently forfeits
+        # full-span keyed queries; we deliberately widen. When the build was
+        # time_range-restricted, keep the wheel's own (restricted) bounds.
         if time_range is None and self._time_range is None:
-            self._ensure_base()
+            if self._base_pending:
+                self._ensure_base()
             base = self.count_wheels.get(STAR_AGGREGATION_ALIAS, indices[None])
             if not base.empty:
                 for w in indices.values():
                     if not w.empty:
                         w.min_ts_us = min(w.min_ts_us, base.min_ts_us)
                         w.max_ts_us = max(w.max_ts_us, base.max_ts_us)
-        # see build_index: a restricted unfiltered build must not seed the
-        # deferred STAR base with its span-restricted count wheel
+        # A time_range-restricted unfiltered build must NOT become the
+        # deferred STAR base: its count wheel is span-restricted
+        # (complete=False) while the base contract is the full table. In
+        # the eager-ctor era the setdefault below no-op'd against the
+        # already-built base and the restricted count wheel was discarded;
+        # with the base deferred it would install, and _ensure_base's own
+        # setdefault could never replace it — full-span COUNTs would
+        # delegate forever and span-defaulted asks silently narrow.
         if not (
             time_range is not None
             and fk == STAR_AGGREGATION_ALIAS
@@ -667,6 +653,7 @@ class WheelEngine:
             self.agg_wheels[(c, fk)] = indices[c]
             keys.append(indices[c].key)
         self.index_epoch += 1
+        self.last_build = phases
         return keys
 
     def build_distinct_index(
@@ -1123,12 +1110,17 @@ class WheelEngine:
     def build_min_max_index(self, column: str) -> str:
         """Add a MIN/MAX pruning wheel after construction (min/max states
         only — the reference's ``build_min_max_wheel``, ``lib.rs:967-1017``)."""
+        phases: dict = {}
         indices = build_wheel_indices(
             self.df, self.name, self.time_column, [column],
             bucket_seconds=self.bucket_seconds, backend=self.index_backend,
-            states=("min", "max"),
+            states=("min", "max"), phases=phases,
         )
         self.min_max_wheels[column] = indices[column]
+        self._min_max_pending = tuple(
+            c for c in self._min_max_pending if c != column
+        )
+        self.last_build = phases
         return indices[column].key
 
     # ------------------------------------------------------------- queries
@@ -1453,12 +1445,14 @@ class WheelEngine:
         iterating ``BuiltInWheels`` (``wheels.rs:19-76``)."""
         self._ensure_base()
         out = []
-        seen: set[int] = set()
         for kind, group in (
             ("count", self.count_wheels),
             ("min_max", self.min_max_wheels),
             ("agg", self.agg_wheels),
         ):
+            # per kind: a seeded pruning wheel is also the column's
+            # aggregate wheel, and is listed under both roles
+            seen: set[int] = set()
             for w in group.values():
                 if id(w) in seen:
                     continue

@@ -83,6 +83,7 @@ def _register_view(spark, engine, name, table) -> None:
     versions older than N-1 (the immediately previous file survives one
     extra cycle so in-flight scans of the prior view complete)."""
     import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
 
     limit = getattr(engine, "_shim_max_local_rows", None)
     if limit is None:
@@ -112,7 +113,10 @@ def _register_view(spark, engine, name, table) -> None:
     path = os.path.join(vdir, f"v{v}.parquet")
     keep = {path, os.path.join(vdir, f"v{v - 1}.parquet")}
     pq.write_table(table, path, row_group_size=_ROW_GROUP)
-    spark.read.parquet(path).createOrReplaceTempView(name)
+    # read with the schema just written: without it Spark runs a job to
+    # infer the schema from the file footer on every export
+    schema = from_arrow_schema(table.schema)
+    spark.read.schema(schema).parquet(path).createOrReplaceTempView(name)
     for old in glob.glob(os.path.join(vdir, "v*.parquet")):
         if old not in keep:
             try:

@@ -14,6 +14,14 @@ each returned handle is a per-column view over a shared refcounted cache
 (``SketchRetention._detach_shared`` releases it when the last sibling
 unpersists or mutates away).
 
+The driver mirrors that serve zero-job direct asks land the same way: the
+one action that materializes the cache also sizes every column's mirror
+(rows and sketch bytes, checked against each family's caps), and ONE
+``collect`` of the shared frame fills every handle's mirror box through
+the landing ``_bytes_mirror`` uses (:func:`.sketch_retention.land_mirror`)
+— the build costs the scan plus one collect, not a sizing job and a
+collect per family.
+
 Answer parity with standalone builds: HLL state is per-register maxima and
 theta state is a smallest-hashes set — both order-independent, so their
 sketches (and every estimate) are identical however the build batches
@@ -24,12 +32,13 @@ builds may return adjacent data values within the bound).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .distinct import DistinctRollup
 from .quantiles import QuantileRollup, _fns, _suffix_for
 from .rollups import time_sec_col
+from .sketch_retention import land_mirror, mirror_bytes
 from .theta import ThetaRollup
 
 __all__ = ["build_sketch_rollups"]
@@ -99,28 +108,39 @@ def build_sketch_rollups(
         .coalesce(_CACHE_PARTITIONS)
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    n_rows = combined.count()  # ONE materializing scan for every family
+    # ONE materializing scan for every family, which also sizes every
+    # column's mirror (rows and sketch bytes, the per-family caps) as an
+    # observation of the same action: a global aggregate over the cache
+    # would cost an exchange and a job of its own
+    sizing = Observation()
+    sketch_cols = [a for a in combined.columns if a not in ("__sec", "__key")]
+    combined.observe(
+        sizing,
+        F.count(F.lit(1)).alias("n"),
+        *(mirror_bytes(a).alias(a) for a in sketch_cols),
+    ).write.format("noop").mode("overwrite").save()
+    sized = sizing.get
+    n_rows = sized["n"]
     holder = {
         "df": combined,
         "refs": len(distinct) + len(quantile) + len(theta),
     }
     base_cols = ["__sec"] + (["__key"] if partition_by is not None else [])
     out: dict[str, dict] = {"distinct": {}, "quantile": {}, "theta": {}}
+    handles = []  # (handle, sketch column of the shared frame)
     for i, c in enumerate(distinct):
         view = combined.select(*base_cols, F.col(f"__hll{i}").alias("__hll"))
         h = DistinctRollup(
             view, c, bucket_seconds, lg_k, key_column=partition_by
         )
-        h._shared = holder
-        h._warm_mirror("__hll")  # zero-job direct asks from the start
+        handles.append((h, f"__hll{i}"))
         out["distinct"][c] = h
     for i, c in enumerate(quantile):
         view = combined.select(*base_cols, F.col(f"__kll{i}").alias("__kll"))
         h = QuantileRollup(
             view, c, bucket_seconds, k, suffixes[c], key_column=partition_by
         )
-        h._shared = holder
-        h._warm_mirror("__kll")
+        handles.append((h, f"__kll{i}"))
         out["quantile"][c] = h
     for i, c in enumerate(theta):
         view = combined.select(
@@ -128,7 +148,33 @@ def build_sketch_rollups(
         )
         h = ThetaRollup(view, c, bucket_seconds, lg_k, key_column=partition_by)
         h._rollup_rows = n_rows  # retention_by's bounded-lag proof (r15)
-        h._shared = holder
-        h._warm_mirror("__theta")
+        handles.append((h, f"__theta{i}"))
         out["theta"][c] = h
+    for h, _ in handles:
+        h._shared = holder
+    _warm_mirrors(combined, handles, sized, partition_by is not None)
     return out
+
+
+def _warm_mirrors(combined: DataFrame, handles: list, sized, keyed: bool) -> None:
+    """Fill every handle's driver mirror (zero-job direct asks from the
+    start) from ONE collect of the shared frame: each handle gets exactly
+    what its own ``_bytes_mirror`` would collect from its view — the same
+    rows in the same order — without a sizing job and a collect per
+    family. Only sessions that can serve direct asks warm; a family over
+    its caps gets ``False`` (the job path is its plan), as there."""
+    fits = []
+    for h, c in handles:
+        if h._sketch_ops() is None:
+            continue
+        if h._mirror_fits(sized["n"], sized[c]):
+            fits.append((h, c))
+        else:
+            h._mirror_box()["m"] = False
+    if not fits:
+        return
+    cols = ["__sec"] + [c for _, c in fits] + (["__key"] if keyed else [])
+    rows = combined.select(*cols).collect()
+    key = len(cols) - 1 if keyed else None
+    for i, (h, _) in enumerate(fits, start=1):
+        h._mirror_box()["m"] = land_mirror(rows, i, key)

@@ -40,19 +40,24 @@ def save_wheels(wheels: dict[str, dict], out_dir: str) -> str:
     Returns the manifest path. Driver wheels write single parquet files from
     their numpy arrays; Spark-backed wheels write their rollup DataFrame as a
     parquet *directory* (a distributed write — the rollup may exceed driver
-    memory by design)."""
+    memory by design). A wheel listed under several keys (a seeded pruning
+    wheel is also its column's aggregate wheel) is written once, and every
+    entry names the same file, so loading restores one shared object."""
     os.makedirs(out_dir, exist_ok=True)
     manifest: list[dict] = []
+    #: id(wheel) → (file, at_file) of its first entry
+    written: dict[int, tuple] = {}
     i = 0
     for kind, group in wheels.items():
         for key, w in group.items():
             backend = "spark" if hasattr(w, "rollup") else "driver"
-            if backend == "spark":
-                fname = f"wheel_{i:04d}"
+            if id(w) in written:
+                fname, at_fname = written[id(w)]
+            elif backend == "spark":
+                fname, at_fname = f"wheel_{i:04d}", None
                 w.rollup.write.mode("overwrite").parquet(os.path.join(out_dir, fname))
-            at_fname = None
-            if backend == "driver":
-                fname = _wheel_file(i)
+            else:
+                fname, at_fname = _wheel_file(i), None
                 # Native dtypes preserved: int64 states of integral columns
                 # round-trip exactly (no float coercion past 2^53).
                 cols: dict[str, pa.Array] = {
@@ -87,7 +92,9 @@ def save_wheels(wheels: dict[str, dict], out_dir: str) -> str:
                         if arr is not None:
                             at_cols[name] = pa.array(np.asarray(arr))
                     pq.write_table(pa.table(at_cols), os.path.join(out_dir, at_fname))
-            i += 1
+            if id(w) not in written:
+                written[id(w)] = (fname, at_fname)
+                i += 1
             manifest.append(
                 {
                     "kind": kind,
@@ -121,16 +128,20 @@ def load_wheels(in_dir: str, spark=None) -> dict[str, dict]:
     with open(os.path.join(in_dir, _MANIFEST)) as f:
         manifest = json.load(f)
     out: dict[str, dict] = {"count": {}, "min_max": {}, "agg": {}}
+    loaded: dict[str, object] = {}  # file → wheel: shared entries stay shared
     for entry in manifest["wheels"]:
         out.setdefault(entry["kind"], {})
         key = entry["key"]
         key = tuple(key) if isinstance(key, list) else key
+        if entry["file"] in loaded:
+            out[entry["kind"]][key] = loaded[entry["file"]]
+            continue
         if entry.get("backend") == "spark":
             if spark is None:
                 raise ValueError("spark session required to load spark-backend wheels")
             from .rollup_table import SparkRollupWheel
 
-            out[entry["kind"]][key] = SparkRollupWheel(
+            out[entry["kind"]][key] = loaded[entry["file"]] = SparkRollupWheel(
                 spark.read.parquet(os.path.join(in_dir, entry["file"])),
                 entry["table"],
                 entry["column"],
@@ -178,5 +189,5 @@ def load_wheels(in_dir: str, spark=None) -> dict[str, dict]:
             tiers=[tuple(t) for t in entry.get("tiers", [])] or None,
             **at,
         )
-        out[entry["kind"]][key] = w
+        out[entry["kind"]][key] = loaded[entry["file"]] = w
     return out

@@ -37,6 +37,7 @@ Type and NULL fidelity (round-2 hardening):
 
 from __future__ import annotations
 
+import time
 from typing import Sequence
 
 import numpy as np
@@ -62,11 +63,6 @@ __all__ = [
     "PHYSICAL_STATES",
     "physical_states_for",
 ]
-
-#: Per-phase wall-clock of the most recent driver-backend
-#: :func:`build_wheel_indices` call (diagnostics for bench.py — see the
-#: update site in that function). Never read by query paths.
-LAST_BUILD_PHASES: dict = {}
 
 #: Physical per-bucket states a value wheel can carry.
 PHYSICAL_STATES = ("sum", "min", "max", "sumsq")
@@ -316,6 +312,7 @@ def build_wheel_indices(
     bucket_seconds: int = 1,
     backend: str = "driver",
     states: Sequence[str] = PHYSICAL_STATES,
+    phases: dict | None = None,
 ) -> dict[str | None, WheelIndex]:
     """Build the COUNT wheel plus one value wheel per column in ``columns``,
     all in a single distributed pass.
@@ -330,6 +327,9 @@ def build_wheel_indices(
     memory bounded by distinct buckets); ``backend="spark"`` keeps it as a
     cached DataFrame (:class:`.rollup_table.SparkRollupWheel` — tiny-job
     lookups, unbounded span).
+
+    ``phases``, when given, receives the driver build's wall-clock phases
+    (the keys of ``WheelEngine.last_build``).
     """
     g = df.filter(F.col(time_column).isNotNull())
     if filter_expr is not None:
@@ -364,9 +364,7 @@ def build_wheel_indices(
             complete=time_range is None, bucket_seconds=bucket_seconds,
             states=states,
         )
-    import time as _time
-
-    t0 = _time.perf_counter()
+    t0 = time.perf_counter()
     # Sort executor-side (r13): the mirror needs sec-ascending arrays, and
     # a distributed sort of the rollup rides the same job for ~nothing,
     # while the driver-side argsort + per-state fancy-index copies it
@@ -375,21 +373,30 @@ def build_wheel_indices(
     # numpy vs 3.4-5.9 s of Spark. At 100 TB the sort is the only part of
     # this that scales with executors anyway.
     tbl = rolled.orderBy("__sec").toArrow()
-    t1 = _time.perf_counter()
+    t1 = time.perf_counter()
+    steps: dict = {}
     out = _indices_from_rollup(
         tbl, table, columns, types, filter_key, complete=time_range is None,
-        bucket_seconds=bucket_seconds, states=states,
+        bucket_seconds=bucket_seconds, states=states, steps=steps,
     )
-    # Diagnostics only (r12 verdict #2: the index_build_sf10 row cleared
-    # the cross-round spread-union rule on unchanged code — per-phase
-    # timings let the bench show WHERE a swing lives instead of
-    # adjudicating the one-number row by prose): phase 1 is the Spark
-    # scan + bucket rollup + Arrow collect (one action), phase 2 the
-    # driver-side numpy mirror construction.
-    LAST_BUILD_PHASES["scan_rollup_collect_s"] = t1 - t0
-    LAST_BUILD_PHASES["mirror_construct_s"] = _time.perf_counter() - t1
-    LAST_BUILD_PHASES["rollup_rows"] = tbl.num_rows
+    _record_phases(phases, t0, t1, tbl.num_rows, steps)
     return out
+
+
+def _record_phases(phases: dict | None, t0: float, t1: float, rows: int,
+                   steps: dict) -> None:
+    """Fill a build's phase record (diagnostics only — r12 verdict #2:
+    the index_build_sf10 row cleared the cross-round spread-union rule on
+    unchanged code; per-phase timings let the bench show WHERE a swing
+    lives): phase 1 is the Spark scan + bucket rollup + Arrow collect (one
+    action, ``t0``→``t1``), phase 2 the driver-side numpy mirror
+    construction (``t1``→now)."""
+    if phases is None:
+        return
+    phases["scan_rollup_collect_s"] = t1 - t0
+    phases["mirror_construct_s"] = time.perf_counter() - t1
+    phases["rollup_rows"] = rows
+    phases["mirror_steps"] = steps
 
 
 def key_sql_type(df: DataFrame, column: str) -> str:
@@ -420,6 +427,7 @@ def build_partitioned_wheel_indices(
     states: Sequence[str] = PHYSICAL_STATES,
     max_keys: int = 512,
     time_range: tuple | None = None,
+    phases: dict | None = None,
 ) -> tuple[dict, str, dict]:
     """ONE scan → a *key-complete* family of per-value wheels:
     ``({key_value: {None: count_wheel, col: value_wheel, ...}}, key_sql_type,
@@ -437,6 +445,8 @@ def build_partitioned_wheel_indices(
     this at all (one optimizer = one table = one filter, ``lib.rs:76-77``).
     ``max_keys`` guards the driver: partitioning on a high-cardinality key
     (user ids!) is a modeling error, not a scaling path — raise there.
+    ``phases`` receives the build's wall-clock phases as in
+    :func:`build_wheel_indices` (``mirror_steps`` of the star family).
     """
     g = df.filter(F.col(time_column).isNotNull())
     if time_range is not None:
@@ -460,7 +470,9 @@ def build_partitioned_wheel_indices(
     rolled = g.groupBy(
         sec.alias("__sec"), F.col(key_column).alias("__key")
     ).agg(*aggs)
+    t0 = time.perf_counter()
     tbl = rolled.toArrow()
+    t1 = time.perf_counter()
     keyarr = tbl.column("__key")
     uniq = pc.unique(keyarr).to_pylist()
     if len(uniq) > max_keys:
@@ -488,11 +500,13 @@ def build_partitioned_wheel_indices(
     # separate STAR build's scan would, without that second 100 TB scan.
     # Float sums re-add per key, so they can differ from a direct build in
     # the last ulp; counts/min/max/timestamps are exact.
+    steps: dict = {}
     star = _indices_from_rollup(
         _regroup_rollup_by_sec(tbl, columns), table, list(columns), types,
         STAR_AGGREGATION_ALIAS, complete=time_range is None,
-        bucket_seconds=bucket_seconds, states=states,
+        bucket_seconds=bucket_seconds, states=states, steps=steps,
     )
+    _record_phases(phases, t0, t1, tbl.num_rows, steps)
     return fam, ktype, star
 
 
@@ -587,6 +601,7 @@ def _indices_from_rollup(
     complete: bool = False,
     bucket_seconds: int = 1,
     states: Sequence[str] = PHYSICAL_STATES,
+    steps: dict | None = None,
 ) -> dict[str | None, WheelIndex]:
     # Sub-step wall clock (r15 verdict #2): the r14 driver artifact showed
     # this function — pure driver-side Arrow→numpy landing — at 18.5 s on
@@ -596,19 +611,17 @@ def _indices_from_rollup(
     # chunks). The steps are recorded per call so a future swing names
     # its owner in the bench output itself: if "mirror" balloons but the
     # steps still sum to ~0.5 s, the gap is scheduler/allocator stall on
-    # a contended box, not this code.
-    import time as _time
-
-    steps: dict[str, float] = {}
-    _t = _time.perf_counter()
+    # a contended box, not this code. ``steps`` receives them.
+    if steps is None:
+        steps = {}
+    _t = time.perf_counter()
 
     def _mark(name: str) -> None:
         nonlocal _t
-        now = _time.perf_counter()
+        now = time.perf_counter()
         steps[name] = round(now - _t, 5)
         _t = now
 
-    LAST_BUILD_PHASES["mirror_steps"] = steps
     if tbl.num_rows == 0:
         empty = np.empty(0, dtype=np.int64)
         out: dict[str | None, WheelIndex] = {

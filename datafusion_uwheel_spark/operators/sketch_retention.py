@@ -49,6 +49,26 @@ _FIXED_GRAN_SECS = {"second": 1, "minute": 60, "hour": 3600, "day": 86400}
 _MEMO_MISS = object()
 
 
+def mirror_bytes(col: str) -> Column:
+    """Total sketch bytes of ``col`` — the mirror's byte-cap measure."""
+    return F.coalesce(F.sum(F.length(F.col(col))), F.lit(0))
+
+
+def land_mirror(rows: list, col: int, key: int | None):
+    """A sketch mirror ``(secs int64 ndarray, bufs list[bytes|None],
+    keys list|None)`` from collected rows: ``row[0]`` is the bucket
+    second, ``row[col]`` the sketch bytes and ``row[key]`` the partition
+    key (``None``: unkeyed). Sorts ``rows`` by second in place (stable, so
+    a keyed bucket keeps the frame's row order)."""
+    import numpy as np
+
+    rows.sort(key=lambda r: r[0])
+    secs = np.array([r[0] for r in rows], dtype=np.int64)
+    bufs = [None if r[col] is None else bytes(r[col]) for r in rows]
+    keys = [r[key] for r in rows] if key is not None else None
+    return secs, bufs, keys
+
+
 class SketchRetention:
     """Mixin adding ``compact_before`` / ``check_compact`` tiered retention
     to a per-bucket sketch rollup.
@@ -433,29 +453,27 @@ class SketchRetention:
         m = box["m"]
         if m is not None:
             return m
-        import numpy as np
-
         df = box["df"]
         # ONE combined pre-job prices the mirror before collecting it:
         # rows AND bytes (the byte cap is the real OOM guard — review
         # r10p4). Two small jobs per DATA VERSION (this + the collect),
-        # never per ask.
+        # never per ask; a fresh cross-family build lands every family's
+        # mirror from its own sizing and ONE collect (multibuild).
         sized = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum(F.length(F.col(col))), F.lit(0)).alias("b"),
+            F.count(F.lit(1)).alias("n"), mirror_bytes(col).alias("b")
         ).collect()[0]
-        if sized["n"] > self._MIRROR_MAX_ROWS or sized["b"] > self._MIRROR_MAX_BYTES:
+        if not self._mirror_fits(sized["n"], sized["b"]):
             m = box["m"] = False
             return m
         keyed = self.key_column is not None and "__key" in df.columns
         cols = ["__sec", col] + (["__key"] if keyed else [])
-        rows = df.select(*cols).collect()
-        rows.sort(key=lambda r: r[0])
-        secs = np.array([r[0] for r in rows], dtype=np.int64)
-        bufs = [None if r[1] is None else bytes(r[1]) for r in rows]
-        keys = [r[2] for r in rows] if keyed else None
-        m = box["m"] = (secs, bufs, keys)
+        m = box["m"] = land_mirror(df.select(*cols).collect(), 1, 2 if keyed else None)
         return m
+
+    def _mirror_fits(self, rows: int, nbytes: int) -> bool:
+        """Whether a mirror of ``rows`` rows and ``nbytes`` sketch bytes is
+        under this family's caps (over them the job path is the plan)."""
+        return rows <= self._MIRROR_MAX_ROWS and nbytes <= self._MIRROR_MAX_BYTES
 
     def _drop_mirror(self) -> None:
         self._mirror_ref = None
@@ -826,14 +844,9 @@ class SketchRetention:
         try:
             scol = g.columns[2 if keyed else 1]
             gsized = g.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.coalesce(F.sum(F.length(F.col(scol))), F.lit(0)).alias("b"),
+                F.count(F.lit(1)).alias("n"), mirror_bytes(scol).alias("b")
             ).collect()[0]
-            if (
-                gsized["n"] == 0
-                or gsized["n"] > self._MIRROR_MAX_ROWS
-                or gsized["b"] > self._MIRROR_MAX_BYTES
-            ):
+            if gsized["n"] == 0 or not self._mirror_fits(gsized["n"], gsized["b"]):
                 return None
             return g.collect()
         finally:

@@ -70,6 +70,8 @@ class StreamingWheelMaintainer:
 
     # ------------------------------------------------------------- plumbing
     def columns(self) -> list[str]:
+        # pending ctor pruning wheels are columns to maintain too
+        self.engine._ensure_base()
         cols = {c for (c, fk) in self.engine.agg_wheels if fk == STAR_AGGREGATION_ALIAS}
         cols.update(self.engine.min_max_wheels)
         return sorted(cols)

@@ -201,8 +201,69 @@ def main():
             ok = got == want if isinstance(want, int) else math.isclose(got, want, rel_tol=1e-9)
             check("  …delegated result", ok, f"{got} != {want}")
 
+    check_setup_jobs(spark)
+
     print(f"\n{FAIL} failures")
     sys.exit(1 if FAIL else 0)
+
+
+#: Spark jobs each phase of the benchmark's set-up sequence may launch.
+#: ctor: the parquet read's schema job (its own scan is deferred to the
+#: first build); build_index: rollup shuffle + executor-side sort (range
+#: sampling, sort shuffle, result); partitioned: shuffle + result;
+#: sketches: shuffle + the shared cache + one sizing action + ONE mirror
+#: collect; count view: the NULL-timestamp probe; file-backed views read
+#: with their written schema: none. A phase over its ceiling re-added work.
+SETUP_JOB_CEILINGS = {
+    "ctor": 1, "build_index": 4, "build_partitioned_index": 2,
+    "build_sketch_indexes": 4, "register_count_rollup": 1,
+    "register_agg_rollup": 0, "register_dim_rollup": 0,
+}
+
+
+def check_setup_jobs(spark):
+    """Set-up jobs per phase: the benchmark's set-up sequence on the
+    testdata (rollup views forced onto the parquet backing), each phase in
+    its own Spark job group."""
+    import tempfile
+
+    from datafusion_uwheel_spark.jvmshim import (
+        register_agg_rollup, register_count_rollup, register_dim_rollup,
+    )
+
+    sc = spark.sparkContext
+    jobs = {}
+
+    def phase(name, fn):
+        sc.setJobGroup(f"setup:{name}", name)
+        out = fn()
+        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(f"setup:{name}"))
+        return out
+
+    views = tempfile.mkdtemp(prefix="verify_setup_views_")
+    e = phase("ctor", lambda: WheelEngine(
+        spark, "events_setup", f"{SF}/events.parquet", time_column="ts",
+        min_max_columns=("value",),
+    ))
+    phase("build_index", lambda: e.build_index("value"))
+    phase("build_partitioned_index",
+          lambda: e.build_partitioned_index("value", partition_by="event_type"))
+    phase("build_sketch_indexes", lambda: e.build_sketch_indexes(
+        distinct=("user_id",), quantile=("value",), theta=("user_id",)))
+    phase("register_count_rollup", lambda: register_count_rollup(
+        spark, e, storage_dir=views, max_local_rows=0))
+    phase("register_agg_rollup", lambda: register_agg_rollup(spark, e, "value"))
+    phase("register_dim_rollup", lambda: register_dim_rollup(spark, e, "event_type"))
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    print("set-up jobs per phase:", jobs, "total", sum(jobs.values()))
+    for name, ceiling in SETUP_JOB_CEILINGS.items():
+        check(f"setup_jobs[{name}]", jobs[name] <= ceiling,
+              f"{jobs[name]} jobs > ceiling {ceiling}")
+    check("setup_minmax_seeded", e.min_max_wheels.get("value") is not None
+          and not e._min_max_pending)
+    for rollups in (e.distinct_rollups, e.quantile_rollups, e.theta_rollups):
+        for r in rollups.values():
+            r.unpersist()
 
 
 if __name__ == "__main__":

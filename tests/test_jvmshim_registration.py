@@ -387,3 +387,78 @@ def test_all_value_columns_stale_clears_agg_conf(spark, ev_copy):
     StreamingWheelMaintainer(e).merge_batch(batch)
     assert spark.conf.get(conf_key, None) is None
     assert "shimallstale" in spark.conf.get("spark.uwheel.shim.tables")
+
+
+def test_file_backed_views_read_with_the_written_schema(spark, tmp_path):
+    """File-backed views are read with the schema of the Arrow table just
+    written (no footer-inference job). It must equal what Spark infers
+    from the file for the count, agg and dim views — integral states and
+    keys, NULL-masked states, ``sumsq_*`` — and aggregates over the views
+    must equal the delegate's (the rule's own parity over parquet views is
+    ``test_jvm_shim.py::test_shim_fuzz_equivalence_parquet_views``)."""
+    import math
+    from datetime import datetime, timedelta
+
+    from datafusion_uwheel_spark.jvmshim import register_dim_rollup
+
+    t0 = datetime(2024, 1, 1)
+    rows = [
+        (
+            t0 + timedelta(seconds=i),
+            i % 3,
+            None if i % 4 == 0 or 10 <= i < 20 else i * 1000,
+            None if i % 5 == 0 else i * 0.5,
+        )
+        for i in range(40)
+    ]
+    src = str(tmp_path / "typed.parquet")
+    spark.createDataFrame(
+        rows, "ts timestamp, k int, v bigint, w double"
+    ).coalesce(1).write.parquet(src)
+    eng = WheelEngine(spark, "shimschema", src, time_column="ts")
+    eng.build_index("v")
+    eng.build_index("w")
+    eng.build_partitioned_index(("v", "w"), partition_by="k")
+    store = str(tmp_path / "views")
+    names = [
+        register_count_rollup(spark, eng, storage_dir=store, max_local_rows=0),
+        register_agg_rollup(spark, eng, "v"),
+        register_agg_rollup(spark, eng, "w"),
+        register_dim_rollup(spark, eng, "k"),
+    ]
+    for name in names:
+        v = eng._shim_view_versions[name]
+        inferred = spark.read.parquet(f"{store}/{name}/v{v}.parquet").schema
+        view = spark.table(name)
+        assert view.schema == inferred, name
+        assert "LocalRelation" not in view._jdf.queryExecution().analyzed().toString()
+    agg = spark.table(names[2]).schema
+    assert {"sumsq_v", "sumsq_w"} <= set(agg.names)
+    assert spark.table(names[3]).schema["key"].dataType.simpleString() == "int"
+    assert agg["sum_v"].dataType.simpleString() == "bigint"
+
+    def close(a, b):
+        if a is None or b is None:
+            return a is b
+        return a == b if isinstance(a, int) else math.isclose(a, b, rel_tol=1e-12)
+
+    for a, b in ((0, 40), (10, 20), (3, 33)):
+        lo, hi = (int((t0 + timedelta(seconds=s)).timestamp()) for s in (a, b))
+        got = spark.sql(
+            f"SELECT SUM(cnt), SUM(vcnt_v), SUM(sum_v), MIN(min_v), MAX(max_v), "
+            f"SUM(sum_w), MIN(min_w), MAX(max_w), SUM(sumsq_w) FROM {names[2]} "
+            f"WHERE sec >= {lo} AND sec < {hi}"
+        ).collect()[0]
+        want = spark.sql(
+            "SELECT COUNT(*), COUNT(v), SUM(v), MIN(v), MAX(v), SUM(w), MIN(w), "
+            f"MAX(w), SUM(w * w) FROM shimschema WHERE ts >= timestamp_seconds({lo}) "
+            f"AND ts < timestamp_seconds({hi})"
+        ).collect()[0]
+        assert all(close(x, y) for x, y in zip(got, want)), (a, b, got, want)
+    got = sorted(spark.sql(
+        f"SELECT key, SUM(cnt), SUM(sum_v), MAX(max_w) FROM {names[3]} GROUP BY key"
+    ).collect())
+    want = sorted(spark.sql(
+        "SELECT k, COUNT(*), SUM(v), MAX(w) FROM shimschema GROUP BY k"
+    ).collect())
+    assert [tuple(r) for r in got] == [tuple(r) for r in want]

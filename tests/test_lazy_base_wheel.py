@@ -1,11 +1,14 @@
-"""r14: the ctor defers the base COUNT wheel's scan when no pruning
-columns are requested — the first unfiltered build_index seeds it from its
-own single pass (``indices[None]``), so the standard ctor+build sequence
-costs ONE table scan instead of two. Any reader that arrives first
-materializes the identical wheel through ``_ensure_base``; observable
+"""The ctor defers its table scan — the base COUNT wheel and any
+``min_max_columns`` pruning wheels. The first unfiltered build_index seeds
+them from its own single pass (``indices[None]``, and the value wheel
+itself as the pruning wheel), so the standard ctor+build sequence costs
+ONE table scan instead of two. Any reader that arrives first materializes
+the identical wheels in one pass through ``_ensure_base``; observable
 answers never change."""
 
 from __future__ import annotations
+
+from datetime import datetime, timezone
 
 from datafusion_uwheel_spark import WheelEngine
 from datafusion_uwheel_spark.operators.lookup import STAR_AGGREGATION_ALIAS
@@ -68,18 +71,140 @@ def test_query_before_any_build_materializes_lazily(spark, sf_small_dir):
     assert _jobs(spark) == j0
 
 
-def test_minmax_ctor_stays_eager(spark, sf_small_dir):
-    eng = WheelEngine(
+def _minmax_engine(spark, sf_small_dir, name):
+    return WheelEngine(
         spark,
-        "lzb_events3",
+        name,
         f"{sf_small_dir}/events.parquet",
         time_column="ts",
         min_max_columns=("value",),
     )
-    # pruning wheels ride the ctor pass, so nothing was deferred
-    assert not eng._base_pending
-    assert STAR_AGGREGATION_ALIAS in eng.count_wheels
-    assert "value" in eng.min_max_wheels
+
+
+def test_minmax_ctor_launches_no_rollup_job(spark, sf_small_dir):
+    j0 = _jobs(spark)
+    eng = _minmax_engine(spark, sf_small_dir, "lzb_events3")
+    # at most the parquet read's schema job: the pruning pass is deferred
+    assert _jobs(spark) - j0 <= 1
+    assert eng._base_pending
+    assert eng._min_max_pending == ("value",)
+    assert eng.min_max_wheels == {}
+    assert STAR_AGGREGATION_ALIAS not in eng.count_wheels
+
+
+def test_minmax_ctor_still_refuses_non_numeric_column(spark, sf_small_dir):
+    import pytest
+
+    with pytest.raises(ValueError, match="cannot build a value wheel"):
+        WheelEngine(
+            spark, "lzb_events3b", f"{sf_small_dir}/events.parquet",
+            time_column="ts", min_max_columns=("event_type",),
+        )
+
+
+def test_first_build_seeds_minmax_wheel(spark, sf_small_dir):
+    import numpy as np
+
+    eng = _minmax_engine(spark, sf_small_dir, "lzb_events3c")
+    eng.build_index("value")
+    j0 = _jobs(spark)
+    mm = eng.min_max_wheels["value"]
+    assert not eng._base_pending and eng._min_max_pending == ()
+    # the build's own wheel, shared — listed under both roles, counted once
+    assert mm is eng.agg_wheels[("value", STAR_AGGREGATION_ALIAS)]
+    kinds = {(d["kind"], d["column"]) for d in eng.list_indexes()}
+    assert {("min_max", "value"), ("agg", "value")} <= kinds
+    assert eng.index_usage_bytes() == sum(
+        w.size_bytes() for w in (eng.count_wheels[STAR_AGGREGATION_ALIAS], mm)
+    )
+    rows = eng.sql_rows(
+        "SELECT * FROM lzb_events3c WHERE ts >= '2024-01-03 00:00:00' "
+        "AND ts < '2024-01-10 00:00:00' AND value > 1000000000.0"
+    )
+    assert eng.last_route.kind == "prune_minmax" and rows == []
+    assert _jobs(spark) == j0  # no further job: nothing was pending
+    solo = WheelEngine(
+        spark, "lzb_events3d", f"{sf_small_dir}/events.parquet", time_column="ts"
+    )
+    solo.build_min_max_index("value")
+    ref = solo.min_max_wheels["value"]
+    assert np.array_equal(mm.secs, ref.secs)
+    assert np.array_equal(mm.min_, ref.min_)
+    assert np.array_equal(mm.max_, ref.max_)
+    assert np.array_equal(mm.at_min_, ref.at_min_)
+    assert np.array_equal(mm.at_max_, ref.at_max_)
+    assert (mm.min_ts_us, mm.max_ts_us) == (ref.min_ts_us, ref.max_ts_us)
+    for a, b in (("2024-01-03 00:00:00", "2024-01-10 00:00:00"),
+                 ("2024-01-05 06:00:00", "2024-01-05 07:00:00")):
+        sa, sb = (
+            int(datetime.fromisoformat(x).replace(tzinfo=timezone.utc).timestamp())
+            for x in (a, b)
+        )
+        assert mm.min_max_range(sa, sb) == ref.min_max_range(sa, sb)
+
+
+def test_ctor_only_engine_first_prune_materializes(spark, sf_small_dir):
+    eng = _minmax_engine(spark, sf_small_dir, "lzb_events3e")
+    rng = "ts >= '2024-01-03 00:00:00' AND ts < '2024-01-10 00:00:00'"
+    for pred, kind in (("value > 1000000000.0", "prune_minmax"),
+                       ("value > 50.0", "delegate")):
+        q = f"SELECT * FROM lzb_events3e WHERE {rng} AND {pred}"
+        got = eng.sql_rows(q)
+        assert eng.last_route.kind == kind
+        assert sorted(got) == sorted(spark.sql(q).collect())
+    # materialized in ONE pass exactly as the eager ctor built it:
+    # min/max states only, the count wheel from the same pass
+    assert not eng._base_pending and eng._min_max_pending == ()
+    mm = eng.min_max_wheels["value"]
+    assert mm.sum_ is None and mm.sumsq_ is None
+    assert mm.min_ is not None and mm.max_ is not None
+    assert eng.last_build["rollup_rows"] == mm.secs.size
+
+
+def test_subset_build_without_minmax_leaves_pruning_pending(spark, sf_small_dir):
+    eng = _minmax_engine(spark, sf_small_dir, "lzb_events3f")
+    eng.build_index("value", aggs=("sum",))
+    # the count wheel is seeded; the pruning wheel needs states this pass
+    # did not compute, so it stays owed
+    assert not eng._base_pending and eng._min_max_pending == ("value",)
+    assert eng.explain_route(
+        "SELECT * FROM lzb_events3f WHERE ts >= '2024-01-03 00:00:00' "
+        "AND ts < '2024-01-10 00:00:00' AND value > 1000000000.0"
+    ).kind == "prune_minmax"
+    mm = eng.min_max_wheels["value"]
+    assert mm is not eng.agg_wheels[("value", STAR_AGGREGATION_ALIAS)]
+    assert mm.sum_ is None
+
+
+def test_partitioned_build_seeds_only_the_base(spark, sf_small_dir):
+    """The partitioned build's star wheels fold per-key states on the
+    driver, where MAX skips NaN but Spark's MAX returns it: they seed the
+    base COUNT wheel, never a pruning wheel."""
+    eng = _minmax_engine(spark, sf_small_dir, "lzb_events3g")
+    eng.build_partitioned_index("value", partition_by="event_type")
+    assert not eng._base_pending and eng._min_max_pending == ("value",)
+    assert eng.explain_route(
+        "SELECT * FROM lzb_events3g WHERE ts >= '2024-01-03 00:00:00' "
+        "AND ts < '2024-01-10 00:00:00' AND value > 1000000000.0"
+    ).kind == "prune_minmax"
+    assert eng.min_max_wheels["value"].sum_ is None
+
+
+def test_last_build_is_per_engine(spark, sf_small_dir):
+    a = WheelEngine(
+        spark, "lzb_events3h", f"{sf_small_dir}/events.parquet", time_column="ts"
+    )
+    b = WheelEngine(
+        spark, "lzb_events3i", f"{sf_small_dir}/events.parquet", time_column="ts"
+    )
+    assert a.last_build == {} and b.last_build == {}
+    a.build_index("value")
+    assert set(a.last_build) == {
+        "scan_rollup_collect_s", "mirror_construct_s", "rollup_rows",
+        "mirror_steps",
+    }
+    assert a.last_build["rollup_rows"] == a.count_wheels[STAR_AGGREGATION_ALIAS].secs.size
+    assert b.last_build == {}  # another engine's build is not this one's
 
 
 def test_filtered_build_on_deferred_engine_materializes_base(spark, sf_small_dir):

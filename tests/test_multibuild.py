@@ -175,3 +175,105 @@ def test_engine_registration_serves_all_three_families(spark, sf_small_dir):
         for fam in out.values():
             for h in fam.values():
                 h.unpersist()
+
+
+def _jobs(spark):
+    return len(spark.sparkContext.statusTracker().getJobIdsForGroup(None) or [])
+
+
+#: each family's sketch column in its handle's view
+_COL = {"distinct": "__hll", "quantile": "__kll", "theta": "__theta"}
+
+
+def _assert_same_mirror(got, want):
+    import numpy as np
+
+    assert np.array_equal(got[0], want[0])
+    assert got[1] == want[1]  # sketch bytes, byte for byte
+    assert got[2] == want[2]
+
+
+@pytest.mark.parametrize("partition_by", [None, "event_type"])
+def test_one_collect_lands_what_bytes_mirror_collects(events, partition_by):
+    """The build lands every family's mirror from ONE collect of the
+    shared frame; each must equal what the handle's own ``_bytes_mirror``
+    collects from its view (same rows, same order, same bytes)."""
+    out = build_sketch_rollups(
+        events, "ts", distinct=("user_id",), quantile=("value",),
+        theta=("user_id",), partition_by=partition_by,
+    )
+    try:
+        for fam, handles in out.items():
+            for h in handles.values():
+                box = h._mirror_box()
+                landed = box["m"]
+                assert landed, fam
+                box["m"] = None
+                _assert_same_mirror(landed, h._bytes_mirror(_COL[fam], box))
+    finally:
+        for fam in out.values():
+            for h in fam.values():
+                h.unpersist()
+
+
+def test_hll_and_theta_mirrors_equal_standalone_builds(events, combined):
+    solos = {
+        "distinct": build_distinct_rollup(events, "ts", "user_id", bucket_seconds=3600),
+        "theta": build_theta_rollup(events, "ts", "user_id", bucket_seconds=3600),
+    }
+    try:
+        for fam, solo in solos.items():
+            _assert_same_mirror(
+                combined[fam]["user_id"]._mirror_box()["m"],
+                solo._bytes_mirror(_COL[fam]),
+            )
+    finally:
+        for solo in solos.values():
+            solo.unpersist()
+
+
+def test_three_family_build_job_ceiling(spark, events):
+    """Set-up cost pin: the build is the scan that fills the shared cache
+    (a shuffle job and the cache's own job), one action over it that also
+    sizes every mirror, and ONE collect landing all three mirrors — no
+    sizing job and collect per family. Every direct ask after it is
+    zero-job."""
+    j0 = _jobs(spark)
+    out = build_sketch_rollups(
+        events, "ts", distinct=("user_id",), quantile=("value",), theta=("user_id",),
+    )
+    try:
+        assert _jobs(spark) - j0 <= 4
+        j1 = _jobs(spark)
+        out["distinct"]["user_id"].approx_distinct(A, B)
+        out["quantile"]["value"].approx_quantile(0.5, A, B)
+        out["theta"]["user_id"].approx_retained(R1, R2)
+        assert _jobs(spark) == j1
+    finally:
+        for fam in out.values():
+            for h in fam.values():
+                h.unpersist()
+
+
+def test_over_cap_family_gets_no_mirror(events, monkeypatch):
+    """A family over its own mirror cap keeps the job path (``m`` is
+    False) while its siblings still land their mirrors; answers hold."""
+    from datafusion_uwheel_spark.operators.quantiles import QuantileRollup
+
+    monkeypatch.setattr(QuantileRollup, "_MIRROR_MAX_BYTES", 0)
+    out = build_sketch_rollups(
+        events, "ts", distinct=("user_id",), quantile=("value",), theta=("user_id",),
+    )
+    try:
+        qr = out["quantile"]["value"]
+        assert qr._mirror_box()["m"] is False
+        assert out["distinct"]["user_id"]._mirror_box()["m"]
+        assert out["theta"]["user_id"]._mirror_box()["m"]
+        got = qr.approx_quantile(0.5, A, B)
+        lo = exact_percentile(events, "value", 0.5 - EPS)
+        hi = exact_percentile(events, "value", 0.5 + EPS)
+        assert lo <= got <= hi
+    finally:
+        for fam in out.values():
+            for h in fam.values():
+                h.unpersist()

@@ -24,6 +24,10 @@ def test_round_trip(spark, minimal_agg, tmp_path):
     )
     assert eng2.index_keys() == eng.index_keys()
     assert eng2.index_usage_bytes() == eng.index_usage_bytes()
+    # the build-seeded pruning wheel is the aggregate wheel, before and
+    # after the round trip (written once, loaded as one object)
+    mm = eng2.min_max_wheels["agg_col"]
+    assert mm is eng2.agg_wheels[("agg_col", "*_AGG")]
 
     for sql, want, kind in [
         (f"SELECT COUNT(*) AS c FROM persist_tbl WHERE {RANGE}", 10, "count_range"),

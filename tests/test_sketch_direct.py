@@ -574,3 +574,44 @@ def test_mirror_byte_cap_falls_back(spark, events, monkeypatch):
         assert got == want and not job_free
     finally:
         r.unpersist()
+
+
+def test_kll_empty_range_is_none_until_a_merge_lands_rows(spark, events):
+    """The engine contract an ingest replay meets: a quantile ask over a
+    range that holds no rows yet answers ``None`` (the documented
+    ``approx_quantile`` contract, not an estimate) on the direct path and
+    the job path alike; once a ``merge_batch`` lands rows in that range,
+    both paths answer inside the KLL rank bound of those rows."""
+    lo_ts, hi_ts = BASE + timedelta(hours=8), BASE + timedelta(hours=9)
+    rng = (str(lo_ts), str(hi_ts))
+    r = build_quantile_rollup(events, "ts", "v", bucket_seconds=3600)
+
+    def both_paths():
+        out = []
+        for force_job in (False, True):
+            if force_job:
+                _force_job_path(r)
+            else:
+                _reenable(r)
+            assert (r._sketch_ops() is None) == force_job
+            r.invalidate_asks()
+            out.append(r.approx_quantile(0.9, *rng))
+        _reenable(r)
+        return out
+
+    try:
+        assert both_paths() == [None, None]
+        vals = [1000.0 + 7 * i for i in range(60)]
+        batch = spark.createDataFrame(
+            [(lo_ts + timedelta(seconds=30 * i), 0, v) for i, v in enumerate(vals)],
+            "ts timestamp, uid bigint, v double",
+        )
+        r.merge_batch(batch, "ts")
+        eps = 0.04  # KLL k=200 rank-error bracket, as in test_quantiles
+        n = len(vals)
+        lo = vals[max(0, int((0.9 - eps) * (n - 1)))]
+        hi = vals[min(n - 1, int((0.9 + eps) * (n - 1)) + 1)]
+        for got in both_paths():
+            assert got is not None and lo <= got <= hi, (lo, got, hi)
+    finally:
+        r.unpersist()
