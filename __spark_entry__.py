@@ -420,7 +420,7 @@ def or_group_by(spark, sf_dir):
     """Grouped OR-of-ranges ("this window vs that window, per day") — the
     r6 wrong-answer site (the scalar sibling dropped the key column until
     39b1f8e): per merged interval the wheel's group-by cells monoid-combine
-    into calendar buckets (plans/router.py _try_or_group_by). Seated per
+    into calendar buckets (plans/router.py _try_or_ranges). Seated per
     the rotation ledger so the surface earns a DuckDB hash check, not just
     the pytest-vs-delegate pin in test_or_ranges.py."""
     eng = _engine(spark, sf_dir)

@@ -27,12 +27,15 @@ identical signatures.
 
 from __future__ import annotations
 
+import logging
 import random
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .text import ROLLING_HASH_MOD, tokens_col
+
+log = logging.getLogger(__name__)
 
 __all__ = [
     "MINHASH_NUM_PERM",
@@ -414,7 +417,6 @@ def lsh_candidate_pairs(
     bands: int = MINHASH_BANDS,
     min_est_jaccard: float | None = None,
     max_bucket_size: int | None = 1000,
-    log_dropped: bool = False,
 ) -> DataFrame:
     """LSH banding over MinHash signatures → candidate near-dup pairs.
 
@@ -434,8 +436,8 @@ def lsh_candidate_pairs(
     which buckets were dropped, so such pairs survive; truly identical
     docs are exact dedup's job). With a cap set, the hot-bucket census
     runs EAGERLY at call time (one small job, which also warms the
-    signature cache); ``log_dropped=True`` logs what it removed. ``None``
-    disables the cap and keeps construction fully lazy.
+    signature cache) and logs how many buckets it dropped at WARNING on
+    this module's logger. ``None`` disables the cap and keeps construction fully lazy.
 
     The signature column is **persisted** before the self-join: Catalyst
     inlines projection chains, so without materialization the full
@@ -455,7 +457,7 @@ def lsh_candidate_pairs(
     df_with_sig = df_with_sig.persist(StorageLevel.MEMORY_AND_DISK)
     bandrows = band_rows(df_with_sig, id_col, k=k, bands=bands)
     bandrows, hot_pairs, use_claim = _apply_bucket_cap(
-        bandrows, max_bucket_size, log_dropped, "lsh_candidate_pairs"
+        bandrows, max_bucket_size, "lsh_candidate_pairs"
     )
     a = bandrows.select(
         F.col("__id").alias("id_a"), F.col("signature").alias("__sig_a"), "__band", "__key"
@@ -497,7 +499,7 @@ def lsh_candidate_pairs(
 _HOT_CLAIM_LITERAL_CAP = 20_000
 
 
-def _apply_bucket_cap(bandrows, max_bucket_size, log_dropped, opname):
+def _apply_bucket_cap(bandrows, max_bucket_size, opname):
     """Enforce the skew valve and surface what it dropped.
 
     Returns ``(filtered_rows, hot (band, key) list, use_claim)``. The hot
@@ -518,13 +520,10 @@ def _apply_bucket_cap(bandrows, max_bucket_size, log_dropped, opname):
         .select("__band", "__key")
     )
     hot_rows = hot.collect()
-    if log_dropped and hot_rows:
-        import sys
-
-        print(
-            f"{opname}: dropped {len(hot_rows)} bucket(s) over "
-            f"max_bucket_size={max_bucket_size}",
-            file=sys.stderr,
+    if hot_rows:
+        log.warning(
+            "%s: dropped %d bucket(s) over max_bucket_size=%d",
+            opname, len(hot_rows), max_bucket_size,
         )
     if not hot_rows:
         return bandrows, [], True

@@ -54,7 +54,7 @@ Correctness notes:
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, NamedTuple
 
 import numpy as np
 
@@ -65,7 +65,10 @@ from ..functions.timestamps import (
     bucket_starts,
 )
 
-__all__ = ["WheelIndex", "STAR_AGGREGATION_ALIAS", "INTEGRAL_SQL_TYPES", "VARIANCE_KEYS"]
+__all__ = [
+    "WheelIndex", "States", "STAR_AGGREGATION_ALIAS", "INTEGRAL_SQL_TYPES",
+    "UNDERIVABLE", "VARIANCE_KEYS",
+]
 
 #: Key suffix for unfiltered indices — mirrors ``STAR_AGGREGATION_ALIAS``
 #: (reference ``lib.rs:70``).
@@ -105,6 +108,141 @@ def _variance_states(s: float | None, sq: float | None, n: int) -> dict:
 
 #: The variance family, derived from (sum, sumsq, non-null count).
 VARIANCE_KEYS = ("var_pop", "var_samp", "stddev_pop", "stddev_samp")
+
+#: The min/max of a ``ts > a`` sliver whose bucket mixes at-start and later
+#: non-NULL rows: min/max do not subtract, so no state answers it.
+UNDERIVABLE = object()
+
+
+def _extreme(a, b, nan_wins: bool):
+    """MIN (``nan_wins=False``) or MAX of two states in Spark's float order,
+    where NaN sorts above +inf: MIN skips NaN unless both are NaN
+    (``np.fmin``), MAX is NaN if either is. ``None`` (no value) is the
+    identity; :data:`UNDERIVABLE` absorbs."""
+    if a is None:
+        return b
+    if b is None:
+        return a
+    if a is UNDERIVABLE or b is UNDERIVABLE:
+        return UNDERIVABLE
+    if a != a or b != b:
+        return a if (a != a) == nan_wins else b
+    return max(a, b) if nan_wins else min(a, b)
+
+
+class States(NamedTuple):
+    """Raw monoid states of one set of rows — the algebra every routed
+    aggregate is answered from. ``count_col`` is the non-NULL count;
+    ``sum``/``min``/``max`` are ``None`` when no non-NULL value exists (the
+    identity), ``sumsq`` is additive from 0.0. A state a read did not
+    request is meaningless and never finalized."""
+
+    count: int = 0
+    count_col: int = 0
+    sum: Any = None
+    sumsq: float = 0.0
+    min: Any = None
+    max: Any = None
+
+    @classmethod
+    def of(cls, d: dict) -> "States":
+        """From a reader's dict (:meth:`WheelIndex.combine_range`, a
+        ``group_by`` cell, :meth:`WheelIndex.at_start`). A wheel without
+        NULL tracking counts every row as non-NULL."""
+        n = d.get("count", 0)
+        return cls(
+            n, d.get("count_col", n), d.get("sum"), d.get("_sumsq", 0.0),
+            d.get("min"), d.get("max"),
+        )
+
+    def merge(self, o: "States") -> "States":
+        """States of the union of two disjoint row sets."""
+        s = o.sum if self.sum is None else self.sum if o.sum is None else self.sum + o.sum
+        return States(
+            self.count + o.count, self.count_col + o.count_col, s,
+            self.sumsq + o.sumsq, _extreme(self.min, o.min, False),
+            _extreme(self.max, o.max, True),
+        )
+
+    def merge_sliver(self, bucket: "States", at: "States") -> "States":
+        """Merge the ``ts > a`` sliver — ``bucket`` minus its at-start rows
+        ``at`` — adding the bucket then subtracting ``at`` (float sums keep
+        the order ``(self + bucket) − at``). The sliver's min/max are the
+        bucket's when ``at`` holds none of its non-NULL values, nothing when
+        the sliver holds none, else :data:`UNDERIVABLE`."""
+        if bucket.count_col == at.count_col:
+            lo = hi = None
+        elif at.count_col == 0:
+            lo, hi = bucket.min, bucket.max
+        else:
+            lo = hi = UNDERIVABLE
+        m = self.merge(bucket._replace(min=lo, max=hi))
+        return States(
+            m.count - at.count, m.count_col - at.count_col,
+            m.sum if at.sum is None or m.sum is None else m.sum - at.sum,
+            m.sumsq - at.sumsq, m.min, m.max,
+        )
+
+    def finalize(self, key: str):
+        """One aggregate from the states (:func:`_finalize`)."""
+        return _finalize(key, *self)
+
+
+def _finalize(key: str, count, count_col, sum_, sumsq, min_, max_):
+    """One aggregate from raw states — COUNT, COUNT(col), SUM, AVG, MIN,
+    MAX or the variance family — with SQL's rule: NULL when no non-NULL
+    value exists (COUNTs answer 0). The wheel kernels call it with their
+    reductions, the router through :meth:`States.finalize`."""
+    if key == "count":
+        return count
+    if key == "count_col":
+        return count_col
+    if count_col == 0:
+        return None
+    if key == "sum":
+        return sum_
+    if key == "min":
+        return min_
+    if key == "max":
+        return max_
+    if key == "avg":
+        return float(sum_) / count_col
+    return _variance_states(float(sum_), float(sumsq), count_col)[key]
+
+
+def _min_reduce(arr: np.ndarray, vcnt: np.ndarray | None, seg=None):
+    """MIN of bucket states over a slice (or per ``reduceat`` segment) in
+    Spark's float order, where NaN is skipped unless every value is NaN.
+    NaN-free states take numpy's vectorized minimum; a NaN in a result
+    reruns the reduction with ``np.fmin`` over the states with the +inf
+    identities of all-NULL buckets masked to NaN (fmin's own identity, so
+    they cannot hide an all-NaN answer). An all-NULL segment then reads
+    NaN, which callers never answer."""
+    if seg is None:
+        out = np.minimum.reduce(arr)
+        if out == out:  # not NaN
+            return out
+    else:
+        out = np.minimum.reduceat(arr, seg)
+        if arr.dtype.kind != "f" or not np.isnan(out).any():
+            return out
+    if vcnt is not None:
+        arr = np.where(vcnt > 0, arr, np.nan)
+    return np.fmin.reduce(arr) if seg is None else np.fmin.reduceat(arr, seg)
+
+
+def _merge_min(size, old, old_pos, old_vc, new, new_pos, new_vc, merged_vc):
+    """Per-bucket MIN of two float state arrays scattered onto a merged
+    axis, in Spark's order: identities (+inf in all-NULL buckets) masked to
+    NaN, ``np.fmin`` per bucket, +inf restored where the merged bucket has
+    no non-NULL value."""
+    out = np.full(size, np.nan)
+    if old is not None and old.size:
+        out[old_pos] = old if old_vc is None else np.where(old_vc > 0, old, np.nan)
+    np.fmin.at(out, new_pos, new if new_vc is None else np.where(new_vc > 0, new, np.nan))
+    if merged_vc is not None:
+        out[merged_vc == 0] = np.inf
+    return out
 
 
 def carried_states(
@@ -458,6 +596,7 @@ class WheelIndex:
             mid = reducer.reduceat(arr[lo:hi], breaks)
             return np.concatenate([arr[:lo], mid, arr[hi:]])
 
+        vc = None if self.vcnt_ is None else self.vcnt_[lo:hi]
         self.secs = np.concatenate([self.secs[:lo], ids[breaks], self.secs[hi:]])
         self.cnt = splice(self.cnt, np.add)
         if self.vcnt_ is not None:
@@ -467,7 +606,10 @@ class WheelIndex:
         if self.sumsq_ is not None:
             self.sumsq_ = splice(self.sumsq_, np.add)
         if self.min_ is not None:
-            self.min_ = splice(self.min_, np.minimum)
+            mid = _min_reduce(self.min_[lo:hi], vc, breaks)
+            if vc is not None and mid.dtype.kind == "f":
+                mid[np.add.reduceat(vc, breaks) == 0] = np.inf  # identity kept
+            self.min_ = np.concatenate([self.min_[:lo], mid, self.min_[hi:]])
         if self.max_ is not None:
             self.max_ = splice(self.max_, np.maximum)
         self._invalidate_prefixes()
@@ -524,16 +666,19 @@ class WheelIndex:
         of the bucket beginning at ``sec``; zero-states when the instant holds
         no rows, ``None`` when at-start tracking is absent (legacy wheels).
 
-        Keys: ``count``, ``vcnt``, plus ``sum``/``min``/``max``/``sumsq`` for
-        the states this wheel carries (``min``/``max`` are None when the
-        sliver has no non-NULL value; ``sum``/``sumsq`` are additive zeros)."""
+        Keys are :meth:`combine_range`'s raw state names: ``count``,
+        ``count_col`` (with NULL tracking), plus ``sum``/``_sumsq``/``min``/
+        ``max`` for the states this wheel carries (``sum``/``min``/``max``
+        are None when the sliver has no non-NULL value, ``_sumsq`` 0.0)."""
         if self.at_secs_ is None:
             return None
-        out: dict[str, Any] = {"count": 0, "vcnt": 0}
+        out: dict[str, Any] = {"count": 0}
+        if self.vcnt_ is not None:
+            out["count_col"] = 0
         if self.sum_ is not None:
-            out["sum"] = 0
+            out["sum"] = None
         if self.sumsq_ is not None:
-            out["sumsq"] = 0.0
+            out["_sumsq"] = 0.0
         if self.min_ is not None:
             out["min"] = None
         if self.max_ is not None:
@@ -544,12 +689,13 @@ class WheelIndex:
         n = int(self.at_cnt_[i])
         vn = int(self.at_vcnt_[i]) if self.at_vcnt_ is not None else n
         out["count"] = n
-        out["vcnt"] = vn
+        if self.vcnt_ is not None:
+            out["count_col"] = vn
         if vn:
             if self.at_sum_ is not None:
                 out["sum"] = self._py(self.at_sum_[i])
             if self.at_sumsq_ is not None:
-                out["sumsq"] = float(self.at_sumsq_[i])
+                out["_sumsq"] = float(self.at_sumsq_[i])
             if self.at_min_ is not None:
                 out["min"] = self._py(self.at_min_[i])
             if self.at_max_ is not None:
@@ -577,6 +723,7 @@ class WheelIndex:
         the router delegates when a needed key is absent."""
         keys = wanted_states(states, self.state_keys)
         out: dict[str, Any] = {}
+        n = 0
         if "count" in keys or self._pvcnt is None:
             n = int(self._pcnt[j] - self._pcnt[i])
             if "count" in keys:
@@ -590,31 +737,21 @@ class WheelIndex:
         value_keys = keys - {"count", "count_col"}
         if not value_keys:
             return out
-        if vn == 0:
-            for k in value_keys:
-                # _sumsq is the raw monoid state for hybrid combining
-                out[k] = 0.0 if k == "_sumsq" else None
-            return out
-        s = None
-        if value_keys - {"min", "max", "_sumsq"}:
-            s = self.sum_[i:j].sum()
-        if "sum" in keys:
-            out["sum"] = self._py(s)
-        if "avg" in keys:
-            out["avg"] = float(s) / vn
-        if "min" in keys:
-            out["min"] = self._py(np.min(self.min_[i:j]))
-        if "max" in keys:
-            out["max"] = self._py(np.max(self.max_[i:j]))
-        var_keys = value_keys.intersection(VARIANCE_KEYS)
-        if "_sumsq" in keys or var_keys:
-            sq = float(np.sum(self.sumsq_[i:j]))
-            if "_sumsq" in keys:
-                out["_sumsq"] = sq
-            if var_keys:
-                var = _variance_states(float(s), sq, vn)
-                for k in var_keys:
-                    out[k] = var[k]
+        s = mn = mx = None
+        sq = 0.0
+        if vn:
+            if value_keys - {"min", "max", "_sumsq"}:
+                s = self._py(self.sum_[i:j].sum())
+            if "min" in keys:
+                vc = None if self.vcnt_ is None else self.vcnt_[i:j]
+                mn = self._py(_min_reduce(self.min_[i:j], vc))
+            if "max" in keys:
+                mx = self._py(np.max(self.max_[i:j]))
+            if "_sumsq" in keys or not value_keys.isdisjoint(VARIANCE_KEYS):
+                sq = float(np.sum(self.sumsq_[i:j]))
+        for k in value_keys:
+            # _sumsq is the raw monoid state parts re-combine from
+            out[k] = sq if k == "_sumsq" else _finalize(k, n, vn, s, sq, mn, mx)
         return out
 
     def combine_range(
@@ -718,7 +855,8 @@ class WheelIndex:
             with np.errstate(divide="ignore", invalid="ignore"):
                 cols["avg"] = column(sums.astype(np.float64) / vns, np.float64)
         if "min" in keys:
-            cols["min"] = column(np.minimum.reduceat(self.min_[i:j], seg))
+            vc = None if self.vcnt_ is None else self.vcnt_[i:j]
+            cols["min"] = column(_min_reduce(self.min_[i:j], vc, seg))
         if "max" in keys:
             cols["max"] = column(np.maximum.reduceat(self.max_[i:j], seg))
         var_keys = [k for k in VARIANCE_KEYS if k in keys]
@@ -726,9 +864,9 @@ class WheelIndex:
             sqs = np.add.reduceat(self.sumsq_[i:j], seg)
             if "_sumsq" in keys:
                 # raw monoid state alongside the derived values: cells from
-                # several disjoint intervals / partition keys re-combine via
-                # _combine_interval_parts, which needs Σx² (the derived
-                # variance values are NOT additive)
+                # several disjoint intervals / partition keys re-combine as
+                # States, which need Σx² (the derived variance values are
+                # NOT additive)
                 cols["_sumsq"] = column(sqs, np.float64, 0.0)
         if var_keys:
             var = [
@@ -801,7 +939,11 @@ class WheelIndex:
             return None
         if self._pvcnt is not None and int(self._pvcnt[j] - self._pvcnt[i]) == 0:
             return None
-        return self._py(np.min(self.min_[i:j])), self._py(np.max(self.max_[i:j]))
+        vc = None if self.vcnt_ is None else self.vcnt_[i:j]
+        return (
+            self._py(_min_reduce(self.min_[i:j], vc)),
+            self._py(np.max(self.max_[i:j])),
+        )
 
     # -------------------------------------------------------- maintenance
     def merge_delta(
@@ -854,8 +996,10 @@ class WheelIndex:
             return out
 
         new_cnt = scatter(self.cnt, cnt, 0, "add")
+        old_vc = vc = None
         if self.vcnt_ is not None:
             # A delta without NULL tracking assumes no NULLs (vcnt = cnt).
+            old_vc = self.vcnt_
             vc = cnt if vcnt_ is None else np.asarray(vcnt_, dtype=np.int64)[order]
             self.vcnt_ = scatter(self.vcnt_, vc, 0, "add")
         vdtype = np.int64 if self.is_integral else np.float64
@@ -875,7 +1019,14 @@ class WheelIndex:
         if self.min_ is not None:
             if min_ is not None:
                 mn = np.asarray(min_, dtype=vdtype)[order]
-                self.min_ = scatter(self.min_, mn, min_fill, "min")
+                self.min_ = (
+                    scatter(self.min_, mn, min_fill, "min")
+                    if self.is_integral
+                    else _merge_min(
+                        merged_secs.shape, self.min_, old_pos, old_vc, mn,
+                        new_pos, vc, self.vcnt_,
+                    )
+                )
             else:
                 self.min_ = None
         if self.max_ is not None:
@@ -952,13 +1103,23 @@ class WheelIndex:
             return None if a is None else np.asarray(a, dtype=dtype)[order][mask]
 
         self.at_cnt_ = scat(self.at_cnt_, d_cnt[mask], 0, "add", np.int64)
+        old_vc = dv = None
         if self.at_vcnt_ is not None:
+            old_vc = self.at_vcnt_
             dv = dget("vcnt", np.int64)
-            self.at_vcnt_ = scat(self.at_vcnt_, dv if dv is not None else d_cnt[mask], 0, "add", np.int64)
+            dv = dv if dv is not None else d_cnt[mask]
+            self.at_vcnt_ = scat(self.at_vcnt_, dv, 0, "add", np.int64)
         if self.at_sum_ is not None:
             self.at_sum_ = scat(self.at_sum_, dget("sum", vdtype), vdtype(0), "add", vdtype)
         if self.at_min_ is not None:
-            self.at_min_ = scat(self.at_min_, dget("min", vdtype), min_fill, "min", vdtype)
+            self.at_min_ = (
+                scat(self.at_min_, dget("min", vdtype), min_fill, "min", vdtype)
+                if self.is_integral
+                else _merge_min(
+                    merged.shape, self.at_min_, old_pos, old_vc,
+                    dget("min", vdtype), new_pos, dv, self.at_vcnt_,
+                )
+            )
         if self.at_max_ is not None:
             self.at_max_ = scat(self.at_max_, dget("max", vdtype), max_fill, "max", vdtype)
         if self.at_sumsq_ is not None:

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from ..functions.timestamps import GRANULARITY_SECONDS, MICROS_PER_SECOND
 from .lookup import (
     INTEGRAL_SQL_TYPES,
+    States,
     carried_states,
     states_to_columns,
     wanted_states,
@@ -171,11 +172,13 @@ class SparkRollupWheel:
         as :meth:`WheelIndex.at_start` (one tiny job over the cached rollup)."""
         if not self._has_at:
             return None
-        out: dict[str, Any] = {"count": 0, "vcnt": 0}
+        out: dict[str, Any] = {"count": 0}
+        if self._has_vcnt:
+            out["count_col"] = 0
         if "sum" in self._state_cols:
-            out["sum"] = 0
+            out["sum"] = None
         if "sumsq" in self._state_cols:
-            out["sumsq"] = 0.0
+            out["_sumsq"] = 0.0
         if "min" in self._state_cols:
             out["min"] = None
         if "max" in self._state_cols:
@@ -187,12 +190,13 @@ class SparkRollupWheel:
         n = int(d["__atcnt"] or 0)
         vn = int(d.get("__atvcnt") or 0) if "__atvcnt" in d else n
         out["count"] = n
-        out["vcnt"] = vn
+        if self._has_vcnt:
+            out["count_col"] = vn
         if vn:
             if d.get("__atsum") is not None:
                 out["sum"] = self._py(d["__atsum"])
             if d.get("__atsumsq") is not None:
-                out["sumsq"] = float(d["__atsumsq"])
+                out["_sumsq"] = float(d["__atsumsq"])
             if d.get("__atmin") is not None:
                 out["min"] = self._py(d["__atmin"])
             if d.get("__atmax") is not None:
@@ -253,38 +257,17 @@ class SparkRollupWheel:
 
     def _states_from(self, d: dict) -> dict[str, Any]:
         """Shared post-aggregation state derivation (NULL-correct: vn is the
-        non-null count; Spark's sum/min/max already skipped NULL buckets)."""
-        from .lookup import _variance_states
-
+        non-null count; Spark's sum/min/max already skipped NULL buckets),
+        finalized by the same :meth:`.lookup.States.finalize` as the driver
+        wheel."""
         n = int(d["count"] or 0)
-        out: dict[str, Any] = {"count": n}
-        if self._has_vcnt:
-            vn = int(d["vcnt"] or 0)
-            out["count_col"] = vn
-        else:
-            vn = n
-        if not self._state_cols:
-            return out
-        s = None
-        if "sum" in self._state_cols:
-            s = d["sum"]
-            out["sum"] = self._py(s) if s is not None and vn else None
-            out["avg"] = float(s) / vn if s is not None and vn else None
-        if "min" in self._state_cols:
-            out["min"] = self._py(d["min"]) if d["min"] is not None and vn else None
-        if "max" in self._state_cols:
-            out["max"] = self._py(d["max"]) if d["max"] is not None and vn else None
-        if "sum" in self._state_cols and "sumsq" in self._state_cols:
-            sq = d["sumsq"]
-            out["_sumsq"] = float(sq) if sq is not None else 0.0
-            out.update(
-                _variance_states(
-                    float(s) if s is not None else None,
-                    float(sq) if sq is not None else None,
-                    vn,
-                )
-            )
-        return out
+        vn = int(d["vcnt"] or 0) if self._has_vcnt else n
+
+        def val(k):
+            return self._py(d[k]) if vn and d.get(k) is not None else None
+
+        st = States(n, vn, val("sum"), float(d.get("sumsq") or 0.0), val("min"), val("max"))
+        return {k: st.sumsq if k == "_sumsq" else st.finalize(k) for k in self.state_keys}
 
     @property
     def state_keys(self) -> frozenset:

@@ -532,7 +532,27 @@ def _regroup_rollup_by_sec(tbl: pa.Table, columns: Sequence[str]) -> pa.Table:
             "state was added to state_agg_exprs without updating "
             "_PER_COLUMN_STATE_MONOIDS"
         )
-    out = tbl.group_by("__sec").aggregate([(c, ops[c]) for c in state_cols])
+    # pyarrow's grouped min/max skip NaN (an all-NaN group even reads
+    # ±inf), while Spark sorts NaN above +inf: MAX is NaN when any value
+    # is, MIN only when every non-NULL one is. A NaN flag per float min/max
+    # state, folded with any/all, restores Spark's order.
+    flags = {}
+    for c in state_cols:
+        if ops[c] in ("min", "max") and pa.types.is_floating(tbl.schema.field(c).type):
+            flags[c] = (f"{c}__nan", "any" if ops[c] == "max" else "all")
+            tbl = tbl.append_column(flags[c][0], pc.is_nan(tbl[c]))
+    out = tbl.group_by("__sec").aggregate(
+        [(c, ops[c]) for c in state_cols] + list(flags.values())
+    )
+    for c, (flag, op) in flags.items():
+        name = f"{c}_{ops[c]}"
+        i = out.column_names.index(name)
+        nan = pc.fill_null(out.column(f"{flag}_{op}"), False)
+        col = out.column(i)
+        out = out.set_column(
+            i, name, pc.if_else(nan, pa.scalar(float("nan"), col.type), col)
+        )
+    out = out.drop_columns([f"{flag}_{op}" for flag, op in flags.values()])
     # pyarrow names aggregates "{col}_{op}" — map each back exactly
     back = {f"{c}_{ops[c]}": c for c in state_cols}
     return out.rename_columns([back.get(n, n) for n in out.column_names])

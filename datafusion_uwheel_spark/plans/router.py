@@ -12,20 +12,35 @@ engine's doors materialize as Rows or as a LocalRelation (:func:`constant_df`);
 on no-match it returns ``None`` and the original SQL goes to ``spark.sql``
 untouched (``lib.rs:863-867``).
 
-Rewrites implemented (SURVEY.md §2.1):
+Every routed family is a *part builder* over one raw-state monoid
+(:class:`~..operators.lookup.States`, the reference's pre-aggregated
+states, ``lib.rs:652-661,717-780``). A family only says which parts of the
+index it reads:
 
-* R1 COUNT(*) range        (``try_count_rewrite``,  ``lib.rs:599-604,717-724``)
-* R2 single aggregate      (``create_uwheel_plan``, ``lib.rs:652-661``)
-* R3 multiple aggregates   (``lib.rs:503-552,764-780``)
-* R4 GROUP BY date_trunc   (``lib.rs:333-482,737-762``)
-* R5 landmark aggregate    (``lib.rs:554-577,690-714``)
-* R6 COUNT-based pruning   (``maybe_count_filter``, ``lib.rs:608-618``)
-* R7 MIN/MAX-based pruning (``maybe_min_max_filter``, ``lib.rs:621-649``)
+* one range — COUNT(*) (R1, ``count_range``), one or more aggregates (R2/R3,
+  ``single_agg``/``multi_agg``), ``GROUP BY date_trunc / window()`` (R4);
+* the landmark — no temporal bound (R5), keyed or not;
+* the listed values of a ``key IN (...)`` over a partitioned family;
+* the merged intervals of an OR of ranges (``or_ranges``/``or_group_by``);
+* the at-start instant of ``ts = <bucket start>`` (``point_agg``);
+* a core range plus its boundary slivers for BETWEEN / ``<=`` / ``>``
+  (``hybrid_agg``, ``group_by_hybrid``), or the one boundary-scan row when
+  the wheels hold no at-start states for them.
+
+Shared steps do the rest: resolve each aggregate's wheel or delegate
+(:func:`_resolved`), gate the range mode (:func:`_span`), read each part
+once per distinct wheel (:func:`_read_states`), combine and finalize
+(:func:`_values` — scalar families merge their parts; :func:`_grouped` —
+grouped families merge cells per bucket; the key dimension concatenates per
+key), then emit names, types and ORDER BY / LIMIT (:func:`_answer`).
+``SELECT *`` answers :data:`EMPTY` when COUNT (R6) or MIN/MAX (R7) pruning
+proves it empty. Every miss goes through :func:`_delegate` with its reason.
 
 A matched answer launches **no Spark job at all** — the wheel lookup runs on
 the driver in microseconds and the result is a constant row list; this mirrors
 the reference's plan-time lookup (§3.1) and is what the BASELINE latency
-numbers measure.
+numbers measure. The one exception is the boundary-scan fallback, one scan
+pruned to at most two bucket widths.
 """
 
 from __future__ import annotations
@@ -45,9 +60,10 @@ from ..functions.timestamps import (
 )
 from ..operators.lookup import (
     STAR_AGGREGATION_ALIAS,
+    UNDERIVABLE,
     VARIANCE_KEYS,
+    States,
     WheelIndex,
-    _variance_states,
 )
 from .predicates import (
     MinMaxPredicate,
@@ -97,6 +113,11 @@ class Answer(NamedTuple):
 #: The answer of a provably empty ``SELECT *``: no rows, the table's own
 #: schema (``empty_table_scan``, ``lib.rs:817-824``).
 EMPTY = object()
+
+
+def _delegate(reason: str, **detail):
+    """The router's one miss: hand the query to Spark, recording why."""
+    return RouteDecision("delegate", detail={"reason": reason, **detail}), None
 
 
 _AGG_STATE = {
@@ -198,7 +219,13 @@ def _combine_keys(key: str) -> tuple[str, ...]:
     return keys
 
 
-def _lookup_plan(specs, wheels, keys_of=lambda key: (key,)):
+def _own_key(key: str) -> tuple[str, ...]:
+    """A single part's read: the aggregate's own state, finalized by the
+    kernel."""
+    return (key,)
+
+
+def _lookup_plan(specs, wheels, keys_of=_own_key):
     """Batch one query's state reads per wheel: ``(sources, reads)`` where
     ``sources[i]`` is the wheel spec ``i`` reads and ``reads`` maps each
     distinct source to ``(wheel, keys)`` — one kernel call per wheel with
@@ -216,7 +243,7 @@ def _lookup_plan(specs, wheels, keys_of=lambda key: (key,)):
     return sources, reads
 
 
-def _read_states(specs, wheels, read, keys_of=lambda key: (key,)):
+def _read_states(specs, wheels, read, keys_of=_own_key):
     """``read(wheel, keys)`` once per distinct wheel; returns each spec's
     answer, or a delegate reason — the reader's own (a string), or "range
     not covered" when it answers ``None``."""
@@ -227,6 +254,84 @@ def _read_states(specs, wheels, read, keys_of=lambda key: (key,)):
         if r is None or isinstance(r, str):
             return r or "range not covered"
     return [got[id(w)] for w in sources]
+
+
+def _specs(q) -> list[AggSpec]:
+    """The aggregates a query reads: the select list's, then HAVING's (read
+    per group from the same states; they need not be selected)."""
+    return [*q.aggs, *(spec for spec, _op, _lit in q.having)]
+
+
+def _resolved(q, specs, resolve):
+    """Each spec's wheel by ``resolve(spec)``, or the delegate reason naming
+    the first spec without one (past the select list: a HAVING one)."""
+    out = []
+    for spec in specs:
+        w = resolve(spec)
+        if w is None:
+            having = "HAVING " if len(out) >= len(q.aggs) else ""
+            return f"no index for {having}{spec.func}"
+        out.append(w)
+    return out
+
+
+def _missing_state(specs, wheels) -> str | None:
+    """The delegate reason for the first state a spec's wheel does not
+    carry, else ``None``."""
+    for spec, w in zip(specs, wheels):
+        key = _state_key(spec)
+        if key not in w.state_keys:
+            return f"state {key} not indexed"
+    return None
+
+
+def _span(q, rng, residual, wheels):
+    """The range mode every family shares: ``None`` for the landmark (no
+    temporal bound at all — answerable from complete wheels only), the
+    ``(start_sec, end_sec)`` of an exact aligned range, or a delegate
+    reason."""
+    if rng is None and len(residual) == len(q.conjuncts):
+        return None if all(w.complete for w in wheels) else "no complete index"
+    if rng is None or not rng.routable:
+        return "no exact aligned range"
+    return rng.start_sec, rng.end_sec
+
+
+def _scalar_reader(span):
+    """A scalar part's kernel call: the landmark, or one range."""
+    if span is None:
+        return lambda w, keys: w.landmark()
+    return lambda w, keys: w.combine_range(span[0], span[1], keys)
+
+
+def _values(specs, parts, at_start=False):
+    """Each spec's value over the union of disjoint parts — ``(wheels,
+    read)`` pairs. One part is read for the specs' own keys (the kernel
+    finalizes); several, or at-start states, are read for their raw
+    states, merged in list order and finalized. A state a wheel does not
+    carry delegates — at-start reads answer raw states only, so their
+    caller gates on :func:`_missing_state`. Returns the values or a
+    delegate reason."""
+    raw = at_start or len(parts) != 1
+    reads = []
+    for wheels, read in parts:
+        got = _read_states(specs, wheels, read, _combine_keys if raw else _own_key)
+        if isinstance(got, str):
+            return got
+        if not at_start:
+            for spec, st in zip(specs, got):
+                if _state_key(spec) not in st:
+                    return f"state {_state_key(spec)} not indexed"
+        if not raw:
+            return [st[_state_key(spec)] for spec, st in zip(specs, got)]
+        reads.append(got)
+    out = []
+    for i, spec in enumerate(specs):
+        st = States()
+        for got in reads:
+            st = st.merge(States.of(got[i]))
+        out.append(st.finalize(_state_key(spec)))
+    return out
 
 
 def _group_columns(specs, wheels, read):
@@ -257,22 +362,45 @@ def _group_columns(specs, wheels, read):
     return secs, cols
 
 
+def _grouped(specs, parts):
+    """Each spec's column over the union of disjoint parts of one grouping
+    — ``(wheels, read)`` pairs. One part is read for the specs' own keys;
+    several for their raw states, whose cells merge per bucket (parts in
+    list order) onto one ascending axis and finalize. Returns
+    ``(bucket_secs, columns)`` or a delegate reason; a missing state
+    delegates only when its part has occupied buckets."""
+    if len(parts) == 1:
+        return _group_columns(specs, *parts[0])
+    reads = []
+    for wheels, read in parts:
+        got = _read_states(specs, wheels, read, _combine_keys)
+        if isinstance(got, str):
+            return got
+        reads.append(got)
+    merged = []
+    for i, spec in enumerate(specs):
+        key = _state_key(spec)
+        cells: dict[int, States] = {}
+        for got in reads:
+            secs, cols = got[i]
+            if key not in cols:
+                if len(secs):
+                    return f"state {key} not indexed"
+                continue
+            names = list(cols)
+            for b, *vals in zip(secs.tolist(), *cols.values()):
+                st = States.of(dict(zip(names, vals)))
+                cells[b] = cells[b].merge(st) if b in cells else st
+        merged.append({b: st.finalize(key) for b, st in cells.items()})
+    buckets = sorted(set().union(*merged))
+    return (
+        np.asarray(buckets, dtype=np.int64),
+        [[m.get(b) for b in buckets] for m in merged],
+    )
+
+
 #: COUNT(*) — the occupancy probe of the keyed families.
 _COUNT_STAR = AggSpec("count", None, None)
-
-
-def _pick_values(specs, got):
-    """Each spec's value from its read states, or a delegate reason (the
-    read's own, or the first state a wheel does not carry)."""
-    if isinstance(got, str):
-        return got
-    values = []
-    for spec, states in zip(specs, got):
-        key = _state_key(spec)
-        if key not in states:
-            return f"state {key} not indexed"
-        values.append(states[key])
-    return values
 
 
 def _family_wheel(fam: dict, spec: AggSpec):
@@ -288,33 +416,42 @@ def _family_wheel(fam: dict, spec: AggSpec):
     return None
 
 
-def _merged_columns(specs, parts):
-    """Monoid-merge the cells of disjoint parts (listed IN keys, OR
-    intervals) onto one ascending bucket axis: ``parts`` holds one
-    :func:`_read_states` answer per part, read with :func:`_combine_keys`.
-    Returns ``(bucket_secs, columns)`` or a delegate reason; a missing
-    state delegates only when its part has occupied buckets."""
-    merged = []
-    for i, spec in enumerate(specs):
-        key = _state_key(spec)
-        cells: dict[int, list] = {}
-        for got in parts:
-            secs, cols = got[i]
-            if key not in cols:
-                if len(secs):
-                    return f"state {key} not indexed"
-                continue
-            names = list(cols)
-            for b, *vals in zip(secs.tolist(), *cols.values()):
-                cells.setdefault(b, []).append(dict(zip(names, vals)))
-        merged.append(
-            {b: _combine_interval_parts(key, ps) for b, ps in cells.items()}
-        )
-    buckets = sorted(set().union(*merged))
-    return (
-        np.asarray(buckets, dtype=np.int64),
-        [[m.get(b) for b in buckets] for m in merged],
-    )
+def _type_wheels(pset, values, aggs):
+    """Wheels typing each aggregate of a partitioned family — the first
+    listed value's that has one (every value of a column shares its SQL
+    type), any family's when none does — or a delegate reason."""
+    fams = [pset["wheels"][v] for v in values] + list(pset["wheels"].values())
+    out = []
+    for agg in aggs:
+        w = next((w for f in fams if (w := _family_wheel(f, agg)) is not None), None)
+        if w is None:
+            return f"no index for {agg.func}"
+        out.append(w)
+    return out
+
+
+def _answer(q, decision, rows, agg_wheels, key_type=None, ascending=()):
+    """Name and type the select list and apply ORDER BY / LIMIT — the
+    routed :class:`Answer`, what a delegated ``spark.sql`` would return.
+    ``agg_wheels`` align with ``q.aggs`` and type the aggregates,
+    ``key_type`` types the group key, bucket columns are TIMESTAMP."""
+    names = [it.output_name for it in q.select_order]
+    types = [
+        _agg_sql_type(it, agg_wheels[q.aggs.index(it)]) if isinstance(it, AggSpec)
+        else key_type if isinstance(it, ColRef) else "TIMESTAMP"
+        for it in q.select_order
+    ]
+    if q.order_by or q.limit is not None:
+        rows = _order_limit_rows(q, names, rows, ascending)
+    return decision, Answer(names, types, rows)
+
+
+def _scalar(q, decision, parts, agg_wheels, at_start=False):
+    """The tail of the scalar families: their parts' values, one row."""
+    values = _values(q.aggs, parts, at_start)
+    if isinstance(values, str):
+        return _delegate(values)
+    return _answer(q, decision, [tuple(values)], agg_wheels)
 
 
 def _having_keep(q, having_cols) -> list[int] | None:
@@ -405,160 +542,76 @@ def _gran_detail(gb, gran, hopping) -> str:
     return gran if isinstance(gran, str) else f"window:{gran}s"
 
 
-def _combine_interval_parts(key: str, parts: list[dict]):
-    """Monoid-sum per-interval states for the OR-of-ranges path (intervals
-    are disjoint after union-merge, so counts/sums add exactly)."""
-    if key == "count":
-        return sum(p["count"] for p in parts)
-    if key == "count_col":
-        return sum(p["count_col"] for p in parts)
-    vn = sum(p.get("count_col", p["count"]) for p in parts)
-    if key in ("min", "max"):
-        vals = [p[key] for p in parts if p[key] is not None]
-        return (min(vals) if key == "min" else max(vals)) if vals else None
-    if vn == 0:
-        return None
-    total_sum = sum(p["sum"] for p in parts if p["sum"] is not None)
-    if key == "sum":
-        return total_sum
-    if key == "avg":
-        return float(total_sum) / vn
-    total_sq = sum(p["_sumsq"] for p in parts)
-    return _variance_states(float(total_sum), float(total_sq), vn)[key]
+def _grouped_answer(q, decision, got, agg_wheels):
+    """The tail of the one-axis grouped families: HAVING over the columns,
+    then one row per bucket (ascending, so a bucket-led ORDER BY is met)."""
+    if isinstance(got, str):
+        return _delegate(got)
+    secs, cols = got
+    n = len(q.aggs)
+    secs, agg_cols = _filter_rows(_having_keep(q, cols[n:]), secs, cols[:n])
+    rows = _group_rows(q, q.group_by, secs, agg_cols)
+    return _answer(q, decision, rows, agg_wheels, ascending=_bucket_positions(q))
 
 
-#: Identity states standing in for a CORE a boundary sliver lands outside
-#: of (e.g. a `<=` instant opening a group cell the core range never
-#: touches). ``_sumsq`` is included — whether the wheel actually tracks it
-#: is gated upstream by the per-aggregate state check.
-_EMPTY_CORE: dict = {
-    "count": 0,
-    "count_col": 0,
-    "sum": None,
-    "_sumsq": 0.0,
-    "min": None,
-    "max": None,
-    "avg": None,
-}
+def _core_range(rng, bucket: int):
+    """The wheel core of a BETWEEN / ``<=`` / ``>`` range — bounds aligned
+    to the bucket, a strict lower bound's first bucket left to its sliver —
+    or a delegate reason."""
+    if rng.start_sec % bucket or rng.end_sec % bucket:
+        return "no exact aligned range"
+    start = rng.start_sec + (bucket if rng.lo_op == ">" else 0)
+    if start > rng.end_sec:
+        return "degenerate boundary range"
+    return start, rng.end_sec
 
 
-def _hybrid_agg_value(key: str, core: dict, up, low_bucket, low_at):
-    """One aggregate's value over ``core ∪ upper-sliver ∪ (first bucket −
-    its at-start instant)`` from monoid states — the shared math of the
-    scalar hybrid path and the grouped one (where ``core`` is a single
-    group CELL's states). Returns ``(ok, value)``; ``ok=False`` marks a
-    non-derivable combination (min/max over a mixed lower bucket, a
-    missing sum-of-squares state) — callers fall back to a pruned scan or
-    delegate."""
-    if up is None and low_bucket is None:
-        return True, core[key]
+def _slivers(w, rng, bucket: int, keys):
+    """One wheel's boundary slivers from its at-start states (rows at the
+    exact bucket-start instant): ``(up, low)``, or a reason when the states
+    cannot answer them.
 
-    def part_counts(states, at=False):
-        n = states["count"]
-        vn = states["vcnt"] if at else states.get("count_col", states["count"])
-        return n, vn
+    * ``up`` — ``ts <= b`` adds bucket b's at-start :class:`States`
+      (µs-discrete timestamps make ``<= b`` ≡ ``< b + 1µs``); ``None`` for
+      ``<``. That bucket sits one PAST the core, so ``covers()`` on the core
+      never vouches for it: a ``time_range`` build ending exactly at b has
+      no indexed rows there, and at_start would answer zero states and drop
+      the boundary rows. Trusted only on a wheel that indexes the whole
+      table or provably covers the sliver's bucket.
+    * ``low`` — ``ts > a`` is ``(bucket a, its at-start rows)``, folded by
+      :meth:`States.merge_sliver`; ``None`` for ``>=``."""
+    if not getattr(w, "tracks_at_start", False):
+        return "no at-start states"
+    up = low = None
+    if rng.hi_op == "<=":
+        if not (w.complete or w.covers(rng.end_sec, rng.end_sec + bucket)):
+            return "upper sliver not covered"
+        up = States.of(w.at_start(rng.end_sec))
+    if rng.lo_op == ">":
+        at = w.at_start(rng.start_sec)
+        whole = w.combine_range(rng.start_sec, rng.start_sec + bucket, keys)
+        if whole is None or at is None:
+            return "lower sliver not covered"
+        low = (States.of(whole), States.of(at))
+    return up, low
 
-    n = core["count"]
-    vn = core.get("count_col", core["count"])
+
+def _fold(st: States, up, low) -> States:
+    """``st`` with the upper sliver, then the lower one — float sums add
+    core, upper sliver, lower bucket, then subtract its at-start rows."""
     if up is not None:
-        n += up["count"]
-        vn += up["vcnt"]
-    if low_bucket is not None:
-        bn, bvn = part_counts(low_bucket)
-        n += bn - low_at["count"]
-        vn += bvn - low_at["vcnt"]
-    if key == "count":
-        return True, n
-    if key == "count_col":
-        return True, vn
-
-    if key in ("min", "max"):
-        parts = []
-        if core.get(key) is not None:
-            parts.append(core[key])
-        if up is not None and up.get(key) is not None:
-            parts.append(up[key])
-        if low_bucket is not None:
-            _, bvn = part_counts(low_bucket)
-            sliver_vn = bvn - low_at["vcnt"]
-            if sliver_vn > 0:
-                if low_at["vcnt"] == 0:
-                    # sliver holds ALL of the bucket's non-null values
-                    if low_bucket.get(key) is None:
-                        return False, None
-                    parts.append(low_bucket[key])
-                else:
-                    return False, None  # mixed bucket — not subtractable
-        pick = min if key == "min" else max
-        return True, (pick(parts) if parts else None)
-
-    # additive numeric states: sum / sumsq-derived / avg
-    def tot(state_key, at_key):
-        t = core.get(state_key)
-        t = 0 if t is None else t
-        if state_key == "_sumsq" and "_sumsq" not in core:
-            return None  # sumsq not tracked on this wheel
-        if up is not None:
-            uv = up.get(at_key)
-            if uv is None and at_key in ("sum", "sumsq") and at_key not in up:
-                return None
-            t += uv if uv is not None else 0
-        if low_bucket is not None:
-            bv = low_bucket.get(state_key)
-            t += 0 if bv is None else bv
-            av = low_at.get(at_key)
-            t -= 0 if av is None else av
-        return t
-
-    if key == "sum":
-        s = tot("sum", "sum")
-        return True, (None if vn == 0 or s is None else s)
-    if key == "avg":
-        s = tot("sum", "sum")
-        return True, (None if vn == 0 or s is None else float(s) / vn)
-    # variance family
-    s = tot("sum", "sum")
-    sq = tot("_sumsq", "sumsq")
-    if s is None or sq is None:
-        return False, None
-    if vn == 0:
-        return True, None
-    return True, _variance_states(float(s), float(sq), vn)[key]
+        st = st.merge(up)
+    return st if low is None else st.merge_sliver(*low)
 
 
-def _combine_core_boundary(agg: AggSpec, core: dict, brow: dict):
-    """Exact monoid combine of the wheel's core-range states with the
-    boundary scan's single aggregate row (states named by
-    ``state_agg_exprs``): counts/sums add, min/max combine, AVG and the
-    variance family re-derive from the combined (sum, sumsq, non-null count)."""
-    c = agg.arg
-    key = _state_key(agg)
-    bcnt = int(brow["__cnt"] or 0)
-    n = core["count"] + bcnt
-    if key == "count":
-        return n
-    bvn = int(brow.get(f"__vcnt_{c}") or 0)
-    vn = core.get("count_col", core["count"]) + bvn
-    if key == "count_col":
-        return vn
-    bsum = brow.get(f"__sum_{c}")
-    csum = core.get("sum")
-    total_sum = None if (csum is None and bsum is None) else (csum or 0) + (bsum or 0)
-    if key == "sum":
-        return total_sum
-    if key == "avg":
-        return float(total_sum) / vn if vn else None
-    if key == "min":
-        vals = [v for v in (core.get("min"), brow.get(f"__min_{c}")) if v is not None]
-        return min(vals) if vals else None
-    if key == "max":
-        vals = [v for v in (core.get("max"), brow.get(f"__max_{c}")) if v is not None]
-        return max(vals) if vals else None
-    if vn == 0:
-        return None
-    total_sq = (core.get("_sumsq") or 0.0) + float(brow.get(f"__sumsq_{c}") or 0.0)
-    return _variance_states(float(total_sum), total_sq, vn)[key]
-
+def _scan_states(brow: dict, col) -> States:
+    """One column's :class:`States` from the boundary scan's aggregate row
+    (the ``state_agg_exprs`` names)."""
+    return States(
+        int(brow["__cnt"] or 0), int(brow.get(f"__vcnt_{col}") or 0),
+        brow.get(f"__sum_{col}"), float(brow.get(f"__sumsq_{col}") or 0.0),
+        brow.get(f"__min_{col}"), brow.get(f"__max_{col}"),
+    )
 
 
 #: SQL type → UwheelLocalRelation blob code (jvm/UwheelShim.scala).
@@ -714,7 +767,7 @@ class Router:
         delegate; the caller materializes it (no DataFrame is built here)."""
         e = self.engine
         if q.table.lower() != e.name.lower():
-            return RouteDecision("delegate", detail={"reason": "unknown table"}), None
+            return _delegate("unknown table")
         # a ctor-deferred base wheel materializes at the first route (r14;
         # no-op on engines that already built or seeded it)
         e._ensure_base()
@@ -745,13 +798,7 @@ class Router:
                     if isinstance(it, WindowSpec) and it.field in ("start", "end")
                 }
                 if not (fields & order_cols):
-                    return (
-                        RouteDecision(
-                            "delegate",
-                            detail={"reason": "nondeterministic LIMIT"},
-                        ),
-                        None,
-                    )
+                    return _delegate("nondeterministic LIMIT")
             elif q.group_by is not None:
                 unique.add(q.group_by.output_name)
             if q.group_key is not None:
@@ -766,17 +813,9 @@ class Router:
                     )
                 )
             if not unique <= order_cols:
-                return (
-                    RouteDecision(
-                        "delegate", detail={"reason": "nondeterministic LIMIT"}
-                    ),
-                    None,
-                )
+                return _delegate("nondeterministic LIMIT")
         if q.having and q.group_by is None and q.group_key is None:
-            return (
-                RouteDecision("delegate", detail={"reason": "HAVING without GROUP BY"}),
-                None,
-            )
+            return _delegate("HAVING without GROUP BY")
 
         if q.or_branches:
             return self._try_or_ranges(q)
@@ -794,99 +833,54 @@ class Router:
         if any(a.func == "count_distinct" for a in q.aggs):
             if len(q.aggs) == 1 and q.group_by is None:
                 return self._try_count_distinct(q, rng, residual)
-            return (
-                RouteDecision(
-                    "delegate",
-                    detail={"reason": "COUNT(DISTINCT) mixed with other shapes"},
-                ),
-                None,
-            )
+            return _delegate("COUNT(DISTINCT) mixed with other shapes")
 
         if any(a.func in APPROX_AGG_FUNCS for a in q.aggs):
             return self._try_approx(q, rng, residual)
 
         if not q.aggs:
-            return RouteDecision("delegate", detail={"reason": "no aggregates"}), None
+            return _delegate("no aggregates")
 
         if q.group_by is not None:
             return self._try_group_by(q, rng, residual)
 
-        if not q.conjuncts:
-            return self._try_landmark(q, STAR_AGGREGATION_ALIAS)
-
-        if rng is None or not rng.routable:
+        if rng is not None and not rng.routable:
             # BETWEEN / `<=` / `>` boundaries: wheel for the full buckets +
-            # a pruned boundary scan for the edge slivers (exact, unlike the
-            # reference's `>`→`>=` slop, expr.rs:219-222).
-            if rng is not None and rng.hybrid_routable:
+            # the boundary slivers (exact, unlike the reference's `>`→`>=`
+            # slop, expr.rs:219-222).
+            if rng.hybrid_routable:
                 return self._try_hybrid(q, rng, residual)
-            # Point query `ts = <bucket-aligned literal>`: exactly the
-            # at-start sliver of one bucket (µs-discrete timestamps) —
-            # answered from the sliver states, zero jobs.
-            if rng is None:
-                eqs = [c for c in q.conjuncts if c.column == e.time_column]
-                if len(eqs) == 1 and eqs[0].op == "=":
-                    ts = _ts_value(eqs[0])
-                    if (
-                        ts is not None
-                        and ts.epoch_us % MICROS_PER_SECOND == 0
-                        and (ts.epoch_us // MICROS_PER_SECOND) % e.bucket_seconds == 0
-                    ):
-                        return self._try_instant(
-                            q, ts.epoch_us // MICROS_PER_SECOND, residual
-                        )
-            # Keyed landmark (beyond the reference, which requires no filter
-            # at all, lib.rs:279-281): a purely-keyed predicate matching a
-            # *complete* keyed wheel is answerable over the whole span.
-            if rng is None and residual and len(residual) == len(q.conjuncts):
-                hit = self._partition_in_match(residual)
-                if hit is not None and canonical_filter_key(residual) not in e.count_wheels:
-                    return self._try_in_aggregate(q, None, *hit)
-                fk = canonical_filter_key(residual)
-                return self._try_landmark(q, fk)
-            return (
-                RouteDecision("delegate", detail={"reason": "no exact aligned range"}),
-                None,
-            )
+            return _delegate("no exact aligned range")
+        sec = None if rng is not None else self._instant(q)
+        if sec is not None:
+            return self._try_instant(q, sec, residual)
+        # `key IN (...)` over a partitioned family: one part per listed key
+        hit = self._in_family(residual)
+        if hit is not None:
+            return self._try_in_aggregate(q, rng, residual, *hit)
 
-        # `key IN (...)` over a partitioned family: monoid-sum the per-value
-        # answers — unless an explicitly-built wheel matches the exact
-        # canonical IN filter, which is one lookup instead of N.
-        hit = self._partition_in_match(residual)
-        if hit is not None and canonical_filter_key(residual) not in e.count_wheels:
-            return self._try_in_aggregate(q, rng, *hit)
-
+        # One range (R1-R3) or the landmark (R5) — keyed too, beyond the
+        # reference, which requires no filter at all (lib.rs:279-281): a
+        # purely-keyed predicate matching a *complete* keyed wheel is
+        # answerable over the whole span. Outside the indexed range the
+        # read falls through (lib.rs:1498-1518).
         fk = canonical_filter_key(residual) if residual else STAR_AGGREGATION_ALIAS
-
-        wheels: list[WheelIndex] = []
-        for agg in q.aggs:
-            w = self._resolve_wheel(agg, fk)
-            if w is None:
-                return (
-                    RouteDecision("delegate", detail={"reason": f"no index for {agg.func}", "fk": fk}),
-                    None,
-                )
-            wheels.append(w)
-
-        # outside indexed range → fall through (lib.rs:1498-1518); a state
-        # not built on a wheel (per-agg subset) delegates too
-        values = _pick_values(
-            q.aggs,
-            _read_states(
-                q.aggs, wheels,
-                lambda w, keys: w.combine_range(rng.start_sec, rng.end_sec, keys),
-            ),
+        wheels = self._wheels(q, q.aggs, fk)
+        if isinstance(wheels, str):
+            return _delegate(wheels, fk=fk)
+        span = _span(q, rng, residual, wheels)
+        if isinstance(span, str):
+            return _delegate(span, fk=fk)
+        if span is None:
+            kind = "landmark"
+        elif len(q.aggs) == 1 and q.aggs[0].func == "count" and q.aggs[0].arg is None:
+            kind = "count_range"
+        else:
+            kind = "single_agg" if len(q.aggs) == 1 else "multi_agg"
+        return _scalar(
+            q, RouteDecision(kind, index_key=wheels[0].key, detail={"fk": fk}),
+            [(wheels, _scalar_reader(span))], wheels,
         )
-        if isinstance(values, str):
-            return RouteDecision("delegate", detail={"reason": values}), None
-
-        kind = (
-            "count_range"
-            if len(q.aggs) == 1 and q.aggs[0].func == "count" and q.aggs[0].arg is None
-            else ("single_agg" if len(q.aggs) == 1 else "multi_agg")
-        )
-        ans = self._scalar_result(q.aggs, values, wheels, q)
-        return RouteDecision(kind, index_key=wheels[0].key, detail={"fk": fk}), ans
 
     # ------------------------------------------------------------- helpers
     def _resolve_wheel(self, agg: AggSpec, filter_key: str) -> WheelIndex | None:
@@ -912,19 +906,42 @@ class Router:
                     return cand
         return w
 
-    def _scalar_result(
-        self,
-        aggs: list[AggSpec],
-        values: list[Any],
-        wheels: list[WheelIndex],
-        q=None,
-    ) -> Answer:
-        names = [a.output_name for a in aggs]
-        types = [_agg_sql_type(a, w) for a, w in zip(aggs, wheels)]
-        rows = [tuple(values)]
-        if q is not None and (q.order_by or q.limit is not None):
-            rows = _order_limit_rows(q, names, rows)
-        return Answer(names, types, rows)
+    def _wheels(self, q, specs, fk: str):
+        """Each spec's wheel under filter key ``fk``, or a delegate reason."""
+        return _resolved(q, specs, lambda s: self._resolve_wheel(s, fk))
+
+    def _in_family(self, residual):
+        """A ``key IN (...)`` residual over a partitioned family:
+        ``(pset, values)`` — unless an explicitly built wheel matches the
+        exact canonical IN filter, which is one lookup instead of N."""
+        hit = self._partition_in_match(residual)
+        if hit is None or canonical_filter_key(residual) in self.engine.count_wheels:
+            return None
+        return hit
+
+    def _key_values(self, pset, column: str, residual):
+        """The partition values a keyed family answers for: all of them, or
+        those a ``column IN (...)`` residual lists (NULL never matches) —
+        ``None`` for any other residual."""
+        if not residual:
+            return list(pset["wheels"])
+        hit = self._partition_in_match(residual)
+        if hit is None or hit[0] is not pset or residual[0].column.lower() != column.lower():
+            return None
+        return hit[1]
+
+    def _instant(self, q) -> int | None:
+        """The second of a lone ``ts = <literal>`` whose literal is a
+        bucket-start instant, else ``None``."""
+        e = self.engine
+        eqs = [c for c in q.conjuncts if c.column == e.time_column]
+        if len(eqs) != 1 or eqs[0].op != "=":
+            return None
+        ts = _ts_value(eqs[0])
+        if ts is None or ts.epoch_us % MICROS_PER_SECOND:
+            return None
+        sec = ts.epoch_us // MICROS_PER_SECOND
+        return None if sec % e.bucket_seconds else sec
 
     # ------------------------------------------------------------ group by
     def _try_group_by(self, q, rng, residual):
@@ -939,93 +956,38 @@ class Router:
         # overlapping windows via WheelIndex.hop_group_by.
         gate = _group_gate(gb, e.time_column)
         if gate is None:
-            return (
-                RouteDecision("delegate", detail={"reason": "unsupported group expr"}),
-                None,
-            )
+            return _delegate("unsupported group expr")
         gran, hopping = gate
-        if residual:
-            hit = self._partition_in_match(residual)
-            if hit is not None and canonical_filter_key(residual) not in e.count_wheels:
-                return self._try_in_group_by(q, rng, *hit)
+        detail = {"granularity": _gran_detail(gb, gran, hopping)}
+        hit = self._in_family(residual)
+        if hit is not None:
+            return self._try_in_group_by(q, rng, residual, gran, detail, *hit)
         fk = canonical_filter_key(residual) if residual else STAR_AGGREGATION_ALIAS
-
-        wheels: list[WheelIndex] = []
-        for agg in q.aggs:
-            w = self._resolve_wheel(agg, fk)
-            if w is None:
-                return RouteDecision("delegate", detail={"reason": f"no index for {agg.func}", "fk": fk}), None
-            wheels.append(w)
-
+        detail["fk"] = fk
+        # HAVING aggregates read per bucket from wheel states too
+        specs = _specs(q)
+        wheels = self._wheels(q, specs, fk)
+        if isinstance(wheels, str):
+            return _delegate(wheels, fk=fk)
+        if rng is not None and not rng.routable and rng.hybrid_routable and not hopping:
+            # BETWEEN / `<=` / `>` bounds on a GROUP BY: core cells from the
+            # wheel's group-by + boundary slivers folded into the cells that
+            # contain them — beyond both the reference, which approximates
+            # the ops and has no such group surface, and the scalar-only r4
+            # hybrid here.
+            return self._try_group_by_hybrid(q, gran, rng, specs, wheels, detail)
         # Landmark group-by (beyond the reference, which requires a temporal
         # Filter input, lib.rs:269-272,333-358): no temporal bounds at all —
         # a *complete* wheel covers the whole timeline, so group over its
         # full occupied span. Keyed-only predicates use the keyed wheel.
-        kind = "group_by"
-        if rng is None and len(residual) == len(q.conjuncts):
-            if not all(w.complete for w in wheels):
-                return (
-                    RouteDecision("delegate", detail={"reason": "no complete index", "fk": fk}),
-                    None,
-                )
-            start_sec, end_sec = _landmark_span(wheels)
-            kind = "group_by_landmark"
-        elif rng is None or not rng.routable:
-            # BETWEEN / `<=` / `>` bounds on a GROUP BY: core cells from the
-            # wheel's group-by + boundary slivers folded into the cells that
-            # contain them (the scalar hybrid's exact monoid algebra applied
-            # per cell — beyond both the reference, which approximates the
-            # ops and has no such group surface, and the scalar-only r4
-            # hybrid here).
-            if rng is not None and rng.hybrid_routable and not hopping:
-                return self._try_group_by_hybrid(
-                    q, gb, gran, rng, residual, wheels, fk
-                )
-            return RouteDecision("delegate", detail={"reason": "no exact aligned range"}), None
-        else:
-            start_sec, end_sec = rng.start_sec, rng.end_sec
-
-        # HAVING aggregates read per bucket from wheel states too — they
-        # need not be in the select list
-        hwheels = []
-        for spec, _op, _lit in q.having:
-            hw = self._resolve_wheel(spec, fk)
-            if hw is None:
-                return (
-                    RouteDecision(
-                        "delegate", detail={"reason": f"no index for HAVING {spec.func}"}
-                    ),
-                    None,
-                )
-            hwheels.append(hw)
-        specs = [*q.aggs, *(spec for spec, _op, _lit in q.having)]
-        got = _group_columns(
-            specs, wheels + hwheels, _cell_reader(gb, gran, start_sec, end_sec)
-        )
-        if isinstance(got, str):
-            return RouteDecision("delegate", detail={"reason": got}), None
-        secs, cols = got
-        n = len(q.aggs)
-        secs, agg_cols = _filter_rows(_having_keep(q, cols[n:]), secs, cols[:n])
-        rows = _group_rows(q, gb, secs, agg_cols)
-
-        names, types = [], []
-        for item in q.select_order:
-            names.append(item.output_name)
-            if isinstance(item, AggSpec):
-                types.append(_agg_sql_type(item, wheels[q.aggs.index(item)]))
-            else:
-                types.append("TIMESTAMP")
-        if q.order_by or q.limit is not None:
-            rows = _order_limit_rows(q, names, rows, _bucket_positions(q))
-        ans = Answer(names, types, rows)
-        return (
-            RouteDecision(
-                kind,
-                index_key=wheels[0].key,
-                detail={"granularity": _gran_detail(gb, gran, hopping), "fk": fk},
-            ),
-            ans,
+        span = _span(q, rng, residual, wheels)
+        if isinstance(span, str):
+            return _delegate(span, fk=fk)
+        read = _cell_reader(gb, gran, *(_landmark_span(wheels) if span is None else span))
+        kind = "group_by_landmark" if span is None else "group_by"
+        return _grouped_answer(
+            q, RouteDecision(kind, index_key=wheels[0].key, detail=detail),
+            _group_columns(specs, wheels, read), wheels,
         )
 
     def _try_approx(self, q, rng, residual):
@@ -1053,29 +1015,11 @@ class Router:
         the wheels' second-aligned grid would not."""
         e = self.engine
         if not getattr(e, "approx_routing", False):
-            return (
-                RouteDecision(
-                    "delegate",
-                    detail={"reason": "approx routing is opt-in (engine.approx_routing)"},
-                ),
-                None,
-            )
+            return _delegate("approx routing is opt-in (engine.approx_routing)")
         if len(q.aggs) != 1 or q.group_by is not None or q.group_key is not None:
-            return (
-                RouteDecision(
-                    "delegate",
-                    detail={"reason": "approx agg mixed with other shapes"},
-                ),
-                None,
-            )
+            return _delegate("approx agg mixed with other shapes")
         if residual or not q.conjuncts or rng is None or not rng.routable:
-            return (
-                RouteDecision(
-                    "delegate",
-                    detail={"reason": "approx route needs a pure aligned time range"},
-                ),
-                None,
-            )
+            return _delegate("approx route needs a pure aligned time range")
         agg = q.aggs[0]
         rollups = (
             e.distinct_rollups
@@ -1090,39 +1034,21 @@ class Router:
                     rollup = cand
                     break
         if rollup is None or rollup.stale or rollup.key_column is not None:
-            return (
-                RouteDecision(
-                    "delegate",
-                    detail={"reason": f"no fresh unkeyed rollup for {agg.arg!r}"},
-                ),
-                None,
-            )
+            return _delegate(f"no fresh unkeyed rollup for {agg.arg!r}")
         a, b = rng.start_sec, rng.end_sec
         width = max(
             (tw for tend, tw in rollup.tiers if tend > a),
             default=rollup.bucket_seconds,
         )
         if a % width or b % width:
-            return (
-                RouteDecision(
-                    "delegate",
-                    detail={"reason": f"bounds not aligned to {width}s rollup buckets"},
-                ),
-                None,
-            )
+            return _delegate(f"bounds not aligned to {width}s rollup buckets")
         if agg.func == "approx_count_distinct":
             value: Any = int(rollup.approx_distinct(a, b))
             sql_type = "BIGINT"
         else:
             p = float(agg.param)
             if not 0.0 <= p <= 1.0:
-                return (
-                    RouteDecision(
-                        "delegate",
-                        detail={"reason": "percentage outside [0, 1]"},
-                    ),
-                    None,
-                )
+                return _delegate("percentage outside [0, 1]")
             # the delegate returns the INPUT column's type (probed 4.1:
             # percentile_approx(int_col, p) is INT) — match it exactly, and
             # DELEGATE any type outside the map (r11 review: a DECIMAL
@@ -1135,30 +1061,18 @@ class Router:
                 "bigint": "BIGINT", "float": "FLOAT", "double": "DOUBLE",
             }.get(dtypes.get(agg.arg.lower()))
             if sql_type is None:
-                return (
-                    RouteDecision(
-                        "delegate",
-                        detail={
-                            "reason": f"percentile input type of {agg.arg!r} "
-                            "has no routed equivalent"
-                        },
-                    ),
-                    None,
+                return _delegate(
+                    f"percentile input type of {agg.arg!r} has no routed equivalent"
                 )
             value = rollup.approx_quantile(p, a, b)
         names = [agg.output_name]
         rows = [(value,)]
         if q.order_by or q.limit is not None:
             rows = _order_limit_rows(q, names, rows)
-        ans = Answer(names, [sql_type], rows)
-        return (
-            RouteDecision(
-                "approx_agg",
-                index_key=f"{e.name}.{agg.arg}.{agg.func}",
-                detail={"width": width},
-            ),
-            ans,
+        decision = RouteDecision(
+            "approx_agg", index_key=f"{e.name}.{agg.arg}.{agg.func}", detail={"width": width}
         )
+        return decision, Answer(names, [sql_type], rows)
 
     def _try_count_distinct(self, q, rng, residual):
         """Exact ``COUNT(DISTINCT key)`` from a key-complete partitioned
@@ -1171,288 +1085,118 @@ class Router:
         agg = q.aggs[0]
         pset = e.partition_sets.get((agg.arg or "").lower())
         if pset is None or not pset["wheels"]:
-            return (
-                RouteDecision(
-                    "delegate",
-                    detail={"reason": f"no partitioned index on {agg.arg!r}"},
-                ),
-                None,
-            )
-        sel_values = None
-        if residual:
-            hit = self._partition_in_match(residual)
-            if (
-                hit is None
-                or hit[0] is not pset
-                or residual[0].column.lower() != (agg.arg or "").lower()
-            ):
-                return (
-                    RouteDecision(
-                        "delegate", detail={"reason": "residual with COUNT(DISTINCT)"}
-                    ),
-                    None,
-                )
-            sel_values = hit[1]
-        values = sel_values if sel_values is not None else list(pset["wheels"])
-        values = [v for v in values if v is not None]  # SQL ignores NULL keys
-
-        landmark = rng is None and len(residual) == len(q.conjuncts)
-        if landmark:
-            if not all(pset["wheels"][v][None].complete for v in values):
-                return (
-                    RouteDecision("delegate", detail={"reason": "no complete index"}),
-                    None,
-                )
-        elif rng is None or not rng.routable:
-            return (
-                RouteDecision("delegate", detail={"reason": "no exact aligned range"}),
-                None,
-            )
-
+            return _delegate(f"no partitioned index on {agg.arg!r}")
+        values = self._key_values(pset, agg.arg or "", residual)
+        if values is None:
+            return _delegate("residual with COUNT(DISTINCT)")
+        # SQL ignores NULL keys
+        cws = [pset["wheels"][v][None] for v in values if v is not None]
+        span = _span(q, rng, residual, cws)
+        if isinstance(span, str):
+            return _delegate(span)
+        read = _scalar_reader(span)
         n = 0
-        for v in values:
-            cw = pset["wheels"][v][None]
-            st = (
-                cw.landmark()
-                if landmark
-                else cw.combine_range(rng.start_sec, rng.end_sec, ("count",))
-            )
+        for cw in cws:
+            st = read(cw, ("count",))
             if st is None:
-                return (
-                    RouteDecision("delegate", detail={"reason": "range not covered"}),
-                    None,
-                )
-            if st["count"] > 0:
-                n += 1
+                return _delegate("range not covered")
+            n += st["count"] > 0
         any_cw = next(iter(pset["wheels"].values()))[None]
-        ans = self._scalar_result([agg], [n], [any_cw], q)
-        return (
-            RouteDecision(
-                "count_distinct",
-                index_key=f"{e.name}.{agg.arg}",
-                detail={"partition_by": pset["key_column"], "keys": len(values)},
-            ),
-            ans,
+        decision = RouteDecision(
+            "count_distinct",
+            index_key=f"{e.name}.{agg.arg}",
+            detail={"partition_by": pset["key_column"], "keys": len(cws)},
         )
+        return _answer(q, decision, [(n,)], [any_cw])
 
     def _try_key_group_by(self, q, rng, residual):
         """Keys-only ``GROUP BY key`` from a partitioned wheel family: one
         row per key value with count > 0 (SQL emits no empty groups; the
-        zero-aggregate form is the DISTINCT-keys query). Temporal WHERE
-        bounds restrict via per-value ``combine_range``; no bounds is the
-        categorical landmark (complete family required); a ``key IN (...)``
-        residual on the same column restricts the emitted groups."""
+        zero-aggregate form is the DISTINCT-keys query) — one scalar part
+        per key, concatenated. Temporal WHERE bounds restrict each key's
+        read; no bounds is the categorical landmark (complete family
+        required); a ``key IN (...)`` residual on the same column restricts
+        the emitted groups."""
         e = self.engine
         pset = e.partition_sets.get(q.group_key.lower())
         if pset is None or not pset["wheels"]:
-            return (
-                RouteDecision(
-                    "delegate",
-                    detail={"reason": f"no partitioned index on {q.group_key!r}"},
-                ),
-                None,
-            )
-        sel_values = None
-        if residual:
-            hit = self._partition_in_match(residual)
-            if (
-                hit is None
-                or hit[0] is not pset
-                or residual[0].column.lower() != q.group_key.lower()
-            ):
-                return (
-                    RouteDecision(
-                        "delegate", detail={"reason": "residual filter with key group-by"}
-                    ),
-                    None,
-                )
-            sel_values = hit[1]
-        values = sel_values if sel_values is not None else list(pset["wheels"])
-
-        temporal_left = len(residual) != len(q.conjuncts)
-        kind = "group_by"
-        if rng is None and not temporal_left:
-            if not all(pset["wheels"][v][None].complete for v in values):
-                return (
-                    RouteDecision("delegate", detail={"reason": "no complete index"}),
-                    None,
-                )
-            kind = "group_by_landmark"
-        elif rng is None or not rng.routable:
-            return (
-                RouteDecision("delegate", detail={"reason": "no exact aligned range"}),
-                None,
-            )
-
-        def states_of(w, keys):
-            if kind == "group_by_landmark":
-                return w.landmark()
-            return w.combine_range(rng.start_sec, rng.end_sec, keys)
-
-        hspecs = [spec for spec, _op, _lit in q.having]
-        specs = [_COUNT_STAR, *q.aggs, *hspecs]
+            return _delegate(f"no partitioned index on {q.group_key!r}")
+        values = self._key_values(pset, q.group_key, residual)
+        if values is None:
+            return _delegate("residual filter with key group-by")
+        fams = [pset["wheels"][v] for v in values]
+        span = _span(q, rng, residual, [f[None] for f in fams])
+        if isinstance(span, str):
+            return _delegate(span)
+        read = _scalar_reader(span)
+        specs = [*_specs(q), _COUNT_STAR]
         n = len(q.aggs)
         rows = []
-        type_wheels: dict[int, WheelIndex] = {}
-        for v in values:
-            wheels = [_family_wheel(pset["wheels"][v], spec) for spec in specs]
+        for v, fam in zip(values, fams):
+            wheels = [_family_wheel(fam, spec) for spec in specs]
             if None in wheels:
                 # a key without rows in range emits no group, whatever
                 # wheel it lacks
-                cstates = states_of(wheels[0], ("count",))
-                if cstates is None:
-                    return (
-                        RouteDecision("delegate", detail={"reason": "range not covered"}),
-                        None,
-                    )
-                if cstates["count"] == 0:
+                st = read(fam[None], ("count",))
+                if st is None:
+                    return _delegate("range not covered")
+                if st["count"] == 0:
                     continue
-                i = wheels.index(None)
-                what = "" if i <= n else "HAVING "
-                return (
-                    RouteDecision(
-                        "delegate",
-                        detail={"reason": f"no index for {what}{specs[i].func}"},
-                    ),
-                    None,
-                )
-            got = _read_states(specs, wheels, states_of)
-            if isinstance(got, str):
-                return RouteDecision("delegate", detail={"reason": got}), None
-            if got[0]["count"] == 0:
-                continue  # no rows for this key in range → no group
-            vals = _pick_values(specs[1:], got[1:])
+                return _delegate(_resolved(q, specs, lambda s: _family_wheel(fam, s)))
+            vals = _values(specs, [(wheels, read)])
             if isinstance(vals, str):
-                return RouteDecision("delegate", detail={"reason": vals}), None
-            type_wheels.update(enumerate(wheels[1 : n + 1]))
+                return _delegate(vals)
+            if vals[-1] == 0:
+                continue  # no rows for this key in range → no group
             if not all(
                 _having_holds(val, op, lit)
                 for val, (_spec, op, lit) in zip(vals[n:], q.having)
             ):
                 continue
-            row = []
-            for item in q.select_order:
-                if isinstance(item, AggSpec):
-                    row.append(vals[q.aggs.index(item)])
-                else:  # ColRef — the key itself
-                    row.append(v)
-            rows.append(tuple(row))
-
-        names, types = [], []
-        for item in q.select_order:
-            names.append(item.output_name)
-            if isinstance(item, AggSpec):
-                i = q.aggs.index(item)
-                tw = type_wheels.get(i)
-                if tw is None:  # zero emitted groups — type from any family
-                    tw = _family_wheel(next(iter(pset["wheels"].values())), item)
-                if tw is None:
-                    return (
-                        RouteDecision(
-                            "delegate", detail={"reason": f"no index for {item.func}"}
-                        ),
-                        None,
-                    )
-                types.append(_agg_sql_type(item, tw))
-            else:
-                types.append(pset["key_sql_type"])
-        if q.order_by or q.limit is not None:
-            rows = _order_limit_rows(q, names, rows)
-        ans = Answer(names, types, rows)
-        return (
-            RouteDecision(
-                kind,
-                index_key=f"{e.name}.{q.group_key}",
-                detail={"partition_by": q.group_key, "keys": len(values)},
-            ),
-            ans,
+            rows.append(tuple(
+                vals[q.aggs.index(it)] if isinstance(it, AggSpec) else v
+                for it in q.select_order
+            ))
+        types = _type_wheels(pset, values, q.aggs)
+        if isinstance(types, str):
+            return _delegate(types)
+        decision = RouteDecision(
+            "group_by_landmark" if span is None else "group_by",
+            index_key=f"{e.name}.{q.group_key}",
+            detail={"partition_by": q.group_key, "keys": len(values)},
         )
+        return _answer(q, decision, rows, types, pset["key_sql_type"])
 
-    def _try_in_group_by(self, q, rng, pset, values):
-        """Temporal GROUP BY with a ``key IN (...)`` residual: per-value
-        bucket states merged across the (disjoint) listed keys — per bucket
-        the same monoid combine as OR-of-ranges. Supports tumbling/hopping
-        windows, HAVING, and the landmark (IN-only) form."""
-        e = self.engine
-        gb = q.group_by
-        gran = gb.width_sec if isinstance(gb, WindowSpec) else gb.granularity
-        hopping = isinstance(gb, WindowSpec) and gb.hopping
-
-        kind = "group_by"
-        if rng is None and len(q.conjuncts) == 1:  # IN residual only
-            allw = [pset["wheels"][v][None] for v in values]
-            if not all(w.complete for w in allw):
-                return (
-                    RouteDecision("delegate", detail={"reason": "no complete index"}),
-                    None,
-                )
-            start_sec, end_sec = _landmark_span(allw)
-            kind = "group_by_landmark"
-        elif rng is None or not rng.routable:
-            return (
-                RouteDecision("delegate", detail={"reason": "no exact aligned range"}),
-                None,
-            )
-        else:
-            start_sec, end_sec = rng.start_sec, rng.end_sec
-
-        read = _cell_reader(gb, gran, start_sec, end_sec)
-        specs = [*q.aggs, *(spec for spec, _op, _lit in q.having)]
+    def _try_in_group_by(self, q, rng, residual, gran, detail, pset, values):
+        """Temporal GROUP BY with a ``key IN (...)`` residual: one part per
+        listed key, their bucket cells merged across the (disjoint) keys.
+        Supports tumbling/hopping windows, HAVING, and the landmark
+        (IN-only) form."""
+        fams = [pset["wheels"][v] for v in values]
+        allw = [f[None] for f in fams]
+        span = _span(q, rng, residual, allw)
+        if isinstance(span, str):
+            return _delegate(span)
+        read = _cell_reader(
+            q.group_by, gran, *(_landmark_span(allw) if span is None else span)
+        )
+        specs = _specs(q)
         parts = []
-        for v in values:
-            wheels = [_family_wheel(pset["wheels"][v], spec) for spec in specs]
-            if None in wheels:
-                spec = specs[wheels.index(None)]
-                return (
-                    RouteDecision("delegate", detail={"reason": f"no index for {spec.func}"}),
-                    None,
-                )
-            got = _read_states(specs, wheels, read, _combine_keys)
-            if isinstance(got, str):
-                return RouteDecision("delegate", detail={"reason": got}), None
-            parts.append(got)
-        got = _merged_columns(specs, parts)
-        if isinstance(got, str):
-            return RouteDecision("delegate", detail={"reason": got}), None
-        secs, cols = got
-        n = len(q.aggs)
-        secs, agg_cols = _filter_rows(_having_keep(q, cols[n:]), secs, cols[:n])
-        rows = _group_rows(q, gb, secs, agg_cols)
-        names, types = [], []
-        any_key = next(iter(pset["wheels"]))
-        for item in q.select_order:
-            names.append(item.output_name)
-            if isinstance(item, AggSpec):
-                tw = None
-                for v in [*values, any_key]:
-                    tw = _family_wheel(pset["wheels"][v], item)
-                    if tw is not None:
-                        break
-                if tw is None:
-                    return (
-                        RouteDecision(
-                            "delegate", detail={"reason": f"no index for {item.func}"}
-                        ),
-                        None,
-                    )
-                types.append(_agg_sql_type(item, tw))
-            else:
-                types.append("TIMESTAMP")
-        if q.order_by or q.limit is not None:
-            rows = _order_limit_rows(q, names, rows, _bucket_positions(q))
-        ans = Answer(names, types, rows)
-        return (
-            RouteDecision(
-                kind,
-                index_key=f"{e.name}.{pset['key_column']}",
-                detail={
-                    "in_keys": len(values),
-                    "partition_by": pset["key_column"],
-                    "granularity": _gran_detail(gb, gran, hopping),
-                },
-            ),
-            ans,
+        for fam in fams:
+            wheels = _resolved(q, specs, lambda s: _family_wheel(fam, s))
+            if isinstance(wheels, str):
+                return _delegate(wheels)
+            parts.append((wheels, read))
+        types = _type_wheels(pset, values, q.aggs)
+        if isinstance(types, str):
+            return _delegate(types)
+        key = pset["key_column"]
+        decision = RouteDecision(
+            "group_by_landmark" if span is None else "group_by",
+            index_key=f"{self.engine.name}.{key}",
+            detail={"in_keys": len(values), "partition_by": key, **detail},
         )
+        return _grouped_answer(q, decision, _grouped(specs, parts), types)
 
     def _partition_in_match(self, residual):
         """Match a residual of exactly ``key IN (...)`` against a partitioned
@@ -1480,258 +1224,122 @@ class Router:
                 matched.append(lookup[norm])
         return pset, matched
 
-    def _try_in_aggregate(self, q, rng, pset, values):
-        """Scalar aggregates with a ``key IN (...)`` residual: per-value
-        wheel states monoid-summed across the (disjoint) key partitions —
-        the same combine as OR-of-ranges, applied across keys instead of
-        intervals. ``rng=None`` means the keyed-IN landmark (no temporal
-        bounds; every listed wheel must be complete)."""
-        if rng is None:
-            for v in values:
-                if not pset["wheels"][v][None].complete:
-                    return (
-                        RouteDecision("delegate", detail={"reason": "no complete index"}),
-                        None,
-                    )
-            read = lambda w, keys: w.landmark()  # noqa: E731
-        elif not rng.routable:
-            return (
-                RouteDecision("delegate", detail={"reason": "no exact aligned range"}),
-                None,
-            )
-        else:
-            read = lambda w, keys: w.combine_range(  # noqa: E731
-                rng.start_sec, rng.end_sec, keys
-            )
-
+    def _try_in_aggregate(self, q, rng, residual, pset, values):
+        """Scalar aggregates with a ``key IN (...)`` residual: one part per
+        listed key — its family's wheels — merged across the (disjoint) key
+        partitions, the same combine as OR-of-ranges applied across keys
+        instead of intervals. No temporal bounds is the keyed-IN landmark
+        (every listed wheel must be complete)."""
+        fams = [pset["wheels"][v] for v in values]
+        span = _span(q, rng, residual, [f[None] for f in fams])
+        if isinstance(span, str):
+            return _delegate(span)
         parts = []
-        for v in values:
-            wheels = [_family_wheel(pset["wheels"][v], agg) for agg in q.aggs]
-            if None in wheels:
-                agg = q.aggs[wheels.index(None)]
-                return (
-                    RouteDecision("delegate", detail={"reason": f"no index for {agg.func}"}),
-                    None,
-                )
-            got = _read_states(q.aggs, wheels, read, _combine_keys)
-            vals = _pick_values(q.aggs, got)  # availability gate
-            if isinstance(vals, str):
-                return RouteDecision("delegate", detail={"reason": vals}), None
-            parts.append(got)
-        # typed from the last listed family (every listed value absent —
-        # still typed, from any family)
-        type_fam = pset["wheels"][values[-1] if values else next(iter(pset["wheels"]))]
-        out, wheels = [], []
-        for i, agg in enumerate(q.aggs):
-            w = _family_wheel(type_fam, agg)
-            if w is None:
-                return (
-                    RouteDecision("delegate", detail={"reason": f"no index for {agg.func}"}),
-                    None,
-                )
-            out.append(_combine_interval_parts(_state_key(agg), [p[i] for p in parts]))
-            wheels.append(w)
-        ans = self._scalar_result(q.aggs, out, wheels, q)
-        return (
-            RouteDecision(
-                "landmark" if rng is None else "single_agg" if len(q.aggs) == 1 else "multi_agg",
-                index_key=f"{self.engine.name}.{pset['key_column']}",
-                detail={"in_keys": len(values), "partition_by": pset["key_column"]},
-            ),
-            ans,
+        for fam in fams:
+            wheels = _resolved(q, q.aggs, lambda a: _family_wheel(fam, a))
+            if isinstance(wheels, str):
+                return _delegate(wheels)
+            parts.append((wheels, _scalar_reader(span)))
+        types = _type_wheels(pset, values, q.aggs)
+        if isinstance(types, str):
+            return _delegate(types)
+        key = pset["key_column"]
+        decision = RouteDecision(
+            "landmark" if span is None else "single_agg" if len(q.aggs) == 1 else "multi_agg",
+            index_key=f"{self.engine.name}.{key}",
+            detail={"in_keys": len(values), "partition_by": key},
         )
+        return _scalar(q, decision, parts, types)
 
     def _try_dim_group_by(self, q, rng, residual):
         """GROUP BY (date_trunc | window) x categorical key, answered from a
-        partitioned wheel family (``engine.build_partitioned_index``). The
-        family is key-complete by construction — every value present in the
-        data (NULL included) owns a wheel — so assembling the per-value
-        group-bys reproduces the scan's groups exactly. Beyond the
-        reference, whose optimizer binds one filter per index and has no
-        multi-dimension group-by at all (``lib.rs:76-77,269-272``)."""
+        partitioned wheel family (``engine.build_partitioned_index``): one
+        group-by per key value, concatenated. The family is key-complete by
+        construction — every value present in the data (NULL included) owns
+        a wheel — so assembling the per-value group-bys reproduces the
+        scan's groups exactly. Beyond the reference, whose optimizer binds
+        one filter per index and has no multi-dimension group-by at all
+        (``lib.rs:76-77,269-272``)."""
         e = self.engine
         gb = q.group_by
         pset = e.partition_sets.get(q.group_key.lower())
         if pset is None:
-            return (
-                RouteDecision(
-                    "delegate",
-                    detail={"reason": f"no partitioned index on {q.group_key!r}"},
-                ),
-                None,
-            )
-        sel_values = None
-        if residual:
-            # the one routable residual: `key IN (...)` on the group key
-            # itself — restricts the emitted key groups (NULL never matches)
-            hit = self._partition_in_match(residual)
-            if (
-                hit is None
-                or hit[0] is not pset
-                or residual[0].column.lower() != q.group_key.lower()
-            ):
-                return (
-                    RouteDecision(
-                        "delegate", detail={"reason": "residual filter with dim group-by"}
-                    ),
-                    None,
-                )
-            sel_values = hit[1]
+            return _delegate(f"no partitioned index on {q.group_key!r}")
+        # the one routable residual: `key IN (...)` on the group key itself
+        # — restricts the emitted key groups (NULL never matches)
+        values = self._key_values(pset, q.group_key, residual)
+        if values is None:
+            return _delegate("residual filter with dim group-by")
         gate = _group_gate(gb, e.time_column)
         if gate is None:
-            return (
-                RouteDecision("delegate", detail={"reason": "unsupported group expr"}),
-                None,
-            )
+            return _delegate("unsupported group expr")
         gran, hopping = gate
-
         if not pset["wheels"]:
-            return (
-                RouteDecision("delegate", detail={"reason": "empty partitioned index"}),
-                None,
-            )
-        values = sel_values if sel_values is not None else list(pset["wheels"])
-
-        kind = "group_by"
-        if rng is None and not q.conjuncts:
-            allw = [pset["wheels"][v][None] for v in values]
-            if not all(w.complete for w in allw):
-                return (
-                    RouteDecision("delegate", detail={"reason": "no complete index"}),
-                    None,
-                )
-            start_sec, end_sec = _landmark_span(allw)
-            kind = "group_by_landmark"
-        elif rng is None or not rng.routable:
-            return RouteDecision("delegate", detail={"reason": "no exact aligned range"}), None
-        else:
-            start_sec, end_sec = rng.start_sec, rng.end_sec
-
-        read = _cell_reader(gb, gran, start_sec, end_sec)
-        specs = [*q.aggs, *(spec for spec, _op, _lit in q.having)]
+            return _delegate("empty partitioned index")
+        fams = [pset["wheels"][v] for v in values]
+        allw = [f[None] for f in fams]
+        span = _span(q, rng, residual, allw)
+        if isinstance(span, str):
+            return _delegate(span)
+        read = _cell_reader(gb, gran, *(_landmark_span(allw) if span is None else span))
+        specs = _specs(q)
         n = len(q.aggs)
         rows = []
-        for v in values:
-            wheels = [_family_wheel(pset["wheels"][v], spec) for spec in specs]
-            if None in wheels:
-                i = wheels.index(None)
-                what = "" if i < n else "HAVING "
-                return (
-                    RouteDecision(
-                        "delegate",
-                        detail={"reason": f"no index for {what}{specs[i].func}"},
-                    ),
-                    None,
-                )
+        for v, fam in zip(values, fams):
+            wheels = _resolved(q, specs, lambda s: _family_wheel(fam, s))
+            if isinstance(wheels, str):
+                return _delegate(wheels)
             got = _group_columns(specs, wheels, read)
             if isinstance(got, str):
-                return RouteDecision("delegate", detail={"reason": got}), None
+                return _delegate(got)
             secs, cols = got
             secs, agg_cols = _filter_rows(_having_keep(q, cols[n:]), secs, cols[:n])
             rows += _group_rows(q, gb, secs, agg_cols, key_value=v)
-
-        names, types = [], []
-        for item in q.select_order:
-            names.append(item.output_name)
-            if isinstance(item, AggSpec):
-                w = next(
-                    w
-                    for v in values
-                    if (w := _family_wheel(pset["wheels"][v], item)) is not None
-                )
-                types.append(_agg_sql_type(item, w))
-            elif isinstance(item, ColRef):
-                types.append(pset["key_sql_type"])
-            else:
-                types.append("TIMESTAMP")
-        if q.order_by or q.limit is not None:
-            rows = _order_limit_rows(q, names, rows)
-        ans = Answer(names, types, rows)
-        return (
-            RouteDecision(
-                kind,
-                index_key=f"{e.name}.{q.group_key}",
-                detail={
-                    "partition_by": q.group_key,
-                    "keys": len(values),
-                    "granularity": _gran_detail(gb, gran, hopping),
-                },
-            ),
-            ans,
+        types = _type_wheels(pset, values, q.aggs)
+        if isinstance(types, str):
+            return _delegate(types)
+        decision = RouteDecision(
+            "group_by_landmark" if span is None else "group_by",
+            index_key=f"{e.name}.{q.group_key}",
+            detail={
+                "partition_by": q.group_key,
+                "keys": len(values),
+                "granularity": _gran_detail(gb, gran, hopping),
+            },
         )
-
-    # ------------------------------------------------------------ landmark
-    def _try_landmark(self, q, filter_key: str):
-        """R5: aggregate(s) with no temporal filter — answered from
-        ``landmark()``. The reference guard demands exactly one aggregate and
-        no filter at all (``single_aggregate_without_filter``,
-        ``lib.rs:279-281``); we additionally answer multi-aggregate and
-        purely-keyed landmarks — both trivially correct from the same states.
-
-        Soundness gate: the wheel must be **complete** (built without a
-        ``time_range`` restriction). A restricted wheel only indexed a
-        sub-span, so answering an unfiltered ``SELECT SUM(x) FROM t`` from it
-        would return the restricted-span aggregate — delegate instead."""
-        values, wheels = [], []
-        for agg in q.aggs:
-            w = self._resolve_wheel(agg, filter_key)
-            if w is None or not w.complete:
-                return (
-                    RouteDecision(
-                        "delegate", detail={"reason": "no complete index", "fk": filter_key}
-                    ),
-                    None,
-                )
-            key = _state_key(agg)
-            states = w.landmark()
-            if key not in states:
-                return (
-                    RouteDecision("delegate", detail={"reason": f"state {key} not indexed"}),
-                    None,
-                )
-            values.append(states[key])
-            wheels.append(w)
-        ans = self._scalar_result(q.aggs, values, wheels, q)
-        return (
-            RouteDecision("landmark", index_key=wheels[0].key, detail={"fk": filter_key}),
-            ans,
-        )
+        return _answer(q, decision, rows, types, pset["key_sql_type"])
 
     # ---------------------------------------------------------- OR ranges
     def _try_or_ranges(self, q):
         """``WHERE (range) OR (range) [OR ...]`` — the multi-window
-        comparison query ("this week OR the same week last year"). Branch
-        intervals are union-merged (rows in overlapping branches count
-        once), then each merged interval is one wheel lookup and the monoid
-        states sum. The reference rejects any OR outright (its predicate
-        extractor only walks AND trees, ``expr.rs:198-207``)."""
+        comparison query ("this week OR the same week last year"), scalar
+        or grouped ("... per day"). Branch intervals are union-merged (rows
+        in overlapping branches count once); each merged interval is one
+        part, and the parts' states merge — per bucket when grouped, where
+        cells landing in the same calendar bucket from different intervals
+        combine exactly, rows being disjoint across merged intervals. The
+        Catalyst shim serves the grouped shape for plain ``spark.sql``
+        (``condIntervals`` in ``tryGroupHybrid``). The reference rejects any
+        OR outright (its predicate extractor only walks AND trees,
+        ``expr.rs:198-207``)."""
         e = self.engine
         if q.select_star or not q.aggs:
-            return RouteDecision("delegate", detail={"reason": "OR shape unsupported"}), None
+            return _delegate("OR shape unsupported")
         if q.group_key is not None:
             # OR + a KEY grouping: the scalar path would silently drop the
             # key column — always hand the whole query to Spark
-            return (
-                RouteDecision("delegate", detail={"reason": "OR with key grouping"}),
-                None,
-            )
+            return _delegate("OR with key grouping")
         fk = None
         intervals: list[tuple[int, int]] = []
         for conj in q.or_branches:
             rng, residual = split_temporal_filter(conj, e.time_column)
             if rng is None or not rng.routable:
-                return (
-                    RouteDecision("delegate", detail={"reason": "OR branch not routable"}),
-                    None,
-                )
+                return _delegate("OR branch not routable")
             bfk = canonical_filter_key(residual) if residual else STAR_AGGREGATION_ALIAS
             if fk is None:
                 fk = bfk
             elif bfk != fk:
-                return (
-                    RouteDecision("delegate", detail={"reason": "OR branches differ in filter"}),
-                    None,
-                )
+                return _delegate("OR branches differ in filter")
             intervals.append((rng.start_sec, rng.end_sec))
         intervals.sort()
         merged: list[list[int]] = []
@@ -1740,175 +1348,54 @@ class Router:
                 merged[-1][1] = max(merged[-1][1], t)
             else:
                 merged.append([s, t])
+        detail = {"fk": fk, "intervals": [tuple(m) for m in merged]}
 
+        gran = None
         if q.group_by is not None:
-            return self._try_or_group_by(q, merged, fk)
-
-        wheels = []
-        for agg in q.aggs:
-            w = self._resolve_wheel(agg, fk)
-            if w is None:
-                return (
-                    RouteDecision("delegate", detail={"reason": f"no index for {agg.func}", "fk": fk}),
-                    None,
-                )
-            wheels.append(w)
-        parts = []
-        for s, t in merged:
-            got = _read_states(
-                q.aggs, wheels,
-                lambda w, keys: w.combine_range(s, t, keys),  # noqa: B023
-                _combine_keys,
-            )
-            vals = _pick_values(q.aggs, got)  # availability gate
-            if isinstance(vals, str):
-                return RouteDecision("delegate", detail={"reason": vals}), None
-            parts.append(got)
-        values = [
-            _combine_interval_parts(_state_key(agg), [p[i] for p in parts])
-            for i, agg in enumerate(q.aggs)
-        ]
-        ans = self._scalar_result(q.aggs, values, wheels, q)
-        return (
-            RouteDecision(
-                "or_ranges",
-                index_key=wheels[0].key,
-                detail={"fk": fk, "intervals": [tuple(m) for m in merged]},
-            ),
-            ans,
-        )
-
-    def _try_or_group_by(self, q, merged, fk):
-        """``GROUP BY date_trunc / window()`` with OR-of-ranges bounds —
-        the grouped form of :meth:`_try_or_ranges` ("this week vs the same
-        week last year, per day"): each merged (disjoint) interval
-        contributes its bucket cells from the wheel's group-by, and cells
-        landing in the same calendar bucket from different intervals
-        monoid-combine (rows are disjoint across merged intervals, so
-        counts/sums add exactly — the same algebra as ``key IN (...)``
-        group-bys). The Catalyst shim already served this shape for plain
-        ``spark.sql`` (``condIntervals`` in ``tryGroupHybrid``); this
-        closes the engine-router side. The reference rejects any OR
-        outright (``expr.rs:198-207``)."""
-        e = self.engine
-        gb = q.group_by
-        # the SAME grouping gates as _try_group_by: the grouped column must
-        # be the engine's time column (the wheel's buckets ARE that column
-        # — grouping another timestamp here would silently bucket on the
-        # wrong axis) at a supported granularity
-        gate = _group_gate(gb, e.time_column)
-        if gate is None:
-            return (
-                RouteDecision("delegate", detail={"reason": "unsupported group expr"}),
-                None,
-            )
-        gran, hopping = gate
-        specs = [*q.aggs, *(spec for spec, _op, _lit in q.having)]
-        wheels = []
-        for spec in specs:
-            w = self._resolve_wheel(spec, fk)
-            if w is None:
-                return (
-                    RouteDecision(
-                        "delegate", detail={"reason": f"no index for {spec.func}", "fk": fk}
-                    ),
-                    None,
-                )
-            wheels.append(w)
-        parts = []
-        for s, t in merged:
-            got = _read_states(
-                specs, wheels, _cell_reader(gb, gran, s, t), _combine_keys
-            )
-            if isinstance(got, str):
-                return RouteDecision("delegate", detail={"reason": got, "fk": fk}), None
-            # every state must be carried, occupied interval or not
-            for spec, (_secs, cols) in zip(specs, got):
-                if _state_key(spec) not in cols:
-                    reason = f"state {_state_key(spec)} not indexed"
-                    return RouteDecision("delegate", detail={"reason": reason, "fk": fk}), None
-            parts.append(got)
-        secs, cols = _merged_columns(specs, parts)  # states checked above
-        n = len(q.aggs)
-        secs, agg_cols = _filter_rows(_having_keep(q, cols[n:]), secs, cols[:n])
-        rows = _group_rows(q, gb, secs, agg_cols)
-        names, types = [], []
-        for item in q.select_order:
-            names.append(item.output_name)
-            if isinstance(item, AggSpec):
-                types.append(_agg_sql_type(item, wheels[q.aggs.index(item)]))
-            else:
-                types.append("TIMESTAMP")
-        if q.order_by or q.limit is not None:
-            rows = _order_limit_rows(q, names, rows, _bucket_positions(q))
-        ans = Answer(names, types, rows)
-        return (
-            RouteDecision(
-                "or_group_by",
-                index_key=wheels[0].key,
-                detail={"fk": fk, "intervals": [tuple(m) for m in merged]},
-            ),
-            ans,
-        )
+            # the SAME grouping gate as _try_group_by: the grouped column
+            # must be the engine's time column (the wheel's buckets ARE that
+            # column) at a supported granularity
+            gate = _group_gate(q.group_by, e.time_column)
+            if gate is None:
+                return _delegate("unsupported group expr")
+            gran = gate[0]
+        specs = _specs(q)
+        wheels = self._wheels(q, specs, fk)
+        if isinstance(wheels, str):
+            return _delegate(wheels, fk=fk)
+        if gran is None:
+            parts = [(wheels, _scalar_reader(m)) for m in merged]
+            decision = RouteDecision("or_ranges", index_key=wheels[0].key, detail=detail)
+            return _scalar(q, decision, parts, wheels)
+        parts = [(wheels, _cell_reader(q.group_by, gran, s, t)) for s, t in merged]
+        decision = RouteDecision("or_group_by", index_key=wheels[0].key, detail=detail)
+        return _grouped_answer(q, decision, _grouped(specs, parts), wheels)
 
     # -------------------------------------------------------------- point
     def _try_instant(self, q, sec: int, residual):
         """``ts = <literal>`` where the literal is a bucket-start instant:
         the matching rows are exactly the bucket's at-start sliver (the
         reference refuses equality on the time column outright,
-        ``expr.rs:351-356``). Zero jobs; unaligned literals delegate."""
+        ``expr.rs:351-356``) — one part, its raw at-start states finalized.
+        Zero jobs; unaligned literals delegate."""
         bucket = self.engine.bucket_seconds
         fk = canonical_filter_key(residual) if residual else STAR_AGGREGATION_ALIAS
-        values, wheels = [], []
-        for agg in q.aggs:
-            w = self._resolve_wheel(agg, fk)
-            if (
-                w is None
-                or not getattr(w, "tracks_at_start", False)
-                or not w.covers(sec, sec + bucket)  # span/alignment gate
-            ):
-                return (
-                    RouteDecision("delegate", detail={"reason": "no at-start index", "fk": fk}),
-                    None,
-                )
-            at = w.at_start(sec)
-            key = _state_key(agg)
-            vn = at["vcnt"]
-            if key == "count":
-                values.append(at["count"])
-            elif key == "count_col":
-                values.append(vn)
-            elif key in ("sum", "min", "max"):
-                if key not in at:
-                    return (
-                        RouteDecision("delegate", detail={"reason": f"state {key} not indexed"}),
-                        None,
-                    )
-                values.append(at[key] if vn else None)
-            elif key == "avg":
-                if "sum" not in at:
-                    return (
-                        RouteDecision("delegate", detail={"reason": "state sum not indexed"}),
-                        None,
-                    )
-                values.append(float(at["sum"]) / vn if vn else None)
-            else:  # variance family
-                if "sum" not in at or "sumsq" not in at:
-                    return (
-                        RouteDecision("delegate", detail={"reason": "state sumsq not indexed"}),
-                        None,
-                    )
-                values.append(
-                    _variance_states(float(at["sum"]), float(at["sumsq"]), vn)[key]
-                    if vn
-                    else None
-                )
-            wheels.append(w)
-        ans = self._scalar_result(q.aggs, values, wheels, q)
-        return (
-            RouteDecision("point_agg", index_key=wheels[0].key, detail={"fk": fk, "sec": sec}),
-            ans,
+        wheels = self._wheels(q, q.aggs, fk)
+        if isinstance(wheels, str):
+            return _delegate(wheels, fk=fk)
+        if not all(
+            getattr(w, "tracks_at_start", False) and w.covers(sec, sec + bucket)
+            for w in wheels  # span/alignment gate
+        ):
+            return _delegate("no at-start index", fk=fk)
+        missing = _missing_state(q.aggs, wheels)
+        if missing:
+            return _delegate(missing, fk=fk)
+        decision = RouteDecision(
+            "point_agg", index_key=wheels[0].key, detail={"fk": fk, "sec": sec}
         )
+        parts = [(wheels, lambda w, keys: w.at_start(sec))]
+        return _scalar(q, decision, parts, wheels, at_start=True)
 
     # ------------------------------------------------------------- hybrid
     def _try_hybrid(self, q, rng, residual):
@@ -1918,273 +1405,139 @@ class Router:
         The reference accepts these shapes by *approximating* (``>`` → ``>=``,
         ``<=`` → ``<``, ``expr.rs:83-105,219-222``) — silently wrong whenever
         sub-bucket timestamps exist. We answer them **exactly** by splitting
-        the query interval:
+        the query interval into parts:
 
-        * full buckets → wheel lookup (µs, zero scan), and
-        * boundary slivers → ONE scan whose temporal predicate covers at most
-          two bucket-widths: rows with ``ts == upper`` (from ``<=``;
-          timestamps are µs-discrete, so ``ts <= b`` ≡ ``ts < b + 1µs``)
-          and/or ``ts ∈ (lower, lower + bucket)`` (from ``>``).
+        * full buckets → the core range (µs, zero scan), and
+        * boundary slivers → the wheels' at-start states (:func:`_slivers`),
+          or, when those cannot answer them, ONE scan whose temporal
+          predicate covers at most two bucket-widths: rows with
+          ``ts == upper`` (from ``<=``) and/or ``ts ∈ (lower, lower +
+          bucket)`` (from ``>``).
 
         At 100 TB the sliver scan prunes to a couple of row groups via the
         pushed-down timestamp predicate — the delegate alternative scans the
         whole range. The combined states are exact monoid sums, so results
         match delegated SQL bit-for-bit (modulo float summation order).
         """
-        e = self.engine
-        bucket = e.bucket_seconds
-        if rng.start_sec % bucket or rng.end_sec % bucket:
-            return (
-                RouteDecision("delegate", detail={"reason": "no exact aligned range"}),
-                None,
-            )
+        bucket = self.engine.bucket_seconds
         fk = canonical_filter_key(residual) if residual else STAR_AGGREGATION_ALIAS
-        wheels: list[WheelIndex] = []
-        for agg in q.aggs:
-            w = self._resolve_wheel(agg, fk)
-            if w is None:
-                return (
-                    RouteDecision(
-                        "delegate", detail={"reason": f"no index for {agg.func}", "fk": fk}
-                    ),
-                    None,
-                )
-            wheels.append(w)
+        core = _core_range(rng, bucket)
+        if isinstance(core, str):
+            return _delegate(core, fk=fk)
+        wheels = self._wheels(q, q.aggs, fk)
+        if isinstance(wheels, str):
+            return _delegate(wheels, fk=fk)
 
-        core_start = rng.start_sec + (bucket if rng.lo_op == ">" else 0)
-        core_end = rng.end_sec
-        if core_start > core_end:
-            return (
-                RouteDecision("delegate", detail={"reason": "degenerate boundary range"}),
-                None,
-            )
+        def read(w, keys):
+            whole = w.combine_range(core[0], core[1], keys)
+            return None if whole is None else (whole, _slivers(w, rng, bucket, keys))
 
-        core_states = _read_states(
-            q.aggs, wheels,
-            lambda w, keys: w.combine_range(core_start, core_end, keys),
-            _combine_keys,
+        got = _read_states(q.aggs, wheels, read, _combine_keys)
+        if isinstance(got, str):
+            return _delegate(got, fk=fk)
+        keys = [_state_key(a) for a in q.aggs]
+        missing = next((k for k, (c, _) in zip(keys, got) if k not in c), None)
+        if missing:
+            return _delegate(f"state {missing} not indexed", fk=fk)
+        values = None
+        if not any(isinstance(sl, str) for _, sl in got):
+            # preferred: slivers from the wheels' own at-start states —
+            # zero Spark jobs, like every other routed answer
+            values = [_fold(States.of(c), *sl).finalize(k) for k, (c, sl) in zip(keys, got)]
+        boundary = "wheel"
+        if values is None or any(v is UNDERIVABLE for v in values):
+            # Fallback (at-start states absent — spark backend / legacy
+            # wheel — or a strict-lower min/max whose sliver mixes at-start
+            # and interior rows): ONE scan pruned to ≤2 bucket-widths.
+            boundary, brow = self._boundary_row(q, rng, residual, bucket)
+            values = [
+                States.of(c).merge(_scan_states(brow, a.arg)).finalize(k)
+                for a, k, (c, _) in zip(q.aggs, keys, got)
+            ]
+        decision = RouteDecision(
+            "hybrid_agg", index_key=wheels[0].key, detail={"fk": fk, "boundary": boundary}
         )
-        core_values = _pick_values(q.aggs, core_states)  # availability gate
-        if isinstance(core_values, str):
-            return RouteDecision("delegate", detail={"reason": core_values}), None
+        return _answer(q, decision, [tuple(values)], wheels)
 
-        # Preferred path: resolve the boundary slivers from the wheels' own
-        # at-start states — zero Spark jobs, like every other routed answer.
-        values = self._boundary_from_wheels(q, rng, wheels, core_states, bucket)
-        if values is not None:
-            ans = self._scalar_result(q.aggs, values, wheels, q)
-            return (
-                RouteDecision(
-                    "hybrid_agg",
-                    index_key=wheels[0].key,
-                    detail={"fk": fk, "boundary": "wheel"},
-                ),
-                ans,
-            )
-
-        # Fallback (at-start states absent — spark backend / legacy wheel —
-        # or a strict-lower min/max whose sliver mixes at-start and interior
-        # rows): ONE scan pruned to ≤2 bucket-widths.
-        cond, brow = self._boundary_row(q, rng, residual, bucket)
-        values = [
-            _combine_core_boundary(agg, core, brow)
-            for agg, core in zip(q.aggs, core_states)
-        ]
-        ans = self._scalar_result(q.aggs, values, wheels, q)
-        return (
-            RouteDecision(
-                "hybrid_agg",
-                index_key=wheels[0].key,
-                detail={"fk": fk, "boundary": cond},
-            ),
-            ans,
-        )
-
-    def _try_group_by_hybrid(self, q, gb, gran, rng, residual, wheels, fk):
+    def _try_group_by_hybrid(self, q, gran, rng, specs, wheels, detail):
         """GROUP BY date_trunc / tumbling window with BETWEEN / ``<=`` /
-        ``>`` temporal bounds — the scalar hybrid's exact monoid algebra
-        applied PER GROUP CELL, zero jobs: core cells from the wheel's
-        group-by, boundary slivers (at-start states) folded into the cells
-        that contain them. Each boundary instant lies in exactly one cell
-        (cells are bucket-aligned and at least a bucket wide), and the cell
-        keys come from the wheel's own group-by over the sliver's bucket —
-        the same calendar logic as the core, nothing re-derived. Anything
-        not derivable from states (mixed-bucket min/max, missing at-start
+        ``>`` temporal bounds — the scalar hybrid's parts applied PER GROUP
+        CELL, zero jobs: core cells from the wheel's group-by, boundary
+        slivers (at-start states) folded into the cells that contain them.
+        Each boundary instant lies in exactly one cell (cells are
+        bucket-aligned and at least a bucket wide), and the cell keys come
+        from the wheel's own group-by over the sliver's bucket — the same
+        calendar logic as the core, nothing re-derived. Anything not
+        derivable from states (mixed-bucket min/max, missing at-start
         tracking) delegates — never a wrong answer."""
-        e = self.engine
-        bucket = e.bucket_seconds
+        bucket = self.engine.bucket_seconds
+        fk = detail["fk"]
+        core = _core_range(rng, bucket)
+        if isinstance(core, str):
+            return _delegate(core, fk=fk)
 
-        def _delegate(reason):
-            return RouteDecision("delegate", detail={"reason": reason, "fk": fk}), None
-
-        if rng.start_sec % bucket or rng.end_sec % bucket:
-            return _delegate("no exact aligned range")
-        core_start = rng.start_sec + (bucket if rng.lo_op == ">" else 0)
-        core_end = rng.end_sec
-        if core_start > core_end:
-            return _delegate("degenerate boundary range")
-
-        hwheels = []
-        for spec, _op, _lit in q.having:
-            # HAVING aggregates get the SAME hybrid-corrected per-cell
-            # values (the aggregate need not be in the select list)
-            hw = self._resolve_wheel(spec, fk)
-            if hw is None:
-                return _delegate(f"no index for HAVING {spec.func}")
-            hwheels.append(hw)
-        specs = [*q.aggs, *(spec for spec, _op, _lit in q.having)]
-
-        def _wheel_cells(w, keys):
-            """One wheel's core cells plus its boundary slivers and the
-            cells they land in, or a delegate reason string."""
+        def read(w, keys):
+            """One wheel's core cells plus its non-empty boundary slivers
+            and the cells they land in, or a delegate reason."""
             if not getattr(w, "tracks_at_start", False):
                 return "no at-start states"
-            core = w.group_by(core_start, core_end, gran, keys)
-            if core is None:
+            cells = w.group_by(core[0], core[1], gran, keys)
+            if cells is None:
                 return "range not covered"
-            up = low_bucket = low_at = up_cell = low_cell = None
-            if rng.hi_op == "<=":
-                # same trust gate as the scalar path: the sliver bucket sits
-                # one bucket past the core, outside covers()'s vouching
-                if not (w.complete or w.covers(rng.end_sec, rng.end_sec + bucket)):
-                    return "upper sliver not covered"
-                up = w.at_start(rng.end_sec)
-                if up is None:
-                    return "no at-start states"
-                if up["count"] == 0:
-                    up = None
-                else:
-                    g1 = w.group_by(rng.end_sec, rng.end_sec + bucket, gran, ())
-                    if g1 is None or not len(g1[0]):
-                        return "upper sliver cell unresolved"
-                    up_cell = int(g1[0][0])
-            if rng.lo_op == ">":
-                low_at = w.at_start(rng.start_sec)
-                low_bucket = w.combine_range(
-                    rng.start_sec, rng.start_sec + bucket, keys
-                )
-                if low_bucket is None or low_at is None:
-                    return "lower sliver not covered"
-                if low_bucket["count"] - low_at["count"] == 0:
-                    low_bucket = low_at = None  # empty sliver
-                else:
-                    g0 = w.group_by(rng.start_sec, rng.start_sec + bucket, gran, ())
-                    if g0 is None or not len(g0[0]):
-                        return "lower sliver cell unresolved"
-                    low_cell = int(g0[0][0])
-            return core, up, up_cell, low_bucket, low_at, low_cell
+            sl = _slivers(w, rng, bucket, keys)
+            if isinstance(sl, str):
+                return sl
+            up, low = sl
+            landed = []
+            if up is not None and up.count:
+                landed.append((rng.end_sec, "upper", up, None))
+            if low is not None and low[0].count - low[1].count:
+                landed.append((rng.start_sec, "lower", None, low))
+            out = []
+            for sec, side, u, lo in landed:
+                g = w.group_by(sec, sec + bucket, gran, ())
+                if g is None or not len(g[0]):
+                    return f"{side} sliver cell unresolved"
+                out.append((int(g[0][0]), u, lo))
+            return cells, out
 
-        got = _read_states(specs, wheels + hwheels, _wheel_cells, _combine_keys)
+        got = _read_states(specs, wheels, read, _combine_keys)
         if isinstance(got, str):
-            return _delegate(got)
+            return _delegate(got, fk=fk)
         cell_values: list[dict] = []
-        for spec, (core, up, up_cell, low_bucket, low_at, low_cell) in zip(specs, got):
-            secs, cols = core
+        for spec, ((secs, cols), landed) in zip(specs, got):
             key = _state_key(spec)
             # State availability is validated independently of core
             # occupancy: an empty core plus a non-empty boundary sliver
-            # would otherwise fabricate values from _EMPTY_CORE defaults on
+            # would otherwise fabricate values from identity states on
             # subset-state wheels (group_by answers every carried key,
             # occupied or not — the same gate the scalar hybrid applies).
             if key not in cols:
-                return _delegate(f"state {key} not indexed")
+                return _delegate(f"state {key} not indexed", fk=fk)
             buckets = secs.tolist()
             vals = dict(zip(buckets, cols[key]))
             # only the (at most two) cells a sliver lands in need the
-            # hybrid algebra; every other cell is its core value
-            for c in dict.fromkeys(
-                c for c, part in ((up_cell, up), (low_cell, low_bucket))
-                if part is not None
-            ):
+            # states; every other cell is its core value. A `<=` instant a
+            # core cell does not hold opens its own cell from the identity.
+            for c in dict.fromkeys(c for c, _, _ in landed):
+                st = States()
                 if c in vals:
                     i = buckets.index(c)
-                    cell = {k: col[i] for k, col in cols.items()}
-                else:
-                    cell = _EMPTY_CORE
-                lb = low_bucket if c == low_cell else None
-                ok, v = _hybrid_agg_value(
-                    key, cell, up if c == up_cell else None, lb,
-                    low_at if lb is not None else None,
-                )
-                if not ok:
-                    return _delegate("boundary not derivable from states")
+                    st = States.of({k: col[i] for k, col in cols.items()})
+                for c2, up, low in landed:
+                    if c2 == c:
+                        st = _fold(st, up, low)
+                v = st.finalize(key)
+                if v is UNDERIVABLE:
+                    return _delegate("boundary not derivable from states", fk=fk)
                 vals[c] = v
             cell_values.append(vals)
-
-        n = len(q.aggs)
-        buckets = sorted(set().union(*cell_values[:n]))
-        secs = np.asarray(buckets, dtype=np.int64)
+        buckets = sorted(set().union(*cell_values[: len(q.aggs)]))
         cols = [[vals.get(b) for b in buckets] for vals in cell_values]
-        secs, agg_cols = _filter_rows(_having_keep(q, cols[n:]), secs, cols[:n])
-        rows = _group_rows(q, gb, secs, agg_cols)
-        names, types = [], []
-        for item in q.select_order:
-            names.append(item.output_name)
-            if isinstance(item, AggSpec):
-                types.append(_agg_sql_type(item, wheels[q.aggs.index(item)]))
-            else:
-                types.append("TIMESTAMP")
-        if q.order_by or q.limit is not None:
-            rows = _order_limit_rows(q, names, rows, _bucket_positions(q))
-        ans = Answer(names, types, rows)
-        return (
-            RouteDecision(
-                "group_by_hybrid",
-                index_key=wheels[0].key,
-                detail={"granularity": _gran_detail(gb, gran, False), "fk": fk},
-            ),
-            ans,
+        decision = RouteDecision("group_by_hybrid", index_key=wheels[0].key, detail=detail)
+        return _grouped_answer(
+            q, decision, (np.asarray(buckets, dtype=np.int64), cols), wheels
         )
-
-    def _boundary_from_wheels(self, q, rng, wheels, core_states, bucket: int):
-        """Combine core states with the boundary slivers using the wheels'
-        at-start states (rows at the exact bucket-start instant):
-
-        * ``ts <= b``: **add** bucket b's at-start sliver (µs-discrete
-          timestamps make ``<= b`` ≡ ``< b + 1µs``).
-        * ``ts > a``: **subtract** the at-start sliver from bucket a's whole
-          states. count/sum/sumsq/vcnt subtract exactly; min/max are not
-          subtractable — derivable only when the sliver is the whole bucket
-          (no interior rows), the whole non-null bucket, or empty.
-
-        Returns the per-aggregate values, or ``None`` when any aggregate is
-        not derivable (caller falls back to the pruned boundary scan).
-        Slivers are read once per wheel the core states came from."""
-        sources, reads = _lookup_plan(q.aggs, wheels, _combine_keys)
-        slivers = {}
-        for wid, (w, keys) in reads.items():
-            if not getattr(w, "tracks_at_start", False):
-                return None
-            up = None
-            if rng.hi_op == "<=":
-                # The upper sliver bucket (instant rng.end_sec) sits one
-                # bucket PAST the core range, so covers() on the core never
-                # vouches for it.  A wheel built with a ``time_range``
-                # restriction ending exactly at rng.end_sec has no indexed
-                # rows at that instant — at_start would answer a zero state
-                # and silently drop the boundary rows.  Trust it only when
-                # the wheel indexes the whole table or provably covers the
-                # sliver's bucket; otherwise fall back to the pruned
-                # boundary scan (reads the base table — always correct).
-                if not (w.complete or w.covers(rng.end_sec, rng.end_sec + bucket)):
-                    return None
-                up = w.at_start(rng.end_sec)
-            low_bucket = low_at = None
-            if rng.lo_op == ">":
-                low_at = w.at_start(rng.start_sec)
-                low_bucket = w.combine_range(
-                    rng.start_sec, rng.start_sec + bucket, keys
-                )
-                if low_bucket is None or low_at is None:
-                    return None
-            slivers[wid] = (up, low_bucket, low_at)
-        values = []
-        for agg, w, core in zip(q.aggs, sources, core_states):
-            ok, v = _hybrid_agg_value(_state_key(agg), core, *slivers[id(w)])
-            if not ok:
-                return None
-            values.append(v)
-        return values
 
     def _boundary_row(self, q, rng, residual, bucket: int):
         """Aggregate the boundary slivers in one pruned scan; returns
@@ -2212,17 +1565,16 @@ class Router:
         aggs, _types = state_agg_exprs(src, tc, cols)
         return cond, src.agg(*aggs).collect()[0].asDict()
 
-    # ------------------------------------------------------------- pruning
     def _try_pruning(self, q, rng, residual):
         """R6/R7: ``SELECT *`` whose result is provably empty →
         :data:`EMPTY`, skipping the scan entirely. Anything not *provably*
         empty must fall through to a real scan."""
         e = self.engine
         if rng is None or not rng.routable:
-            return RouteDecision("delegate", detail={"reason": "no exact aligned range"}), None
+            return _delegate("no exact aligned range")
         count_wheel = e.count_wheels.get(STAR_AGGREGATION_ALIAS)
         if count_wheel is None:
-            return RouteDecision("delegate", detail={"reason": "no count wheel"}), None
+            return _delegate("no count wheel")
 
         if not residual:
             n = count_wheel.count_range(rng.start_sec, rng.end_sec)
@@ -2231,7 +1583,7 @@ class Router:
                     RouteDecision("prune_count", index_key=count_wheel.key),
                     EMPTY,
                 )
-            return RouteDecision("delegate", detail={"reason": "rows exist", "count": n}), None
+            return _delegate("rows exist", count=n)
 
         # Keyed count pruning (beyond the reference): a registered keyed
         # wheel proving zero matching rows in the range prunes the scan even
@@ -2248,10 +1600,10 @@ class Router:
 
         pred = extract_min_max_predicate(residual)
         if pred is None or len(residual) != 1:
-            return RouteDecision("delegate", detail={"reason": "residual not prunable"}), None
+            return _delegate("residual not prunable")
         mm = e.min_max_wheels.get(pred.column)
         if mm is None:
-            return RouteDecision("delegate", detail={"reason": "no minmax wheel"}), None
+            return _delegate("no minmax wheel")
         # Zero rows in range → empty regardless of the residual predicate.
         n = count_wheel.count_range(rng.start_sec, rng.end_sec)
         if n == 0:
@@ -2266,4 +1618,4 @@ class Router:
                 ),
                 EMPTY,
             )
-        return RouteDecision("delegate", detail={"reason": "not provably empty"}), None
+        return _delegate("not provably empty")

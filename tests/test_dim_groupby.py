@@ -319,6 +319,16 @@ def test_in_restricts_dim_group_by(dim_engine):
     )
     got = _check(dim_engine, sql)
     assert {r[1] for r in got} == {"a", "c"}  # NULL group excluded by IN
+    # the IN alone, no temporal bound: the listed keys' landmark, as the
+    # other keyed families answer it
+    got = _check(
+        dim_engine,
+        "SELECT date_trunc('minute', timestamp) AS b, cat, COUNT(*) AS n "
+        "FROM dimfix WHERE cat IN ('a', 'c') "
+        "GROUP BY date_trunc('minute', timestamp), cat ORDER BY b, cat",
+        "group_by_landmark",
+    )
+    assert {r[1] for r in got} == {"a", "c"}
     # IN on a different partitioned column than the group key → delegate
     r = dim_engine.explain_route(
         "SELECT date_trunc('minute', timestamp) AS b, cat, COUNT(*) AS n "

@@ -261,8 +261,7 @@ def test_time_range_past_data_end_upper_sliver(spark, minimal_agg):
 
 
 def test_hybrid_wheel_boundary_respects_limit_zero(hybrid_engine):
-    """ORDER BY / LIMIT must survive the wheel-boundary success path
-    (router passed the parsed query through to _scalar_result)."""
+    """ORDER BY / LIMIT must survive the wheel-boundary success path."""
     sql = (
         "SELECT COUNT(*) AS c FROM hybrid_fix WHERE "
         "timestamp BETWEEN '2024-05-10 00:00:02' AND '2024-05-10 00:00:06' LIMIT 0"
@@ -369,7 +368,7 @@ def test_grouped_keyed_residual(gb_engine):
 def test_grouped_upper_sliver_opens_new_cell(spark):
     """A `<=` instant exactly at a day boundary opens a cell the core range
     never touches — the sliver must appear as its OWN group row (the
-    `_EMPTY_CORE` + at-start path), and sub-second rows after the instant
+    identity `States` + at-start path), and sub-second rows after the instant
     stay excluded."""
     rows = [
         ("2024-05-09 10:00:00", 1.0),

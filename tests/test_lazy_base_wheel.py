@@ -320,3 +320,21 @@ def test_streaming_merge_materializes_before_merge(spark, sf_small_dir):
     # later from the parquet alone
     assert not eng._base_pending
     assert STAR_AGGREGATION_ALIAS in eng.count_wheels
+
+
+def test_index_management(spark, minimal_agg):
+    eng = WheelEngine(spark, "mgmt_tbl", minimal_agg, time_column="timestamp",
+                      min_max_columns=("agg_col",))
+    eng.build_index("agg_col")
+    eng.build_index("agg_col", filter="agg_col >= 5.0")
+    meta = eng.list_indexes()
+    assert {m["kind"] for m in meta} == {"count", "min_max", "agg"}
+    assert any(m["filter"] == "agg_col >= 5.0" for m in meta)
+    assert all(m["size_bytes"] >= 0 for m in meta)
+
+    epoch = eng.index_epoch
+    assert eng.drop_index("agg_col", filter="agg_col >= 5.0")
+    assert eng.index_epoch == epoch + 1
+    assert not eng.drop_index("agg_col", filter="agg_col >= 5.0")  # already gone
+    sql = "SELECT SUM(agg_col) AS s FROM mgmt_tbl WHERE timestamp >= '2024-05-10 00:00:00' AND timestamp < '2024-05-10 00:00:10' AND agg_col >= 5.0"
+    assert eng.explain_route(sql).kind == "delegate"  # keyed wheel dropped

@@ -19,6 +19,8 @@ from datafusion_uwheel_spark.functions.timestamps import GRANULARITY_SECONDS
 from datafusion_uwheel_spark.operators.lookup import (
     INT_MAX_IDENTITY,
     INT_MIN_IDENTITY,
+    UNDERIVABLE,
+    States,
     WheelIndex,
 )
 
@@ -357,3 +359,143 @@ def test_coarse_buckets_answer_aligned_ranges(events, bucket, a, width):
     if bucket > 1:
         assert w.combine_range(start + 1, end) is None
         assert w.count_range(start, end + 1) is None
+
+
+# ------------------------------------------------------- the States monoid
+#: Bucket width of the sliver wheels: rows either sit exactly on their
+#: bucket's start instant (at-start rows) or one second into it.
+SLIVER_B = 10
+RAW_STATES = ("count", "count_col", "sum", "_sumsq", "min", "max")
+
+sliver_events = st.booleans().flatmap(
+    lambda integral: st.tuples(
+        st.just(integral),
+        st.lists(
+            st.tuples(
+                st.integers(min_value=0, max_value=40),  # bucket
+                st.booleans(),  # at the bucket-start instant
+                st.one_of(
+                    st.none(),
+                    st.integers(min_value=-10**6, max_value=10**6)
+                    if integral
+                    else st.floats(-1e6, 1e6, allow_nan=False, width=32),
+                ),
+            ),
+            min_size=1,
+            max_size=120,
+        ),
+    )
+)
+
+
+def _sliver_wheel(integral: bool, events) -> WheelIndex:
+    """``build_wheel`` over SLIVER_B-second buckets plus the at-start
+    arrays the distributed build keeps (sanitized the same way)."""
+    w = build_wheel(
+        [(BASE + b * SLIVER_B + (0 if at else 1), v) for b, at, v in events],
+        bucket_seconds=SLIVER_B,
+        integral=integral,
+    )
+    at_rows: dict[int, list] = {}
+    for b, at, v in events:
+        if at:
+            at_rows.setdefault(BASE + b * SLIVER_B, []).append(v)
+    secs = sorted(at_rows)
+    vdtype = np.int64 if integral else np.float64
+    lo, hi = (INT_MIN_IDENTITY, INT_MAX_IDENTITY) if integral else (np.inf, -np.inf)
+    nn = [[v for v in at_rows[s] if v is not None] for s in secs]
+    w.at_secs_ = np.array(secs, dtype=np.int64)
+    w.at_cnt_ = np.array([len(at_rows[s]) for s in secs], dtype=np.int64)
+    w.at_vcnt_ = np.array([len(x) for x in nn], dtype=np.int64)
+    w.at_sum_ = np.array([sum(x) if x else 0 for x in nn], dtype=vdtype)
+    w.at_min_ = np.array([min(x) if x else lo for x in nn], dtype=vdtype)
+    w.at_max_ = np.array([max(x) if x else hi for x in nn], dtype=vdtype)
+    w.at_sumsq_ = np.array(
+        [math.fsum(float(v) * float(v) for v in x) for x in nn], dtype=np.float64
+    )
+    return w
+
+
+@given(
+    data=sliver_events,
+    cuts=st.lists(st.integers(min_value=1, max_value=40), max_size=6),
+    split=st.booleans(),
+)
+@settings(max_examples=200, deadline=None)
+def test_states_merge_then_finalize_equals_combine_range(data, cuts, split):
+    """The router's one algebra: the raw States of disjoint parts of a range
+    — random cuts, and with ``split`` the first bucket taken as its at-start
+    instant plus the ``ts > a`` sliver — merged, then finalized, equal
+    ``combine_range`` over their union: same value and Python type for
+    every state key. A min/max the sliver cannot supply is UNDERIVABLE, and
+    only over a bucket mixing at-start and later non-NULL rows."""
+    integral, events = data
+    w = _sliver_wheel(integral, events)
+    bounds = [BASE + i * SLIVER_B for i in sorted({0, 41, *cuts})]
+    merged = States()
+    mixed = False
+    for i, (a, b) in enumerate(zip(bounds, bounds[1:])):
+        if split and i == 0:
+            at = States.of(w.at_start(a))
+            bucket = States.of(w.combine_range(a, a + SLIVER_B, RAW_STATES))
+            mixed = 0 < at.count_col < bucket.count_col
+            merged = merged.merge(at).merge_sliver(bucket, at)
+            a += SLIVER_B
+        merged = merged.merge(States.of(w.combine_range(a, b, RAW_STATES)))
+    want = w.combine_range(bounds[0], bounds[-1])
+    got = {}
+    for k in ALL_STATES:
+        v = merged.sumsq if k == "_sumsq" else merged.finalize(k)
+        if v is UNDERIVABLE:
+            assert k in ("min", "max") and mixed, k
+            v = want[k]
+        got[k] = v
+    for k in ("var_pop", "var_samp", "stddev_pop", "stddev_samp"):
+        # derived from Σx²: its rounding, scaled, is the tolerance
+        g, wv = got[k], want[k]
+        assert (g is None) == (wv is None), (k, g, wv)
+        if g is not None:
+            assert type(g) is float
+            assert math.isclose(g, wv, rel_tol=1e-6, abs_tol=1e-12 * max(1.0, want["_sumsq"])), (k, g, wv)
+            got[k] = wv
+    assert_states(got, want, ALL_STATES, integral)
+
+
+def test_states_follow_spark_nan_order():
+    """MIN skips NaN unless every value is NaN; MAX is NaN when any is."""
+    nan, inf = float("nan"), float("inf")
+    a = States(1, 1, nan, 0.0, nan, nan)
+    b = States(1, 1, -inf, 0.0, -inf, -inf)
+    m = a.merge(b)
+    assert m.finalize("min") == -inf and math.isnan(m.finalize("max"))
+    assert math.isnan(a.merge(a).finalize("min"))
+    assert States().merge(States(2, 0)).finalize("min") is None
+
+
+def test_kernels_follow_spark_nan_order():
+    """combine_range / group_by / min_max_range / merge_delta / compaction
+    answer MIN and MAX in Spark's order over NaN, -inf and all-NULL
+    buckets."""
+    nan, inf = float("nan"), float("inf")
+    events = [(BASE, nan), (BASE + 1, -inf), (BASE + 2, None), (BASE + 3, nan)]
+    w = build_wheel(events)
+    rng = w.combine_range(BASE, BASE + 4, ("min", "max"))
+    assert rng["min"] == -inf and math.isnan(rng["max"])
+    only_nan = w.combine_range(BASE + 2, BASE + 4, ("min", "max"))
+    assert math.isnan(only_nan["min"]) and math.isnan(only_nan["max"])
+    lo, hi = w.min_max_range(BASE + 2, BASE + 4)
+    assert math.isnan(lo) and math.isnan(hi)
+    _secs, cols = w.group_by(BASE, BASE + 4, 2, ("min", "max"))
+    assert cols["min"][0] == -inf and math.isnan(cols["max"][0])
+    assert math.isnan(cols["min"][1]) and math.isnan(cols["max"][1])
+    # a NaN delta landing on an all-NULL bucket reads NaN; on a value, skipped
+    w.merge_delta(
+        np.array([BASE + 2, BASE + 1]), np.array([1, 1]),
+        sum_=np.array([0.0, 0.0]), min_=np.array([nan, nan]),
+        max_=np.array([nan, nan]), sumsq_=np.array([0.0, 0.0]),
+        vcnt_=np.array([1, 1]),
+    )
+    assert math.isnan(w.combine_range(BASE + 2, BASE + 3, ("min",))["min"])
+    assert w.combine_range(BASE + 1, BASE + 2, ("min",))["min"] == -inf
+    w.compact_before(BASE + 4, 4)
+    assert w.combine_range(BASE, BASE + 4, ("min",))["min"] == -inf

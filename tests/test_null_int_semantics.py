@@ -260,3 +260,111 @@ def test_build_indexes_multi_column_one_pass(spark, minimal_agg):
     assert e.last_route.rewritten
     assert e.sql(f"SELECT SUM(second_col) AS s FROM multi_build WHERE {r}").collect()[0][0] == 110.0
     assert e.last_route.rewritten
+
+
+# -------------------------------------------------------- NaN (float order)
+# Spark orders NaN above +inf: MIN skips NaN unless every value is NaN, MAX
+# is NaN as soon as any value is. Routed answers must follow that order on
+# every path that combines MIN/MAX states. These engines register no shim
+# rollup, so ``spark.sql`` is the plain scan.
+NAN_R = "ts >= '2024-05-10 00:00:00' AND ts < '2024-05-10 00:00:06'"
+
+
+def _nan_aware(rows):
+    return [tuple(repr(v) for v in r) for r in rows]
+
+
+def routed_vs_delegate_nan(engine, sql, kind=None):
+    routed = engine.sql(sql)
+    assert engine.last_route.rewritten, engine.last_route
+    if kind is not None:
+        assert engine.last_route.kind == kind, engine.last_route
+    delegated = engine.spark.sql(sql)
+    assert routed.dtypes == delegated.dtypes
+    got, want = _nan_aware(routed.collect()), _nan_aware(delegated.collect())
+    assert got == want, (got, want)
+    return got
+
+
+@pytest.fixture(scope="module")
+def nan_engine(spark):
+    """One value per second: NaN, -inf, NULL, NaN, then NaN and 2.0 in the
+    same second, then 1.0 — so ranges cross all-NaN, all-NULL and mixed
+    buckets."""
+    schema = T.StructType(
+        [
+            T.StructField("ts", T.TimestampType(), False),
+            T.StructField("v", T.DoubleType(), True),
+        ]
+    )
+    nan, inf = float("nan"), float("inf")
+    vals = [(0, nan), (1, -inf), (2, None), (3, nan), (4, nan), (4, 2.0), (5, 1.0)]
+    rows = [(datetime(2024, 5, 10, 0, 0, s), v) for s, v in vals]
+    e = WheelEngine(spark, "nantab", spark.createDataFrame(rows, schema), time_column="ts")
+    e.build_index("v")
+    return e
+
+
+def test_min_skips_nan_over_neg_inf(nan_engine):
+    """MIN over {NaN, -inf} is -inf (NaN sorts above +inf); MAX is NaN."""
+    rows = routed_vs_delegate_nan(
+        nan_engine,
+        "SELECT MIN(v) AS mn, MAX(v) AS mx FROM nantab "
+        "WHERE ts >= '2024-05-10 00:00:00' AND ts < '2024-05-10 00:00:02'",
+        "multi_agg",
+    )
+    assert rows == [("-inf", "nan")]
+
+
+@pytest.mark.parametrize(
+    "where",
+    [
+        NAN_R,
+        # all-NaN bucket next to an all-NULL one
+        "ts >= '2024-05-10 00:00:02' AND ts < '2024-05-10 00:00:04'",
+        # merged parts: OR of ranges, hybrid core + upper sliver
+        "(ts >= '2024-05-10 00:00:00' AND ts < '2024-05-10 00:00:01') OR "
+        "(ts >= '2024-05-10 00:00:03' AND ts < '2024-05-10 00:00:04')",
+        "ts >= '2024-05-10 00:00:02' AND ts <= '2024-05-10 00:00:04'",
+    ],
+)
+def test_min_max_nan_order_on_every_combine(nan_engine, where):
+    routed_vs_delegate_nan(
+        nan_engine, f"SELECT MIN(v) AS mn, MAX(v) AS mx, COUNT(v) AS cv FROM nantab WHERE {where}"
+    )
+
+
+def test_min_max_nan_order_grouped(nan_engine):
+    routed_vs_delegate_nan(
+        nan_engine,
+        "SELECT window(ts, '2 seconds').start AS w, MIN(v) AS mn, MAX(v) AS mx "
+        f"FROM nantab WHERE {NAN_R} GROUP BY window(ts, '2 seconds') ORDER BY w",
+        "group_by",
+    )
+
+
+def test_partitioned_star_wheel_max_is_nan(spark):
+    """The star wheel of ``build_partitioned_index`` folds per-key states of
+    one second: a NaN under one key and 1.0 under another must fold to a
+    NaN MAX (and a 1.0 MIN), as Spark's own MAX over the rows."""
+    schema = T.StructType(
+        [
+            T.StructField("ts", T.TimestampType(), False),
+            T.StructField("k", T.StringType(), False),
+            T.StructField("value", T.DoubleType(), True),
+        ]
+    )
+    rows = [
+        (datetime(2024, 5, 10, 0, 0, 0), "a", float("nan")),
+        (datetime(2024, 5, 10, 0, 0, 0), "b", 1.0),
+        (datetime(2024, 5, 10, 0, 0, 1), "a", 2.0),
+    ]
+    e = WheelEngine(spark, "nan_part", spark.createDataFrame(rows, schema), time_column="ts")
+    e.build_partitioned_index("value", partition_by="k")
+    got = routed_vs_delegate_nan(
+        e,
+        "SELECT MAX(value) AS mx, MIN(value) AS mn FROM nan_part "
+        "WHERE ts >= '2024-05-10 00:00:00' AND ts < '2024-05-10 00:00:02'",
+        "multi_agg",
+    )
+    assert got == [("nan", "1.0")]

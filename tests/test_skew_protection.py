@@ -111,3 +111,28 @@ def test_lsh_cap_disabled_restores_full_pairing(spark):
     full = dedup.lsh_candidate_pairs(sig, max_bucket_size=None).count()
     assert capped == 0
     assert full == 20 * 19 // 2
+
+
+def test_lsh_bucket_cap_logs_dropped_buckets(spark, caplog):
+    """The skew valve reports what it dropped through ``logging`` (one
+    WARNING record on the dedup module's logger), not on stderr."""
+    df = spark.createDataFrame(
+        [(i, "identical text body for every single document here") for i in range(8)],
+        "doc_id long, text string",
+    )
+    sig = dedup.with_minhash_signature(df)
+    with caplog.at_level("WARNING", logger=dedup.__name__):
+        dedup.lsh_candidate_pairs(sig, max_bucket_size=5)
+    recs = [r for r in caplog.records if r.name == dedup.__name__]
+    assert len(recs) == 1
+    assert recs[0].levelname == "WARNING"
+    # every band of 8 identical docs is one over-cap bucket
+    assert recs[0].getMessage() == (
+        f"lsh_candidate_pairs: dropped {dedup.MINHASH_BANDS} bucket(s) "
+        "over max_bucket_size=5"
+    )
+    caplog.clear()
+    with caplog.at_level("WARNING", logger=dedup.__name__):
+        dedup.lsh_candidate_pairs(sig, max_bucket_size=None)
+        dedup.lsh_candidate_pairs(sig, max_bucket_size=100)
+    assert not [r for r in caplog.records if r.name == dedup.__name__]
