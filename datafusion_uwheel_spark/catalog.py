@@ -12,22 +12,14 @@ surface keeps working across tables.
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import DataFrame, SparkSession
 
 from .engine import ParseMemo, WheelEngine, _rows
-from .plans import router
-from .plans.router import Answer, RouteDecision
+from .plans import cte_eval, router
+from .plans.router import EMPTY, Answer, RouteDecision
 from .plans.sqlparse import ParseError, parse_select, split_with_ctes
 
 __all__ = ["WheelCatalog"]
-
-#: Monotonic suffix for routed-CTE temp views — keeps concurrent catalogs
-#: (or re-entrant .sql calls) from clobbering each other's views; each
-#: ``next`` is one atomic step, so two threads never draw the same name.
-_CTE_VIEW_SEQ = itertools.count(1)
-
 
 class WheelCatalog:
     def __init__(self, spark: SparkSession):
@@ -35,9 +27,6 @@ class WheelCatalog:
         self.engines: dict[str, WheelEngine] = {}
         self.sim_engines: dict[str, object] = {}
         self.last_route: RouteDecision | None = None
-        #: query text → splice snapshot (parts/views/rewritten + the
-        #: owning engines' epochs); see ``_route_ctes``.
-        self._cte_splice_memo: dict[str, dict] = {}
         #: The catalog's dispatch parse, memoized like the engines' (it
         #: survives index mutations — parses depend on text alone); the
         #: engine reuses it, so the direct path parses once.
@@ -135,99 +124,60 @@ class WheelCatalog:
         return _rows(got.names, got.rows) if isinstance(got, Answer) else got.collect()
 
     def _route_ctes(self, query: str) -> Answer | DataFrame | None:
-        """Wheel-answer the routable CTEs of a ``WITH`` query: the spliced
-        DataFrame, or ``None`` if the query isn't a splittable WITH or no
-        CTE routed (caller then delegates the original text untouched).
+        """Wheel-answer the routable CTEs of a ``WITH`` query: the answer,
+        or ``None`` if the query isn't a splittable WITH or no CTE routed
+        (caller then delegates the original text untouched).
 
-        When EVERY CTE routes, the outer query is additionally tried
-        against the driver-side evaluator (:mod:`.plans.cte_eval`, r15):
-        the routed answers are tiny driver-resident row lists, so a
-        recognized join/filter/order shape is computed in pure Python and
-        returned as one constant :class:`Answer` — zero Spark jobs —
-        instead of paying the splice's three tiny jobs (scalar subquery,
-        broadcast build, final collect; measured at ~1 s of fixed scheduling
-        cost on a contended box for a 24-row answer). Unrecognized shapes splice
-        exactly as before. ``detail['sql']`` always carries the spliced
-        text (with live temp views) so floor probes can still price the
-        splice; ``detail['evaluated']`` says which path answered."""
+        Each CTE body whose table has an engine routes through that
+        engine's :meth:`~.engine.WheelEngine._route` once per call — the
+        one answer memo, whose epoch check retires an entry when its
+        indexes mutate, so a body whose table gains an engine routes on
+        the next call and a merged batch gets a fresh answer. A routed
+        body is spliced back in as its entry's temp view (a door form of
+        the memo entry, registered once per entry), so a repeated text
+        registers no new view.
+
+        When EVERY CTE routes, the outer query goes to the driver-side
+        evaluator (:mod:`.plans.cte_eval`) over the entries' answers: a
+        recognized join/filter/order shape comes back as one constant
+        :class:`Answer` — zero Spark jobs — instead of the splice's three
+        tiny jobs (scalar subquery, broadcast build, final collect).
+        Unrecognized shapes run the spliced text. ``detail['sql']`` always
+        carries the spliced text (with live temp views) so floor probes can
+        still price the splice; ``detail['evaluated']`` says which path
+        answered."""
         try:
             ctes, main = split_with_ctes(query)
         except ParseError:
             return None
-        # Splice memo (r15): the view registration + body routing for a
-        # given query text is invariant while the owning engines and
-        # their index epochs are — repeated dashboard text skips the
-        # per-call temp-view py4j round trips. Answers are NOT memoized
-        # here: each engine's answer memo re-validates its epoch per call.
-        memo = self._cte_splice_memo.get(query)
-        if memo is not None and all(
-            self.engines.get(t) is e and (e is None or e.index_epoch == ep)
-            for t, e, ep in memo["engines"]
-        ):
-            parts = memo["parts"]
-            routed = memo["routed"]
-            delegated = memo["delegated"]
-            routed_bodies = memo["routed_bodies"]
-            rewritten = memo["rewritten"]
-        else:
-            parts = []
-            routed = {}
-            delegated = []
-            routed_bodies = []  # (cte_name, body, engine)
-            engines_snapshot = []
-            for name, body in ctes:
-                eng = None
-                table = None
-                try:
-                    parsed = parse_select(body, self._parse_memo)
-                    table = parsed.table.lower()
-                    eng = self.engines.get(table)
-                except ParseError:
-                    pass
-                if eng is not None:
-                    decision, entry = eng._route(body, parsed)
-                    if entry is not None:
-                        view = f"__uw_cte_{next(_CTE_VIEW_SEQ)}"
-                        eng._df_of(entry).createOrReplaceTempView(view)
-                        # Swap only the body: the CTE keeps its name, so the
-                        # main query text never needs identifier rewriting.
-                        parts.append(f"{name} AS (SELECT * FROM {view})")
-                        routed[name] = decision.kind
-                        routed_bodies.append((name, body, eng))
-                        engines_snapshot.append((table, eng, eng.index_epoch))
-                        continue
+        parts, routed, delegated, answers = [], {}, [], {}
+        for name, body in ctes:
+            eng = entry = None
+            try:
+                parsed = parse_select(body, self._parse_memo)
+                eng = self.engines.get(parsed.table.lower())
+            except ParseError:
+                pass
+            if eng is not None:
+                decision, entry = eng._route(body, parsed)
+                eng.last_route = decision
+            if entry is None:
                 delegated.append(name)
                 parts.append(f"{name} AS ({body})")
-                if table is not None:
-                    # pin the absence too: registering an engine for this
-                    # table later must retire the memoized delegated splice
-                    engines_snapshot.append((table, None, None))
-            if not routed:
-                return None
-            rewritten = "WITH " + ", ".join(parts) + " " + main
-            self._cte_splice_memo[query] = {
-                "engines": engines_snapshot,
-                "parts": parts,
-                "routed": routed,
-                "delegated": delegated,
-                "routed_bodies": routed_bodies,
-                "rewritten": rewritten,
-            }
-            if len(self._cte_splice_memo) > 64:  # bounded, FIFO-ish
-                self._cte_splice_memo.pop(next(iter(self._cte_splice_memo)))
-        routed_data: dict[str, tuple] = {}
-        for name, body, eng in routed_bodies:
-            ans = eng.routed_answer(body)
-            if ans is not None:
-                routed_data[name] = ans
+                continue
+            # Swap only the body: the CTE keeps its name, so the main query
+            # text never needs identifier rewriting.
+            parts.append(f"{name} AS (SELECT * FROM {eng._view_of(entry)})")
+            routed[name] = decision.kind
+            if entry.answer is not EMPTY:
+                answers[name] = entry.answer
+        if not routed:
+            return None
+        rewritten = "WITH " + ", ".join(parts) + " " + main
         detail = {"routed": routed, "delegated": delegated, "sql": rewritten}
-        if len(routed_data) == len(ctes):
-            from .plans.cte_eval import evaluate_outer, parse_outer
-
-            spec = parse_outer(main)
-            ev = (
-                evaluate_outer(spec, routed_data) if spec is not None else None
-            )
+        if len(answers) == len(ctes):
+            spec = cte_eval.parse_outer(main)
+            ev = None if spec is None else cte_eval.evaluate_outer(spec, answers)
             if ev is not None:
                 detail["evaluated"] = "driver"
                 self.last_route = RouteDecision("cte_rewrite", detail=detail)

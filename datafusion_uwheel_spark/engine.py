@@ -20,6 +20,7 @@ windows, set ops, …) with zero custom code (SURVEY.md §2.2).
 
 from __future__ import annotations
 
+import itertools
 from collections import OrderedDict
 
 from pyspark.sql import Column, DataFrame, Row, SparkSession
@@ -139,9 +140,10 @@ class _Routed:
     """One answer-memo entry: the index epoch it was routed at, the
     :class:`RouteDecision`, the router's answer (an ``Answer`` or
     :data:`EMPTY`), and the door forms built from it on first use — the
-    ``sql()`` DataFrame and the ``sql_rows()`` Row list."""
+    ``sql()`` DataFrame, the ``sql_rows()`` Row list and the temp view a
+    spliced CTE reads it by."""
 
-    __slots__ = ("epoch", "decision", "answer", "df", "rows")
+    __slots__ = ("epoch", "decision", "answer", "df", "rows", "view")
 
     def __init__(self, epoch: int, decision: RouteDecision, answer):
         self.epoch = epoch
@@ -149,6 +151,13 @@ class _Routed:
         self.answer = answer
         self.df = None
         self.rows = None
+        self.view = None
+
+
+#: Monotonic suffix for routed-CTE temp views — keeps engines and
+#: catalogs from clobbering each other's views; each ``next`` is one
+#: atomic step, so two threads never draw the same name.
+_CTE_VIEW_SEQ = itertools.count(1)
 
 
 def _bound_sec(x, default) -> int:
@@ -1177,6 +1186,16 @@ class WheelEngine:
             entry.rows = [] if ans is EMPTY else _rows(ans.names, ans.rows)
         return list(entry.rows)
 
+    def _view_of(self, entry: _Routed) -> str:
+        """The name of a temp view over the entry's DataFrame, registered
+        once per entry: a spliced ``WITH`` text reads a routed CTE body
+        through it, and a repeated text registers no new view."""
+        if entry.view is None:
+            view = f"__uw_cte_{next(_CTE_VIEW_SEQ)}"
+            self._df_of(entry).createOrReplaceTempView(view)
+            entry.view = view
+        return entry.view
+
     def sql(self, query: str) -> DataFrame:
         """Route-or-delegate, the engine's main entry point (§3.1).
 
@@ -1217,9 +1236,8 @@ class WheelEngine:
         ``None`` (delegates, parse failures, and scan-pruning rewrites that
         carry a full table schema all return ``None`` — the caller keeps
         its own fallback). The form of :meth:`sql_rows` that keeps the SQL
-        types next to the values; used by the catalog to evaluate a
-        routed-CTE outer query driver-side (r15). ``last_route`` records
-        the decision exactly as :meth:`sql_rows` would."""
+        types next to the values. ``last_route`` records the decision
+        exactly as :meth:`sql_rows` would."""
         decision, entry = self._route(query)
         self.last_route = decision
         if entry is None or entry.answer is EMPTY:

@@ -992,7 +992,9 @@ class WheelIndex:
             elif combine == "min":
                 np.minimum.at(out, new_pos, new)
             else:
-                np.maximum.at(out, new_pos, new)
+                # a NaN state wins MAX, as in Spark; it is no invalid value
+                with np.errstate(invalid="ignore"):
+                    np.maximum.at(out, new_pos, new)
             return out
 
         new_cnt = scatter(self.cnt, cnt, 0, "add")
@@ -1091,7 +1093,9 @@ class WheelIndex:
             elif combine == "min":
                 np.minimum.at(out, new_pos, new)
             else:
-                np.maximum.at(out, new_pos, new)
+                # a NaN state wins MAX, as in Spark; it is no invalid value
+                with np.errstate(invalid="ignore"):
+                    np.maximum.at(out, new_pos, new)
             return out
 
         vdtype = np.int64 if self.is_integral else np.float64

@@ -1,33 +1,38 @@
 """Driver-side evaluation of a routed-CTE ``WITH`` query's outer SELECT.
 
 When every CTE of a ``WITH`` query routes, each answer is already a
-driver-resident row list (the router's capture channel) and the remaining
-work is a relational expression over a handful of tiny constant relations.
-The r14 splice still handed that expression to Spark: three tiny jobs
-(scalar subquery, broadcast build, final collect) whose fixed scheduling
-cost dominates the answer by orders of magnitude — the bench's routed
-``uw_cte_join`` row measured 0.93 s against its own splice floor of 1.20 s
-and vanilla's 1.05 s on the driver's box, a 1.13× margin for the one
-"wheel-accelerated" family with no decisive win (r14 verdict #1). This
-module evaluates a NARROW outer-query grammar in pure Python over the
-routed answers — the same thesis as the router's constant answers,
-extended to the one multi-table shape the CTE splicer creates — and
-returns ``None`` for anything it does not recognize, so the caller falls
-back to the Spark splice and coverage is never lost, only the job floor.
+driver-resident row list (the route memo's :class:`~.router.Answer`) and
+the remaining work is a relational expression over a handful of tiny
+constant relations. Spliced into Spark, that expression costs three tiny
+jobs (scalar subquery, broadcast build, final collect) whose fixed
+scheduling cost dominates the answer by orders of magnitude. This module
+evaluates a NARROW outer-query grammar in pure Python over the routed
+answers — the same thesis as the router's constant answers, extended to
+the one multi-table shape the CTE splicer creates — and returns ``None``
+for anything it does not recognize, so the caller falls back to the Spark
+splice and coverage is never lost, only the job floor.
 
-Soundness discipline (mirrors ``sqlparse``): every construct the grammar
-accepts is evaluated with Spark's exact semantics —
+The module owns the grammar and nothing it shares with the router:
 
-* µs-exact TIMESTAMP ± day-time INTERVAL arithmetic (UTC session, no DST);
-* AVG/SUM over a LocalRelation accumulate doubles in row order, exactly
-  the single-partition left-fold Spark's ``Average``/``Sum`` perform;
-* BIGINT-vs-DOUBLE comparisons coerce the integer side to double, like
-  Catalyst's type coercion (Python's exact int/float compare would differ
-  past 2^53);
-* ASC sorts NULLS FIRST, DESC sorts NULLS LAST (Spark defaults); explicit
-  NULLS FIRST/LAST never parses (token left over → fallback);
-* a JOIN result is only returned when the ORDER BY key tuples are UNIQUE —
-  otherwise Spark's tie order is not deterministic and the splice decides.
+* lexing and parsing run on :mod:`.sqlparse` (``_tokenize``, ``_Parser``),
+  interval units on :func:`.sqlparse.parse_interval_seconds` and numeric
+  literals on :func:`.sqlparse.number_value`;
+* WHERE compares through the router's one typed comparison
+  (:func:`.router._compare`, HAVING's too): NULL is unknown, a double
+  side makes both doubles with NaN greater than every other value,
+  integers compare exactly;
+* ORDER BY sorts through the router's row sort (:func:`.router._sort_rows`):
+  ASC puts NULL first and NaN last, DESC the reverse; explicit NULLS
+  FIRST/LAST never parses;
+* scalar-subquery MIN/MAX fold with :func:`..operators.lookup._extreme`,
+  Spark's float order.
+
+What it computes itself follows Spark exactly: µs-exact TIMESTAMP ±
+day-time INTERVAL arithmetic (UTC session, no DST); AVG/SUM over a
+LocalRelation accumulate doubles in row order, the single-partition left
+fold Spark's ``Average``/``Sum`` perform; and a result is only returned
+when the ORDER BY key tuples are UNIQUE — otherwise Spark's tie order is
+not deterministic and the splice decides.
 
 Calendar intervals (MONTH/YEAR), expressions in the select list, outer
 joins, more than two relations, GROUP BY/HAVING/LIMIT, and any token the
@@ -36,46 +41,25 @@ grammar does not consume all fall back.
 
 from __future__ import annotations
 
-import re
 from dataclasses import dataclass
+from datetime import timedelta
+from functools import lru_cache, reduce
+
+from ..operators.lookup import _extreme
+from .router import _compare, _sort_key, _sort_rows
+from .sqlparse import (
+    ParseError,
+    _Parser,
+    _tokenize,
+    number_value,
+    parse_interval_seconds,
+)
 
 __all__ = ["parse_outer", "evaluate_outer"]
 
-# Local tokenizer: sqlparse's regex without ``+``/``-`` punctuation cannot
-# lex ``cur.bucket - INTERVAL 1 DAY`` (a bare ``-`` is only ever part of a
-# numeric literal there). Number wins over punct at a ``-digit`` run, so
-# ``- 1`` lexes as (punct -, number 1) and ``-1`` as number -1 — both
-# shapes the grammar below treats identically (signed literals never
-# appear after the operators we accept).
-_TOKEN_RE = re.compile(
-    r"""
-    \s*(?:
-        (?P<string>'(?:[^']|'')*')
-      | (?P<number>-?\d+(?:\.\d+)?(?:[eE][+-]?\d+)?)
-      | (?P<ident>[A-Za-z_][A-Za-z_0-9]*)
-      | (?P<op><=|>=|<>|!=|=|<|>)
-      | (?P<punct>[(),.*+\-])
-    )
-    """,
-    re.VERBOSE | re.ASCII,
-)
-
-#: Day-time interval units (exact second widths — a TIMESTAMP plus any of
-#: these is exact µs arithmetic in the UTC-pinned session). MONTH/YEAR are
-#: calendar intervals and never parse here.
-_INTERVAL_SECS = {
-    "second": 1,
-    "minute": 60,
-    "hour": 3600,
-    "day": 86400,
-    "week": 604800,
-}
-
 _INTEGRAL = {"BIGINT", "INT", "SMALLINT", "TINYINT"}
-_FLOATING = {"DOUBLE", "FLOAT"}
-_ORDERABLE = _INTEGRAL | _FLOATING | {"TIMESTAMP", "STRING"}
-
-_CMP_OPS = {"=", "!=", "<>", "<", "<=", ">", ">="}
+_NUMERIC = _INTEGRAL | {"DOUBLE", "FLOAT"}
+_ORDERABLE = _NUMERIC | {"TIMESTAMP", "STRING"}
 
 _SUB_FUNCS = {"avg", "sum", "min", "max", "count"}
 
@@ -113,7 +97,7 @@ class ScalarSub:
 class WhereCmp:
     left: QRef
     op: str
-    right: object  # ScalarSub | int | float
+    right: object  # ScalarSub | a numeric literal (number_value)
 
 
 @dataclass(frozen=True)
@@ -133,64 +117,7 @@ class OuterSpec:
 
 
 class _Fallback(Exception):
-    """Internal: shape outside the supported subset — caller splices."""
-
-
-class _Cursor:
-    def __init__(self, sql: str):
-        self.toks = []
-        pos = 0
-        s = sql.strip().rstrip(";")
-        while pos < len(s):
-            m = _TOKEN_RE.match(s, pos)
-            if not m or m.end() == pos:
-                if s[pos:].strip() == "":
-                    break
-                raise _Fallback(f"unlexable: {s[pos:pos+20]!r}")
-            pos = m.end()
-            kind = m.lastgroup
-            value = m.group(kind)
-            if kind == "string":
-                value = value[1:-1].replace("''", "'")
-            self.toks.append((kind, value))
-        self.i = 0
-
-    def peek(self, ahead: int = 0):
-        j = self.i + ahead
-        return self.toks[j] if j < len(self.toks) else (None, None)
-
-    def next(self):
-        t = self.peek()
-        self.i += 1
-        return t
-
-    def accept_kw(self, *words: str) -> bool:
-        """Consume the keyword sequence if present (case-insensitive)."""
-        for k, w in enumerate(words):
-            kind, val = self.peek(k)
-            if kind != "ident" or val.lower() != w:
-                return False
-        self.i += len(words)
-        return True
-
-    def expect_kw(self, *words: str) -> None:
-        if not self.accept_kw(*words):
-            raise _Fallback(f"expected {' '.join(words).upper()}")
-
-    def ident(self) -> str:
-        kind, val = self.next()
-        if kind != "ident":
-            raise _Fallback(f"expected identifier, got {val!r}")
-        return val
-
-    def punct(self, ch: str) -> None:
-        kind, val = self.next()
-        if kind != "punct" or val != ch:
-            raise _Fallback(f"expected {ch!r}")
-
-    @property
-    def done(self) -> bool:
-        return self.i >= len(self.toks)
+    """Internal: evaluation outside the supported subset — caller splices."""
 
 
 _KEYWORDS = {
@@ -200,98 +127,121 @@ _KEYWORDS = {
 }
 
 
-def _qref(cur: _Cursor, require_rel: bool) -> QRef:
-    a = cur.ident()
-    if a.lower() in _KEYWORDS:
-        raise _Fallback(f"keyword where column expected: {a!r}")
-    if cur.peek() == ("punct", "."):
-        cur.next()
-        b = cur.ident()
-        return QRef(a, b)
-    if require_rel:
-        raise _Fallback(f"unqualified column {a!r} in join form")
-    return QRef(None, a)
+class _OuterParser(_Parser):
+    """The outer-query grammar on :class:`.sqlparse._Parser`'s token
+    helpers; every miss raises :class:`.sqlparse.ParseError`."""
 
+    def name(self) -> str:
+        """An identifier that is not a keyword of this grammar."""
+        a = self.ident_raw()
+        if a.lower() in _KEYWORDS:
+            raise ParseError(f"keyword where a name is expected: {a!r}")
+        return a
 
-def _interval_us(cur: _Cursor) -> int:
-    """``INTERVAL <n> <unit>`` / ``INTERVAL '<n>' <unit>`` → µs (>0)."""
-    kind, val = cur.next()
-    if kind == "number":
-        if not re.fullmatch(r"\d+", val, re.ASCII):
-            raise _Fallback(f"non-integer interval {val!r}")
-        n = int(val)
-    elif kind == "string":
-        if not re.fullmatch(r"\d+", val.strip(), re.ASCII):
-            raise _Fallback(f"unsupported interval literal {val!r}")
-        n = int(val.strip())
-    else:
-        raise _Fallback("expected interval magnitude")
-    unit = cur.ident().lower()
-    u = unit[:-1] if unit.endswith("s") and len(unit) > 1 else unit
-    if u not in _INTERVAL_SECS:
-        raise _Fallback(f"unsupported interval unit {unit!r}")
-    if n <= 0:
-        raise _Fallback("non-positive interval")
-    return n * _INTERVAL_SECS[u] * 1_000_000
+    def qref(self, require_rel: bool) -> QRef:
+        a = self.name()
+        if self.accept_punct("."):
+            return QRef(a, self.ident_raw())
+        if require_rel:
+            raise ParseError(f"unqualified column {a!r} in join form")
+        return QRef(None, a)
 
+    def rel(self) -> tuple:
+        name = self.name()
+        if self.accept_kw("as"):
+            return name, self.ident_raw()
+        t = self.peek()
+        if t is not None and t.kind == "ident" and t.value.lower() not in _KEYWORDS:
+            return name, self.ident_raw()
+        return name, name
 
-def _keyexpr(cur: _Cursor) -> KeyExpr:
-    ref = _qref(cur, require_rel=True)
-    kind, val = cur.peek()
-    if kind == "punct" and val in "+-":
-        cur.next()
-        cur.expect_kw("interval")
-        us = _interval_us(cur)
-        return KeyExpr(ref, us if val == "+" else -us)
-    return KeyExpr(ref, 0)
+    def key(self) -> KeyExpr:
+        """``rel.col [(+|-) INTERVAL <n> <unit>]`` — ``<n>`` a positive
+        integer, bare or quoted, and the unit a day-time one."""
+        ref = self.qref(require_rel=True)
+        sign = 1 if self.accept_punct("+") else -1 if self.accept_punct("-") else 0
+        if not sign:
+            return KeyExpr(ref, 0)
+        self.expect_kw("interval")
+        t = self.next()
+        n = t.value.strip()
+        if t.kind not in ("number", "string") or not (n.isascii() and n.isdigit()):
+            raise ParseError(f"unsupported interval magnitude {t.value!r}")
+        secs = parse_interval_seconds(f"{n} {self.ident_raw()}")
+        return KeyExpr(ref, sign * secs * 1_000_000)
 
-
-def _rel(cur: _Cursor) -> tuple:
-    name = cur.ident()
-    if name.lower() in _KEYWORDS:
-        raise _Fallback(f"keyword where relation expected: {name!r}")
-    kind, val = cur.peek()
-    alias = name
-    if cur.accept_kw("as"):
-        alias = cur.ident()
-    elif kind == "ident" and val.lower() not in _KEYWORDS:
-        alias = cur.ident()
-    return (name, alias)
-
-
-def _scalar_sub(cur: _Cursor) -> ScalarSub:
-    cur.expect_kw("select")
-    fn = cur.ident().lower()
-    if fn not in _SUB_FUNCS:
-        raise _Fallback(f"unsupported subquery aggregate {fn!r}")
-    cur.punct("(")
-    kind, val = cur.peek()
-    if kind == "punct" and val == "*":
-        if fn != "count":
-            raise _Fallback(f"{fn}(*) unsupported")
-        cur.next()
+    def scalar_sub(self) -> ScalarSub:
+        self.expect_kw("select")
+        fn = self.ident_raw().lower()
+        if fn not in _SUB_FUNCS:
+            raise ParseError(f"unsupported subquery aggregate {fn!r}")
+        self.expect_punct("(")
         col = None
-    else:
-        col = cur.ident()
-    cur.punct(")")
-    cur.expect_kw("from")
-    rel = cur.ident()
-    cur.punct(")")
-    return ScalarSub(fn, col, rel)
+        if not self.accept_punct("*"):
+            col = self.ident_raw()
+        elif fn != "count":
+            raise ParseError(f"{fn}(*) unsupported")
+        self.expect_punct(")")
+        self.expect_kw("from")
+        rel = self.ident_raw()
+        self.expect_punct(")")
+        return ScalarSub(fn, col, rel)
 
+    def where_rhs(self):
+        if self.accept_punct("("):
+            return self.scalar_sub()
+        t = self.next()
+        if t.kind != "number":
+            raise ParseError("unsupported WHERE right-hand side")
+        return number_value(t.value)
 
-def _where_rhs(cur: _Cursor):
-    kind, val = cur.peek()
-    if kind == "number":
-        cur.next()
-        return int(val) if re.fullmatch(r"-?\d+", val, re.ASCII) else float(val)
-    if kind == "punct" and val == "(":
-        cur.next()
-        return _scalar_sub(cur)
-    raise _Fallback("unsupported WHERE right-hand side")
-
-
-from functools import lru_cache
+    def outer(self) -> OuterSpec:
+        self.expect_kw("select")
+        items: list[tuple[QRef, str]] = []
+        while True:
+            ref = self.qref(require_rel=False)
+            items.append((ref, self.ident_raw() if self.accept_kw("as") else ref.col))
+            if not self.accept_punct(","):
+                break
+        self.expect_kw("from")
+        left = self.rel()
+        right = on = None
+        joined = self.accept_kw("inner", "join")
+        if joined == "inner":
+            self.expect_kw("join")
+        if joined:
+            right = self.rel()
+            self.expect_kw("on")
+            k1 = self.key()
+            if self.next() != ("op", "="):
+                raise ParseError("expected = in join condition")
+            on = (k1, self.key())
+        where: list[WhereCmp] = []
+        if self.accept_kw("where"):
+            while True:
+                lref = self.qref(require_rel=right is not None)
+                op = self.next()
+                if op.kind != "op":
+                    raise ParseError(f"unsupported WHERE operator {op.value!r}")
+                where.append(WhereCmp(lref, op.value, self.where_rhs()))
+                if not self.accept_kw("and"):
+                    break
+        order: list[OrderKey] = []
+        if self.accept_kw("order"):
+            self.expect_kw("by")
+            while True:
+                ref = self.qref(require_rel=False)
+                order.append(OrderKey(ref, self.accept_kw("desc", "asc") == "desc"))
+                if not self.accept_punct(","):
+                    break
+        if self.peek() is not None:
+            raise ParseError(f"trailing tokens at {self.peek().value!r}")
+        if right is not None and (any(r.rel is None for r, _ in items) or not order):
+            # every select item must be qualified in the join form, and a
+            # join without a total output order has nondeterministic row
+            # order (uniqueness of the key is checked at eval time)
+            raise ParseError("join form needs qualified selects and ORDER BY")
+        return OuterSpec(tuple(items), left, right, on, tuple(where), tuple(order))
 
 
 @lru_cache(maxsize=256)
@@ -302,81 +252,9 @@ def parse_outer(main: str) -> OuterSpec | None:
     a parse is a pure function of the text (the spec is frozen), and the
     dashboard pattern repeats identical query strings."""
     try:
-        return _parse(main)
-    except _Fallback:
+        return _OuterParser(_tokenize(main)).outer()
+    except Exception:  # ParseError, or a parser bug: the splice answers
         return None
-    except Exception:  # pragma: no cover - any parser bug must fall back
-        return None
-
-
-def _parse(main: str) -> OuterSpec:
-    cur = _Cursor(main)
-    cur.expect_kw("select")
-    joined_form_probe = cur.i  # look ahead later for qualification rules
-    # select list — parse items as (tokens) first; qualification is decided
-    # by the FROM clause, so parse loosely then validate.
-    items: list[tuple[QRef, str]] = []
-    while True:
-        ref = _qref(cur, require_rel=False)
-        out = ref.col
-        if cur.accept_kw("as"):
-            out = cur.ident()
-        items.append((ref, out))
-        kind, val = cur.peek()
-        if kind == "punct" and val == ",":
-            cur.next()
-            continue
-        break
-    cur.expect_kw("from")
-    left = _rel(cur)
-    right = None
-    on = None
-    if cur.accept_kw("inner", "join") or cur.accept_kw("join"):
-        right = _rel(cur)
-        cur.expect_kw("on")
-        k1 = _keyexpr(cur)
-        if cur.next() != ("op", "="):
-            raise _Fallback("expected = in join condition")
-        k2 = _keyexpr(cur)
-        on = (k1, k2)
-    where: list[WhereCmp] = []
-    if cur.accept_kw("where"):
-        while True:
-            lref = _qref(cur, require_rel=right is not None)
-            kind, op = cur.next()
-            if kind != "op" or op not in _CMP_OPS:
-                raise _Fallback(f"unsupported WHERE operator {op!r}")
-            rhs = _where_rhs(cur)
-            where.append(WhereCmp(lref, op, rhs))
-            if not cur.accept_kw("and"):
-                break
-    order: list[OrderKey] = []
-    if cur.accept_kw("order", "by"):
-        while True:
-            ref = _qref(cur, require_rel=False)
-            desc = False
-            if cur.accept_kw("desc"):
-                desc = True
-            else:
-                cur.accept_kw("asc")
-            order.append(OrderKey(ref, desc))
-            kind, val = cur.peek()
-            if kind == "punct" and val == ",":
-                cur.next()
-                continue
-            break
-    if not cur.done:
-        raise _Fallback(f"trailing tokens at {cur.peek()!r}")
-    if right is not None:
-        # every select item must be qualified in the join form, and a join
-        # without a total output order has nondeterministic row order —
-        # require ORDER BY (uniqueness of the key is checked at eval time).
-        if any(r.rel is None for r, _ in items) or not order:
-            raise _Fallback("join form needs qualified selects and ORDER BY")
-    del joined_form_probe
-    return OuterSpec(
-        tuple(items), left, right, on, tuple(where), tuple(order)
-    )
 
 
 # ---------------------------------------------------------------- evaluate
@@ -403,10 +281,8 @@ def _sub_value(sub: ScalarSub, data: dict) -> tuple[object, str]:
     if t not in _ORDERABLE or t == "STRING":
         raise _Fallback(f"subquery {sub.func} over {t}")
     if sub.func in ("min", "max"):
-        nn = [v for v in vals if v is not None]
-        if not nn:
-            return None, t
-        return (min(nn) if sub.func == "min" else max(nn)), t
+        nan_wins = sub.func == "max"
+        return reduce(lambda m, v: _extreme(m, v, nan_wins), vals, None), t
     if t == "TIMESTAMP":
         raise _Fallback("avg/sum over TIMESTAMP")
     if sub.func == "avg":
@@ -441,34 +317,6 @@ def _sub_value(sub: ScalarSub, data: dict) -> tuple[object, str]:
     return (s if seen else None), "DOUBLE"
 
 
-def _cmp(v, tl: str, r, tr: str, op: str) -> bool:
-    """Spark comparison semantics: NULL → not kept; mixed int/float
-    coerces the integer side to double (Catalyst numeric promotion)."""
-    if v is None or r is None:
-        return False
-    num_l, num_r = tl in _INTEGRAL | _FLOATING, tr in _INTEGRAL | _FLOATING
-    if num_l and num_r:
-        if tl in _FLOATING or tr in _FLOATING:
-            v, r = float(v), float(r)
-        else:
-            v, r = int(v), int(r)
-    elif tl == "TIMESTAMP" and tr == "TIMESTAMP":
-        pass
-    else:
-        raise _Fallback(f"comparison between {tl} and {tr}")
-    if op == "=":
-        return v == r
-    if op in ("!=", "<>"):
-        return v != r
-    if op == "<":
-        return v < r
-    if op == "<=":
-        return v <= r
-    if op == ">":
-        return v > r
-    return v >= r
-
-
 def _key_value(v, t: str, offset_us: int):
     """Join-key value with the interval offset applied (µs-exact)."""
     if v is None:
@@ -476,8 +324,6 @@ def _key_value(v, t: str, offset_us: int):
     if offset_us:
         if t != "TIMESTAMP":
             raise _Fallback("interval offset on a non-TIMESTAMP key")
-        from datetime import timedelta
-
         return v + timedelta(microseconds=offset_us)
     return v
 
@@ -490,9 +336,7 @@ def evaluate_outer(spec: OuterSpec, data: dict) -> tuple | None:
     are plain tuples in the exact order Spark would collect."""
     try:
         return _evaluate(spec, data)
-    except _Fallback:
-        return None
-    except Exception:  # pragma: no cover - any evaluator bug must fall back
+    except Exception:  # _Fallback, or an evaluator bug: the splice answers
         return None
 
 
@@ -562,15 +406,12 @@ def _evaluate(spec: OuterSpec, data: dict) -> tuple:
         rel, idx, t = field(w.left)
         if isinstance(w.right, ScalarSub):
             rv, rt = _sub_value(w.right, data)
-        elif isinstance(w.right, bool):  # guard: bools are ints in Python
-            raise _Fallback("boolean literal")
-        elif isinstance(w.right, int):
-            rv, rt = w.right, "BIGINT"
-        else:
-            rv, rt = float(w.right), "DOUBLE"
-        combined = [
-            c for c in combined if _cmp(c[rel][idx], t, rv, rt, w.op)
-        ]
+            ok = t == rt == "TIMESTAMP" or (t in _NUMERIC and rt in _NUMERIC)
+        else:  # a numeric literal
+            rv, ok = w.right, t in _NUMERIC
+        if not ok:
+            raise _Fallback(f"comparison of {t} with {w.right!r}")
+        combined = [c for c in combined if _compare(c[rel][idx], w.op, rv)]
 
     # ------------------------------------------------------- projection
     out_names: list[str] = []
@@ -587,45 +428,28 @@ def _evaluate(spec: OuterSpec, data: dict) -> tuple:
 
     # ---------------------------------------------------------- order by
     if spec.order:
-        keys = []
+        # an order key names an output column (a bare name matching exactly
+        # one) or a source column of either relation; source keys ride
+        # past the output columns while the rows sort
+        n = len(out_names)
+        keys, extra = [], []
         for ok in spec.order:
-            # an order key may name an output column (post-projection) or
-            # a source column of either relation
-            oi = [
-                i for i, n in enumerate(out_names)
-                if n.lower() == ok.ref.col.lower()
-                and (ok.ref.rel is None or spec.select[i][0].rel == ok.ref.rel)
-            ]
+            oi = [i for i, name in enumerate(out_names) if name.lower() == ok.ref.col.lower()]
             if ok.ref.rel is None and len(oi) == 1:
-                keys.append((("out", oi[0]), ok.desc))
+                keys.append((oi[0], not ok.desc))
             else:
-                rel, idx, t = field(ok.ref)
-                del t
-                keys.append((("src", rel, idx), ok.desc))
-
-        def keyval(pos: int, c_row) -> object:
-            spec_k = keys[pos][0]
-            if spec_k[0] == "out":
-                return c_row[1][spec_k[1]]
-            return c_row[0][spec_k[1]][spec_k[2]]
-
-        tagged = list(zip(combined, rows))
-        for pos in range(len(keys) - 1, -1, -1):
-            desc = keys[pos][1]
-            tagged.sort(
-                key=lambda cr: (
-                    (v := keyval(pos, cr)) is not None,
-                    0 if v is None else v,
-                ),
-                reverse=desc,
-            )
+                rel, idx, _t = field(ok.ref)
+                keys.append((n + len(extra), not ok.desc))
+                extra.append((rel, idx))
+        wide = [
+            row + tuple(c[rel][idx] for rel, idx in extra)
+            for row, c in zip(rows, combined)
+        ]
+        _sort_rows(wide, keys)
         # Spark's tie order is nondeterministic → only answer when the
         # full ORDER BY key is unique per row
-        seen_keys = [
-            tuple(keyval(p, cr) for p in range(len(keys))) for cr in tagged
-        ]
-        if len(set(seen_keys)) != len(seen_keys):
+        if len({tuple(_sort_key(r[i]) for i, _ in keys) for r in wide}) != len(wide):
             raise _Fallback("non-unique ORDER BY keys")
-        rows = [r for _, r in tagged]
+        rows = [r[:n] for r in wide]
 
     return out_names, out_types, rows

@@ -45,6 +45,7 @@ pruned to at most two bucket widths.
 
 from __future__ import annotations
 
+import operator
 from dataclasses import dataclass, field
 from typing import TYPE_CHECKING, Any, NamedTuple
 
@@ -161,47 +162,53 @@ def _agg_sql_type(agg: AggSpec, wheel: WheelIndex) -> str:
     return "DOUBLE"
 
 
-def _having_holds(val, op: str, lit: float) -> bool:
-    """SQL three-valued HAVING: NULL comparisons are unknown → filtered out."""
-    if val is None:
+def _sort_key(v):
+    """One value's place in Spark's ascending order: NULL first, NaN
+    greater than every other double (a bare Python sort leaves NaN rows
+    wherever comparison found them)."""
+    nan = isinstance(v, float) and v != v
+    return (v is not None, nan, 0.0 if nan else v)
+
+
+_OPS = {
+    "=": operator.eq, "!=": operator.ne, "<>": operator.ne,
+    "<": operator.lt, "<=": operator.le, ">": operator.gt, ">=": operator.ge,
+}
+
+
+def _compare(a, op: str, b) -> bool:
+    """Spark's ``a op b`` over two numbers or two timestamps — the one
+    comparison behind HAVING and the CTE outer WHERE. NULL is unknown (the
+    row is dropped); against a double, both sides compare as doubles,
+    where NaN equals NaN and is greater than every other value; integers
+    (and exact decimal literals) compare exactly."""
+    if a is None or b is None:
         return False
-    if op == ">":
-        return val > lit
-    if op == ">=":
-        return val >= lit
-    if op == "<":
-        return val < lit
-    if op == "<=":
-        return val <= lit
-    if op == "=":
-        return val == lit
-    return val != lit
+    if isinstance(a, float) or isinstance(b, float):
+        a, b = float(a), float(b)
+        if a != a or b != b:
+            a, b = _sort_key(a), _sort_key(b)
+    return _OPS[op](a, b)
+
+
+def _sort_rows(rows: list, keys) -> None:
+    """Sort ``rows`` in place by ``(position, ascending)`` keys in Spark's
+    default order — ASC puts NULL first and NaN last, DESC the reverse —
+    composing the keys through stable sorts in reverse key order."""
+    for i, asc in reversed(keys):
+        rows.sort(key=lambda r: _sort_key(r[i]), reverse=not asc)
 
 
 def _order_limit_rows(
     q, names: list[str], rows: list[tuple], ascending_cols=()
 ) -> list[tuple]:
-    """Apply the query's ORDER BY / LIMIT to constant result rows.
-
-    NULL placement matches Spark's defaults (ASC → nulls first, DESC →
-    nulls last) via the ``(is_not_null, is_nan, value)`` sort key —
-    Spark also orders NaN GREATER than every other double (ASC → NaN
-    last, DESC → NaN first, before nulls' placement), where a bare
-    Python tuple sort would leave NaN rows wherever comparison found
-    them. Multi-key sorts compose through stable sorting in reverse key
-    order. ``ascending_cols`` are column positions the rows already
-    ascend in with no ties (the bucket of a one-axis group-by): an ORDER
-    BY led by one of them, ascending, is already satisfied."""
-
-    def key_of(v):
-        nan = isinstance(v, float) and v != v
-        return (v is not None, nan, 0.0 if nan else v)
-
+    """Apply the query's ORDER BY / LIMIT to constant result rows
+    (:func:`_sort_rows`). ``ascending_cols`` are column positions the rows
+    already ascend in with no ties (the bucket of a one-axis group-by): an
+    ORDER BY led by one of them, ascending, is already satisfied."""
     lead = q.order_by[0] if q.order_by else None
     if not (lead and lead[1] and names.index(lead[0]) in ascending_cols):
-        for col, asc in reversed(q.order_by):
-            i = names.index(col)
-            rows.sort(key=lambda r: key_of(r[i]), reverse=not asc)
+        _sort_rows(rows, [(names.index(col), asc) for col, asc in q.order_by])
     if q.limit is not None:
         rows = rows[: q.limit]
     return rows
@@ -461,7 +468,7 @@ def _having_keep(q, having_cols) -> list[int] | None:
     conds = [(col, op, lit) for col, (_, op, lit) in zip(having_cols, q.having)]
     n = len(having_cols[0])
     return [
-        k for k in range(n) if all(_having_holds(c[k], op, lit) for c, op, lit in conds)
+        k for k in range(n) if all(_compare(c[k], op, lit) for c, op, lit in conds)
     ]
 
 
@@ -1149,7 +1156,7 @@ class Router:
             if vals[-1] == 0:
                 continue  # no rows for this key in range → no group
             if not all(
-                _having_holds(val, op, lit)
+                _compare(val, op, lit)
                 for val, (_spec, op, lit) in zip(vals[n:], q.having)
             ):
                 continue

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
+from decimal import Decimal
 from typing import NamedTuple
 
 __all__ = [
@@ -37,6 +38,7 @@ __all__ = [
     "prepare",
     "Template",
     "parse_interval_seconds",
+    "number_value",
     "split_with_ctes",
 ]
 
@@ -77,14 +79,17 @@ APPROX_AGG_FUNCS = {"approx_count_distinct", "percentile_approx", "approx_percen
 #: grammar. Whitespace matches nothing, so ``findall`` skips it. ASCII
 #: mode: a number is ASCII digits only, as in Spark's lexer (``\d`` would
 #: take ``٣٠`` too, which Spark refuses), and any non-ASCII character is a
-#: stray one, so such texts delegate.
+#: stray one, so such texts delegate. ``+`` and ``-`` are punctuation for
+#: the CTE outer grammar's interval arithmetic (a number still takes a
+#: ``-`` right before its digits); the SELECT grammar accepts neither, so a
+#: text using them as operators raises :class:`ParseError`.
 _TOKEN_RE = re.compile(
     r"""
         ('[^']*(?:''[^']*)*')
       | (-?\d+(?:\.\d+)?(?:[eE][+-]?\d+)?)
       | ([A-Za-z_][A-Za-z_0-9]*)
       | (<=|>=|<>|!=|=|<|>)
-      | ([(),.*])
+      | ([(),.*+\-])
       | (\S)
     """,
     re.VERBOSE | re.ASCII,
@@ -93,6 +98,16 @@ _TOKEN_RE = re.compile(
 
 #: Largest literal Spark types as INT (LIMIT takes nothing wider).
 _INT_MAX = 2**31 - 1
+
+
+def number_value(text: str):
+    """A number token's value as Spark types the literal: an integer is an
+    exact ``int``, a decimal (a point, no exponent) an exact
+    :class:`~decimal.Decimal`, and one with an exponent a ``float`` (a
+    DOUBLE literal)."""
+    if "e" in text or "E" in text:
+        return float(text)
+    return Decimal(text) if "." in text else int(text)
 
 
 class Token(NamedTuple):
@@ -287,10 +302,11 @@ class ParsedQuery:
     #: accepted, so the router can sort its constant rows identically.
     order_by: list[tuple[str, bool]] = field(default_factory=list)
     limit: int | None = None
-    #: HAVING conjuncts: (AggSpec, op, numeric literal). The aggregate need
-    #: not appear in the select list — the router evaluates it per bucket
-    #: from the same wheel states.
-    having: list[tuple[AggSpec, str, float]] = field(default_factory=list)
+    #: HAVING conjuncts: (AggSpec, op, numeric literal as
+    #: :func:`number_value` types it). The aggregate need not appear in the
+    #: select list — the router evaluates it per bucket from the same wheel
+    #: states.
+    having: list[tuple[AggSpec, str, object]] = field(default_factory=list)
     #: OR-of-ranges form: ``WHERE (conj) OR (conj) [OR ...]`` — each branch
     #: a parenthesized conjunction. Mutually exclusive with ``conjuncts``.
     or_branches: list[list[Comparison]] = field(default_factory=list)
@@ -636,10 +652,12 @@ class _Parser:
         self.expect_punct(")")
         return DateTruncSpec(g.value.lower(), col, None)
 
-    def having_clause(self, items) -> tuple[AggSpec, str, float]:
+    def having_clause(self, items) -> tuple[AggSpec, str, object]:
         """``HAVING agg(col) ⊙ number`` (or an output alias of an aggregate).
         The aggregate may be absent from the select list — it is evaluated
-        from wheel states per bucket."""
+        from wheel states per bucket. The number keeps its literal type
+        (:func:`number_value`): an integer compares exactly with an integral
+        aggregate."""
         t = self.peek()
         if t is None or t.kind != "ident":
             raise ParseError("expected HAVING expression")
@@ -655,14 +673,13 @@ class _Parser:
                 raise ParseError(f"HAVING references non-aggregate: {alias}")
             spec = matches[0]
         op_t = self.next()
-        if op_t.kind != "op" or op_t.value in ("<>",):
-            if op_t.kind != "op":
-                raise ParseError("expected comparison in HAVING")
+        if op_t.kind != "op":
+            raise ParseError("expected comparison in HAVING")
         op = "!=" if op_t.value == "<>" else op_t.value
-        v, k = self.literal()
-        if k != "number":
-            raise ParseError("HAVING literal must be numeric")
-        return spec, op, float(v)
+        t = self.next()
+        if t.kind != "number":
+            raise ParseError("HAVING literal must be a number")
+        return spec, op, number_value(t.value)
 
     def or_of_conjunctions(self) -> list[list[Comparison]]:
         """``( conj ) [OR ( conj )]...`` — each branch parenthesized."""

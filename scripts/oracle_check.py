@@ -12,10 +12,12 @@ from __future__ import annotations
 import math
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# this checkout's package, wherever it lives
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"

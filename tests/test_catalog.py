@@ -198,3 +198,59 @@ def test_adopt_existing_engine(spark, minimal_agg):
         "timestamp >= '2024-05-10 00:00:00' AND timestamp < '2024-05-10 00:00:10'"
     )
     assert cat.last_route.rewritten and rows[0]["n"] == 10
+
+
+def _cte_views(spark) -> set:
+    return {t.name for t in spark.catalog.listTables() if t.name.startswith("__uw_cte_")}
+
+
+def test_cte_views_follow_the_route_memo(spark):
+    """A routed CTE body reads its answer through its route-memo entry's
+    temp view: a repeated text registers no new view, an index mutation
+    (``merge_batch`` bumps the epoch) gets a fresh view and a fresh
+    answer, and a body over a table that gains an engine routes on the
+    next call."""
+    from datafusion_uwheel_spark.streaming.maintenance import StreamingWheelMaintainer
+
+    t0 = datetime(2024, 5, 10)
+    base = spark.createDataFrame(
+        [(t0 + timedelta(seconds=i), float(i)) for i in range(10)], "ts timestamp, v double"
+    )
+    late = spark.createDataFrame([(t0 + timedelta(seconds=3), 100.0)], "ts timestamp, v double")
+    other = spark.createDataFrame([(t0, 7.0)], "ts timestamp, w double")
+    other.createOrReplaceTempView("cte_memo_b")
+    cat = WheelCatalog(spark)
+    eng = cat.register("cte_memo_a", base, time_column="ts")
+    eng.build_index("v")
+    # the outer expression is outside the driver grammar: the text splices
+    q = (
+        "WITH a AS (SELECT SUM(v) AS s FROM cte_memo_a WHERE "
+        "ts >= '2024-05-10 00:00:00' AND ts < '2024-05-10 00:00:10'), "
+        "b AS (SELECT MAX(w) AS m FROM cte_memo_b) "
+        "SELECT a.s + b.m AS total FROM a, b"
+    )
+
+    def ask():
+        total = cat.sql_rows(q)[0]["total"]
+        assert cat.last_route.kind == "cte_rewrite"
+        assert cat.last_route.detail["evaluated"] == "splice"
+        return total, cat.last_route.detail
+
+    total, detail = ask()
+    assert total == 45.0 + 7.0
+    assert list(detail["routed"]) == ["a"] and detail["delegated"] == ["b"]
+    views = _cte_views(spark)
+    total, again = ask()
+    assert total == 52.0 and again["sql"] == detail["sql"]
+    assert _cte_views(spark) == views  # no new view for a repeated text
+
+    StreamingWheelMaintainer(eng).merge_batch(late)
+    total, merged = ask()
+    assert total == 152.0  # the merged row, not the memoized answer
+    assert merged["sql"] != detail["sql"] and len(_cte_views(spark) - views) == 1
+
+    cat.register("cte_memo_b", other, time_column="ts").build_index("w")
+    total, both = ask()
+    assert total == 152.0
+    assert set(both["routed"]) == {"a", "b"} and both["delegated"] == []
+    assert spark.sql(both["sql"]).collect()[0]["total"] == 152.0  # live views

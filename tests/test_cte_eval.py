@@ -97,26 +97,34 @@ def _spark_rows(spark, main, data):
     return [tuple(r) for r in spark.sql(q).collect()]
 
 
+def _reprs(rows):
+    """Rows as per-value ``repr`` tuples: NaN equals NaN, 1 differs from 1.0."""
+    return [tuple(map(repr, r)) for r in rows]
+
+
 def _parity(spark, main, data):
     spec = parse_outer(main)
     assert spec is not None, main
     got = evaluate_outer(spec, data)
     assert got is not None, main
     expect = _spark_rows(spark, main, data)
-    assert got[2] == expect, (main, got[2][:5], expect[:5])
+    assert _reprs(got[2]) == _reprs(expect), (main, got[2][:5], expect[:5])
     return got
 
 
 def _hourly(n, start=BASE, n_null=0, seed=1):
+    """``n`` hourly rows; ``s`` is NaN in hour 5 (Spark orders NaN above
+    every double, and it poisons SUM/AVG)."""
     rng = random.Random(seed)
     rows = []
     for h in range(n):
         cnt = rng.randrange(0, 50)
+        s = round(rng.uniform(-100, 100), 6)
         rows.append(
             (
                 start + timedelta(hours=h),
                 None if h < n_null else cnt,
-                round(rng.uniform(-100, 100), 6),
+                float("nan") if h == 5 else s,
             )
         )
     return _mk(["bucket", "n", "s"], ["TIMESTAMP", "BIGINT", "DOUBLE"], rows)
@@ -260,6 +268,15 @@ def test_single_relation_passthrough_preserves_order(spark):
     got = _parity(spark, main, data)
     assert [r[0] for r in got[2]] == [r[1] for r in data["agg"][2]]
     _parity(spark, "SELECT a.n AS n FROM agg a WHERE a.n > 10 ORDER BY n DESC", data)
+    # NaN through WHERE, the subquery and ORDER BY, both directions
+    for order in ("s DESC", "s"):
+        got = _parity(
+            spark,
+            "SELECT bucket, s FROM agg WHERE s >= (SELECT MIN(s) FROM agg) "
+            f"AND s > -1000 ORDER BY {order}",
+            data,
+        )
+        assert len(got[2]) == 8 and repr(got[2][0 if order == "s DESC" else -1][1]) == "nan"
 
 
 def test_catalog_end_to_end_fast_path(spark, minimal_agg):
@@ -328,3 +345,48 @@ def test_catalog_fast_path_zero_jobs(spark, minimal_agg):
         assert cat.sql_rows(q)[0]["n"] == 5
     after = len(sc.statusTracker().getJobIdsForGroup(None) or [])
     assert after == before
+
+
+# ------------------------------------------- NaN through the catalog door
+@pytest.fixture(scope="module")
+def nan_catalog(spark):
+    """A 4-row hourly table whose second hour is NaN, routed through a
+    catalog and registered as a plain view of the same name."""
+    from datafusion_uwheel_spark.catalog import WheelCatalog
+
+    rows = [(BASE + timedelta(hours=h), v) for h, v in enumerate((1.0, float("nan"), 5.0, 3.0))]
+    df = spark.createDataFrame(rows, "ts timestamp, v double")
+    df.createOrReplaceTempView("cte_nan")
+    cat = WheelCatalog(spark)
+    cat.register("cte_nan", df, time_column="ts").build_index("v")
+    return cat
+
+
+_NAN_CTE = (
+    "WITH a AS (SELECT date_trunc('hour', ts) AS h, SUM(v) AS s FROM cte_nan "
+    "GROUP BY date_trunc('hour', ts)) "
+)
+
+
+@pytest.mark.parametrize(
+    "outer",
+    [
+        "SELECT h, s FROM a WHERE s > 4 ORDER BY h",
+        "SELECT h, s FROM a WHERE s >= (SELECT MIN(s) FROM a) ORDER BY h",
+        "SELECT h, s FROM a WHERE s <= (SELECT MAX(s) FROM a) ORDER BY s DESC",
+    ],
+)
+def test_nan_rows_match_spark(spark, nan_catalog, outer):
+    """Spark's NaN equals NaN and is greater than every number: an outer
+    WHERE against a number or a MIN/MAX subquery keeps the NaN row, and
+    the catalog's driver answer equals plain ``spark.sql`` in names,
+    types, values and order."""
+    q = _NAN_CTE + outer
+    got = nan_catalog.sql_rows(q)
+    assert nan_catalog.last_route.detail["evaluated"] == "driver"
+    want = spark.sql(q)
+    assert nan_catalog.sql(q).dtypes == want.dtypes
+    want = want.collect()
+    assert [list(r.__fields__) for r in got] == [list(r.__fields__) for r in want]
+    assert _reprs(got) == _reprs(want)
+    assert "nan" in [repr(r["s"]) for r in got]

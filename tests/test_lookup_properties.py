@@ -12,6 +12,7 @@ from __future__ import annotations
 import math
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -472,6 +473,7 @@ def test_states_follow_spark_nan_order():
     assert States().merge(States(2, 0)).finalize("min") is None
 
 
+@pytest.mark.filterwarnings("error::RuntimeWarning")
 def test_kernels_follow_spark_nan_order():
     """combine_range / group_by / min_max_range / merge_delta / compaction
     answer MIN and MAX in Spark's order over NaN, -inf and all-NULL

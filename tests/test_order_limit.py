@@ -255,3 +255,59 @@ def test_having_without_group_by_delegates(eng):
     df = eng.sql(f"SELECT SUM(agg_col) AS s FROM ol_fix WHERE {RANGE} HAVING COUNT(*) > 3")
     assert eng.last_route.kind == "delegate"
     assert df.collect()[0][0] == 55.0
+
+
+def _same_answer(e, sql, kind):
+    """Routed ``sql_rows`` equals plain ``spark.sql``: names, types, and
+    values in order (``repr`` per value, so NaN equals NaN)."""
+    got = e.sql_rows(sql)
+    assert e.last_route.kind == kind, (sql, e.last_route)
+    want = e.spark.sql(sql)
+    assert e.sql(sql).dtypes == want.dtypes
+    want = want.collect()
+    assert [list(r.__fields__) for r in got] == [list(r.__fields__) for r in want]
+    assert [tuple(map(repr, r)) for r in got] == [tuple(map(repr, r)) for r in want]
+    return got
+
+
+def test_having_keeps_nan_groups(spark):
+    """Spark's NaN is greater than every number, so ``HAVING SUM(v) > 4``
+    keeps a NaN group (the HAVING compare once dropped it as unknown)."""
+    from datetime import datetime
+
+    rows = [
+        (datetime(2024, 5, 10, h), v) for h, v in enumerate((1.0, float("nan"), 5.0, 3.0))
+    ]
+    spark.createDataFrame(rows, "ts timestamp, v double").createOrReplaceTempView("having_nan")
+    e = WheelEngine(spark, "having_nan", spark.table("having_nan"), time_column="ts")
+    e.build_index("v")
+    head = (
+        "SELECT date_trunc('hour', ts) AS h, SUM(v) AS s FROM having_nan "
+        "GROUP BY date_trunc('hour', ts) HAVING "
+    )
+    got = _same_answer(e, head + "SUM(v) > 4 ORDER BY h", "group_by_landmark")
+    assert len(got) == 2
+    _same_answer(e, head + "MAX(v) >= 5 ORDER BY s DESC", "group_by_landmark")
+
+
+def test_having_integer_literal_stays_exact(spark):
+    """An integer HAVING literal keeps its integer value: over a BIGINT
+    column holding 2^53 + 1, ``SUM(v) > 9007199254740993`` holds for no
+    group and ``=`` for that one (a float literal rounds to 2^53)."""
+    from datetime import datetime
+
+    big = 2**53 + 1
+    rows = [(datetime(2024, 5, 10, 0), big), (datetime(2024, 5, 10, 1), 1)]
+    spark.createDataFrame(rows, "ts timestamp, v bigint").createOrReplaceTempView("having_big")
+    e = WheelEngine(spark, "having_big", spark.table("having_big"), time_column="ts")
+    e.build_index("v")
+    head = (
+        "SELECT date_trunc('hour', ts) AS h, SUM(v) AS s FROM having_big "
+        "GROUP BY date_trunc('hour', ts) HAVING SUM(v) "
+    )
+    assert _same_answer(e, head + f"> {big} ORDER BY h", "group_by_landmark") == []
+    got = _same_answer(e, head + f"= {big} ORDER BY h", "group_by_landmark")
+    assert [r["s"] for r in got] == [big]
+    # a decimal literal compares exactly too (Spark: BIGINT vs DECIMAL)
+    got = _same_answer(e, head + f"> {big - 1}.5 ORDER BY h", "group_by_landmark")
+    assert [r["s"] for r in got] == [big]

@@ -410,7 +410,6 @@ def test_doors_answer_correctly_across_threads(eng, cat):
         serial[cte] = [tuple(r) for r in cat.sql_rows(cte)]
         assert cat.last_route.detail["evaluated"] == "driver"
     eng._route_memo.clear()
-    cat._cte_splice_memo.clear()
     start = threading.Barrier(4)
     got, errors = [], []
 
