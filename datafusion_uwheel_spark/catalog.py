@@ -12,6 +12,7 @@ surface keeps working across tables.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from .engine import ParseMemo, WheelEngine, _rows
@@ -71,10 +72,9 @@ class WheelCatalog:
         try:
             parsed = parse_select(query, self._parse_memo)
         except ParseError as err:
-            got = self._route_ctes(query)
-            if got is None:
-                self.last_route = RouteDecision("delegate", detail={"reason": str(err)})
-            return None, got
+            # the CTE splicer records its own route when it answers
+            self.last_route = RouteDecision("delegate", detail={"reason": str(err)})
+            return None, self._route_ctes(query)
         eng = self.engines.get(parsed.table.lower())
         if eng is None:
             self.last_route = RouteDecision(
@@ -182,9 +182,19 @@ class WheelCatalog:
                 detail["evaluated"] = "driver"
                 self.last_route = RouteDecision("cte_rewrite", detail=detail)
                 return Answer(*ev)
+        try:
+            spliced = self.spark.sql(rewritten)
+        except AnalysisException as err:
+            # a routed view was dropped under this splice (an index
+            # mutation superseded its entry meanwhile): the original text
+            # is always right
+            self.last_route = RouteDecision(
+                "delegate", detail={"reason": f"splice failed analysis: {err}"}
+            )
+            return None
         detail["evaluated"] = "splice"
         self.last_route = RouteDecision("cte_rewrite", detail=detail)
-        return self.spark.sql(rewritten)
+        return spliced
 
     def index_usage_bytes(self) -> int:
         return sum(e.index_usage_bytes() for e in self.engines.values())

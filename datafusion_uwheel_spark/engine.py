@@ -21,6 +21,7 @@ windows, set ops, …) with zero custom code (SURVEY.md §2.2).
 from __future__ import annotations
 
 import itertools
+import threading
 from collections import OrderedDict
 
 from pyspark.sql import Column, DataFrame, Row, SparkSession
@@ -58,14 +59,20 @@ def _memo_get(cache: OrderedDict, key):
     return v
 
 
-def _memo_put(cache: OrderedDict, key, val) -> None:
+def _memo_put(cache: OrderedDict, key, val) -> list:
+    """Store ``val`` as ``key``'s most recent value; returns the values it
+    displaced (``key``'s previous value, an LRU-evicted one) so the owner
+    can release what they hold."""
+    old = cache.get(key)
     cache[key] = val
+    out = [] if old is None or old is val else [old]
     try:
         cache.move_to_end(key)
         if len(cache) > _MEMO_CAP:
-            cache.popitem(last=False)
+            out.append(cache.popitem(last=False)[1])
     except KeyError:  # another thread evicted or trimmed concurrently
         pass
+    return out
 
 
 class ParseMemo:
@@ -141,9 +148,10 @@ class _Routed:
     :class:`RouteDecision`, the router's answer (an ``Answer`` or
     :data:`EMPTY`), and the door forms built from it on first use — the
     ``sql()`` DataFrame, the ``sql_rows()`` Row list and the temp view a
-    spliced CTE reads it by."""
+    spliced CTE reads it by. ``retired`` marks an entry that an index
+    mutation superseded or the memo evicted: its view is dropped."""
 
-    __slots__ = ("epoch", "decision", "answer", "df", "rows", "view")
+    __slots__ = ("epoch", "decision", "answer", "df", "rows", "view", "retired")
 
     def __init__(self, epoch: int, decision: RouteDecision, answer):
         self.epoch = epoch
@@ -152,6 +160,7 @@ class _Routed:
         self.df = None
         self.rows = None
         self.view = None
+        self.retired = False
 
 
 #: Monotonic suffix for routed-CTE temp views — keeps engines and
@@ -361,19 +370,7 @@ class WheelEngine:
             import json as _json
             import os as _os
 
-            from .operators.distinct import load_distinct_rollup
-            from .operators.frequency import load_frequency_rollup
-            from .operators.quantiles import load_quantile_rollup
-            from .operators.theta import load_theta_rollup
-
-            # one manifest per sketch family, same format (save_indexes
-            # writes the mirror loop) — a fifth family is one more row
-            for manifest, loader, target in (
-                ("distinct.json", load_distinct_rollup, self.distinct_rollups),
-                ("quantiles.json", load_quantile_rollup, self.quantile_rollups),
-                ("theta.json", load_theta_rollup, self.theta_rollups),
-                ("topk.json", load_frequency_rollup, self.topk_rollups),
-            ):
+            for target, _prefix, manifest, loader in self.sketch_families():
                 man = _os.path.join(load_indexes, manifest)
                 if not _os.path.exists(man):
                     continue
@@ -391,6 +388,12 @@ class WheelEngine:
         #: query text → :class:`_Routed`: the one answer memo behind every
         #: door (see :meth:`_route`).
         self._route_memo: OrderedDict[str, _Routed] = OrderedDict()
+        #: Serializes the memo's writers (its readers take no lock), so an
+        #: entry a put displaces is the one it hands back to be retired.
+        self._route_memo_lock = threading.Lock()
+        #: Serializes registering an entry's temp view, so threads splicing
+        #: one fresh entry register one view, not one each.
+        self._view_lock = threading.Lock()
         #: The empty frame of ``self.df`` that pruned ``sql()`` answers
         #: share; built on first use.
         self._empty_df: DataFrame | None = None
@@ -440,6 +443,24 @@ class WheelEngine:
                             self.count_wheels.setdefault(w.filter_key, w)
                         else:
                             self.agg_wheels.setdefault((c, w.filter_key), w)
+
+    def sketch_families(self) -> tuple:
+        """The engine's sketch families, one row each: ``(rollups by
+        column, save-directory prefix, manifest file name, loader)`` — the
+        one table the ctor's load, :meth:`save_indexes`,
+        :meth:`compact_indexes` and streaming maintenance walk, so a new
+        family is one more row here."""
+        from .operators.distinct import load_distinct_rollup
+        from .operators.frequency import load_frequency_rollup
+        from .operators.quantiles import load_quantile_rollup
+        from .operators.theta import load_theta_rollup
+
+        return (
+            (self.distinct_rollups, "distinct", "distinct.json", load_distinct_rollup),
+            (self.quantile_rollups, "quantile", "quantiles.json", load_quantile_rollup),
+            (self.theta_rollups, "theta", "theta.json", load_theta_rollup),
+            (self.topk_rollups, "topk", "topk.json", load_frequency_rollup),
+        )
 
     # -------------------------------------------------------------- builds
     def _ensure_base(self) -> None:
@@ -682,8 +703,6 @@ class WheelEngine:
         same single build."""
         from .operators.distinct import build_distinct_rollup
 
-        if not hasattr(self, "distinct_rollups"):
-            self.distinct_rollups: dict = {}
         r = build_distinct_rollup(
             self.df, self.time_column, column,
             bucket_seconds=bucket_seconds, lg_k=lg_k, partition_by=partition_by,
@@ -701,14 +720,10 @@ class WheelEngine:
         """N columns' HLL rollups in ONE table scan (the multi-column
         one-pass discipline applied to sketches). Registers every column
         for :meth:`approx_distinct` asks."""
-        from .operators.distinct import build_distinct_rollups
-
-        rollups = build_distinct_rollups(
-            self.df, self.time_column, list(columns),
-            bucket_seconds=bucket_seconds, lg_k=lg_k, partition_by=partition_by,
-        )
-        self.distinct_rollups.update(rollups)
-        return rollups
+        return self.build_sketch_indexes(
+            distinct=columns, bucket_seconds=bucket_seconds, lg_k=lg_k,
+            partition_by=partition_by,
+        )["distinct"]
 
     def build_theta_index(
         self,
@@ -1044,14 +1059,10 @@ class WheelEngine:
         """N columns' KLL rollups in ONE table scan (the multi-column
         one-pass discipline of :meth:`build_indexes` applied to sketches).
         Registers every column for :meth:`approx_quantile` asks."""
-        from .operators.quantiles import build_quantile_rollups
-
-        rollups = build_quantile_rollups(
-            self.df, self.time_column, list(columns),
-            bucket_seconds=bucket_seconds, k=k, partition_by=partition_by,
-        )
-        self.quantile_rollups.update(rollups)
-        return rollups
+        return self.build_sketch_indexes(
+            quantile=columns, bucket_seconds=bucket_seconds, k=k,
+            partition_by=partition_by,
+        )["quantile"]
 
     def build_sketch_indexes(
         self,
@@ -1145,8 +1156,11 @@ class WheelEngine:
         are never memoized — the underlying table may change outside the
         engine's view."""
         entry = _memo_get(self._route_memo, query)
-        if entry is not None and entry.epoch == self.index_epoch:
-            return entry.decision, entry
+        if entry is not None:
+            if entry.epoch == self.index_epoch:
+                return entry.decision, entry
+            # superseded by an index mutation: never served again
+            self._retire(entry)
         if parsed is None:
             try:
                 parsed = parse_select(query, self._parse_memo)
@@ -1161,8 +1175,24 @@ class WheelEngine:
         # index_epoch — never memoize them here; the rollup's ask memo
         # (which those mutations DO invalidate) prices repeats
         if decision.kind != "approx_agg":
-            _memo_put(self._route_memo, query, entry)
+            with self._route_memo_lock:
+                displaced = _memo_put(self._route_memo, query, entry)
+            for old in displaced:
+                self._retire(old)
         return decision, entry
+
+    def _retire(self, entry: _Routed) -> None:
+        """Drop the temp view of a memo entry that will not be served
+        again (superseded or evicted), so the session catalog holds one
+        view per live entry at most. A DataFrame already analyzed over the
+        view keeps its plan and still collects; a splice that names the
+        view after the drop fails analysis and delegates (see
+        :meth:`.catalog.WheelCatalog._route_ctes`)."""
+        if entry.retired:
+            return
+        entry.retired = True
+        if entry.view is not None:
+            self.spark.catalog.dropTempView(entry.view)
 
     def _df_of(self, entry: _Routed) -> DataFrame:
         """The entry's answer as a DataFrame, built once: a constant
@@ -1191,9 +1221,17 @@ class WheelEngine:
         once per entry: a spliced ``WITH`` text reads a routed CTE body
         through it, and a repeated text registers no new view."""
         if entry.view is None:
-            view = f"__uw_cte_{next(_CTE_VIEW_SEQ)}"
-            self._df_of(entry).createOrReplaceTempView(view)
-            entry.view = view
+            with self._view_lock:
+                if entry.view is None:
+                    view = f"__uw_cte_{next(_CTE_VIEW_SEQ)}"
+                    self._df_of(entry).createOrReplaceTempView(view)
+                    entry.view = view
+                    if entry.retired:
+                        # retired while this view was registered:
+                        # :meth:`_retire` sets the flag before reading
+                        # ``view``, this reads it after setting ``view``,
+                        # so one of the two drops it
+                        self.spark.catalog.dropTempView(view)
         return entry.view
 
     def sql(self, query: str) -> DataFrame:
@@ -1308,13 +1346,8 @@ class WheelEngine:
                     f,
                 )
         # one manifest per sketch family — the mirror of the load loop in
-        # ``__init__``; a fifth family is one more row in both tables
-        for rollups, prefix, manifest in (
-            (self.distinct_rollups, "distinct", "distinct.json"),
-            (self.quantile_rollups, "quantile", "quantiles.json"),
-            (self.theta_rollups, "theta", "theta.json"),
-            (self.topk_rollups, "topk", "topk.json"),
-        ):
+        # ``__init__``, both walking :meth:`sketch_families`
+        for rollups, prefix, manifest, _loader in self.sketch_families():
             if not rollups:
                 continue
             entries = []
@@ -1406,12 +1439,8 @@ class WheelEngine:
 
         sketches = [
             r
-            for r in (
-                list(self.distinct_rollups.values())
-                + list(self.quantile_rollups.values())
-                + list(self.theta_rollups.values())
-                + list(self.topk_rollups.values())
-            )
+            for rollups, *_ in self.sketch_families()
+            for r in rollups.values()
             if _sketch_applicable(r)
         ]
         # All-or-nothing: every WHEEL validates the (cutoff, width) shape
@@ -1427,7 +1456,11 @@ class WheelEngine:
             reclaimed += w.compact_before(cutoff, width)
         if reclaimed:
             self.index_epoch += 1
-            self._route_memo.clear()
+            with self._route_memo_lock:
+                stale = list(self._route_memo.values())
+                self._route_memo.clear()
+            for entry in stale:
+                self._retire(entry)
         return reclaimed
 
     def _all_wheels(self):

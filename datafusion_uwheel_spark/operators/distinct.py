@@ -16,31 +16,29 @@ Scale: the rollup is bounded by distinct buckets × sketch size (lgK=12 →
 Query cost is O(buckets in range) regardless of table size — the wheel trade
 applied to distinct counts. Error is the standard HLL bound (~1.6% rel. at
 lgK=12; raise ``lg_k`` for tighter estimates).
+
+This module declares only what is HLL-specific: the ``__hll`` state, its
+sketch and union aggregates, the ``_distinct_meta.json`` sidecar and the
+``lg_k`` config, plus the asks. Build (:func:`.multibuild.
+build_sketch_rollups`), merge, save/load, unpersist and the range filter
+live once in :class:`.sketch_retention.SketchRetention`.
 """
 
 from __future__ import annotations
 
-import json
-import os
-
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .rollups import time_sec_col
-from .sketch_retention import SketchRetention
+from .sketch_retention import SketchRetention, load_rollup
 
 __all__ = [
     "DistinctRollup",
     "build_distinct_rollup",
-    "build_distinct_rollups",
     "load_distinct_rollup",
 ]
 
-_META = "_distinct_meta.json"
-#: Cached-rollup partition count — small enough that probes run at the
-#: task-launch floor (the shuffle-partition default made every estimate
-#: schedule ~33 tasks), large enough to parallelize a multi-year rollup.
-_CACHE_PARTITIONS = 4
+#: "no key restriction" (None is a real NULL-key ask)
+_NO_KEY = SketchRetention._NO_ASK
 
 
 class DistinctRollup(SketchRetention):
@@ -48,42 +46,20 @@ class DistinctRollup(SketchRetention):
 
     ``approx_distinct(a, b)`` answers ``COUNT(DISTINCT col)`` over
     ``[a, b)`` (second-aligned bounds, like every wheel lookup) by merging
-    the bucket sketches — one tiny Spark job over the cached rollup."""
+    the bucket sketches — one tiny Spark job over the cached rollup.
+    Constructed as ``DistinctRollup(rollup, column, bucket_seconds, lg_k,
+    key_column=None)``."""
 
-    def __init__(
-        self,
-        rollup: DataFrame,
-        column: str,
-        bucket_seconds: int,
-        lg_k: int,
-        key_column: str | None = None,
-    ):
-        self._df = rollup
-        self.column = column
-        self.bucket_seconds = bucket_seconds
-        self.lg_k = lg_k
-        #: Optional partition key: sketches per (bucket, key value) — the
-        #: partitioned-wheel-family idea applied to distinct state. Unkeyed
-        #: asks on a keyed rollup union across keys (HLL union is exact
-        #: sketch algebra, and idempotent, so shared values don't
-        #: double-count).
-        self.key_column = key_column
+    _STATE = "__hll"
+    _SIDECAR = "_distinct_meta.json"
+    _CONFIG = ("lg_k",)
 
-    #: sentinel for "no key restriction" (None is a real NULL-key ask) —
-    #: the SAME object as the base gate's _NO_ASK, so the direct branch
-    #: passes keys through verbatim (r11 review: two parallel sentinels
-    #: for one concept forced a translation at every call site)
-    _NO_KEY = SketchRetention._NO_ASK
+    def _sketch_agg(self) -> Column:
+        return F.hll_sketch_agg(F.col(self.column), F.lit(self.lg_k))
 
-    def _restrict(self, start, end, key=_NO_KEY):
-        df = self._df.filter(self._range_filter(start, end))
-        if key is not DistinctRollup._NO_KEY:
-            if self.key_column is None:
-                raise ValueError(
-                    "rollup was built without partition_by — no key column"
-                )
-            df = df.filter(F.col("__key").eqNullSafe(F.lit(key)))
-        return df
+    def _union_agg_exprs(self):
+        """HLL union is exact sketch algebra (merge and compaction)."""
+        return [F.hll_union_agg("__hll").alias("__hll")]
 
     def _jvm_merge_grouped(self, ops):
         """Day-tier pre-merge (r12): HLL register/coupon union is
@@ -96,19 +72,6 @@ class DistinctRollup(SketchRetention):
         documented direct-vs-job contract (r11 probe: six update orders
         of one real day's sketches → six estimates in [1318, 1330])."""
         return ops.hllMergeGrouped
-
-    def _range_filter(self, start, end):
-        """Bucket filter covering ``[start, end)``: a bucket ``[s, s+w)``
-        intersects the range iff ``s > a - w`` and ``s < b`` — so partial
-        edge buckets on BOTH sides are included whole (superset semantics;
-        estimates never undercount against unaligned bounds)."""
-        a = F.unix_timestamp(F.lit(start).cast("timestamp"))
-        b = F.unix_timestamp(F.lit(end).cast("timestamp"))
-        # per-row width: compacted (coarser) buckets widen the slop so a
-        # coarse bucket spanning the range start is still included whole
-        return (F.col("__sec") > a - self._width_expr()) & (
-            F.col("__sec") < b
-        )
 
     def approx_distinct(self, start, end, key=_NO_KEY) -> int:
         """Estimated distinct count of ``column`` in ``[start, end)``
@@ -163,17 +126,10 @@ class DistinctRollup(SketchRetention):
         ``(<key_column>, approx_distinct)`` ordered by key (NULL keys
         included); one tiny job over the cached sketch table."""
         self._require_fresh()
-        if self.key_column is None:
-            raise ValueError(
-                "rollup was built without partition_by — no key column"
-            )
-        df = self._df
-        if start is not None or end is not None:
-            df = df.filter(
-                self._range_filter(start or "1970-01-01", end or "9999-01-01")
-            )
+        self._require_key()
         return (
-            df.groupBy(F.col("__key").alias(self.key_column))
+            self._within(start, end)
+            .groupBy(F.col("__key").alias(self.key_column))
             .agg(
                 F.hll_sketch_estimate(F.hll_union_agg("__hll"))
                 .cast("long")
@@ -198,21 +154,10 @@ class DistinctRollup(SketchRetention):
         coarser bucketing is exact sketch algebra — no rescan, no second
         rollup build."""
         self._require_fresh()
-        ts = F.timestamp_seconds(F.col("__sec"))
-        self._check_granularity(granularity, start)
-        if isinstance(granularity, int):
-            bucket = F.timestamp_seconds(
-                F.col("__sec") - F.col("__sec") % F.lit(granularity)
-            )
-        else:
-            bucket = F.date_trunc(str(granularity), ts)
-        df = self._df
-        if start is not None or end is not None:
-            df = df.filter(
-                self._range_filter(start or "1970-01-01", end or "9999-01-01")
-            )
+        bucket = self._bucket_col(granularity, start)
         return (
-            df.groupBy(bucket.alias("bucket"))
+            self._within(start, end)
+            .groupBy(bucket.alias("bucket"))
             .agg(
                 F.hll_sketch_estimate(F.hll_union_agg("__hll"))
                 .cast("long")
@@ -232,10 +177,7 @@ class DistinctRollup(SketchRetention):
         the rollup mutates. Estimate-regime caveat as
         :meth:`distinct_rows_by`."""
         self._require_fresh()
-        if self.key_column is None:
-            raise ValueError(
-                "rollup was built without partition_by — no key column"
-            )
+        self._require_key()
 
         def compute() -> list[tuple]:
             gc = self._keyed_cells("__hll", start, end)
@@ -327,7 +269,7 @@ class DistinctRollup(SketchRetention):
 
         def compute() -> bytes | None:
             row = (
-                self._df.filter(self._range_filter(start, end))
+                self._restrict(start, end)
                 .agg(F.hll_union_agg("__hll").alias("sk"))
                 .collect()[0]
             )
@@ -336,81 +278,6 @@ class DistinctRollup(SketchRetention):
         return self._memoized_ask(
             ("sketch", self._ask_token(start), self._ask_token(end)), compute
         )
-
-    def _union_agg_exprs(self):
-        """Merge aggregation for :meth:`SketchRetention.compact_before` —
-        HLL union is exact sketch algebra."""
-        return [F.hll_union_agg("__hll").alias("__hll")]
-
-    def _merge_batch_locked(self, batch_df, time_column, StorageLevel) -> None:
-        """Merge a micro-batch of raw rows into the rollup — streaming
-        maintenance. HLL sketches are mergeable monoids, so the merged
-        rollup is indistinguishable from a fresh batch build over the union
-        (the same model as the wheel maintainers): the batch is sketched
-        per bucket with the pinned ``lg_k``, unioned with the stored
-        sketches, and re-merged by bucket with ``hll_union_agg``. Late data
-        simply lands in its bucket. The new rollup is materialized before
-        the old cache is released."""
-
-        sec = self._bucket_expr(time_sec_col(batch_df, time_column))
-        keys = [sec.alias("__sec")]
-        if self.key_column is not None:
-            if self.key_column not in batch_df.columns:
-                raise ValueError(
-                    f"batch lacks partition column {self.key_column!r} — a "
-                    "keyed rollup cannot be maintained without it"
-                )
-            keys.append(F.col(self.key_column).alias("__key"))
-        delta = (
-            batch_df.filter(F.col(time_column).isNotNull())
-            .groupBy(*keys)
-            .agg(F.hll_sketch_agg(F.col(self.column), F.lit(self.lg_k)).alias("__hll"))
-        )
-        group = ["__sec"] + (["__key"] if self.key_column is not None else [])
-        merged = (
-            self._df.unionByName(delta)
-            .groupBy(*group)
-            .agg(F.hll_union_agg("__hll").alias("__hll"))
-            .coalesce(_CACHE_PARTITIONS)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        merged.count()
-        old = self._df
-        self._df = merged
-        # A handle from a one-pass multi-column build shared the parent
-        # cache; it now owns a private persisted frame, so drop the claim
-        # (the parent is released when the last sibling detaches). Handles
-        # with a private frame release exactly the frame being replaced.
-        if not self._detach_shared():
-            old.unpersist()
-        self.invalidate_asks()
-        self._drop_mirror()
-
-    def save(self, path: str) -> str:
-        """Persist the sketch table as parquet (one distributed write) plus
-        a JSON sidecar pinning column/bucket/lg_k — without this a restart
-        silently loses the rollup and every estimate pays a rebuild scan.
-        Reload with :func:`load_distinct_rollup`."""
-        self._df.write.mode("overwrite").parquet(path)
-        with open(os.path.join(path, _META), "w") as f:
-            json.dump(
-                {
-                    "column": self.column,
-                    "bucket_seconds": self.bucket_seconds,
-                    "lg_k": self.lg_k,
-                    "key_column": self.key_column,
-                    **self._persist_meta(),
-                },
-                f,
-            )
-        return path
-
-    def unpersist(self) -> None:
-        # release the storage that actually holds the sketches: the shared
-        # one-pass parent (refcounted across sibling handles) or this
-        # handle's private frame
-        if not self._detach_shared():
-            self._df.unpersist()
 
 
 def build_distinct_rollup(
@@ -421,10 +288,10 @@ def build_distinct_rollup(
     lg_k: int = 12,
     partition_by: str | None = None,
 ) -> DistinctRollup:
-    """One declarative aggregation job over the table → per-bucket HLL
-    sketches, cached (``MEMORY_AND_DISK``) for probe-many use. Default
-    hourly buckets: distinct-count dashboards rarely need finer, and the
-    rollup stays ~9 K buckets/year.
+    """Per-bucket HLL sketches of ``column`` from one scan, cached for
+    probe-many use — :func:`.multibuild.build_sketch_rollups` for one
+    column. Default hourly buckets: distinct-count dashboards rarely need
+    finer, and the rollup stays ~9 K buckets/year.
 
     ``partition_by=key`` sketches per ``(bucket, key value)``: per-key
     distinct asks (:meth:`DistinctRollup.approx_distinct_by_key`, ``key=``
@@ -432,99 +299,14 @@ def build_distinct_rollup(
     work by unioning across keys (HLL union is idempotent, so values seen
     under several keys don't double-count). State grows to buckets ×
     distinct keys — meant for low-cardinality dimensional keys."""
-    from pyspark import StorageLevel
+    from .multibuild import build_sketch_rollups
 
-    sec = time_sec_col(df, time_column)
-    if bucket_seconds != 1:
-        sec = sec - (sec % bucket_seconds)
-    keys = [sec.alias("__sec")]
-    if partition_by is not None:
-        keys.append(F.col(partition_by).alias("__key"))
-    rollup = (
-        df.filter(F.col(time_column).isNotNull())
-        .groupBy(*keys)
-        .agg(F.hll_sketch_agg(F.col(column), F.lit(lg_k)).alias("__hll"))
-        .coalesce(_CACHE_PARTITIONS)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    rollup.count()  # materialize once; probes never touch the raw table
-    r = DistinctRollup(
-        rollup, column, bucket_seconds, lg_k, key_column=partition_by
-    )
-    r._warm_mirror("__hll")  # zero-job direct asks from the start (r10)
-    return r
-
-
-def build_distinct_rollups(
-    df: DataFrame,
-    time_column: str,
-    columns: list[str] | tuple[str, ...],
-    bucket_seconds: int = 3600,
-    lg_k: int = 12,
-    partition_by: str | None = None,
-) -> dict[str, DistinctRollup]:
-    """N columns' HLL rollups in ONE table scan (the multi-column one-pass
-    discipline applied to sketches): a single group-by aggregates one
-    sketch per column per bucket; each handle selects its own column from
-    the shared cached frame (``unpersist`` releases the parent)."""
-    from pyspark import StorageLevel
-
-    if not columns:
-        raise ValueError("columns must be non-empty")
-    sec = time_sec_col(df, time_column)
-    if bucket_seconds != 1:
-        sec = sec - (sec % bucket_seconds)
-    keys = [sec.alias("__sec")]
-    if partition_by is not None:
-        keys.append(F.col(partition_by).alias("__key"))
-    combined = (
-        df.filter(F.col(time_column).isNotNull())
-        .groupBy(*keys)
-        .agg(
-            *[
-                F.hll_sketch_agg(F.col(c), F.lit(lg_k)).alias(f"__hll{i}")
-                for i, c in enumerate(columns)
-            ]
-        )
-        .coalesce(_CACHE_PARTITIONS)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    combined.count()  # ONE materializing scan for all columns
-    out = {}
-    #: refcounted shared cache: released when the last sibling handle
-    #: unpersists or detaches via merge_batch
-    holder = {"df": combined, "refs": len(columns)}
-    base_cols = ["__sec"] + (["__key"] if partition_by is not None else [])
-    for i, c in enumerate(columns):
-        view = combined.select(*base_cols, F.col(f"__hll{i}").alias("__hll"))
-        out[c] = DistinctRollup(
-            view, c, bucket_seconds, lg_k, key_column=partition_by
-        )
-        out[c]._shared = holder
-    return out
+    return build_sketch_rollups(
+        df, time_column, distinct=[column], bucket_seconds=bucket_seconds,
+        lg_k=lg_k, partition_by=partition_by,
+    )["distinct"][column]
 
 
 def load_distinct_rollup(spark, path: str) -> DistinctRollup:
-    """Inverse of :meth:`DistinctRollup.save`: read the parquet sketch
-    table back into executor cache. Estimates are identical after reload —
-    the sketches are the state, not a derived view."""
-    from pyspark import StorageLevel
-
-    with open(os.path.join(path, _META)) as f:
-        meta = json.load(f)
-    df = (
-        spark.read.parquet(path)
-        .coalesce(_CACHE_PARTITIONS)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    df.count()
-    r = DistinctRollup(
-        df,
-        meta["column"],
-        meta["bucket_seconds"],
-        meta["lg_k"],
-        key_column=meta.get("key_column"),
-    )
-    r._restore_meta(meta)
-    r._warm_mirror("__hll")  # no-op on stale loads / shim-less sessions
-    return r
+    """Inverse of :meth:`DistinctRollup.save` (see :func:`load_rollup`)."""
+    return load_rollup(DistinctRollup, spark, path)

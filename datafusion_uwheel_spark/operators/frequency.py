@@ -57,12 +57,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .rollups import time_sec_col
-from .sketch_retention import SketchRetention
+from .sketch_retention import _CACHE_PARTITIONS, SketchRetention
 
 __all__ = ["FrequencyRollup", "build_frequency_rollup", "load_frequency_rollup"]
 
 _META = "_frequency_meta.json"
-_CACHE_PARTITIONS = 4
 #: Keyed-mirror memory guard: the kept driver mirror of a partition_by=
 #: build is buckets × capacity × KEYS rows, so the key cardinality — not
 #: the table size — is what can OOM the driver. 4096 keys × 64 capacity ×

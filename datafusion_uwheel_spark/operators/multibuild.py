@@ -1,18 +1,20 @@
-"""Cross-family one-pass sketch rollup build.
+"""The one sketch rollup builder, for one column or many, of one family or
+all three.
 
 The three sketch rollup families (HLL distinct counts — :mod:`.distinct`,
 KLL quantiles — :mod:`.quantiles`, theta set algebra — :mod:`.theta`)
 aggregate over the IDENTICAL group-by key: the bucket second, plus the
-optional partition key. Built one family at a time, each pays its own full
-table scan for a byte-identical pass shape — at 100 TB the scan IS the
-build cost, repeated N times. This module applies the engine's existing
-multi-column one-pass discipline (``WheelEngine.build_indexes``,
-:func:`.distinct.build_distinct_rollups`,
-:func:`.quantiles.build_quantile_rollups`) ACROSS families: ONE declarative
-aggregation computes every requested sketch column in a single scan, and
-each returned handle is a per-column view over a shared refcounted cache
-(``SketchRetention._detach_shared`` releases it when the last sibling
-unpersists or mutates away).
+optional partition key. Built one column at a time, each would pay its own
+full table scan for a byte-identical pass shape — at 100 TB the scan IS
+the build cost. :func:`build_sketch_rollups` applies the engine's
+multi-column one-pass discipline (``WheelEngine.build_indexes``) across
+columns and families: ONE declarative aggregation computes every requested
+sketch column in a single scan, and each returned handle is a per-column
+view over a shared refcounted cache (``SketchRetention._detach_shared``
+releases it when the last sibling unpersists or mutates away). The
+per-family builders (``build_distinct_rollup`` and its siblings) are
+one-column calls into it; merge, save/load and unpersist live once in
+:class:`.sketch_retention.SketchRetention`.
 
 The driver mirrors that serve zero-job direct asks land the same way: the
 one action that materializes the cache also sizes every column's mirror
@@ -20,14 +22,15 @@ one action that materializes the cache also sizes every column's mirror
 ``collect`` of the shared frame fills every handle's mirror box through
 the landing ``_bytes_mirror`` uses (:func:`.sketch_retention.land_mirror`)
 — the build costs the scan plus one collect, not a sizing job and a
-collect per family.
+collect per column.
 
-Answer parity with standalone builds: HLL state is per-register maxima and
-theta state is a smallest-hashes set — both order-independent, so their
-sketches (and every estimate) are identical however the build batches
-rows. KLL compaction is randomized, so quantile answers carry the same
-rank-error bound as ANY rebuild (the documented KLL contract — repeated
-builds may return adjacent data values within the bound).
+Answer parity between one-column and many-column builds: HLL state is
+per-register maxima and theta state is a smallest-hashes set — both
+order-independent, so their sketches (and every estimate) are identical
+however the build batches rows. KLL compaction is randomized, so quantile
+answers carry the same rank-error bound as ANY rebuild (the documented
+KLL contract — repeated builds may return adjacent data values within the
+bound).
 """
 
 from __future__ import annotations
@@ -36,15 +39,11 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .distinct import DistinctRollup
-from .quantiles import QuantileRollup, _fns, _suffix_for
-from .rollups import time_sec_col
-from .sketch_retention import land_mirror, mirror_bytes
+from .quantiles import QuantileRollup, _suffix_for
+from .sketch_retention import _CACHE_PARTITIONS, land_mirror, mirror_bytes
 from .theta import ThetaRollup
 
 __all__ = ["build_sketch_rollups"]
-
-#: same probes-at-task-launch-floor trade as the per-family builders
-_CACHE_PARTITIONS = 4
 
 
 def build_sketch_rollups(
@@ -61,98 +60,65 @@ def build_sketch_rollups(
     """Every requested family's rollup from ONE scan of ``df``.
 
     Returns ``{"distinct": {col: DistinctRollup}, "quantile":
-    {col: QuantileRollup}, "theta": {col: ThetaRollup}}`` — each handle
-    behaves exactly like its standalone-build counterpart (same bucketing,
-    same sketch parameters, mirror warmed for zero-job direct asks);
-    ``unpersist`` on a handle drops its claim on the shared cache, which is
-    released when the last sibling detaches. ``lg_k`` sizes the HLL and
-    theta sketches, ``k`` the KLL sketches, as in the per-family builders.
-    """
+    {col: QuantileRollup}, "theta": {col: ThetaRollup}}`` — every handle
+    is cached for probe-many use, with its mirror warmed for zero-job
+    direct asks; ``unpersist`` on a handle drops its claim on the shared
+    cache, which is released when the last sibling detaches. ``lg_k``
+    sizes the HLL and theta sketches, ``k`` the KLL sketches."""
     from pyspark import StorageLevel
 
-    distinct, quantile, theta = tuple(distinct), tuple(quantile), tuple(theta)
-    if not (distinct or quantile or theta):
+    requests = {
+        "distinct": tuple(distinct), "quantile": tuple(quantile), "theta": tuple(theta)
+    }
+    if not any(requests.values()):
         raise ValueError("at least one family's columns must be non-empty")
-    for fam_name, cols in (
-        ("distinct", distinct), ("quantile", quantile), ("theta", theta)
-    ):
+    for fam_name, cols in requests.items():
         if len({c.lower() for c in cols}) != len(cols):
             # fail here, not as a refcount leak: the handles dict is keyed
             # by column, so a duplicate would orphan one claim on the
             # shared cache and the parquet cache could never be released
             raise ValueError(f"duplicate columns in {fam_name}={cols!r}")
-    sec = time_sec_col(df, time_column)
-    if bucket_seconds != 1:
-        sec = sec - (sec % bucket_seconds)
-    keys = [sec.alias("__sec")]
-    if partition_by is not None:
-        keys.append(F.col(partition_by).alias("__key"))
-    aggs = []
-    for i, c in enumerate(distinct):
-        aggs.append(F.hll_sketch_agg(F.col(c), F.lit(lg_k)).alias(f"__hll{i}"))
-    suffixes = {c: _suffix_for(df, c) for c in quantile}
-    for i, c in enumerate(quantile):
-        sketch = _fns(suffixes[c])[0]
-        cast = "bigint" if suffixes[c] == "bigint" else "double"
-        aggs.append(sketch(F.col(c).cast(cast), F.lit(k)).alias(f"__kll{i}"))
-    for i, c in enumerate(theta):
-        # same shim-registered aggregate (and the same bare-identifier
-        # contract on the column name) as build_theta_rollup
-        aggs.append(
-            F.expr(f"theta_sketch_agg({c}, {lg_k})").alias(f"__theta{i}")
-        )
+    make = {
+        "distinct": lambda c: DistinctRollup(
+            None, c, bucket_seconds, lg_k, key_column=partition_by
+        ),
+        "quantile": lambda c: QuantileRollup(
+            None, c, bucket_seconds, k, _suffix_for(df, c), key_column=partition_by
+        ),
+        "theta": lambda c: ThetaRollup(
+            None, c, bucket_seconds, lg_k, key_column=partition_by
+        ),
+    }
+    out = {fam: {c: make[fam](c) for c in cols} for fam, cols in requests.items()}
+    handles = [h for fam in out.values() for h in fam.values()]
+    sketch_cols = [f"{h._STATE}{i}" for i, h in enumerate(handles)]
     combined = (
-        df.filter(F.col(time_column).isNotNull())
-        .groupBy(*keys)
-        .agg(*aggs)
+        handles[0]
+        ._sketch_frame(
+            df, time_column,
+            [h._sketch_agg().alias(c) for h, c in zip(handles, sketch_cols)],
+        )
         .coalesce(_CACHE_PARTITIONS)
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # ONE materializing scan for every family, which also sizes every
+    # ONE materializing scan for every column, which also sizes every
     # column's mirror (rows and sketch bytes, the per-family caps) as an
     # observation of the same action: a global aggregate over the cache
     # would cost an exchange and a job of its own
     sizing = Observation()
-    sketch_cols = [a for a in combined.columns if a not in ("__sec", "__key")]
     combined.observe(
         sizing,
         F.count(F.lit(1)).alias("n"),
-        *(mirror_bytes(a).alias(a) for a in sketch_cols),
+        *(mirror_bytes(c).alias(c) for c in sketch_cols),
     ).write.format("noop").mode("overwrite").save()
     sized = sizing.get
-    n_rows = sized["n"]
-    holder = {
-        "df": combined,
-        "refs": len(distinct) + len(quantile) + len(theta),
-    }
+    holder = {"df": combined, "refs": len(handles)}
     base_cols = ["__sec"] + (["__key"] if partition_by is not None else [])
-    out: dict[str, dict] = {"distinct": {}, "quantile": {}, "theta": {}}
-    handles = []  # (handle, sketch column of the shared frame)
-    for i, c in enumerate(distinct):
-        view = combined.select(*base_cols, F.col(f"__hll{i}").alias("__hll"))
-        h = DistinctRollup(
-            view, c, bucket_seconds, lg_k, key_column=partition_by
-        )
-        handles.append((h, f"__hll{i}"))
-        out["distinct"][c] = h
-    for i, c in enumerate(quantile):
-        view = combined.select(*base_cols, F.col(f"__kll{i}").alias("__kll"))
-        h = QuantileRollup(
-            view, c, bucket_seconds, k, suffixes[c], key_column=partition_by
-        )
-        handles.append((h, f"__kll{i}"))
-        out["quantile"][c] = h
-    for i, c in enumerate(theta):
-        view = combined.select(
-            *base_cols, F.col(f"__theta{i}").alias("__theta")
-        )
-        h = ThetaRollup(view, c, bucket_seconds, lg_k, key_column=partition_by)
-        h._rollup_rows = n_rows  # retention_by's bounded-lag proof (r15)
-        handles.append((h, f"__theta{i}"))
-        out["theta"][c] = h
-    for h, _ in handles:
+    for h, c in zip(handles, sketch_cols):
+        h._df = combined.select(*base_cols, F.col(c).alias(h._STATE))
         h._shared = holder
-    _warm_mirrors(combined, handles, sized, partition_by is not None)
+        h._rollup_rows = sized["n"]
+    _warm_mirrors(combined, list(zip(handles, sketch_cols)), sized, partition_by is not None)
     return out
 
 
@@ -161,7 +127,7 @@ def _warm_mirrors(combined: DataFrame, handles: list, sized, keyed: bool) -> Non
     start) from ONE collect of the shared frame: each handle gets exactly
     what its own ``_bytes_mirror`` would collect from its view — the same
     rows in the same order — without a sizing job and a collect per
-    family. Only sessions that can serve direct asks warm; a family over
+    column. Only sessions that can serve direct asks warm; a family over
     its caps gets ``False`` (the job path is its plan), as there."""
     fits = []
     for h, c in handles:

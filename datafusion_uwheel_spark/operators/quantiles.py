@@ -27,28 +27,28 @@ the value error itself is data-dependent. Raise ``k`` for tighter ranks.
 Integral columns (tinyint..bigint) use the ``bigint`` sketch family so
 estimates stay exact int64 values (the engine's exact-integral-state
 discipline, SURVEY §2.4); everything else narrows to ``double``.
+
+This module declares only what is KLL-specific: the ``__kll`` state, its
+sketch and merge aggregates, the ``_quantile_meta.json`` sidecar and the
+``k`` / ``suffix`` config, plus the asks. Build (:func:`.multibuild.
+build_sketch_rollups`), merge, save/load, unpersist and the range filter
+live once in :class:`.sketch_retention.SketchRetention`.
 """
 
 from __future__ import annotations
 
 import math
 
-import json
-import os
-
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .rollups import time_sec_col
-from .sketch_retention import SketchRetention
+from .sketch_retention import SketchRetention, load_rollup
 
 __all__ = ["QuantileRollup", "build_quantile_rollup", "load_quantile_rollup"]
 
-_META = "_quantile_meta.json"
 _INTEGRAL = {"tinyint", "smallint", "int", "bigint"}
-#: Cached-rollup partition count — small enough that probes run at the
-#: task-launch floor, large enough to parallelize a multi-year rollup.
-_CACHE_PARTITIONS = 4
+#: "no key restriction" (None is a real NULL-key ask)
+_NO_KEY = SketchRetention._NO_ASK
 
 
 def _suffix_for(df: DataFrame, column: str) -> str:
@@ -66,31 +66,40 @@ def _fns(suffix: str):
     )
 
 
+def _ranks(q) -> list:
+    """``q`` (a rank or a sequence of ranks) as a list, each checked."""
+    qs = list(q) if isinstance(q, (list, tuple)) else [q]
+    for x in qs:
+        if not 0.0 <= float(x) <= 1.0:
+            raise ValueError(f"rank {x!r} outside [0, 1]")
+    return qs
+
+
 class QuantileRollup(SketchRetention):
     """Handle over a cached per-bucket KLL sketch table.
 
     ``approx_quantile(q, a, b)`` answers ``PERCENTILE(col, q)`` over
     ``[a, b)`` (second-aligned bounds, like every wheel lookup) by merging
-    the bucket sketches — one tiny Spark job over the cached rollup."""
+    the bucket sketches — one tiny Spark job over the cached rollup.
+    Constructed as ``QuantileRollup(rollup, column, bucket_seconds, k,
+    suffix, key_column=None)``; ``suffix`` is the sketch type,
+    ``"bigint"`` or ``"double"``."""
 
-    def __init__(
-        self,
-        rollup: DataFrame,
-        column: str,
-        bucket_seconds: int,
-        k: int,
-        suffix: str,
-        key_column: str | None = None,
-    ):
-        self._df = rollup
-        self.column = column
-        self.bucket_seconds = bucket_seconds
-        self.k = k
-        self.suffix = suffix
-        #: Optional partition key: sketches per (bucket, key value) — the
-        #: partitioned-wheel-family idea applied to quantile state. Unkeyed
-        #: asks on a keyed rollup merge across keys (exact sketch algebra).
-        self.key_column = key_column
+    _STATE = "__kll"
+    _SIDECAR = "_quantile_meta.json"
+    _CONFIG = ("k", "suffix")
+
+    def _sketch_agg(self) -> Column:
+        cast = "bigint" if self.suffix == "bigint" else "double"
+        return _fns(self.suffix)[0](F.col(self.column).cast(cast), F.lit(self.k))
+
+    def _union_agg_exprs(self):
+        """KLL merge is exact sketch algebra (same rank-error bound)."""
+        return [self._merged().alias("__kll")]
+
+    def _merged(self) -> Column:
+        """The KLL merge aggregate over ``__kll`` at the pinned ``k``."""
+        return _fns(self.suffix)[1]("__kll", F.lit(self.k))
 
     def _jvm_merge_grouped(self, ops):
         """Day-tier pre-merge (r12): KLL merge is rank-bounded (randomized
@@ -102,42 +111,8 @@ class QuantileRollup(SketchRetention):
             else ops.kllMergeDoublesGrouped
         )
 
-    def _range_filter(self, start, end):
-        """Bucket filter covering ``[start, end)``: a bucket ``[s, s+w)``
-        intersects the range iff ``s > a - w`` and ``s < b`` — partial edge
-        buckets on BOTH sides are included whole (superset semantics; align
-        bounds to ``bucket_seconds`` for exact range semantics — the wheel
-        discipline)."""
-        a = F.unix_timestamp(F.lit(start).cast("timestamp"))
-        b = F.unix_timestamp(F.lit(end).cast("timestamp"))
-        # per-row width: compacted (coarser) buckets widen the slop so a
-        # coarse bucket spanning the range start is still included whole
-        return (F.col("__sec") > a - self._width_expr()) & (
-            F.col("__sec") < b
-        )
-
-    #: sentinel for "no key restriction" — the base gate's _NO_ASK (see
-    #: DistinctRollup._NO_KEY)
-    _NO_KEY = SketchRetention._NO_ASK
-
-    def _restrict(self, start, end, key):
-        df = self._df.filter(self._range_filter(start, end))
-        if key is not QuantileRollup._NO_KEY:
-            if self.key_column is None:
-                raise ValueError(
-                    "rollup was built without partition_by — no key column"
-                )
-            df = df.filter(F.col("__key").eqNullSafe(F.lit(key)))
-        return df
-
-    # _jdouble_array comes from SketchRetention (shared with the grouped
-    # direct asks since r11)
-
     def _merged_row(self, start, end, exprs, key=_NO_KEY):
-        _, merge, _, _, _ = _fns(self.suffix)
-        sk = self._restrict(start, end, key).agg(
-            merge("__kll", F.lit(self.k)).alias("__sk")
-        )
+        sk = self._restrict(start, end, key).agg(self._merged().alias("__sk"))
         return sk.select(*exprs).collect()[0]
 
     def approx_quantile(self, q, start, end, key=_NO_KEY):
@@ -154,10 +129,7 @@ class QuantileRollup(SketchRetention):
         adjacent data values randomized re-merges could alternate
         between)."""
         self._require_fresh()
-        qs = list(q) if isinstance(q, (list, tuple)) else [q]
-        for x in qs:
-            if not 0.0 <= float(x) <= 1.0:
-                raise ValueError(f"rank {x!r} outside [0, 1]")
+        qs = _ranks(q)
 
         def compute():
             # direct path (r10; keyed since r11 under the same-type
@@ -265,25 +237,18 @@ class QuantileRollup(SketchRetention):
         ordered by key (NULL keys included as their own row); one tiny job
         over the cached sketch table."""
         self._require_fresh()
-        if self.key_column is None:
-            raise ValueError(
-                "rollup was built without partition_by — no key column"
-            )
+        self._require_key()
         qs = list(q) if isinstance(q, (list, tuple)) else [q]
-        _, merge, get_q, _, get_n = _fns(self.suffix)
-        df = self._df
-        if start is not None or end is not None:
-            df = df.filter(
-                self._range_filter(start or "1970-01-01", end or "9999-01-01")
-            )
+        _, _, get_q, _, get_n = _fns(self.suffix)
         names = (
             ["approx_quantile"]
             if not isinstance(q, (list, tuple))
             else [f"approx_quantile_{i}" for i in range(len(qs))]
         )
         return (
-            df.groupBy(F.col("__key").alias(self.key_column))
-            .agg(merge("__kll", F.lit(self.k)).alias("__sk"))
+            self._within(start, end)
+            .groupBy(F.col("__key").alias(self.key_column))
+            .agg(self._merged().alias("__sk"))
             .select(
                 self.key_column,
                 *[
@@ -310,28 +275,17 @@ class QuantileRollup(SketchRetention):
         is exact sketch algebra — no rescan, no second rollup build."""
         self._require_fresh()
         qs = list(q) if isinstance(q, (list, tuple)) else [q]
-        _, merge, get_q, _, get_n = _fns(self.suffix)
-        ts = F.timestamp_seconds(F.col("__sec"))
-        self._check_granularity(granularity, start)
-        if isinstance(granularity, int):
-            bucket = F.timestamp_seconds(
-                F.col("__sec") - F.col("__sec") % F.lit(granularity)
-            )
-        else:
-            bucket = F.date_trunc(str(granularity), ts)
-        df = self._df
-        if start is not None or end is not None:
-            df = df.filter(
-                self._range_filter(start or "1970-01-01", end or "9999-01-01")
-            )
+        _, _, get_q, _, get_n = _fns(self.suffix)
+        bucket = self._bucket_col(granularity, start)
         names = (
             ["approx_quantile"]
             if not isinstance(q, (list, tuple))
             else [f"approx_quantile_{i}" for i in range(len(qs))]
         )
         return (
-            df.groupBy(bucket.alias("bucket"))
-            .agg(merge("__kll", F.lit(self.k)).alias("__sk"))
+            self._within(start, end)
+            .groupBy(bucket.alias("bucket"))
+            .agg(self._merged().alias("__sk"))
             .select(
                 "bucket",
                 # A bucket whose values were all NULL holds an empty sketch;
@@ -359,14 +313,8 @@ class QuantileRollup(SketchRetention):
         merges carry KLL's randomized-compaction caveat either way.
         Memoized until the rollup mutates."""
         self._require_fresh()
-        if self.key_column is None:
-            raise ValueError(
-                "rollup was built without partition_by — no key column"
-            )
-        qs = list(q) if isinstance(q, (list, tuple)) else [q]
-        for x in qs:
-            if not 0.0 <= float(x) <= 1.0:
-                raise ValueError(f"rank {x!r} outside [0, 1]")
+        self._require_key()
+        qs = _ranks(q)
 
         def compute() -> list[tuple]:
             gc = self._keyed_cells("__kll", start, end)
@@ -416,10 +364,7 @@ class QuantileRollup(SketchRetention):
         values within the rank bound; a memoized answer pins one).
         Memoized until the rollup mutates."""
         self._require_fresh()
-        qs = list(q) if isinstance(q, (list, tuple)) else [q]
-        for x in qs:
-            if not 0.0 <= float(x) <= 1.0:
-                raise ValueError(f"rank {x!r} outside [0, 1]")
+        qs = _ranks(q)
 
         def compute() -> list[tuple]:
             self._check_granularity(granularity, start)
@@ -461,87 +406,6 @@ class QuantileRollup(SketchRetention):
             compute,
         )
 
-    def _union_agg_exprs(self):
-        """Merge aggregation for :meth:`SketchRetention.compact_before` —
-        KLL merge is exact sketch algebra (same rank-error bound)."""
-        _, merge, _, _, _ = _fns(self.suffix)
-        return [merge("__kll", F.lit(self.k)).alias("__kll")]
-
-    def _merge_batch_locked(self, batch_df, time_column, StorageLevel) -> None:
-        """Merge a micro-batch of raw rows into the rollup — streaming
-        maintenance. KLL sketches are mergeable monoids, so the merged
-        rollup answers as a fresh batch build over the union would (same
-        rank-error bound; the same model as the wheel and HLL maintainers):
-        the batch is sketched per bucket with the pinned ``k``, unioned with
-        the stored sketches, and re-merged by bucket. Late data simply lands
-        in its bucket. The new rollup is materialized before the old cache
-        is released."""
-
-        sketch, merge, _, _, _ = _fns(self.suffix)
-        sec = self._bucket_expr(time_sec_col(batch_df, time_column))
-        cast = "bigint" if self.suffix == "bigint" else "double"
-        keys = [sec.alias("__sec")]
-        if self.key_column is not None:
-            if self.key_column not in batch_df.columns:
-                raise ValueError(
-                    f"batch lacks partition column {self.key_column!r} — a "
-                    "keyed rollup cannot be maintained without it"
-                )
-            keys.append(F.col(self.key_column).alias("__key"))
-        delta = (
-            batch_df.filter(F.col(time_column).isNotNull())
-            .groupBy(*keys)
-            .agg(
-                sketch(F.col(self.column).cast(cast), F.lit(self.k)).alias("__kll")
-            )
-        )
-        group = ["__sec"] + (["__key"] if self.key_column is not None else [])
-        merged = (
-            self._df.unionByName(delta)
-            .groupBy(*group)
-            .agg(merge("__kll", F.lit(self.k)).alias("__kll"))
-            .coalesce(_CACHE_PARTITIONS)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        merged.count()
-        old = self._df
-        self._df = merged
-        # A handle from a one-pass multi-column build shared the parent
-        # cache; it now owns a private persisted frame, so drop the claim
-        # (the parent is released when the last sibling detaches). Handles
-        # with a private frame release exactly the frame being replaced.
-        if not self._detach_shared():
-            old.unpersist()
-        self.invalidate_asks()
-        self._drop_mirror()
-
-    def save(self, path: str) -> str:
-        """Persist the sketch table as parquet (one distributed write) plus
-        a JSON sidecar pinning column/bucket/k/type — without this a restart
-        silently loses the rollup and every estimate pays a rebuild scan.
-        Reload with :func:`load_quantile_rollup`."""
-        self._df.write.mode("overwrite").parquet(path)
-        with open(os.path.join(path, _META), "w") as f:
-            json.dump(
-                {
-                    "column": self.column,
-                    "bucket_seconds": self.bucket_seconds,
-                    "k": self.k,
-                    "suffix": self.suffix,
-                    "key_column": self.key_column,
-                    **self._persist_meta(),
-                },
-                f,
-            )
-        return path
-
-    def unpersist(self) -> None:
-        # release the storage that actually holds the sketches: the shared
-        # one-pass parent (refcounted across sibling handles) or this
-        # handle's private frame
-        if not self._detach_shared():
-            self._df.unpersist()
-
 
 def build_quantile_rollup(
     df: DataFrame,
@@ -551,11 +415,11 @@ def build_quantile_rollup(
     k: int = 200,
     partition_by: str | None = None,
 ) -> QuantileRollup:
-    """One declarative aggregation job over the table → per-bucket KLL
-    sketches, cached (``MEMORY_AND_DISK``) for probe-many use. Default
-    hourly buckets and k=200 (~1.65% rank error): latency dashboards rarely
-    need finer, and the rollup stays ~9 K buckets/year. NULL values are
-    ignored by the sketch (SQL aggregate semantics).
+    """Per-bucket KLL sketches of ``column`` from one scan, cached for
+    probe-many use — :func:`.multibuild.build_sketch_rollups` for one
+    column. Default hourly buckets and k=200 (~1.65% rank error): latency
+    dashboards rarely need finer, and the rollup stays ~9 K buckets/year.
+    NULL values are ignored by the sketch (SQL aggregate semantics).
 
     ``partition_by=key`` sketches per ``(bucket, key value)`` — the
     partitioned-wheel-family idea applied to quantile state: per-key
@@ -564,114 +428,15 @@ def build_quantile_rollup(
     asks still work by merging across keys (sketches are monoids). State
     grows to buckets × distinct keys — meant for low-cardinality
     dimensional keys."""
-    from pyspark import StorageLevel
+    from .multibuild import build_sketch_rollups
 
-    suffix = _suffix_for(df, column)
-    sketch, _, _, _, _ = _fns(suffix)
-    cast = "bigint" if suffix == "bigint" else "double"
-    sec = time_sec_col(df, time_column)
-    if bucket_seconds != 1:
-        sec = sec - (sec % bucket_seconds)
-    keys = [sec.alias("__sec")]
-    if partition_by is not None:
-        keys.append(F.col(partition_by).alias("__key"))
-    rollup = (
-        df.filter(F.col(time_column).isNotNull())
-        .groupBy(*keys)
-        .agg(sketch(F.col(column).cast(cast), F.lit(k)).alias("__kll"))
-        # The cached rollup is tiny (occupied buckets, not rows) but the
-        # group-by leaves it in shuffle-partition-count pieces, making every
-        # probe schedule ~33 tasks; a handful of partitions keeps probes at
-        # task-launch floor while still parallelizing huge rollups.
-        .coalesce(_CACHE_PARTITIONS)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    rollup.count()  # materialize once; probes never touch the raw table
-    r = QuantileRollup(
-        rollup, column, bucket_seconds, k, suffix, key_column=partition_by
-    )
-    r._warm_mirror("__kll")  # zero-job direct asks from the start (r10)
-    return r
-
-
-def build_quantile_rollups(
-    df: DataFrame,
-    time_column: str,
-    columns: list[str] | tuple[str, ...],
-    bucket_seconds: int = 3600,
-    k: int = 200,
-    partition_by: str | None = None,
-) -> dict[str, QuantileRollup]:
-    """N columns' sketch rollups in ONE table scan (the engine's
-    multi-column one-pass discipline, :meth:`..engine.WheelEngine.
-    build_indexes`, applied to sketches): a single group-by aggregates one
-    KLL sketch per column per bucket; each returned handle selects its own
-    column from the shared cached frame, so probes stay per-column while
-    the build cost is one scan instead of N."""
-    from pyspark import StorageLevel
-
-    if not columns:
-        raise ValueError("columns must be non-empty")
-    suffixes = {c: _suffix_for(df, c) for c in columns}
-    sec = time_sec_col(df, time_column)
-    if bucket_seconds != 1:
-        sec = sec - (sec % bucket_seconds)
-    keys = [sec.alias("__sec")]
-    if partition_by is not None:
-        keys.append(F.col(partition_by).alias("__key"))
-    aggs = []
-    for i, c in enumerate(columns):
-        sketch, _, _, _, _ = _fns(suffixes[c])
-        cast = "bigint" if suffixes[c] == "bigint" else "double"
-        aggs.append(sketch(F.col(c).cast(cast), F.lit(k)).alias(f"__kll{i}"))
-    combined = (
-        df.filter(F.col(time_column).isNotNull())
-        .groupBy(*keys)
-        .agg(*aggs)
-        .coalesce(_CACHE_PARTITIONS)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    combined.count()  # ONE materializing scan for all columns
-    out = {}
-    #: refcounted shared cache: released when the last sibling handle
-    #: unpersists or detaches via merge_batch
-    holder = {"df": combined, "refs": len(columns)}
-    base_cols = ["__sec"] + (["__key"] if partition_by is not None else [])
-    for i, c in enumerate(columns):
-        view = combined.select(
-            *base_cols, F.col(f"__kll{i}").alias("__kll")
-        )
-        out[c] = QuantileRollup(
-            view, c, bucket_seconds, k, suffixes[c], key_column=partition_by
-        )
-        out[c]._shared = holder
-    return out
+    return build_sketch_rollups(
+        df, time_column, quantile=[column], bucket_seconds=bucket_seconds,
+        k=k, partition_by=partition_by,
+    )["quantile"][column]
 
 
 def load_quantile_rollup(spark, path: str) -> QuantileRollup:
-    """Inverse of :meth:`QuantileRollup.save`: read the parquet sketch
-    table back into executor cache. The sketch bytes are the state, not a
-    derived view — reloaded estimates carry the identical rank-error bound
-    (query-time merges are randomized KLL compaction, so repeated asks may
-    return adjacent data values within that bound)."""
-    from pyspark import StorageLevel
-
-    with open(os.path.join(path, _META)) as f:
-        meta = json.load(f)
-    df = (
-        spark.read.parquet(path)
-        .coalesce(_CACHE_PARTITIONS)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    df.count()
-    r = QuantileRollup(
-        df,
-        meta["column"],
-        meta["bucket_seconds"],
-        meta["k"],
-        meta["suffix"],
-        key_column=meta.get("key_column"),
-    )
-    r._restore_meta(meta)
-    r._warm_mirror("__kll")  # no-op on stale loads / shim-less sessions
-    return r
+    """Inverse of :meth:`QuantileRollup.save` (see :func:`load_rollup`):
+    reloaded estimates carry the identical rank-error bound."""
+    return load_rollup(QuantileRollup, spark, path)

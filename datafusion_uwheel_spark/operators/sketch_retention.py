@@ -30,16 +30,38 @@ Gates honored after compaction:
 * ``merge_batch`` buckets late rows landing in a compacted span at the
   tier width, keeping row counts bounded and the layout identical to a
   fresh coarse build.
+
+The mixin also owns the lifecycle of the three DataSketches families
+(HLL :mod:`.distinct`, KLL :mod:`.quantiles`, theta :mod:`.theta`), written
+once: the ctor, ``merge_batch``, ``save`` / :func:`load_rollup`,
+``unpersist`` and the range filter. A family declares only what differs —
+its state column (``_STATE``), its per-bucket sketch aggregate
+(``_sketch_agg``), its union aggregate (``_union_agg_exprs``), its sidecar
+file (``_SIDECAR``) and its ctor config (``_CONFIG``). The one builder is
+:func:`.multibuild.build_sketch_rollups`. The frequency family
+(:mod:`.frequency`) inherits the ladder and the direct-ask machinery but
+keeps its own merge and persistence: truncated counters are not a union
+monoid.
 """
 
 from __future__ import annotations
 
+import json
+import os
 import re
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["SketchRetention"]
+from .rollups import time_sec_col
+
+__all__ = ["SketchRetention", "load_rollup"]
+
+#: Cached-rollup partition count of every sketch and frequency rollup —
+#: small enough that probes run at the task-launch floor (the
+#: shuffle-partition default made every estimate schedule ~33 tasks),
+#: large enough to parallelize a multi-year rollup.
+_CACHE_PARTITIONS = 4
 
 #: Fixed date_trunc levels in seconds; calendar levels (week and up) have
 #: day-aligned boundaries, so day-nesting widths tile them.
@@ -71,15 +93,56 @@ def land_mirror(rows: list, col: int, key: int | None):
 
 class SketchRetention:
     """Mixin adding ``compact_before`` / ``check_compact`` tiered retention
-    to a per-bucket sketch rollup.
+    to a per-bucket sketch rollup, and the sketch families' lifecycle.
 
     Host-class contract: ``self._df`` (cached rollup with ``__sec`` and,
     when keyed, ``__key``), ``self.bucket_seconds``, ``self.key_column``,
     and ``_union_agg_exprs()`` returning the merge aggregation(s) that
-    re-bucket the sketch column(s). ``_detach_shared`` is honored when the
-    host has one (one-pass multi-column builds)."""
+    re-bucket the sketch column(s). A sketch family also declares the
+    class attributes below and :meth:`_sketch_agg`."""
 
-    _SKETCH_CACHE_PARTITIONS = 4
+    #: the rollup's sketch column (``__hll``, ``__kll`` or ``__theta``)
+    _STATE: str
+    #: the JSON sidecar :meth:`save` writes next to the parquet table
+    _SIDECAR: str
+    #: the ctor's family parameters, in order (``lg_k``, or ``k`` and
+    #: ``suffix``); :meth:`save` writes them as sidecar keys
+    _CONFIG: tuple[str, ...]
+    #: "no key restriction" sentinel of the keyed asks — None is a real
+    #: (NULL-partition) ask value, so absence needs its own object
+    _NO_ASK = object()
+
+    def __init__(
+        self,
+        rollup: DataFrame,
+        column: str,
+        bucket_seconds: int,
+        *config,
+        key_column: str | None = None,
+    ):
+        self._df = rollup
+        self.column = column
+        self.bucket_seconds = bucket_seconds
+        for name, value in zip(self._CONFIG, config, strict=True):
+            setattr(self, name, value)
+        #: Optional partition key: sketches per (bucket, key value) — the
+        #: partitioned-wheel-family idea applied to sketch state. Unkeyed
+        #: asks on a keyed rollup union across keys (exact sketch algebra;
+        #: HLL and theta unions are idempotent, so values seen under
+        #: several keys never double-count).
+        self.key_column = key_column
+        #: Driver-known UPPER bound on the rollup's row count (r15): the
+        #: build, load and merge paths each run a materializing action
+        #: that counts the rows. Theta's :meth:`retention_by` reads it to
+        #: prove its period count small (periods ≤ rollup rows, always).
+        #: ``None`` = unknown; compaction only shrinks rows, so a recorded
+        #: bound survives it.
+        self._rollup_rows: int | None = None
+
+    def _sketch_agg(self) -> Column:
+        """The family's per-bucket sketch aggregate over ``self.column``
+        (the build's and every merge delta's)."""
+        raise NotImplementedError
 
     # ---------------------------------------------------------- freshness
     #: The stale-never-answers discipline, extended from the wheels and
@@ -191,6 +254,123 @@ class SketchRetention:
         if shared["refs"] == 0:
             shared["df"].unpersist()
         return True
+
+    def unpersist(self) -> None:
+        """Release the storage that holds the sketches: this handle's claim
+        on the shared one-pass parent (refcounted across sibling handles)
+        or its private frame."""
+        if not self._detach_shared():
+            self._df.unpersist()
+
+    # ------------------------------------------------ one lifecycle, written once
+    def _sketch_frame(self, df: DataFrame, time_column: str, aggs) -> DataFrame:
+        """``df``'s timestamped rows grouped by bucket second (and key)
+        under ``aggs`` — the pass shape of every build and of every merge
+        delta. Tier-aware: late rows landing in a compacted span bucket at
+        the tier width (:meth:`_bucket_expr`)."""
+        keys = [self._bucket_expr(time_sec_col(df, time_column)).alias("__sec")]
+        if self.key_column is not None:
+            keys.append(F.col(self.key_column).alias("__key"))
+        return df.filter(F.col(time_column).isNotNull()).groupBy(*keys).agg(*aggs)
+
+    def _merge_batch_locked(self, batch_df, time_column, StorageLevel) -> None:
+        """Merge a micro-batch of raw rows: the batch is sketched per
+        bucket with the family's pinned parameters, unioned with the
+        stored sketches, and re-merged by bucket with
+        ``_union_agg_exprs()``. Sketches are mergeable monoids, so the
+        merged rollup answers as a fresh build over the union would (HLL
+        and theta bit-for-bit, KLL inside its rank bound); late data lands
+        in its bucket. The new rollup is materialized before the old
+        storage is released: a handle from a one-pass build drops its
+        claim on the shared parent (released by the last sibling) and
+        owns a private frame from then on."""
+        if self.key_column is not None and self.key_column not in batch_df.columns:
+            raise ValueError(
+                f"batch lacks partition column {self.key_column!r} — a "
+                "keyed rollup cannot be maintained without it"
+            )
+        delta = self._sketch_frame(
+            batch_df, time_column, [self._sketch_agg().alias(self._STATE)]
+        )
+        group = ["__sec"] + (["__key"] if self.key_column is not None else [])
+        merged = (
+            self._df.unionByName(delta)
+            .groupBy(*group)
+            .agg(*self._union_agg_exprs())
+            .coalesce(_CACHE_PARTITIONS)
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        n_rows = merged.count()
+        old = self._df
+        self._df = merged
+        self._rollup_rows = n_rows
+        if not self._detach_shared():
+            old.unpersist()
+        self.invalidate_asks()
+        self._drop_mirror()
+
+    def save(self, path: str) -> str:
+        """Persist the sketch table as parquet (one distributed write) plus
+        the family's JSON sidecar pinning column, bucket width, ctor
+        config, key column, tiers and stale mark — without it a restart
+        loses the rollup and every estimate pays a rebuild scan. Reload
+        with :func:`load_rollup`."""
+        self._df.write.mode("overwrite").parquet(path)
+        meta = {"column": self.column, "bucket_seconds": self.bucket_seconds}
+        meta.update((name, getattr(self, name)) for name in self._CONFIG)
+        meta.update(key_column=self.key_column, **self._persist_meta())
+        with open(os.path.join(path, self._SIDECAR), "w") as f:
+            json.dump(meta, f)
+        return path
+
+    def _range_filter(self, start, end) -> Column:
+        """Bucket filter covering ``[start, end)``: a bucket ``[s, s+w)``
+        intersects the range iff ``s > a - w`` and ``s < b`` — partial edge
+        buckets on BOTH sides are included whole (superset semantics;
+        estimates never undercount against unaligned bounds — align bounds
+        to ``bucket_seconds`` for exact range semantics). The per-row
+        width follows the compaction tiers, so a coarse bucket spanning
+        the range start is still included whole."""
+        a = F.unix_timestamp(F.lit(start).cast("timestamp"))
+        b = F.unix_timestamp(F.lit(end).cast("timestamp"))
+        return (F.col("__sec") > a - self._width_expr()) & (F.col("__sec") < b)
+
+    def _require_key(self) -> None:
+        if self.key_column is None:
+            raise ValueError(
+                "rollup was built without partition_by — no key column"
+            )
+
+    def _restrict(self, start, end, key=_NO_ASK) -> DataFrame:
+        """The job path's rows for ``[start, end)``, optionally one key
+        partition (NULL-safe: ``key=None`` is the NULL partition)."""
+        df = self._df.filter(self._range_filter(start, end))
+        if key is not SketchRetention._NO_ASK:
+            self._require_key()
+            df = df.filter(F.col("__key").eqNullSafe(F.lit(key)))
+        return df
+
+    def _within(self, start=None, end=None) -> DataFrame:
+        """The rollup under an optional ``[start, end)`` restriction of the
+        group-by forms — an open side reads the literal ``'1970-01-01'`` /
+        ``'9999-01-01'``."""
+        if start is None and end is None:
+            return self._df
+        return self._df.filter(
+            self._range_filter(start or "1970-01-01", end or "9999-01-01")
+        )
+
+    def _bucket_col(self, granularity, start=None) -> Column:
+        """The group-by forms' output bucket (``TIMESTAMP``):
+        ``date_trunc`` for a named granularity, an epoch-aligned tumbling
+        window for an integer width in seconds. Raises unless the
+        granularity is tiled by every stored width from ``start`` on
+        (:meth:`_check_granularity`)."""
+        self._check_granularity(granularity, start)
+        sec = F.col("__sec")
+        if isinstance(granularity, int):
+            return F.timestamp_seconds(sec - sec % F.lit(granularity))
+        return F.date_trunc(str(granularity), F.timestamp_seconds(sec))
 
     # ------------------------------------------------ direct (zero-job) asks
     #: r10: the frequency family's driver-mirror economics extended to the
@@ -486,10 +666,6 @@ class SketchRetention:
         serve)."""
         if not self.stale and self._sketch_ops() is not None:
             self._bytes_mirror(col)
-
-    #: "no key restriction" sentinel for _direct_frame — None is a real
-    #: (NULL-partition) ask value, so absence needs its own object
-    _NO_ASK = object()
 
     #: Key-column SQL types whose SAME-TYPE Python equality IS Spark's
     #: equality — the only keyed asks the direct path serves (r11, the
@@ -1636,9 +1812,9 @@ class SketchRetention:
         ``_mutate_lock`` (r11 review passes 3-4: a compaction racing a
         merge would publish a frame built from the PRE-merge state,
         silently dropping the batch's rows — and hoisting the wrapper
-        here makes every family participate, including overrides).
-        Families implement :meth:`_merge_batch_locked`; see each for the
-        family's merge semantics."""
+        here makes every family participate, including overrides). The
+        body is :meth:`_merge_batch_locked`, shared by the sketch families
+        and overridden by the frequency family."""
         from pyspark import StorageLevel
 
         with self._mutate_lock:
@@ -1673,7 +1849,7 @@ class SketchRetention:
         coarse = old.filter(in_span).groupBy(*gcols).agg(*self._union_agg_exprs())
         merged = (
             coarse.unionByName(old.filter(~in_span).select(*coarse.columns))
-            .coalesce(self._SKETCH_CACHE_PARTITIONS)
+            .coalesce(_CACHE_PARTITIONS)
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
         after = merged.filter(in_span).count()  # also materializes the cache
@@ -1703,8 +1879,35 @@ class SketchRetention:
                 "tiers": list(new_tiers),
                 "m": None,
             }
-        detach = getattr(self, "_detach_shared", None)
-        if not (detach() if detach is not None else False):
+        if not self._detach_shared():
             old.unpersist()
         self.invalidate_asks()
         return before - after
+
+
+def load_rollup(cls, spark, path: str):
+    """Inverse of :meth:`SketchRetention.save` for the sketch family
+    ``cls``: read the parquet sketch table back into executor cache.
+    Estimates are identical after reload — the sketches are the state, not
+    a derived view (KLL query-time merges stay randomized, inside the same
+    rank bound)."""
+    from pyspark import StorageLevel
+
+    with open(os.path.join(path, cls._SIDECAR)) as f:
+        meta = json.load(f)
+    df = (
+        spark.read.parquet(path)
+        .coalesce(_CACHE_PARTITIONS)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    r = cls(
+        df,
+        meta["column"],
+        meta["bucket_seconds"],
+        *(meta[name] for name in cls._CONFIG),
+        key_column=meta.get("key_column"),
+    )
+    r._rollup_rows = df.count()  # also materializes the cache
+    r._restore_meta(meta)
+    r._warm_mirror(r._STATE)  # no-op on stale loads / shim-less sessions
+    return r

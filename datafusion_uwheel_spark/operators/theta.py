@@ -26,24 +26,22 @@ buckets stays tens of MB of executor cache. Intersection error grows as
 the true intersection shrinks relative to the operand sketches (the
 standard theta bound) — retention ratios on tiny overlaps are noisier than
 union estimates; raise ``lg_k`` for tighter answers.
+
+This module declares only what is theta-specific: the ``__theta`` state,
+its sketch and union aggregates, the ``_theta_meta.json`` sidecar and the
+``lg_k`` config, plus the set-algebra asks. Build (:func:`.multibuild.
+build_sketch_rollups`), merge, save/load, unpersist and the range filter
+live once in :class:`.sketch_retention.SketchRetention`.
 """
 
 from __future__ import annotations
 
-import json
-import os
-
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .rollups import time_sec_col
-from .sketch_retention import _FIXED_GRAN_SECS, SketchRetention
+from .sketch_retention import _FIXED_GRAN_SECS, SketchRetention, load_rollup
 
 __all__ = ["ThetaRollup", "build_theta_rollup", "load_theta_rollup"]
-
-_META = "_theta_meta.json"
-#: Cached-rollup partition count — probes run at the task-launch floor.
-_CACHE_PARTITIONS = 4
 
 
 class ThetaRollup(SketchRetention):
@@ -51,7 +49,13 @@ class ThetaRollup(SketchRetention):
 
     Range asks use second-aligned bounds like every wheel lookup; buckets
     partially covered at the edges are included whole (superset semantics
-    — estimates never undercount against unaligned bounds)."""
+    — estimates never undercount against unaligned bounds). Constructed as
+    ``ThetaRollup(rollup, column, bucket_seconds, lg_k,
+    key_column=None)``."""
+
+    _STATE = "__theta"
+    _SIDECAR = "_theta_meta.json"
+    _CONFIG = ("lg_k",)
 
     #: Periods per lag partition in :meth:`retention_by` — the in-partition
     #: window sorts at most this many rows per task (r15: replaces the
@@ -59,30 +63,14 @@ class ThetaRollup(SketchRetention):
     #: worst-case per task at the default lg_k, far less on sparse data).
     _LAG_PARTITION_PERIODS = 8192
 
-    def __init__(
-        self,
-        rollup: DataFrame,
-        column: str,
-        bucket_seconds: int,
-        lg_k: int,
-        key_column: str | None = None,
-    ):
-        self._df = rollup
-        self.column = column
-        self.bucket_seconds = bucket_seconds
-        self.lg_k = lg_k
-        #: Optional partition key: sketches per (bucket, key value). Unkeyed
-        #: asks union across keys (theta union is exact sketch algebra and
-        #: idempotent, so shared values never double-count).
-        self.key_column = key_column
-        #: Driver-known UPPER bound on the rollup's row count (r15): the
-        #: build/load/merge paths already run a materializing ``count()``,
-        #: whose value was discarded — recorded, it lets
-        #: :meth:`retention_by` prove its period count small and skip the
-        #: boundary-stitch machinery (periods ≤ rollup rows, always).
-        #: ``None`` = unknown; compaction only shrinks rows, so a recorded
-        #: bound survives it.
-        self._rollup_rows: int | None = None
+    def _sketch_agg(self) -> Column:
+        # the shim-registered aggregate: the column is spliced in as a
+        # bare identifier
+        return F.expr(f"theta_sketch_agg({self.column}, {self.lg_k})")
+
+    def _union_agg_exprs(self):
+        """Theta union is exact sketch algebra (merge and compaction)."""
+        return [F.expr("theta_union_agg(__theta)").alias("__theta")]
 
     # ------------------------------------------------------------ internals
 
@@ -90,15 +78,6 @@ class ThetaRollup(SketchRetention):
         """Day-tier pre-merge (r12): theta union is exact set algebra, so
         tier-served series are bit-equal to raw framing."""
         return ops.thetaMergeGrouped
-
-    def _range_filter(self, start, end):
-        a = F.unix_timestamp(F.lit(start).cast("timestamp"))
-        b = F.unix_timestamp(F.lit(end).cast("timestamp"))
-        # per-row width: compacted (coarser) buckets widen the slop so a
-        # coarse bucket spanning the range start is still included whole
-        return (F.col("__sec") > a - self._width_expr()) & (
-            F.col("__sec") < b
-        )
 
     def _framed_two(self, start, end):
         """``(framed, n)`` for one range when the direct path applies
@@ -161,7 +140,7 @@ class ThetaRollup(SketchRetention):
                 framed, n = f2
                 return int(self._sketch_ops().thetaEstimate(framed)) if n else 0
             row = (
-                self._df.filter(self._range_filter(start, end))
+                self._restrict(start, end)
                 .select(F.col("__theta").alias("__s1"))
                 .agg(F.expr("theta_union_agg(__s1)").alias("__u1"))
                 .select(self._est("__u1").alias("est"))
@@ -261,10 +240,7 @@ class ThetaRollup(SketchRetention):
         cohort-retention table, one job over the cached rollup. Returns
         ``(<key_column>, n_r1, n_r2, n_retained)`` ordered by key."""
         self._require_fresh()
-        if self.key_column is None:
-            raise ValueError(
-                "rollup was built without partition_by — no key column"
-            )
+        self._require_key()
         return (
             self._two_range_sketches(r1, r2, key_grouped=True)
             .select(
@@ -289,10 +265,7 @@ class ThetaRollup(SketchRetention):
         difference and union estimates the scalar asks expose but the
         keyed surface lacked."""
         self._require_fresh()
-        if self.key_column is None:
-            raise ValueError(
-                "rollup was built without partition_by — no key column"
-            )
+        self._require_key()
         i_est = self._est("theta_intersection(__u1, __u2)")
         u_est = self._est("theta_union(__u1, __u2)")
         return (
@@ -322,10 +295,7 @@ class ThetaRollup(SketchRetention):
         truncate only the count columns). Gates, fallback, memoization
         and exact parity as :meth:`retained_rows_by_key`."""
         self._require_fresh()
-        if self.key_column is None:
-            raise ValueError(
-                "rollup was built without partition_by — no key column"
-            )
+        self._require_key()
 
         def compute() -> list[tuple]:
             gc = self._keyed_pair_cells("__theta", r1, r2)
@@ -384,10 +354,7 @@ class ThetaRollup(SketchRetention):
         k-smallest-hashes algebra is update-order-free, unlike HLL's
         HIP estimator). Memoized until the rollup mutates."""
         self._require_fresh()
-        if self.key_column is None:
-            raise ValueError(
-                "rollup was built without partition_by — no key column"
-            )
+        self._require_key()
 
         def compute() -> list[tuple]:
             gc = self._keyed_pair_cells("__theta", r1, r2)
@@ -507,20 +474,8 @@ class ThetaRollup(SketchRetention):
         self._require_fresh()
         from pyspark.sql import Window
 
-        ts = F.timestamp_seconds(F.col("__sec"))
-        self._check_granularity(granularity, start)
-        if isinstance(granularity, int):
-            bucket = F.timestamp_seconds(
-                F.col("__sec") - F.col("__sec") % F.lit(granularity)
-            )
-        else:
-            bucket = F.date_trunc(str(granularity), ts)
-        df = self._df
-        if start is not None or end is not None:
-            df = df.filter(
-                self._range_filter(start or "1970-01-01", end or "9999-01-01")
-            )
-        periods = df.groupBy(bucket.alias("period")).agg(
+        bucket = self._bucket_col(granularity, start)
+        periods = self._within(start, end).groupBy(bucket.alias("period")).agg(
             F.expr("theta_union_agg(__theta)").alias("__s")
         )
         # The previous-occupied-period lag, WITHOUT a global single-
@@ -655,7 +610,7 @@ class ThetaRollup(SketchRetention):
 
         def compute() -> bytes | None:
             row = (
-                self._df.filter(self._range_filter(start, end))
+                self._restrict(start, end)
                 .select(F.col("__theta").alias("__s1"))
                 .agg(F.expr("theta_union_agg(__s1)").alias("sk"))
                 .collect()[0]
@@ -666,83 +621,6 @@ class ThetaRollup(SketchRetention):
             ("sketch", self._ask_token(start), self._ask_token(end)), compute
         )
 
-    # -------------------------------------------------------- maintenance
-
-    def _union_agg_exprs(self):
-        """Merge aggregation for :meth:`SketchRetention.compact_before` —
-        theta union is exact sketch algebra."""
-        return [F.expr("theta_union_agg(__theta)").alias("__theta")]
-
-    def _merge_batch_locked(self, batch_df, time_column, StorageLevel) -> None:
-        """Merge a micro-batch of raw rows — streaming maintenance. Theta
-        unions are mergeable monoids, so the merged rollup is
-        indistinguishable from a fresh build over the union; late data
-        lands in its bucket. The new rollup is materialized before the old
-        cache is released."""
-
-        sec = self._bucket_expr(time_sec_col(batch_df, time_column))
-        keys = [sec.alias("__sec")]
-        if self.key_column is not None:
-            if self.key_column not in batch_df.columns:
-                raise ValueError(
-                    f"batch lacks partition column {self.key_column!r} — a "
-                    "keyed rollup cannot be maintained without it"
-                )
-            keys.append(F.col(self.key_column).alias("__key"))
-        delta = (
-            batch_df.filter(F.col(time_column).isNotNull())
-            .groupBy(*keys)
-            .agg(
-                F.expr(
-                    f"theta_sketch_agg({self.column}, {self.lg_k})"
-                ).alias("__theta")
-            )
-        )
-        group = ["__sec"] + (["__key"] if self.key_column is not None else [])
-        merged = (
-            self._df.unionByName(delta)
-            .groupBy(*group)
-            .agg(F.expr("theta_union_agg(__theta)").alias("__theta"))
-            .coalesce(_CACHE_PARTITIONS)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        n_rows = merged.count()
-        old = self._df
-        self._df = merged
-        self._rollup_rows = n_rows  # retention_by's bounded-lag proof (r15)
-        # A handle from a one-pass cross-family build shared the parent
-        # cache; it now owns a private persisted frame, so drop the claim
-        # (the parent is released when the last sibling detaches). Handles
-        # with a private frame release exactly the frame being replaced.
-        if not self._detach_shared():
-            old.unpersist()
-        self.invalidate_asks()
-        self._drop_mirror()
-
-    def save(self, path: str) -> str:
-        """Persist as parquet + a JSON sidecar pinning the build config;
-        reload with :func:`load_theta_rollup`."""
-        self._df.write.mode("overwrite").parquet(path)
-        with open(os.path.join(path, _META), "w") as f:
-            json.dump(
-                {
-                    "column": self.column,
-                    "bucket_seconds": self.bucket_seconds,
-                    "lg_k": self.lg_k,
-                    "key_column": self.key_column,
-                    **self._persist_meta(),
-                },
-                f,
-            )
-        return path
-
-    def unpersist(self) -> None:
-        # release the storage that actually holds the sketches: the shared
-        # one-pass parent (refcounted across sibling handles) or this
-        # handle's private frame
-        if not self._detach_shared():
-            self._df.unpersist()
-
 
 def build_theta_rollup(
     df: DataFrame,
@@ -752,59 +630,24 @@ def build_theta_rollup(
     lg_k: int = 12,
     partition_by: str | None = None,
 ) -> ThetaRollup:
-    """One declarative aggregation job over the table → per-bucket theta
-    sketches, cached (``MEMORY_AND_DISK``) for probe-many use. Default
-    hourly buckets, like the HLL rollup.
+    """Per-bucket theta sketches of ``column`` from one scan, cached for
+    probe-many use — :func:`.multibuild.build_sketch_rollups` for one
+    column. Default hourly buckets, like the HLL rollup.
 
     ``partition_by=key`` sketches per ``(bucket, key value)`` for cohort
     asks (:meth:`ThetaRollup.retained_by_key`); unkeyed asks still union
     across keys without double-counting. State grows to buckets × distinct
     keys — meant for low-cardinality dimensional keys."""
-    from pyspark import StorageLevel
+    from .multibuild import build_sketch_rollups
 
-    sec = time_sec_col(df, time_column)
-    if bucket_seconds != 1:
-        sec = sec - (sec % bucket_seconds)
-    keys = [sec.alias("__sec")]
-    if partition_by is not None:
-        keys.append(F.col(partition_by).alias("__key"))
-    rollup = (
-        df.filter(F.col(time_column).isNotNull())
-        .groupBy(*keys)
-        .agg(F.expr(f"theta_sketch_agg({column}, {lg_k})").alias("__theta"))
-        .coalesce(_CACHE_PARTITIONS)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n_rows = rollup.count()  # materialize once; probes never touch the raw table
-    r = ThetaRollup(
-        rollup, column, bucket_seconds, lg_k, key_column=partition_by
-    )
-    r._rollup_rows = n_rows  # retention_by's bounded-lag proof (r15)
-    r._warm_mirror("__theta")  # zero-job direct asks from the start (r10)
-    return r
+    return build_sketch_rollups(
+        df, time_column, theta=[column], bucket_seconds=bucket_seconds,
+        lg_k=lg_k, partition_by=partition_by,
+    )["theta"][column]
 
 
 def load_theta_rollup(spark, path: str) -> ThetaRollup:
-    """Reload a :meth:`ThetaRollup.save` rollup: parquet → cache. Estimates
-    are bit-identical to the saved handle's (sketch bytes round-trip)."""
-    from pyspark import StorageLevel
-
-    with open(os.path.join(path, _META)) as f:
-        meta = json.load(f)
-    df = (
-        spark.read.parquet(path)
-        .coalesce(_CACHE_PARTITIONS)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n_rows = df.count()
-    r = ThetaRollup(
-        df,
-        meta["column"],
-        meta["bucket_seconds"],
-        meta["lg_k"],
-        key_column=meta["key_column"],
-    )
-    r._rollup_rows = n_rows  # retention_by's bounded-lag proof (r15)
-    r._restore_meta(meta)
-    r._warm_mirror("__theta")  # no-op on stale loads / shim-less sessions
-    return r
+    """Inverse of :meth:`ThetaRollup.save` (see :func:`load_rollup`):
+    estimates are bit-identical to the saved handle's (sketch bytes
+    round-trip)."""
+    return load_rollup(ThetaRollup, spark, path)

@@ -98,10 +98,7 @@ class StreamingWheelMaintainer:
             # this discipline first; this is the last mid-stream raise).
             for w in e._all_wheels():
                 w.complete = False
-            for rollups in (
-                e.distinct_rollups, e.quantile_rollups,
-                getattr(e, "theta_rollups", {}), getattr(e, "topk_rollups", {}),
-            ):
+            for rollups, *_ in e.sketch_families():
                 for rollup in rollups.values():
                     rollup.mark_stale(
                         f"maintenance batch lacks time column {e.time_column!r}"
@@ -129,12 +126,7 @@ class StreamingWheelMaintainer:
         # quietly miss this batch's rows) and never a mid-stream raise
         # (which would kill the streaming query). r8: before, a missing
         # value column skipped silently and a missing key column raised.
-        for rollups in (
-            self.engine.distinct_rollups,
-            self.engine.quantile_rollups,
-            getattr(self.engine, "theta_rollups", {}),
-            getattr(self.engine, "topk_rollups", {}),
-        ):
+        for rollups, *_ in self.engine.sketch_families():
             for col, rollup in rollups.items():
                 missing = [
                     c

@@ -208,8 +208,10 @@ def test_cte_views_follow_the_route_memo(spark):
     """A routed CTE body reads its answer through its route-memo entry's
     temp view: a repeated text registers no new view, an index mutation
     (``merge_batch`` bumps the epoch) gets a fresh view and a fresh
-    answer, and a body over a table that gains an engine routes on the
-    next call."""
+    answer while the superseded view is dropped (a DataFrame spliced
+    before the drop still collects), the catalog holds one view per live
+    entry however many merges pass, and a body over a table that gains an
+    engine routes on the next call."""
     from datafusion_uwheel_spark.streaming.maintenance import StreamingWheelMaintainer
 
     t0 = datetime(2024, 5, 10)
@@ -219,6 +221,7 @@ def test_cte_views_follow_the_route_memo(spark):
     late = spark.createDataFrame([(t0 + timedelta(seconds=3), 100.0)], "ts timestamp, v double")
     other = spark.createDataFrame([(t0, 7.0)], "ts timestamp, w double")
     other.createOrReplaceTempView("cte_memo_b")
+    before = _cte_views(spark)
     cat = WheelCatalog(spark)
     eng = cat.register("cte_memo_a", base, time_column="ts")
     eng.build_index("v")
@@ -243,14 +246,95 @@ def test_cte_views_follow_the_route_memo(spark):
     total, again = ask()
     assert total == 52.0 and again["sql"] == detail["sql"]
     assert _cte_views(spark) == views  # no new view for a repeated text
+    pre_merge = cat.sql(q)
 
-    StreamingWheelMaintainer(eng).merge_batch(late)
+    maintainer = StreamingWheelMaintainer(eng)
+    maintainer.merge_batch(late)
     total, merged = ask()
     assert total == 152.0  # the merged row, not the memoized answer
     assert merged["sql"] != detail["sql"] and len(_cte_views(spark) - views) == 1
+    assert not (views - before) & _cte_views(spark)  # the superseded view is gone
+    assert pre_merge.collect()[0]["total"] == 52.0  # analyzed before the drop
+
+    # two routed bodies over the merged table: each merge supersedes both
+    q2 = (
+        "WITH a AS (SELECT SUM(v) AS s FROM cte_memo_a WHERE "
+        "ts >= '2024-05-10 00:00:00' AND ts < '2024-05-10 00:00:10'), "
+        "c AS (SELECT MAX(v) AS m FROM cte_memo_a WHERE "
+        "ts >= '2024-05-10 00:00:00' AND ts < '2024-05-10 00:00:10') "
+        "SELECT a.s + c.m AS total FROM a, c"
+    )
+    for i in range(4):
+        maintainer.merge_batch(late)
+        assert cat.sql_rows(q2)[0]["total"] == 145.0 + 100.0 * (i + 1) + 100.0
+        assert cat.last_route.detail["evaluated"] == "splice"
+    live = {e.view for e in eng._route_memo.values() if e.view is not None}
+    assert len(live) == 2
+    assert _cte_views(spark) - before == live
 
     cat.register("cte_memo_b", other, time_column="ts").build_index("w")
     total, both = ask()
-    assert total == 152.0
+    assert total == 552.0
     assert set(both["routed"]) == {"a", "b"} and both["delegated"] == []
-    assert spark.sql(both["sql"]).collect()[0]["total"] == 152.0  # live views
+    assert spark.sql(both["sql"]).collect()[0]["total"] == 552.0  # live views
+
+
+def test_cte_splices_race_merges_without_leaking_views(spark):
+    """Readers splice a two-CTE text while merges supersede its entries and
+    drop their views: no ask raises (a splice naming a view dropped under
+    it delegates), every total is one the routed bodies can give, and the
+    settled catalog holds one view per live entry."""
+    import sys
+    import threading
+
+    from datafusion_uwheel_spark.streaming.maintenance import StreamingWheelMaintainer
+
+    t0 = datetime(2024, 5, 11)
+    base = spark.createDataFrame(
+        [(t0 + timedelta(seconds=i), 1.0) for i in range(10)], "ts timestamp, v double"
+    )
+    late = spark.createDataFrame([(t0 + timedelta(seconds=3), 1.0)], "ts timestamp, v double")
+    before = _cte_views(spark)
+    cat = WheelCatalog(spark)
+    eng = cat.register("cte_race_a", base, time_column="ts")
+    eng.build_index("v")
+    window = "ts >= '2024-05-11 00:00:00' AND ts < '2024-05-11 00:00:10'"
+    q = (
+        f"WITH a AS (SELECT SUM(v) AS s FROM cte_race_a WHERE {window}), "
+        f"c AS (SELECT COUNT(*) AS n FROM cte_race_a WHERE {window}) "
+        "SELECT a.s + c.n AS total FROM a, c"
+    )
+    merges = 3
+    # each body routes on its own, so the two may read adjacent epochs
+    valid = {float(20 + i + j) for i in range(merges + 1) for j in range(merges + 1)}
+    seen, errors = [], []
+    stop = threading.Event()
+
+    def reader():
+        try:
+            while not stop.is_set():
+                seen.append(cat.sql_rows(q)[0]["total"])
+        except Exception as err:  # reported by the assertion below
+            errors.append(err)
+
+    threads = [threading.Thread(target=reader) for _ in range(4)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        maintainer = StreamingWheelMaintainer(eng)
+        for _ in range(merges):
+            maintainer.merge_batch(late)
+    finally:
+        stop.set()
+        for t in threads:
+            t.join(timeout=120)
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert seen and set(seen) <= valid, set(seen) - valid
+    assert cat.sql_rows(q)[0]["total"] == 26.0
+    live = {e.view for e in eng._route_memo.values() if e.view is not None}
+    assert len(live) == 2
+    assert _cte_views(spark) - before == live

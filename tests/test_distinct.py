@@ -205,9 +205,11 @@ def test_keyed_rollup_per_key_distincts(spark, events):
 
 
 def test_one_pass_multi_column_build(spark, events):
-    from datafusion_uwheel_spark.operators.distinct import build_distinct_rollups
+    from datafusion_uwheel_spark.operators.multibuild import build_sketch_rollups
 
-    rollups = build_distinct_rollups(events, "ts", ["user_id", "event_type"])
+    rollups = build_sketch_rollups(
+        events, "ts", distinct=["user_id", "event_type"]
+    )["distinct"]
     assert set(rollups) == {"user_id", "event_type"}
     est = rollups["user_id"].approx_distinct(A, B)
     truth = exact(spark, events, A, B)
@@ -226,13 +228,15 @@ def test_one_pass_cache_lifecycle_with_merge(spark, events):
     """Mirror of the quantile lifecycle pin: merge_batch detaches the
     handle from the shared one-pass parent without leaking the merged
     frame; the parent lives until the last sibling unpersists."""
-    from datafusion_uwheel_spark.operators.distinct import build_distinct_rollups
+    from datafusion_uwheel_spark.operators.multibuild import build_sketch_rollups
 
     def n_cached():
         return spark.sparkContext._jsc.getPersistentRDDs().size()
 
     base = n_cached()
-    rollups = build_distinct_rollups(events, "ts", ["user_id", "event_type"])
+    rollups = build_sketch_rollups(
+        events, "ts", distinct=["user_id", "event_type"]
+    )["distinct"]
     assert n_cached() == base + 1
     rollups["user_id"].merge_batch(events.limit(500), "ts")
     assert n_cached() == base + 2

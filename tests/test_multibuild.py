@@ -277,3 +277,41 @@ def test_over_cap_family_gets_no_mirror(events, monkeypatch):
         for fam in out.values():
             for h in fam.values():
                 h.unpersist()
+
+
+#: one-family engine builds and a direct ask each: (build, ask)
+_SINGLE_FAMILY = {
+    "theta": (
+        lambda e: e.build_theta_index("user_id"),
+        lambda e: e.approx_retained("user_id", R1, R2),
+    ),
+    "distinct": (
+        lambda e: e.build_distinct_index("user_id"),
+        lambda e: e.approx_distinct("user_id", A, B),
+    ),
+    "quantile": (
+        lambda e: e.build_quantile_index("value"),
+        lambda e: e.approx_quantile("value", 0.5, A, B),
+    ),
+}
+
+
+@pytest.mark.parametrize("family", sorted(_SINGLE_FAMILY))
+def test_single_family_build_job_ceiling(spark, sf_small_dir, family):
+    """A one-family build is the shared builder's one-column case: the
+    same scan, sizing action and ONE mirror collect as the three-family
+    build (≤4 jobs), then zero-job direct asks."""
+    build, ask = _SINGLE_FAMILY[family]
+    eng = WheelEngine(
+        spark, f"events_single_{family}", f"{sf_small_dir}/events.parquet",
+        time_column="ts",
+    )
+    j0 = _jobs(spark)
+    r = build(eng)
+    try:
+        assert _jobs(spark) - j0 <= 4
+        j1 = _jobs(spark)
+        ask(eng)
+        assert _jobs(spark) == j1
+    finally:
+        r.unpersist()

@@ -286,12 +286,12 @@ def test_keyed_rollup_round_trip_and_merge(spark, events, tmp_path):
 
 
 def test_one_pass_multi_column_build(spark, events):
-    """build_quantile_rollups: N columns from ONE scan — per-column handles
+    """build_sketch_rollups: N columns from ONE scan — per-column handles
     answer within the same rank bound as individual builds, bigint dispatch
     preserved per column."""
-    from datafusion_uwheel_spark.operators.quantiles import build_quantile_rollups
+    from datafusion_uwheel_spark.operators.multibuild import build_sketch_rollups
 
-    rollups = build_quantile_rollups(events, "ts", ["value", "user_id"])
+    rollups = build_sketch_rollups(events, "ts", quantile=["value", "user_id"])["quantile"]
     assert set(rollups) == {"value", "user_id"}
     assert rollups["value"].suffix == "double"
     assert rollups["user_id"].suffix == "bigint"
@@ -310,13 +310,13 @@ def test_one_pass_cache_lifecycle_with_merge(spark, events):
     it a private frame (releasing its shared-parent claim), later merges
     must release exactly the replaced frame, and the shared parent must
     survive until the LAST sibling lets go — ending with nothing cached."""
-    from datafusion_uwheel_spark.operators.quantiles import build_quantile_rollups
+    from datafusion_uwheel_spark.operators.multibuild import build_sketch_rollups
 
     def n_cached():
         return spark.sparkContext._jsc.getPersistentRDDs().size()
 
     base = n_cached()
-    rollups = build_quantile_rollups(events, "ts", ["value", "user_id"])
+    rollups = build_sketch_rollups(events, "ts", quantile=["value", "user_id"])["quantile"]
     assert n_cached() == base + 1  # ONE shared parent for both handles
     rollups["value"].merge_batch(events.limit(500), "ts")
     # merged handle owns a private frame; the parent survives for the
