@@ -66,8 +66,8 @@ from ..functions.timestamps import (
 )
 
 __all__ = [
-    "WheelIndex", "States", "STAR_AGGREGATION_ALIAS", "INTEGRAL_SQL_TYPES",
-    "UNDERIVABLE", "VARIANCE_KEYS",
+    "WheelIndex", "PrefixTiers", "States", "STAR_AGGREGATION_ALIAS",
+    "INTEGRAL_SQL_TYPES", "UNDERIVABLE", "VARIANCE_KEYS",
 ]
 
 #: Key suffix for unfiltered indices — mirrors ``STAR_AGGREGATION_ALIAS``
@@ -282,8 +282,57 @@ def states_to_columns(starts, states_list, keys) -> tuple[np.ndarray, dict]:
     )
 
 
+class PrefixTiers:
+    """The tier-width helpers shared by every tiered store — the driver
+    wheel, the Spark-backed wheel and the sketch rollups. Host contract:
+    ``self.tiers`` — ascending prefix spans ``[(end_sec, width)]`` (or
+    None) — and ``self.bucket_seconds``."""
+
+    def width_at(self, sec: int) -> int:
+        """Bucket width in force at ``sec`` (tiers are prefix spans)."""
+        for end, w in self.tiers or ():
+            if sec < end:
+                return w
+        return self.bucket_seconds
+
+    def _max_width_in(self, start_sec: int, end_sec=None, tiers=None) -> int:
+        """Coarsest bucket width intersecting ``[start, end)`` — the width
+        a grouping granularity must tile. Tiers are prefix spans, so only
+        those ending after ``start_sec`` count; ``tiers`` overrides
+        ``self.tiers`` for a caller holding a coherent snapshot."""
+        w = self.bucket_seconds
+        for tend, tw in (self.tiers if tiers is None else tiers) or ():
+            if start_sec < tend:
+                w = max(w, tw)
+        return w
+
+    def check_compact(self, cutoff_sec: int, width: int) -> None:
+        """Validate ``(cutoff, width)`` against a single-prefix-tier
+        ladder WITHOUT mutating anything — the all-or-nothing pre-check
+        ``engine.compact_indexes`` runs over every index before compacting
+        any: ``width`` must be a multiple of ``bucket_seconds`` and of
+        every existing tier width, and the floored cutoff must not precede
+        an existing tier's end. The driver wheel overrides it with its
+        multi-tier plan."""
+        if width <= 0 or width % self.bucket_seconds:
+            raise ValueError(
+                f"width {width} not a multiple of bucket {self.bucket_seconds}"
+            )
+        for _tend, tw in self.tiers or ():
+            if width % tw:
+                raise ValueError(
+                    f"width {width} does not nest existing tier width {tw}"
+                )
+        cutoff = cutoff_sec - (cutoff_sec % width)
+        for tend, _ in self.tiers or ():
+            if cutoff < tend:
+                raise ValueError(
+                    f"cutoff {cutoff} precedes existing tier end {tend}"
+                )
+
+
 @dataclass
-class WheelIndex:
+class WheelIndex(PrefixTiers):
     """One wheel: partial aggregates per occupied epoch-second bucket.
 
     Parameters
@@ -436,22 +485,6 @@ class WheelIndex:
         if not self.tiers:
             return self.bucket_seconds
         return max(self.bucket_seconds, max(w for _, w in self.tiers))
-
-    def width_at(self, sec: int) -> int:
-        """Bucket width in force at ``sec`` (tiers are prefix spans)."""
-        for end, w in self.tiers or ():
-            if sec < end:
-                return w
-        return self.bucket_seconds
-
-    def _max_width_in(self, start_sec: int, end_sec: int) -> int:
-        """Coarsest bucket width intersecting ``[start, end)`` — the width
-        a grouping granularity must tile."""
-        w = self.bucket_seconds
-        for tend, tw in self.tiers or ():
-            if start_sec < tend:
-                w = max(w, tw)
-        return w
 
     # ------------------------------------------------------- range validity
     @property

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from ..functions.timestamps import GRANULARITY_SECONDS, MICROS_PER_SECOND
 from .lookup import (
     INTEGRAL_SQL_TYPES,
+    PrefixTiers,
     States,
     carried_states,
     states_to_columns,
@@ -37,7 +38,7 @@ from .lookup import (
 __all__ = ["SparkRollupWheel"]
 
 
-class SparkRollupWheel:
+class SparkRollupWheel(PrefixTiers):
     """Wheel with :class:`WheelIndex`-compatible query methods, backed by a
     cached rollup DataFrame ``(__sec, __cnt[, __vcnt, __sum, __min, __max,
     __sumsq])`` — state columns individually optional (per-aggregate builds)."""
@@ -74,42 +75,6 @@ class SparkRollupWheel:
         self.tiers: list[tuple[int, int]] = []
 
     # ----------------------------------------------------- tiered retention
-    def width_at(self, sec: int) -> int:
-        """Bucket width in force at ``sec`` (tiers are prefix spans)."""
-        for end, w in self.tiers:
-            if sec < end:
-                return w
-        return self.bucket_seconds
-
-    def _max_width_in(self, start_sec: int, end_sec: int) -> int:
-        w = self.bucket_seconds
-        for tend, tw in self.tiers:
-            if start_sec < tend:
-                w = max(w, tw)
-        return w
-
-    def check_compact(self, cutoff_sec: int, width: int) -> None:
-        """Validate ``(cutoff, width)`` against this wheel's (stricter)
-        ladder without mutating anything — the all-or-nothing pre-check
-        ``engine.compact_indexes`` runs over every wheel before compacting
-        any, so a mixed driver/Spark-backed engine never ends up partially
-        compacted when this backend rejects a shape the driver accepts."""
-        if width <= 0 or width % self.bucket_seconds:
-            raise ValueError(
-                f"width {width} not a multiple of bucket {self.bucket_seconds}"
-            )
-        for tend, tw in self.tiers:
-            if width % tw:
-                raise ValueError(
-                    f"width {width} does not nest existing tier width {tw}"
-                )
-        cutoff = cutoff_sec - (cutoff_sec % width)
-        for tend, _ in self.tiers:
-            if cutoff < tend:
-                raise ValueError(
-                    f"cutoff {cutoff} precedes existing tier end {tend}"
-                )
-
     def compact_before(self, cutoff_sec: int, width: int) -> int:
         """Roll buckets older than ``cutoff_sec`` into ``width``-second
         buckets — the Spark-backend spelling of the driver wheel's HAW

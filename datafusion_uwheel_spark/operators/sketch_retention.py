@@ -16,7 +16,8 @@ Reference model: µWheel's hierarchical wheel tiering (SURVEY §1.3,
 ``index/mod.rs:168-181`` HawConf — old fine slots drain into coarser
 wheels). The mixin mirrors the Spark-backend wheel's ladder discipline
 (``rollup_table.py``): a single prefix tier ``[(end_sec, width)]``, widths
-must nest, cutoffs only advance.
+must nest, cutoffs only advance — both inherit the tier-width helpers and
+that check from ``lookup.PrefixTiers``.
 
 Gates honored after compaction:
 
@@ -42,20 +43,39 @@ file (``_SIDECAR``) and its ctor config (``_CONFIG``). The one builder is
 (:mod:`.frequency`) inherits the ladder and the direct-ask machinery but
 keeps its own merge and persistence: truncated counters are not a union
 monoid.
+
+Direct (zero-job) asks read a second, ask-side ladder: the driver mirror
+of the raw sketch rows, and the levels pre-merged above it — per UTC day
+(per (key, day) on keyed rollups), then per ask granularity (a week or
+month rung) or per key (each key's full-span total). ONE pre-merge step
+(:meth:`SketchRetention._premerge`) builds every merged level from the
+level below it with one ``*MergeGrouped`` call into the shim, or from one
+Spark job when the raw mirror is over its caps; ONE framer
+(:meth:`SketchRetention._frame`) slices whichever level an ask picks —
+the raw level by the width-aware range rule, a merged level exactly —
+sums the raw counts per output cell and packs the frames. The four entry
+points (scalar, series, per-key and theta's per-key range pair) only
+pick the level: rung before day level, day level before raw.
 """
 
 from __future__ import annotations
 
 import json
+import logging
 import os
 import re
+from itertools import repeat
+from typing import Any, NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .lookup import PrefixTiers
 from .rollups import time_sec_col
 
 __all__ = ["SketchRetention", "load_rollup"]
+
+log = logging.getLogger(__name__)
 
 #: Cached-rollup partition count of every sketch and frequency rollup —
 #: small enough that probes run at the task-launch floor (the
@@ -69,6 +89,26 @@ _FIXED_GRAN_SECS = {"second": 1, "minute": 60, "hour": 3600, "day": 86400}
 
 #: memo-miss sentinel — memoized answers may legitimately be None/0/b""
 _MEMO_MISS = object()
+
+#: The (key, UTC day) cell of the keyed day level (see the ladder below).
+_KEY_DAY = "key+day"
+
+
+class Level(NamedTuple):
+    """One level of the sketch ask ladder: rows sorted by sec (by key,
+    then sec, on keyed merged levels)."""
+
+    secs: Any  # int64 ndarray: bucket, cell or (key totals) 0 seconds
+    keys: list | None  # per-row partition key; None on unkeyed levels
+    bufs: list  # per-row sketch bytes, None for a NULL sketch
+    counts: list | None  # raw non-NULL frame counts; None on the raw level
+    spans: dict | None  # key -> (lo, hi) row run on keyed merged levels
+
+
+def _null_first(k) -> tuple:
+    """Sort key of the job path's ``ORDER BY key`` (ascending, NULL
+    first — Spark's ASC default)."""
+    return (k is not None, k)
 
 
 def mirror_bytes(col: str) -> Column:
@@ -91,7 +131,7 @@ def land_mirror(rows: list, col: int, key: int | None):
     return secs, bufs, keys
 
 
-class SketchRetention:
+class SketchRetention(PrefixTiers):
     """Mixin adding ``compact_before`` / ``check_compact`` tiered retention
     to a per-bucket sketch rollup, and the sketch families' lifecycle.
 
@@ -465,14 +505,10 @@ class SketchRetention:
                 if spark is not None and self._shim_absent(spark):
                     ops = None
                 else:
-                    import warnings
-
-                    warnings.warn(
-                        f"direct sketch-ask probe failed transiently "
-                        f"({e!r}) — this ask takes the job path; the next "
-                        "ask re-probes",
-                        RuntimeWarning,
-                        stacklevel=2,
+                    log.warning(
+                        "direct sketch-ask probe failed transiently (%r) — "
+                        "this ask takes the job path; the next ask re-probes",
+                        e,
                     )
                     return None  # NOT latched
             self._jvm_ops = ops
@@ -501,9 +537,8 @@ class SketchRetention:
     _MIRROR_MAX_ROWS = 120_000
     _MIRROR_MAX_BYTES = 256 << 20
     _DIRECT_MAX_BYTES = 64 << 20
-    #: r13: tier/rung-served SERIES asks that would still frame more than
-    #: this many bytes fall back to the one-job path instead — see the
-    #: escape hatch in :meth:`_grouped_cells`.
+    #: r13: asks framing a merged level past this many bytes take the
+    #: one-job path instead — the escape hatch in :meth:`_fits`.
     _TIER_JOB_ESCAPE_BYTES = 32 << 20
 
     @staticmethod
@@ -722,9 +757,7 @@ class SketchRetention:
         matching tier wins, like ``_width_expr``'s CASE chain). Tiers come
         from the MIRROR BOX, not ``self`` — the box is the one consistent
         (frame, tiers) snapshot under a racing compact_before (ADVICE
-        r10). Shared by the scalar and grouped framers so the superset
-        semantics cannot drift between them (the r10p3 guard-drift
-        lesson)."""
+        r10)."""
         import numpy as np
 
         if not len(secs):
@@ -734,156 +767,49 @@ class SketchRetention:
             w[secs < end] = tw
         return np.nonzero((secs > a - w) & (secs < b))[0]
 
-    def _framed_range(self, col: str, a: int, b: int, key=_NO_ASK):
-        """``(framed_blob, n_selected)`` for the sketches intersecting
-        ``[a, b)`` (selection via :meth:`_selected_indices`), optionally
-        restricted to one key partition (same-type equality only — the
-        caller's :meth:`_key_gate` vouched; ``key=None`` is the NULL
-        partition, matching ``eqNullSafe``) — or None when the
-        mirror/blob exceeds the size caps."""
-        import struct
+    # ------------------------------------------------ the sketch ask ladder
+    # Every direct ask frames ONE level of a ladder (µWheel's HAW: fine
+    # slots pre-merged into coarser ones): the RAW mirror, the per-UTC-day
+    # pre-merge ("day"; _KEY_DAY per (key, day) on keyed rollups) and a
+    # rung above it — the ask granularity ("week", "month", a multiple of
+    # a day) or each key's full-span total ("key"). Each merged level is
+    # built by _premerge at most once per mirror box (mutations retire the
+    # box; invalidate_asks does not) and cached in
+    # box["levels"][(col, cell)] — False marks a tried and refused build.
+    # Asks pick rung before day level before raw, and _frame frames
+    # whichever level they got.
 
-        box = self._mirror_box()
-        m = self._bytes_mirror(col, box)
-        # r12: day-aligned SCALAR ranges frame the tier's day merges too —
-        # the same whole-day-slicing proof as the series forms, and on an
-        # over-cap mirror the job-built tier is the only direct path. The
-        # returned n is the RAW non-NULL frame count in range, so the
-        # callers' empty-range semantics (0 / NULL-per-rank) are decided
-        # on the same numbers as the raw framing.
-        if self._tier_serves_range(box, a, b):
-            sel = None
-            if key is SketchRetention._NO_ASK and self.key_column is None:
-                tier = self._day_tier(col, box)
-                if tier is not None:
-                    dsecs, dbufs, dcounts = tier
-                    sel, n = [], 0
-                    for d, buf, c in zip(dsecs.tolist(), dbufs, dcounts):
-                        if a <= d < b:
-                            n += c
-                            if buf is not None:
-                                sel.append(buf)
-            elif key is not SketchRetention._NO_ASK and self.key_column is not None:
-                ktier = self._keyed_day_tier(col, box)
-                if ktier is not None:
-                    # slice ONLY the asked key (r12 review: building the
-                    # full per-key dict per ask is O(keys × days) driver
-                    # CPU on a sub-ms path)
-                    slot = ktier.get(key)
-                    sel, n = [], 0
-                    if slot is not None:
-                        for d, buf, c in zip(*slot):
-                            if a is not None and not (a <= d < b):
-                                continue
-                            n += c
-                            if buf is not None:
-                                sel.append(buf)
-            if sel is not None:
-                total = sum(len(x) for x in sel)
-                if total > self._DIRECT_MAX_BYTES:
-                    return None
-                if total > self._TIER_JOB_ESCAPE_BYTES:
-                    # r13 escape hatch (see _grouped_cells): tier-served
-                    # scalars past this much framing take the one job too
-                    return None
-                parts = [struct.pack(">i", len(sel))]
-                for bb in sel:
-                    parts.append(struct.pack(">i", len(bb)))
-                    parts.append(bb)
-                return b"".join(parts), n
-        if m is False:
-            return None
-        secs, bufs, keys = m
-
-        def keep(i) -> bool:
-            if bufs[i] is None:
-                return False
-            if key is SketchRetention._NO_ASK:
-                return True
-            k = keys[i] if keys is not None else None
-            return k is None if key is None else k == key
-
-        sel = [bufs[i] for i in self._selected_indices(box, secs, a, b) if keep(i)]
-        if sum(len(x) for x in sel) > self._DIRECT_MAX_BYTES:
-            return None
-        parts = [struct.pack(">i", len(sel))]
-        for bb in sel:
-            parts.append(struct.pack(">i", len(bb)))
-            parts.append(bb)
-        return b"".join(parts), len(sel)
-
-    #: Job-path default bounds for one-sided grouped restrictions — the
-    #: exact literals the families' *_by forms substitute ('1970-01-01' /
-    #: '9999-01-01'), resolved once so the driver math cannot drift.
-    _OPEN_START_SEC = 0
-    _OPEN_END_SEC = 253_370_764_800  # epoch of '9999-01-01'
-
-    def _resolve_open_bounds(self, start, end):
-        """``(a, b)`` epoch bounds for an optionally-one-sided grouped
-        restriction — ``(None, None)`` when no filter applies at all
-        (matching the job path), ``False`` when a given bound cannot
-        resolve job-equivalently (the caller falls back). ONE copy for
-        the time-grouped and key-grouped gates (r11 review pass 8)."""
-        if start is None and end is None:
-            return None, None
-        a = self._OPEN_START_SEC if start is None else self._epoch_bound(start)
-        b = self._OPEN_END_SEC if end is None else self._epoch_bound(end)
-        if a is None or b is None:
-            return False
-        return a, b
-
-    @staticmethod
-    def _pack_grouped(counts, sel):
-        """The grouped blob: ``[n_cells][count_i]*n [len bytes]*`` —
-        ONE copy of the wire format's write side (three call sites were
-        drifting candidates, the r10p3 lesson)."""
-        import struct
-
-        parts = [struct.pack(f">i{len(counts)}i", len(counts), *counts)]
-        for bb in sel:
-            parts.append(struct.pack(">i", len(bb)))
-            parts.append(bb)
-        return b"".join(parts)
-
-    @staticmethod
-    def _unframe(blob: bytes) -> list:
-        """Read side of the plain frame layout ``[n][len bytes]*`` (the
-        ``*MergeGrouped`` return shape); zero-length frames — empty cells —
-        come back as None."""
-        import struct
-
-        (n,) = struct.unpack_from(">i", blob, 0)
-        off = 4
-        out = []
-        for _ in range(n):
-            (ln,) = struct.unpack_from(">i", blob, off)
-            off += 4
-            out.append(bytes(blob[off : off + ln]) if ln else None)
-            off += ln
-        return out
-
-    #: Coarse pre-merge tier (r12 — the r11 verdict's grouped-at-scale
-    #: finding): a FULL-SPAN series ask at day-or-coarser granularity over
-    #: a mirror at least this many rows deep answers from per-UTC-day
-    #: PRE-MERGED sketches instead of framing every raw bucket's bytes —
-    #: the measured sf1 week series shipped 7.1 MB (7200 hourly sketches)
-    #: through the py4j socket per fresh ask; the day tier ships ~350
-    #: merged sketches. Below the threshold the raw framing is already
-    #: cheap and the one-time pre-merge would not amortize.
+    #: Day pre-merge floor (r12 — the r11 verdict's grouped-at-scale
+    #: finding): day-composable asks over a raw mirror at least this many
+    #: rows deep frame per-UTC-day merged sketches instead of every raw
+    #: bucket — the measured sf1 week series shipped 7.1 MB (7,200 hourly
+    #: sketches) through the py4j socket per fresh ask; the day level
+    #: ships ~350. Below the floor raw framing is already cheap and the
+    #: one-time pre-merge would not amortize.
     _TIER_MIN_ROWS = 2048
     _TIER_SECONDS = 86400
+    #: Rung floor (r13): a day level at least this many days deep (per key,
+    #: r14, on keyed rollups) gets a rung above it, so a full-span week
+    #: series frames O(weeks) merged sketches instead of O(days) — the
+    #: sf10 full-span series framed ~3,500 day sketches at 670 ms, past
+    #: its own ~300 ms one-job floor. Measured warm, rung on vs off, at
+    #: 3,000 hourly days × ~1,000 ids/day (4-core box, 12 interleaved
+    #: pairs, every pair won): full-span week series theta 773 → 489 ms,
+    #: HLL 239 → 27 ms; 4-key ``distinct_rows_by_key`` 504 → 0.8 ms.
+    _RUNG_MIN_DAYS = 180
 
     def _jvm_merge_grouped(self, ops):
         """The family's ``*MergeGrouped`` JVM op (bound method) or None
-        when the family has no pre-merge (tier disabled). Overridden by
-        each rollup class; merge semantics per family: theta unions are
-        exact set algebra, HLL register unions are associative (identical
-        final state), KLL merges are rank-bounded — each exactly the
-        direct-vs-job contract that family already documents."""
+        when the family has no pre-merge (merged levels disabled).
+        Overridden by each rollup class; merge semantics per family:
+        theta unions are exact set algebra, HLL register unions are
+        associative (identical final state), KLL merges are rank-bounded
+        — each exactly the direct-vs-job contract that family already
+        documents."""
         return None
 
     def _tier_serves_range(self, box: dict, a: int, b: int) -> bool:
-        """Whether a RESTRICTED ask may slice the day tier instead of the
+        """Whether a RESTRICTED ask may slice the day level instead of the
         width-aware raw selection (r12): requires day-aligned bounds AND
         every bucket width in play (base + compaction tiers) dividing a
         day. Then bucket starts are day-interior (no bucket crosses a day
@@ -907,93 +833,267 @@ class SketchRetention:
             return granularity % self._TIER_SECONDS == 0
         return granularity in ("day", "week", "month", "quarter", "year")
 
-    def _day_tier(self, col: str, box: dict):
-        """``(day_secs int64 ndarray, merged_bufs, raw_counts)`` — the
-        per-UTC-day pre-merged tier — or None when the mirror is
-        ineligible (callers gate ask eligibility with
-        :meth:`_tier_granularity_ok` / :meth:`_tier_serves_range`), so
-        tier-served cells/counts/unions are EXACTLY the raw framing's.
-        Keyed rollups keep the raw path (their mirror rows carry per-key
-        frames). Built at most once per mirror box (one framing + one
-        ``*MergeGrouped`` py4j call, or ONE Spark job past the caps),
-        cached as data next to the mirror — mutations retire the box,
-        invalidate_asks does not. ``False`` in the cache marks an
-        over-cap build attempt."""
+    def _rung_serves_bounds(self, granularity, a: int, b: int) -> bool:
+        """Whether ``[a, b)`` lands exactly on rung-cell boundaries —
+        both bounds are fixed points of the granularity's truncation, so
+        every rung cell is wholly inside or wholly outside the range and
+        rung slicing reproduces the day level's whole-day slicing (which
+        :meth:`_tier_serves_range` already proved equals the raw
+        selection). Unaligned bounds keep the day level: its edge cells
+        group partially into the ask's first/last bucket, which a
+        pre-merged rung cell could not represent."""
         import numpy as np
 
-        ops = self._sketch_ops()
-        if ops is None:
-            return None
-        merge = self._jvm_merge_grouped(ops)
-        if merge is None:
-            return None
-        cache = box.setdefault("day_tier", {})
-        t = cache.get(col)
-        if t is not None:
-            return None if t is False else t
-        m = box["m"]
-        if m is False:
-            # no raw mirror to pre-merge driver-side (over-cap rollup) —
-            # the tier exists ONLY via the job build, size-guarded there
-            if self.key_column is not None:
-                return None
-            t = self._day_tier_via_job(col, box)
-            cache[col] = False if t is None else t
-            return t
-        secs, bufs, keys = m
-        if keys is not None or len(secs) < self._TIER_MIN_ROWS:
-            return None
         from ..functions.timestamps import bucket_starts
 
-        kb = bucket_starts(secs, "day")
-        dsecs: list = []
+        kb = bucket_starts(np.asarray([a, b], dtype=np.int64), granularity)
+        return int(kb[0]) == a and int(kb[1]) == b
+
+    @staticmethod
+    def _raw_level(m) -> Level | None:
+        """The raw mirror ``m`` as a level (None: over-cap mirror)."""
+        return None if m is False else Level(m[0], m[2], m[1], None, None)
+
+    def _level(self, col: str, box: dict, cell):
+        """The merged level of ``col`` at ``cell`` — or None when
+        ineligible: no ``*MergeGrouped`` op, a day level of the wrong
+        keyedness or under ``_TIER_MIN_ROWS``, a rung under
+        ``_RUNG_MIN_DAYS``, or a refused build. Sources: the raw mirror
+        under ``"day"`` / ``_KEY_DAY``, those levels under the rungs; an
+        over-cap raw mirror (or raw bytes past ``_DIRECT_MAX_BYTES``)
+        builds the day level by ONE Spark job (:meth:`_tier_job_rows`)
+        instead — days are 24-3600x fewer than raw buckets, so the level
+        fits where the mirror cannot. Refusals that depend on a floor are
+        not cached: the floors are per-instance settings that may change."""
+        ops = self._sketch_ops()
+        merge = None if ops is None else self._jvm_merge_grouped(ops)
+        if merge is None:
+            return None
+        cache = box.setdefault("levels", {})
+        lv = cache.get((col, cell))
+        if lv is not None:
+            return lv or None
+        keyed = cell in (_KEY_DAY, "key")
+        if cell in ("day", _KEY_DAY):
+            src = self._raw_level(box["m"])
+            rows_keyed = (
+                self.key_column is not None if src is None else src.keys is not None
+            )
+            if rows_keyed != keyed:
+                return None
+            if src is not None and len(src.secs) < self._TIER_MIN_ROWS:
+                return None
+        else:
+            src = self._level(col, box, _KEY_DAY if keyed else "day")
+            if src is None:
+                return None
+            # the rung's win is the days-1 unions it pre-pays per cell, so
+            # a keyed rung gates on the deepest key (r14), not on cells
+            depth = (
+                max((hi - lo for lo, hi in src.spans.values()), default=0)
+                if keyed
+                else len(src.secs)
+            )
+            if depth < self._RUNG_MIN_DAYS:
+                cache[(col, cell)] = False
+                return None
+        lv = None if src is None else self._premerge(merge, src, cell)
+        if lv is None and cell in ("day", _KEY_DAY):
+            lv = self._job_level(col, box, keyed)
+        cache[(col, cell)] = False if lv is None else lv
+        return lv
+
+    def _premerge(self, merge, src: Level, cell) -> Level | None:
+        """ONE pre-merge step under every merged level: the sorted source
+        level's rows grouped into ``cell`` runs by :meth:`_frame`, merged
+        by ONE ``*MergeGrouped`` py4j call. Cell counts are the summed raw
+        non-NULL frame counts, so count-0 cells keep the job path's NULL
+        arms on the same numbers as the raw framing; exactness inherits
+        each family's contract (one more level of the same union monoid).
+        None when the source frames exceed ``_DIRECT_MAX_BYTES``."""
+        idx = list(range(len(src.secs)))
+        if cell in (_KEY_DAY, "key"):
+            idx = self._key_sorted(src, idx)
+        cells, counts, fcounts, frames = self._frame(
+            src, idx, self._cell_ids(cell, src, idx)
+        )
+        if sum(len(x) for x in frames) > self._DIRECT_MAX_BYTES:
+            return None
+        bufs = self._unframe(bytes(merge(self._pack(frames, fcounts))))
+        return self._as_level(cell, cells, bufs, counts)
+
+    def _job_level(self, col: str, box: dict, keyed: bool) -> Level | None:
+        """The day (or (key, day)) level by ONE Spark job — see
+        :meth:`_tier_job_rows`."""
+        rows = self._tier_job_rows(col, box, keyed)
+        if rows is None:
+            return None
+        rows = sorted(
+            (r if keyed else (None, *r) for r in rows),
+            key=lambda r: (_null_first(r[0]), r[1]),
+        )
+        return self._as_level(
+            _KEY_DAY if keyed else "day",
+            [(r[0], int(r[1])) if keyed else int(r[1]) for r in rows],
+            [None if r[2] is None else bytes(r[2]) for r in rows],
+            [int(r[3]) for r in rows],
+        )
+
+    @staticmethod
+    def _as_level(cell, cells: list, bufs: list, counts: list) -> Level:
+        """A merged level from its cell ids — a key's full-span total
+        (``"key"``) sits at second 0: only full-span asks read it."""
+        import numpy as np
+
+        if cell == _KEY_DAY:
+            keys, secs = [c[0] for c in cells], [c[1] for c in cells]
+        elif cell == "key":
+            keys, secs = cells, [0] * len(cells)
+        else:
+            keys, secs = None, cells
+        spans = None
+        if keys is not None:
+            spans = {}
+            for i, k in enumerate(keys):
+                spans[k] = (spans.get(k, (i,))[0], i + 1)
+        return Level(np.asarray(secs, dtype=np.int64), keys, bufs, counts, spans)
+
+    @staticmethod
+    def _cell_ids(cell, lv: Level, idx: list) -> list:
+        """Each selected row's cell: its UTC day, its ask-granularity
+        bucket (``functions.timestamps.bucket_starts`` — the truncation
+        the frequency family pinned), its (key, day) or its key."""
+        from ..functions.timestamps import bucket_starts
+
+        if cell == "key":
+            return [lv.keys[i] for i in idx]
+        day = "day" if cell == _KEY_DAY else cell
+        buckets = bucket_starts(lv.secs[idx], day).tolist()
+        if cell == _KEY_DAY:
+            return list(zip([lv.keys[i] for i in idx], buckets))
+        return buckets
+
+    @staticmethod
+    def _key_sorted(lv: Level, idx: list) -> list:
+        """``idx`` in the job path's ``ORDER BY key`` order (ascending,
+        NULL first). Stable, so each key keeps its rows' sec order; merged
+        keyed levels are stored in that order already."""
+        if lv.counts is None:
+            idx.sort(key=lambda i: _null_first(lv.keys[i]))
+        return idx
+
+    def _select(self, box: dict, lv: Level, a, b, lo: int = 0, hi=None) -> list:
+        """Indices of ``lv``'s rows ``lo:hi`` inside ``[a, b)`` (``a`` None:
+        all of them). The raw level selects by :meth:`_selected_indices`'
+        width-aware rule; a merged level's cells are day-interior, so
+        exact ``[a, b)`` slicing is the same selection wherever callers
+        let it serve (:meth:`_tier_serves_range`)."""
+        import numpy as np
+
+        secs = lv.secs[lo:hi]
+        if a is None:
+            idx = np.arange(len(secs))
+        elif lv.counts is None:
+            idx = self._selected_indices(box, secs, a, b)
+        else:
+            idx = np.nonzero((secs >= a) & (secs < b))[0]
+        return (idx + lo).tolist()
+
+    @staticmethod
+    def _frame(lv: Level, idx: list, cids):
+        """ONE framer under every direct ask and pre-merge step: ``lv``'s
+        rows ``idx`` grouped into contiguous runs of their cell ids
+        ``cids`` (callers order ``idx`` so cells arrive as runs — secs
+        ascend and every truncation is monotone; keyed cells come
+        key-sorted). Returns ``(cells, counts, frame_counts, frames)``:
+        ``counts`` sums each cell's RAW non-NULL frame counts (a merged
+        cell frames ONE sketch but reports its raw count, so count-0
+        cells keep the job path's NULL arms), ``frame_counts`` are the
+        wire format's per-cell frame counts."""
+        cells: list = []
         counts: list = []
-        frame_counts: list = []
-        sel: list = []
-        for bk, buf in zip(kb.tolist(), bufs):
-            if not dsecs or bk != dsecs[-1]:
-                dsecs.append(bk)
+        fcounts: list = []
+        frames: list = []
+        bufs, raw = lv.bufs, lv.counts
+        for i, c in zip(idx, cids):
+            if not cells or c != cells[-1]:
+                cells.append(c)
                 counts.append(0)
-                frame_counts.append(0)
+                fcounts.append(0)
+            buf = bufs[i]
             if buf is not None:
-                sel.append(buf)
-                counts[-1] += 1
-                frame_counts[-1] += 1
-        if sum(len(x) for x in sel) > self._DIRECT_MAX_BYTES:
-            # too many raw bytes for ONE socket copy, even once — build
-            # the tier with ONE tiny Spark job instead (day-grouped union
-            # agg over the cached rollup; output is days × sketch, well
-            # under every cap). The job path is the right plan for moving
-            # this much sketch state ANYWAY (bytes stay executor-side);
-            # paying it once per data version buys every later full-span
-            # series ask the O(days) framing. Covers the 64-256 MB band
-            # between _DIRECT_MAX_BYTES and the mirror cap where every
-            # fresh series ask used to fall back to a per-ask job.
-            t = self._day_tier_via_job(col, box)
-            cache[col] = False if t is None else t
-            return t
-        merged = self._unframe(bytes(merge(self._pack_grouped(frame_counts, sel))))
-        t = (np.asarray(dsecs, dtype=np.int64), merged, counts)
-        cache[col] = t
-        return t
+                frames.append(buf)
+                fcounts[-1] += 1
+            counts[-1] += (buf is not None) if raw is None else raw[i]
+        return cells, counts, fcounts, frames
+
+    def _fits(self, lv: Level, frames: list) -> bool:
+        """Whether a framing of ``lv`` may go direct: under
+        ``_DIRECT_MAX_BYTES`` always and, on a merged level, under
+        ``_TIER_JOB_ESCAPE_BYTES`` — the r13 escape hatch (the r12
+        verdict's "direct must not cost more than its own job floor"):
+        past it the driver packing + socket copy + JVM merge loses to the
+        ONE-job executor-side merge (sf10: the ~64 MB full-span day
+        framing took 670 ms vs the ~300 ms job floor — ~10 ms/MB). Merged
+        answers equal the job path by each family's contract, so this is
+        routing, not semantics. Raw framings keep the
+        ``_DIRECT_MAX_BYTES``-only rule (their job alternative
+        re-aggregates the raw rollup, a different trade)."""
+        limit = self._DIRECT_MAX_BYTES
+        if lv.counts is not None:
+            limit = min(limit, self._TIER_JOB_ESCAPE_BYTES)
+        return sum(len(x) for x in frames) <= limit
+
+    @staticmethod
+    def _pack(frames: list, counts: list | None = None) -> bytes:
+        """ONE copy of the wire format's write side: ``[n_frames]`` (the
+        scalar ops) or, given per-cell frame ``counts``, the grouped
+        ``[n_cells][count_i]*n`` header, then ``[len bytes]*`` — all
+        big-endian int32. py4j moves ``byte[]`` in one bulk transfer while
+        ``int[]`` arguments pay one gateway round trip PER ELEMENT
+        (~0.3 ms each), so a whole series merges in ONE py4j round trip."""
+        import struct
+
+        head = [len(frames)] if counts is None else [len(counts), *counts]
+        parts = [struct.pack(f">{len(head)}i", *head)]
+        for bb in frames:
+            parts.append(struct.pack(">i", len(bb)))
+            parts.append(bb)
+        return b"".join(parts)
+
+    @staticmethod
+    def _unframe(blob: bytes) -> list:
+        """Read side of the plain frame layout ``[n][len bytes]*`` (the
+        ``*MergeGrouped`` return shape); zero-length frames — empty cells —
+        come back as None."""
+        import struct
+
+        (n,) = struct.unpack_from(">i", blob, 0)
+        off = 4
+        out = []
+        for _ in range(n):
+            (ln,) = struct.unpack_from(">i", blob, off)
+            off += 4
+            out.append(bytes(blob[off : off + ln]) if ln else None)
+            off += ln
+        return out
 
     def _tier_job_rows(self, col: str, box: dict, keyed: bool):
-        """ONE shared job-build core for BOTH tiers (r12 review: the
-        caps/fallback guards must not live in two drifting copies):
-        pre-SIZED before collecting (the ``_bytes_mirror`` discipline —
-        a post-collect guard would materialize an unbounded keys × days
-        result on the driver before it could refuse) — rows first via a
-        cheap countDistinct fast-refuse, then, over the PERSISTED
-        day-grouped ``_union_agg_exprs`` + non-NULL frame count, BOTH
-        caps from one tiny size aggregate BEFORE the row collect (r12
-        ADVICE: day-merged theta/KLL sketches can be orders of magnitude
-        larger than their count — up to 120k of them must never land on
-        the driver before the byte cap can speak; the persist makes the
-        union agg run once, exactly like caching the grouped frame).
-        Returns sorted collected rows (``[key,] day_sec, sketch, n``) or
-        None. All-NULL cells surface as empty sketches + count 0 (the
-        probed union-over-NULLs semantics), which the ask-time counts
-        map to the job path's NULL arms identically."""
+        """ONE shared job-build core for the day and (key, day) levels
+        (r12 review: the caps/fallback guards must not live in two
+        drifting copies): pre-SIZED before collecting (the
+        ``_bytes_mirror`` discipline — a post-collect guard would
+        materialize an unbounded keys × days result on the driver before
+        it could refuse) — rows first via a cheap countDistinct
+        fast-refuse, then, over the PERSISTED day-grouped
+        ``_union_agg_exprs`` + non-NULL frame count, BOTH caps from one
+        tiny size aggregate BEFORE the row collect (r12 ADVICE: day-merged
+        theta/KLL sketches can be orders of magnitude larger than their
+        count; the persist makes the union agg run once). Returns the
+        collected rows (``[key,] day_sec, sketch, n``) or None. All-NULL
+        cells surface as empty sketches + count 0 (the probed
+        union-over-NULLs semantics), which the ask-time counts map to the
+        job path's NULL arms identically."""
         # floor division, not %: Spark's % follows the dividend's sign,
         # which would mis-bucket pre-epoch seconds vs bucket_starts'
         # floored arithmetic
@@ -1028,139 +1128,84 @@ class SketchRetention:
         finally:
             g.unpersist()
 
-    #: Coarse-rung ladder floor (r13 — the r12 verdict's full-span
-    #: finding): a day tier at least this many days deep gets a second
-    #: pre-merged rung AT THE ASK GRANULARITY for coarser-than-day series
-    #: (week/month/quarter/year, or int multiples of a day), so a
-    #: full-span week ask frames O(weeks) merged sketches instead of
-    #: O(days) — the sf10 full-span series framed ~3,500 day sketches at
-    #: 670 ms, past its own ~300 ms one-job floor; the week rung frames
-    #: ~500. Below the floor the day framing is already cheap and the
-    #: extra merge call would not amortize.
-    _RUNG_MIN_DAYS = 180
-
-    def _rung_serves_bounds(self, granularity, a: int, b: int) -> bool:
-        """Whether ``[a, b)`` lands exactly on rung-cell boundaries —
-        both bounds are fixed points of the granularity's truncation, so
-        every rung cell is wholly inside or wholly outside the range and
-        rung slicing reproduces the day tier's whole-day slicing (which
-        :meth:`_tier_serves_range` already proved equals the raw
-        selection). Unaligned bounds keep the day tier: its edge cells
-        group partially into the ask's first/last bucket, which a
-        pre-merged rung cell could not represent."""
-        import numpy as np
-
-        from ..functions.timestamps import bucket_starts
-
-        kb = bucket_starts(np.asarray([a, b], dtype=np.int64), granularity)
-        return int(kb[0]) == a and int(kb[1]) == b
-
-    def _coarse_rung(self, col: str, box: dict, granularity):
-        """``(rung_secs int64 ndarray, merged_bufs, raw_counts)`` — the
-        per-(col, granularity) pre-merged rung ABOVE the day tier — or
-        None when ineligible (day-or-finer ask, shallow tier, no merge
-        op, over-cap bytes). Built from the day tier's driver-resident
-        bytes with ONE ``*MergeGrouped`` py4j call per (col, granularity)
-        per box (mutations retire the box with the tier), so the ladder
-        is day → ask-granularity with no extra Spark jobs. Exactness
-        inherits each family's tier contract verbatim — the rung is one
-        more level of the same union monoid (theta set algebra and HLL
-        register unions are associative, so rung == day tier == raw
-        framing bit-for-bit; KLL stays rank-bounded, merge-tree depth
-        does not change its worst-case bound). Counts are the summed raw
-        non-NULL frame counts of the member days, so count-0 cells keep
-        the job path's NULL arms on the same numbers as the day tier."""
-        import numpy as np
-
-        if isinstance(granularity, int):
-            if granularity <= self._TIER_SECONDS:
+    # ------------------------------------------------ the four entry points
+    def _framed_range(self, col: str, a: int, b: int, key=_NO_ASK):
+        """``(framed_blob, n)`` for the sketches intersecting ``[a, b)``,
+        optionally one key partition (same-type equality — the caller's
+        :meth:`_key_gate` vouched; ``key=None`` is the NULL partition,
+        matching ``eqNullSafe``) — or None past the size caps. ``n`` is
+        the RAW non-NULL frame count in range, so the callers' empty-range
+        semantics (0 / NULL-per-rank) are decided on the same numbers on
+        every level. Day-aligned ranges frame the day level (r12); a
+        keyed ask slices ONLY its own key's days (r12 review: nothing
+        O(keys × days) per ask)."""
+        box = self._mirror_box()
+        m = self._bytes_mirror(col, box)
+        keyed = key is not SketchRetention._NO_ASK
+        lv = None
+        if keyed == (self.key_column is not None) and self._tier_serves_range(
+            box, a, b
+        ):
+            lv = self._level(col, box, _KEY_DAY if keyed else "day")
+        if lv is not None:
+            lo, hi = lv.spans.get(key, (0, 0)) if keyed else (0, None)
+            idx = self._select(box, lv, a, b, lo, hi)
+        else:
+            lv = self._raw_level(m)
+            if lv is None:
                 return None
-        elif granularity == "day":
+            idx = self._select(box, lv, a, b)
+            if keyed:
+                idx = [i for i in idx if lv.keys[i] == key]
+        _cells, counts, _fcounts, frames = self._frame(lv, idx, repeat(None))
+        if not self._fits(lv, frames):
             return None
-        ops = self._sketch_ops()
-        if ops is None:
-            return None
-        merge = self._jvm_merge_grouped(ops)
-        if merge is None:
-            return None
-        cache = box.setdefault("rung", {})
-        ckey = (col, granularity)
-        t = cache.get(ckey)
-        if t is not None:
-            return None if t is False else t
-        day = self._day_tier(col, box)
-        if day is None:
-            # no False cache: the day tier own-caches, and its refusal
-            # may be knob-dependent (tests flip _TIER_MIN_ROWS) — only
-            # intrinsic conditions below pin False
-            return None
-        if len(day[0]) < self._RUNG_MIN_DAYS:
-            cache[ckey] = False
-            return None
-        from ..functions.timestamps import bucket_starts
+        return self._pack(frames), sum(counts)
 
-        dsecs, dbufs, dcounts = day
-        kb = bucket_starts(dsecs, granularity)
-        rsecs: list = []
-        fcounts: list = []
-        rcounts: list = []
-        sel: list = []
-        for bk, buf, c in zip(kb.tolist(), dbufs, dcounts):
-            if not rsecs or bk != rsecs[-1]:
-                rsecs.append(bk)
-                fcounts.append(0)
-                rcounts.append(0)
-            rcounts[-1] += c
-            if buf is not None:
-                sel.append(buf)
-                fcounts[-1] += 1
-        if sum(len(x) for x in sel) > self._DIRECT_MAX_BYTES:
-            cache[ckey] = False
-            return None
-        merged = self._unframe(bytes(merge(self._pack_grouped(fcounts, sel))))
-        t = (np.asarray(rsecs, dtype=np.int64), merged, rcounts)
-        cache[ckey] = t
-        return t
+    #: Job-path default bounds for one-sided grouped restrictions — the
+    #: exact literals the families' *_by forms substitute ('1970-01-01' /
+    #: '9999-01-01'), resolved once so the driver math cannot drift.
+    _OPEN_START_SEC = 0
+    _OPEN_END_SEC = 253_370_764_800  # epoch of '9999-01-01'
 
-    def _day_tier_via_job(self, col: str, box: dict):
-        """The day tier by ONE Spark job — see :meth:`_tier_job_rows`."""
-        import numpy as np
+    def _resolve_open_bounds(self, start, end):
+        """``(a, b)`` epoch bounds for an optionally-one-sided grouped
+        restriction — ``(None, None)`` when no filter applies at all
+        (matching the job path), ``False`` when a given bound cannot
+        resolve job-equivalently (the caller falls back). ONE copy for
+        the time-grouped and key-grouped gates (r11 review pass 8)."""
+        if start is None and end is None:
+            return None, None
+        a = self._OPEN_START_SEC if start is None else self._epoch_bound(start)
+        b = self._OPEN_END_SEC if end is None else self._epoch_bound(end)
+        if a is None or b is None:
+            return False
+        return a, b
 
-        rows = self._tier_job_rows(col, box, keyed=False)
-        if rows is None:
+    def _cells(self, lv: Level, idx: list, cids: list):
+        """``(cells, framed_blob, counts)`` of one grouped framing (blob
+        layout: :meth:`_pack` with per-cell frame counts), or None past
+        the size caps."""
+        cells, counts, fcounts, frames = self._frame(lv, idx, cids)
+        if not self._fits(lv, frames):
             return None
-        rows.sort(key=lambda r: r[0])
-        dsecs = np.asarray([r[0] for r in rows], dtype=np.int64)
-        bufs = [None if r[1] is None else bytes(r[1]) for r in rows]
-        counts = [int(r[2]) for r in rows]
-        return dsecs, bufs, counts
+        return cells, self._pack(frames, fcounts), counts
 
     def _grouped_cells(self, col, granularity, start, end, keyed_ask=False):
         """The grouped direct-ask gate (r11 — approx_*_by's economics):
         ``(bucket_secs, framed_blob, counts)`` when the series can answer
-        from the driver mirror, else None (job path). ``bucket_secs`` are
-        the ascending occupied cells over the (optionally restricted)
-        mirror, bucketed with the SAME driver-side truncation the
-        frequency family pinned (``functions.timestamps.bucket_starts`` —
-        named date_trunc levels + epoch-aligned int widths); ``counts[i]``
-        is cell i's number of non-NULL sketch frames inside
-        ``framed_blob`` — whose layout embeds them:
-        ``[n_cells:int32][count_i:int32]*n [len:int32 bytes]*`` big-endian,
-        and the ``*Grouped`` results come back as packed byte blobs too,
-        because py4j moves byte[] in one bulk transfer while int[]/long[]
-        arguments and returns pay one gateway round trip PER ELEMENT
-        (~0.3 ms each — measured ~9 ms of pure counts shipping on a
-        29-cell series before this layout). So the JVM merges a whole
-        dashboard series in ONE py4j round trip with two bulk transfers.
+        from the driver, else None (job path). ``bucket_secs`` are the
+        ascending occupied cells over the (optionally restricted) range;
+        ``counts[i]`` is cell i's raw non-NULL sketch count (see
+        :meth:`_frame`). Day-composable granularities over full spans or
+        :meth:`_tier_serves_range` ranges frame the day level, and
+        coarser-than-day ones climb to their rung when the bounds are rung
+        cell boundaries; an over-cap raw mirror answers only from those.
         Exotic date_trunc levels, unresolvable bounds, keyed asks,
-        shim-less/non-UTC sessions, and over-cap mirrors/blobs all fall
-        back — correct either way, just the ~200 ms job floor.
-        Granularity VALIDATION (`_check_granularity`) is the caller's job:
-        it must raise on both paths, never route-dependently."""
-        import struct
-
-        import numpy as np
-
+        shim-less/non-UTC sessions, and over-cap framings fall back —
+        correct either way, just the ~200 ms job floor. Granularity
+        VALIDATION (`_check_granularity`) is the caller's job: it must
+        raise on both paths, never route-dependently."""
         if keyed_ask or self._sketch_ops() is None:
             return None
         if not isinstance(granularity, int):
@@ -1177,392 +1222,85 @@ class SketchRetention:
         if bounds is False:
             return None
         a, b = bounds
-        from ..functions.timestamps import bucket_starts
-
         box = self._mirror_box()
         # re-validate tiling against THE BOX's tiers (r11 review pass 3):
         # the caller's up-front _check_granularity read live self.tiers,
         # and a compaction completing in between would otherwise hand a
         # fine granularity a coarse mirror — truncating 6h buckets into
-        # hourly cells is a silently wrong distribution, the exact leak
-        # the tiling gate forbids. Raises like the job path would under
-        # the box's state.
+        # hourly cells is a silently wrong distribution. Raises like the
+        # job path would under the box's state.
         self._check_granularity(granularity, start, tiers=box["tiers"])
         m = self._bytes_mirror(col, box)
-        tier_counts = None
-        tier_eligible = self._tier_granularity_ok(granularity) and (
+        lv = None
+        if self._tier_granularity_ok(granularity) and (
             a is None or self._tier_serves_range(box, a, b)
-        )
-        if m is False:
-            # over-cap mirror (the 100 TB shape: too many raw buckets to
-            # hold driver-side at all) — a tier-eligible series can STILL
-            # answer direct from the job-built day tier (r12): days are
-            # 24-3600x fewer than raw buckets, so the tier fits where the
-            # mirror cannot. Anything the tier can't prove stays on the
-            # job path.
-            tier = (
-                self._day_tier(col, box)
-                if tier_eligible
-                else None
-            )
-            if tier is None:
-                return None
-            secs, bufs, tier_counts = tier
-        else:
-            secs, bufs, _keys = m
-            if tier_eligible:
-                # r12: day-or-coarser series answer from the pre-merged
-                # day tier — O(days) merged sketches through the socket
-                # instead of the span's raw bucket bytes (the sf1 week
-                # series measured 7.1 MB/ask raw; see _day_tier). Serves
-                # the FULL span always, and RESTRICTED ranges exactly
-                # when _tier_serves_range proves the width-aware
-                # edge-sliver selection degenerates to whole-day slicing;
-                # anything else keeps the raw framing.
-                tier = self._day_tier(col, box)
-                if tier is not None:
-                    secs, bufs, tier_counts = tier
-        if tier_counts is not None and (
-            a is None or self._rung_serves_bounds(granularity, a, b)
         ):
-            # r13: coarser-than-day series climb one more rung — sketches
-            # pre-merged AT the ask granularity — when the day tier is
-            # deep enough that O(days) framing stops being cheap (the
-            # full-span sf10 week series: ~3,500 day frames, 670 ms,
-            # past its own ~300 ms one-job floor; the rung frames ~500)
-            rung = self._coarse_rung(col, box, granularity)
-            if rung is not None:
-                secs, bufs, tier_counts = rung
-        if tier_counts is not None and a is not None:
-            idx = np.nonzero((secs >= a) & (secs < b))[0]
-        elif a is not None:
-            idx = self._selected_indices(box, secs, a, b)
-        else:
-            idx = np.arange(len(secs))
-        if not len(idx):
-            return [], struct.pack(">i", 0), []
-        kb = bucket_starts(secs[idx], granularity)
-        # secs ascend and every truncation is monotone, so cells arrive as
-        # contiguous runs — one pass, no dict. The BLOB's per-cell counts
-        # are FRAME counts (the wire format's frame walker); the RETURNED
-        # counts carry the NULL/coalesce algebra — identical on the raw
-        # path, but a tier cell frames ONE merged sketch while reporting
-        # its RAW non-NULL frame count, so count-0 cells keep the job
-        # path's NULL arms on the same numbers as the raw framing.
-        cells: list = []
-        counts: list = []
-        frame_counts: list = []
-        sel: list = []
-        for bk, i in zip(kb.tolist(), idx.tolist()):
-            if not cells or bk != cells[-1]:
-                cells.append(bk)
-                counts.append(0)
-                frame_counts.append(0)
-            if bufs[i] is not None:
-                sel.append(bufs[i])
-                frame_counts[-1] += 1
-                if tier_counts is None:
-                    counts[-1] += 1
-            if tier_counts is not None:
-                counts[-1] += tier_counts[i]
-        total = sum(len(x) for x in sel)
-        if total > self._DIRECT_MAX_BYTES:
+            lv = self._level(col, box, "day")
+            if (
+                lv is not None
+                and granularity not in ("day", self._TIER_SECONDS)
+                and (a is None or self._rung_serves_bounds(granularity, a, b))
+            ):
+                lv = self._level(col, box, granularity) or lv
+        lv = lv or self._raw_level(m)
+        if lv is None:
             return None
-        if tier_counts is not None and total > self._TIER_JOB_ESCAPE_BYTES:
-            # r13 jobpath escape hatch (the r12 verdict's "direct must not
-            # cost more than its own job floor"): past this many framed
-            # bytes the driver packing + socket copy + JVM merge loses to
-            # the ONE-job executor-side merge (measured at sf10: the
-            # ~64 MB full-span day framing took 670 ms vs the ~300 ms job
-            # floor — ~10 ms/MB framing slope). Tier answers equal the job
-            # path by each family's documented contract, so this is a
-            # physical routing choice, not a semantics change. Applies
-            # only to tier/rung-served asks: raw framings keep the
-            # existing _DIRECT_MAX_BYTES-only rule (their job alternative
-            # re-aggregates the raw rollup, a different trade).
-            return None
-        return cells, self._pack_grouped(frame_counts, sel), counts
+        idx = self._select(box, lv, a, b)
+        return self._cells(lv, idx, self._cell_ids(granularity, lv, idx))
 
-    def _keyed_day_tier(self, col: str, box: dict):
-        """The (key, UTC-day) pre-merged tier for the KEYED grouped gates
-        (r12): ``{key: (day_secs, merged_bufs, raw_counts)}`` — the day
-        tier's economics applied to the ``*_by_key`` forms, whose mirrors
-        are keys × buckets deep (the heaviest framing surface). Same
-        build-once-per-box, same socket-cap one-job fallback, same
-        eligibility proof as :meth:`_day_tier` (callers gate ranges with
-        :meth:`_tier_serves_range`; key grouping is orthogonal to the
-        day slicing). ``None`` when ineligible."""
-        ops = self._sketch_ops()
-        if ops is None:
-            return None
-        merge = self._jvm_merge_grouped(ops)
-        if merge is None:
-            return None
-        cache = box.setdefault("day_key_tier", {})
-        t = cache.get(col)
-        if t is not None:
-            return None if t is False else t
-        m = box["m"]
-        if m is False:
-            # over-cap keyed mirror: the (key, day) tier may still fit —
-            # job build only, size-guarded there (r12)
-            t = self._keyed_day_tier_via_job(col, box)
-            cache[col] = False if t is None else t
-            return t
-        secs, bufs, keys = m
-        if keys is None or len(secs) < self._TIER_MIN_ROWS:
-            return None
-        from ..functions.timestamps import bucket_starts
-
-        kb = bucket_starts(secs, "day")
-        idxs = sorted(
-            range(len(secs)),
-            key=lambda i: ((keys[i] is not None, keys[i]), kb[i]),
-        )
-        cells: list = []
-        fcounts: list = []
-        rcounts: list = []
-        sel: list = []
-        for i in idxs:
-            kk = (keys[i], int(kb[i]))
-            if not cells or cells[-1] != kk:
-                cells.append(kk)
-                fcounts.append(0)
-                rcounts.append(0)
-            if bufs[i] is not None:
-                sel.append(bufs[i])
-                fcounts[-1] += 1
-                rcounts[-1] += 1
-        if sum(len(x) for x in sel) > self._DIRECT_MAX_BYTES:
-            t = self._keyed_day_tier_via_job(col, box)
-            cache[col] = False if t is None else t
-            return t
-        merged = self._unframe(
-            bytes(merge(self._pack_grouped(fcounts, sel)))
-        )
-        out: dict = {}
-        for (k, d), buf, c in zip(cells, merged, rcounts):
-            slot = out.setdefault(k, ([], [], []))
-            slot[0].append(d)
-            slot[1].append(buf)
-            slot[2].append(c)
-        cache[col] = out
-        return out
-
-    def _keyed_total_rung(self, col: str, box: dict):
-        """``{key: (merged_buf | None, raw_count)}`` — each key's
-        FULL-SPAN pre-merge above the (key, day) tier (r13, the keyed
-        sibling of :meth:`_coarse_rung`): a full-span ``*_by_key`` ask
-        frames O(keys) merged sketches instead of O(keys × days), the
-        heaviest remaining framing surface (keys × days can reach the
-        caps long before keys alone do). Built from the keyed tier's
-        driver-resident bytes with ONE ``*MergeGrouped`` call per col
-        per box; exactness inherits the keyed tier contract (one more
-        union-monoid level). Keys whose frames are all NULL keep an
-        empty merge (None buf) + count 0 — the job path's NULL algebra.
-        Range-restricted asks never use it (a total can't be sliced);
-        they keep the (key, day) tier."""
-        ops = self._sketch_ops()
-        if ops is None:
-            return None
-        merge = self._jvm_merge_grouped(ops)
-        if merge is None:
-            return None
-        cache = box.setdefault("key_total_rung", {})
-        t = cache.get(col)
-        if t is not None:
-            return None if t is False else t
-        tier = self._keyed_day_tier(col, box)
-        if tier is None:
-            # no False cache — see _coarse_rung: the keyed tier
-            # own-caches and its refusal may be knob-dependent
-            return None
-        # floor on per-key day DEPTH (r14; r13 summed (key, day) cells,
-        # so 200 keys × 1 day crossed a "180-day" floor though the merge
-        # gains nothing over the tier framing): the rung's win is the
-        # days-1 unions it pre-pays per key, so gate on the deepest key
-        if (
-            not tier
-            or max(len(v[0]) for v in tier.values()) < self._RUNG_MIN_DAYS
-        ):
-            cache[col] = False
-            return None
-        ordered = sorted(tier, key=lambda k: (k is not None, k))
-        fcounts: list = []
-        counts: list = []
-        sel: list = []
-        for k in ordered:
-            _dsecs, bufs, cts = tier[k]
-            fr = [b for b in bufs if b is not None]
-            sel.extend(fr)
-            fcounts.append(len(fr))
-            counts.append(sum(cts))
-        if sum(len(x) for x in sel) > self._DIRECT_MAX_BYTES:
-            cache[col] = False
-            return None
-        merged = self._unframe(bytes(merge(self._pack_grouped(fcounts, sel))))
-        t = {k: (buf, c) for k, buf, c in zip(ordered, merged, counts)}
-        cache[col] = t
-        return t
-
-    def _keyed_day_tier_via_job(self, col: str, box: dict):
-        """(key, day) tier by ONE Spark job — the shared
-        :meth:`_tier_job_rows` core (keys × days can be unbounded under a
-        high-cardinality ``partition_by``, hence the pre-collect sizing
-        there), regrouped per key."""
-        rows = self._tier_job_rows(col, box, keyed=True)
-        if rows is None:
-            return None
-        rows.sort(key=lambda r: ((r[0] is not None, r[0]), r[1]))
-        out: dict = {}
-        for r in rows:
-            slot = out.setdefault(r[0], ([], [], []))
-            slot[0].append(int(r[1]))
-            slot[1].append(None if r[2] is None else bytes(r[2]))
-            slot[2].append(int(r[3]))
-        return out
-
-    @staticmethod
-    def _tier_key_frames(tier: dict, a, b):
-        """Slice a keyed day tier to ``[a, b)`` (``a=None`` = full span):
-        ``{key: (bufs_in_range, raw_count_in_range)}`` with keys that
-        have NO days in range omitted — exactly the raw selection's
-        key-presence rule."""
-        out: dict = {}
-        for k, (dsecs, bufs, counts) in tier.items():
-            fr: list = []
-            n = 0
-            present = False
-            for d, buf, c in zip(dsecs, bufs, counts):
-                if a is not None and not (a <= d < b):
-                    continue
-                present = True
-                n += c
-                if buf is not None:
-                    fr.append(buf)
-            if present:
-                out[k] = (fr, n)
-        return out
+    def _key_sortable(self) -> bool:
+        """The keyed grouped gates: only key-column types whose collected
+        Python values sort the way Spark sorts them ride (the same
+        `_DIRECT_KEY_TYPES` set the keyed scalar gate uses — one type per
+        column, no cross-type comparator subtleties) on a shim session;
+        also refuses a hand-built handle without ``__key``."""
+        if self.key_column is None or self._sketch_ops() is None:
+            return False
+        dtype = dict(self._df.dtypes).get("__key", "")
+        return self._DIRECT_KEY_TYPES.get(dtype) is not None
 
     def _keyed_cells(self, col, start, end):
         """The PER-KEY grouped gate (the ``*_by_key`` dimensional forms):
         ``(key_values, framed_blob, counts)`` with keys in the job path's
-        ``ORDER BY key`` order (ascending, NULL FIRST — Spark's ASC
-        default), else None. Only key-column types whose collected Python
-        values sort the way Spark sorts them ride (the same
-        `_DIRECT_KEY_TYPES` set the keyed scalar gate uses: one type per
-        column, no cross-type comparator subtleties); everything else —
-        plus shim-less sessions, unresolvable bounds, over-cap mirrors —
-        falls back to the job path. Blob layout and the batched ``*Grouped``
-        JVM ops are exactly :meth:`_grouped_cells`'s."""
-        import struct
-
-        import numpy as np
-
-        if self.key_column is None or self._sketch_ops() is None:
+        ``ORDER BY key`` order (ascending, NULL first — Spark's ASC
+        default), else None. Full spans climb to the key-total rung
+        (O(keys) frames, r13), full spans and :meth:`_tier_serves_range`
+        ranges frame the (key, day) level (r12), the rest the raw mirror;
+        over-cap mirrors, unresolvable bounds and :meth:`_key_sortable`
+        refusals fall back. Blob layout and the batched ``*Grouped`` JVM
+        ops are exactly :meth:`_grouped_cells`'s."""
+        if not self._key_sortable():
             return None
-        if self._DIRECT_KEY_TYPES.get(dict(self._df.dtypes).get("__key", "")) is None:
-            return None  # also refuses a hand-built handle without __key
         bounds = self._resolve_open_bounds(start, end)
         if bounds is False:
             return None
         a, b = bounds
         box = self._mirror_box()
         m = self._bytes_mirror(col, box)
-        # r12: the (key, day) tier serves full spans and provably-safe
-        # day-aligned ranges (see _tier_serves_range) — O(keys × days)
-        # merged frames instead of keys × raw buckets; for an OVER-CAP
-        # mirror (m is False) the job-built tier is the only direct path
+        lv = None
         if a is None or self._tier_serves_range(box, a, b):
-            if a is None:
-                # r13: full-span asks climb to the key-total rung —
-                # O(keys) frames instead of O(keys × days)
-                rung = self._keyed_total_rung(col, box)
-                if rung is not None:
-                    ordered = sorted(rung, key=lambda k: (k is not None, k))
-                    counts = [rung[k][1] for k in ordered]
-                    fcounts = [
-                        0 if rung[k][0] is None else 1 for k in ordered
-                    ]
-                    sel = [
-                        rung[k][0] for k in ordered if rung[k][0] is not None
-                    ]
-                    # r14: the escape hatch applies here like every other
-                    # tier/rung surface (r13 gated only on
-                    # _DIRECT_MAX_BYTES, leaving a 32-64 MB band — large-k
-                    # sketches × thousands of keys — where O(keys) framing
-                    # still loses to the ~300 ms one-job floor at the
-                    # measured ~10 ms/MB framing slope)
-                    if (
-                        sum(len(x) for x in sel)
-                        <= self._TIER_JOB_ESCAPE_BYTES
-                    ):
-                        return ordered, self._pack_grouped(fcounts, sel), counts
-                    return None
-            tier = self._keyed_day_tier(col, box)
-            if tier is not None:
-                per_key = self._tier_key_frames(tier, a, b)
-                if not per_key:
-                    return [], struct.pack(">i", 0), []
-                ordered = sorted(per_key, key=lambda k: (k is not None, k))
-                counts = [per_key[k][1] for k in ordered]
-                fcounts = [len(per_key[k][0]) for k in ordered]
-                sel = [bb for k in ordered for bb in per_key[k][0]]
-                total = sum(len(x) for x in sel)
-                if total > self._DIRECT_MAX_BYTES:
-                    return None
-                if total > self._TIER_JOB_ESCAPE_BYTES:
-                    # r13 escape hatch (see _grouped_cells): past this
-                    # much framing the one-job merge is cheaper
-                    return None
-                return ordered, self._pack_grouped(fcounts, sel), counts
-        if m is False:
+            lv = (a is None and self._level(col, box, "key")) or self._level(
+                col, box, _KEY_DAY
+            )
+        lv = lv or self._raw_level(m)
+        if lv is None:
             return None
-        # keys cannot be None here: the dtype gate above proved __key is
-        # a column of the same df the mirror box is identity-keyed to
-        secs, bufs, keys = m
-        if a is not None:
-            idx = self._selected_indices(box, secs, a, b)
-        else:
-            idx = np.arange(len(secs))
-        if not len(idx):
-            return [], struct.pack(">i", 0), []
-        # keys are NOT contiguous in the sec-sorted mirror — one dict pass,
-        # then the job path's ordering: ascending with NULL first
-        frames: dict = {}
-        for i in idx.tolist():
-            frames.setdefault(keys[i], []).append(bufs[i])
-        ordered = sorted(frames, key=lambda k: (k is not None, k))
-        cells: list = []
-        counts: list = []
-        sel: list = []
-        for k in ordered:
-            cells.append(k)
-            n = 0
-            for bb in frames[k]:
-                if bb is not None:
-                    sel.append(bb)
-                    n += 1
-            counts.append(n)
-        if sum(len(x) for x in sel) > self._DIRECT_MAX_BYTES:
-            return None
-        return cells, self._pack_grouped(counts, sel), counts
+        idx = self._key_sorted(lv, self._select(box, lv, a, b))
+        return self._cells(lv, idx, self._cell_ids("key", lv, idx))
 
     def _keyed_pair_cells(self, col, r1, r2):
         """Per-key TWO-range framing (theta's ``retained_by_key`` shape):
-        ``(key_values, framed_r1, framed_r2)`` with keys that have mirror
-        rows in EITHER range — the job path's ``f1|f2`` groupBy — in its
-        ``ORDER BY key`` order (ascending, NULL first), each key's frames
-        split per range against ONE mirror snapshot (a row inside both
-        ranges contributes to both, exactly like the ``WHEN(f1/f2)``
-        projections). Bounds are REQUIRED ``(start, end)`` pairs (the
-        cohort ask has no open form). Gates as :meth:`_keyed_cells`; blob
-        layout as :meth:`_pack_grouped` — a key with only NULL frames on
-        one side frames an empty cell there, which unions to the empty
-        sketch (estimate 0) like the job path's all-NULL union."""
-        if self.key_column is None or self._sketch_ops() is None:
-            return None
-        if self._DIRECT_KEY_TYPES.get(dict(self._df.dtypes).get("__key", "")) is None:
+        ``(key_values, framed_r1, framed_r2)`` with keys that have rows in
+        EITHER range — the job path's ``f1|f2`` groupBy — in its ``ORDER
+        BY key`` order, each key's frames split per range against ONE
+        level snapshot (a row inside both ranges contributes to both,
+        exactly like the ``WHEN(f1/f2)`` projections). Bounds are REQUIRED
+        ``(start, end)`` pairs (the cohort ask has no open form); both
+        day-sliceable → the (key, day) level. Gates as
+        :meth:`_keyed_cells` — a key with only NULL frames on one side
+        frames an empty cell there, which unions to the empty sketch
+        (estimate 0) like the job path's all-NULL union."""
+        if not self._key_sortable():
             return None
         spans = []
         for s, e in (r1, r2):
@@ -1573,61 +1311,23 @@ class SketchRetention:
             spans.append((a, b))
         box = self._mirror_box()
         m = self._bytes_mirror(col, box)
-        # r12: both ranges provably day-sliceable -> the (key, day) tier
-        # frames O(keys × days-in-range) merged sketches per side; for an
-        # over-cap mirror (m is False) the job-built tier is the only
-        # direct path
+        lv = None
         if all(self._tier_serves_range(box, a, b) for a, b in spans):
-            tier = self._keyed_day_tier(col, box)
-            if tier is not None:
-                sides = [
-                    self._tier_key_frames(tier, a, b) for a, b in spans
-                ]
-                merged_keys = set(sides[0]) | set(sides[1])
-                ordered = sorted(
-                    merged_keys, key=lambda k: (k is not None, k)
-                )
-                blobs = []
-                total = 0
-                for side in sides:
-                    fcounts: list = []
-                    sel: list = []
-                    for k in ordered:
-                        fr = side.get(k, ([], 0))[0]
-                        sel.extend(fr)
-                        fcounts.append(len(fr))
-                    total += sum(len(x) for x in sel)
-                    blobs.append(self._pack_grouped(fcounts, sel))
-                if total > self._DIRECT_MAX_BYTES:
-                    return None
-                if total > self._TIER_JOB_ESCAPE_BYTES:
-                    # r13 escape hatch (see _grouped_cells)
-                    return None
-                return ordered, blobs[0], blobs[1]
-        if m is False:
+            lv = self._level(col, box, _KEY_DAY)
+        lv = lv or self._raw_level(m)
+        if lv is None:
             return None
-        secs, bufs, keys = m  # dtype gate above proved __key exists
-        frames: dict = {}
-        for j, (a, b) in enumerate(spans):
-            for i in self._selected_indices(box, secs, a, b).tolist():
-                frames.setdefault(keys[i], ([], []))[j].append(bufs[i])
-        ordered = sorted(frames, key=lambda k: (k is not None, k))
+        sides = []
+        for a, b in spans:
+            idx = self._key_sorted(lv, self._select(box, lv, a, b))
+            sides.append(self._frame(lv, idx, self._cell_ids("key", lv, idx)))
+        if not self._fits(lv, sides[0][3] + sides[1][3]):
+            return None
+        ordered = sorted(set(sides[0][0]) | set(sides[1][0]), key=_null_first)
         blobs = []
-        total = 0
-        for j in (0, 1):
-            counts: list = []
-            sel: list = []
-            for k in ordered:
-                n = 0
-                for bb in frames[k][j]:
-                    if bb is not None:
-                        sel.append(bb)
-                        n += 1
-                counts.append(n)
-            total += sum(len(x) for x in sel)
-            blobs.append(self._pack_grouped(counts, sel))
-        if total > self._DIRECT_MAX_BYTES:
-            return None
+        for cells, _counts, fcounts, frames in sides:
+            per_key = dict(zip(cells, fcounts))
+            blobs.append(self._pack(frames, [per_key.get(k, 0) for k in ordered]))
         return ordered, blobs[0], blobs[1]
 
     def _unpack_kll_cells(self, blob, cells, qs):
@@ -1697,18 +1397,6 @@ class SketchRetention:
         Spark-backend wheel."""
         return getattr(self, "_tiers", [])
 
-    def width_at(self, sec: int) -> int:
-        """Bucket width in force at ``sec``."""
-        for end, w in self.tiers:
-            if sec < end:
-                return w
-        return self.bucket_seconds
-
-    def _max_width(self, tiers=None) -> int:
-        if tiers is None:
-            tiers = self.tiers
-        return max((w for _, w in tiers), default=self.bucket_seconds)
-
     @staticmethod
     def _epoch_sec(v) -> int | None:
         """Driver-side epoch seconds of a timestamp string/datetime (the
@@ -1728,16 +1416,9 @@ class SketchRetention:
         stays answerable after the prefix compacts (the wheels'
         ``_max_width_in`` discipline). ``tiers`` overrides ``self.tiers``
         when the caller holds a coherent snapshot (the mirror box)."""
-        if tiers is None:
-            tiers = self.tiers
-        if start is None:
-            return self._max_width(tiers)
         sec = self._epoch_sec(start)
-        if sec is None:  # unparseable: stay conservative
-            return self._max_width(tiers)
-        return max(
-            (w for e, w in tiers if e > sec), default=self.bucket_seconds
-        )
+        # an open or unparseable start reads the whole table (conservative)
+        return self._max_width_in(-(2**63) if sec is None else sec, tiers=tiers)
 
     def _width_expr(self) -> Column:
         """Per-row bucket width — the edge-inclusion slop the range
@@ -1786,26 +1467,6 @@ class SketchRetention:
             )
 
     # --------------------------------------------------------- compaction
-    def check_compact(self, cutoff_sec: int, width: int) -> None:
-        """Validate ``(cutoff, width)`` against this rollup's ladder
-        WITHOUT mutating anything — the all-or-nothing pre-check
-        ``engine.compact_indexes`` runs before compacting any index."""
-        if width <= 0 or width % self.bucket_seconds:
-            raise ValueError(
-                f"width {width} not a multiple of bucket {self.bucket_seconds}"
-            )
-        for _tend, tw in self.tiers:
-            if width % tw:
-                raise ValueError(
-                    f"width {width} does not nest existing tier width {tw}"
-                )
-        cutoff = cutoff_sec - (cutoff_sec % width)
-        for tend, _ in self.tiers:
-            if cutoff < tend:
-                raise ValueError(
-                    f"cutoff {cutoff} precedes existing tier end {tend}"
-                )
-
     def merge_batch(self, batch_df, time_column: str) -> None:
         """Merge a micro-batch of raw rows into the rollup — streaming
         maintenance. Serialized against :meth:`compact_before` under

@@ -117,18 +117,18 @@ def main() -> None:
     # unchanged (theta exact; HLL register-equal).
     tr._TIER_MIN_ROWS = 0
     tr._RUNG_MIN_DAYS = 0  # demo corpus is shallow; force the rung on
-    tr._mirror_box().setdefault("rung", {}).clear()
+    tr._mirror_box().setdefault("levels", {}).pop(("__theta", "week"), None)
     tr.invalidate_asks()
     rung = tr.retention_rows_by("week")  # builds the rung once
     tr.invalidate_asks()
     j0 = njobs(spark)
     rung = tr.retention_rows_by("week")
     assert njobs(spark) == j0, "warm rung ask must be zero-job"
-    t = tr._mirror_box()["rung"][("__theta", "week")]
+    t = tr._mirror_box()["levels"][("__theta", "week")]
     # the same ask framed from the DAY tier (rung disabled + cache
     # cleared) must give the identical rows — one more merge level of an
     # exact set algebra cannot move a bit
-    tr._mirror_box()["rung"].clear()
+    tr._mirror_box()["levels"].pop(("__theta", "week"))
     tr._RUNG_MIN_DAYS = 10**9
     tr.invalidate_asks()
     assert rung == tr.retention_rows_by("week"), "rung must equal day tier"
@@ -152,7 +152,7 @@ def main() -> None:
     dk._TIER_MIN_ROWS = 0
     dk._RUNG_MIN_DAYS = 0  # demo corpus is shallow; force the rung on
     got_k = dk.distinct_rows_by_key(None, None)  # builds the rung once
-    rung_state = dk._mirror_box()["key_total_rung"]["__hll"]
+    rung_state = dk._mirror_box()["levels"][("__hll", "key")]
     assert rung_state not in (None, False)
     assert got_k == want_k, "key-total rung must equal the job path"
     dk.invalidate_asks()
@@ -166,7 +166,7 @@ def main() -> None:
     assert njobs(spark) > j0, "escaped ask must take the one-job path"
     dk._TIER_JOB_ESCAPE_BYTES = 32 << 20
     print(
-        f"key-total rung: {len(rung_state)} per-key totals serve the "
+        f"key-total rung: {len(rung_state.keys)} per-key totals serve the "
         "full-span keyed series zero-job; past the escape threshold the "
         "one-job merge answers identically"
     )

@@ -20,6 +20,7 @@
 
 from __future__ import annotations
 
+import logging
 from datetime import datetime, timedelta
 
 import pytest
@@ -244,7 +245,9 @@ def test_shim_absent_probe_by_java_type(spark):
     assert SketchRetention._shim_absent(_FakeSpark()) is False
 
 
-def test_probe_latches_only_on_definitive_absence(spark, hll_events, monkeypatch):
+def test_probe_latches_only_on_definitive_absence(
+    spark, hll_events, monkeypatch, caplog
+):
     from datafusion_uwheel_spark.operators.sketch_retention import SketchRetention
     from datafusion_uwheel_spark.operators.distinct import build_distinct_rollup
 
@@ -268,8 +271,16 @@ def test_probe_latches_only_on_definitive_absence(spark, hll_events, monkeypatch
         monkeypatch.setattr(
             SketchRetention, "_shim_absent", staticmethod(lambda s, _c=None: False)
         )
-        with pytest.warns(RuntimeWarning, match="transiently"):
+        caplog.clear()
+        with caplog.at_level(
+            logging.WARNING,
+            logger="datafusion_uwheel_spark.operators.sketch_retention",
+        ):
             assert r._sketch_ops() is None
+        assert any(
+            rec.levelno == logging.WARNING and "transiently" in rec.getMessage()
+            for rec in caplog.records
+        )
         assert not hasattr(r, "_jvm_ops")  # NOT latched — next ask re-probes
         monkeypatch.undo()
         assert r._sketch_ops() is not None  # recovery on the next ask

@@ -23,7 +23,7 @@ tier's raw counts; (f) mutations retire the tier with its mirror box."""
 
 from __future__ import annotations
 
-from datetime import datetime, timedelta
+from datetime import datetime, timedelta, timezone
 
 import pytest
 
@@ -65,9 +65,14 @@ def _no_jobs(spark, fn):
     return out, after == before
 
 
+def _level_state(rollup, col, cell):
+    """The mirror box's cached merged level of ``col`` at ``cell`` (a
+    ``Level``, ``False`` for a refused build, None when never tried)."""
+    return rollup._mirror_box().get("levels", {}).get((col, cell))
+
+
 def _tier_state(rollup, col):
-    box = rollup._mirror_box()
-    return box.get("day_tier", {}).get(col)
+    return _level_state(rollup, col, "day")
 
 
 # ------------------------------------------------------------------ theta
@@ -318,8 +323,7 @@ def test_job_built_tier_over_socket_cap(spark, events):
 
 # ------------------------------------------------------- keyed tier (r12)
 def _key_tier_state(rollup, col):
-    box = rollup._mirror_box()
-    return box.get("day_key_tier", {}).get(col)
+    return _level_state(rollup, col, "key+day")
 
 
 def test_keyed_day_tier_distinct_by_key(spark, events):
@@ -600,8 +604,11 @@ def test_keyed_scalar_asks_ride_the_keyed_tier(spark, events):
 
 # ------------------------------------------------- coarse rung (r13)
 def _rung_state(rollup, col, gran):
-    box = rollup._mirror_box()
-    return box.get("rung", {}).get((col, gran))
+    return _level_state(rollup, col, gran)
+
+
+def _key_rung_state(rollup, col):
+    return _level_state(rollup, col, "key")
 
 
 def test_theta_week_rung_bit_equal_and_job_free(spark, events):
@@ -823,12 +830,12 @@ def test_keyed_total_rung_full_span(spark, events):
         r._TIER_MIN_ROWS = 0
         r._RUNG_MIN_DAYS = 0
         rung = r.distinct_rows_by_key(None, None)
-        box = r._mirror_box()
-        t = box.get("key_total_rung", {}).get("__hll")
+        t = _key_rung_state(r, "__hll")
         assert t not in (None, False)
         assert rung == raw == job
         # O(keys): exactly one merged frame (or None) per key
-        assert set(t) == {k for k, _ in raw}
+        assert len(t.keys) == len(set(t.keys))
+        assert set(t.keys) == {k for k, _ in raw}
         # warm full-span ask: zero jobs
         r.invalidate_asks()
         got, jf = _no_jobs(spark, lambda: r.distinct_rows_by_key(None, None))
@@ -895,7 +902,7 @@ def test_keyed_total_rung_escape_hatch(spark, events):
         assert got == job
         assert not job_free  # escaped: past the cap, the one-job merge wins
         # the rung itself was still built (the escape is ask-side routing)
-        assert r._mirror_box().get("key_total_rung", {}).get("__hll") not in (
+        assert _key_rung_state(r, "__hll") not in (
             None,
             False,
         )
@@ -929,15 +936,201 @@ def test_keyed_rung_floor_counts_depth_not_cells(spark):
         r._TIER_MIN_ROWS = 0
         r._RUNG_MIN_DAYS = 3  # deepest key has 2 days -> refuse
         base = r.distinct_rows_by_key(None, None)
-        assert r._mirror_box().get("key_total_rung", {}).get("__hll") is False
+        assert _key_rung_state(r, "__hll") is False
         r.invalidate_asks()
         r._drop_mirror()
         r._RUNG_MIN_DAYS = 2  # deepest key meets the floor -> build
         got = r.distinct_rows_by_key(None, None)
-        assert r._mirror_box().get("key_total_rung", {}).get("__hll") not in (
+        assert _key_rung_state(r, "__hll") not in (
             None,
             False,
         )
         assert got == base
+    finally:
+        r.unpersist()
+
+
+# ------------------------------------------- seeded ladder differential
+GRANS = ("day", "week", "month", 2 * 86400)
+
+
+@pytest.fixture(scope="module")
+def null_key_events(spark):
+    # the module's hourly corpus (day 5 all-NULL values) with a partition
+    # key that is NULL on every fifth row, so each level carries a
+    # NULL-key run
+    rows = []
+    for h in range(N_HOURS):
+        ts = BASE + timedelta(hours=h)
+        null_day = (h // 24) == 5
+        for j in range(3):
+            rows.append(
+                (
+                    ts,
+                    None if null_day else (h * 7 + j * 13) % 97,
+                    None if null_day else float((h * 31 + j) % 211),
+                    None if (h + j) % 5 == 0 else ("a" if j else "b"),
+                )
+            )
+    return spark.createDataFrame(rows, "ts timestamp, uid bigint, v double, k string")
+
+
+def _rand_bounds(rng, open_ok: bool):
+    """A random ``[start, end)`` over the corpus: day-aligned or not (an
+    hour offset keeps bucket-edge selection exact), one side open when
+    ``open_ok``."""
+    lo = rng.randrange(0, 14)
+    hi = rng.randrange(lo + 1, 22)
+
+    def at(day):
+        off = 0 if rng.random() < 0.7 else rng.randrange(1, 24)
+        return str(BASE + timedelta(days=day, hours=off))
+
+    s, e = at(lo), at(hi)
+    if open_ok and rng.random() < 0.3:
+        return rng.choice([(None, None), (None, e), (s, None)])
+    return s, e
+
+
+def _three_ways(r, ask, built: set):
+    """``ask()`` on the raw level, on the merged levels (day level and
+    rungs forced on) and on the job path; adds the cells of the merged
+    levels the second ask built to ``built``."""
+    r._mirror_box().pop("levels", None)
+    r._TIER_MIN_ROWS = 10**9
+    r.invalidate_asks()
+    raw = ask()
+    r._TIER_MIN_ROWS = 0
+    r._RUNG_MIN_DAYS = 0
+    r.invalidate_asks()
+    merged = ask()
+    levels = r._mirror_box().get("levels", {})
+    built.update(cell for (_col, cell), lv in levels.items() if lv is not False)
+    r._jvm_ops = None
+    r.invalidate_asks()
+    job = ask()
+    del r._jvm_ops
+    return raw, merged, job
+
+
+def _truth(rows, col, s, e, cell_of):
+    """Sorted non-NULL values of ``col`` per output cell inside
+    ``[s, e)`` (None: open side)."""
+    lo = datetime.fromisoformat(s) if s else datetime.min
+    hi = datetime.fromisoformat(e) if e else datetime.max
+    out: dict = {}
+    for row in rows:
+        if lo <= row["ts"] < hi and row[col] is not None:
+            out.setdefault(cell_of(row), []).append(row[col])
+    return {c: sorted(v) for c, v in out.items()}
+
+
+def _rank_ok(vals, val, q=0.5, eps=0.06) -> bool:
+    import bisect
+
+    lo = bisect.bisect_left(vals, val) / len(vals)
+    hi = bisect.bisect_right(vals, val) / len(vals)
+    return val in vals and lo - eps <= q <= hi + eps
+
+
+def _bucket_of(gran):
+    import numpy as np
+
+    from datafusion_uwheel_spark.functions.timestamps import bucket_starts
+
+    def cell(row):
+        sec = int(row["ts"].replace(tzinfo=timezone.utc).timestamp())
+        b = int(bucket_starts(np.asarray([sec], dtype=np.int64), gran)[0])
+        return datetime.fromtimestamp(b, tz=timezone.utc).replace(tzinfo=None)
+
+    return cell
+
+
+@pytest.mark.parametrize("family", ["theta", "hll", "kll"])
+@pytest.mark.parametrize("keyed", [False, True])
+def test_ladder_differential_seeded(spark, null_key_events, family, keyed):
+    """Random bound / granularity / level combinations through every
+    direct entry point — scalar, series, per-key and theta's per-key
+    range pairs — on the raw level, the merged levels and the job path:
+    theta and HLL (coupon regime) answers equal, KLL inside its rank
+    bound with equal cells."""
+    import random
+
+    build = {
+        "theta": (build_theta_rollup, "uid"),
+        "hll": (build_distinct_rollup, "uid"),
+        "kll": (build_quantile_rollup, "v"),
+    }[family]
+    kw = {"partition_by": "k"} if keyed else {}
+    r = build[0](null_key_events, "ts", build[1], bucket_seconds=3600, **kw)
+    rng = random.Random(f"{family}-{keyed}")
+    rows = null_key_events.collect()
+    built: set = set()
+    try:
+        for case in range(3):
+            # the first case asks the full span at a rung granularity,
+            # so every rung is exercised whatever the draws
+            gran = rng.choice(GRANS[1:] if case == 0 else GRANS)
+            s, e = (None, None) if case == 0 else _rand_bounds(rng, True)
+            a, b = _rand_bounds(rng, open_ok=False)
+            key = rng.choice(["a", "b", None])
+            asks = {}
+            if family == "theta":
+                asks["series"] = lambda: r.retention_rows_by(gran, s, e)
+                asks["scalar"] = lambda: r.approx_distinct(a, b)
+                if keyed:
+                    r2 = _rand_bounds(rng, open_ok=False)
+                    asks["pair"] = lambda: r.retained_rows_by_key((a, b), r2)
+                    asks["cohort"] = lambda: r.cohort_rows_by_key((a, b), r2)
+            elif family == "hll":
+                asks["series"] = lambda: r.distinct_rows_by(gran, s, e)
+                asks["scalar"] = lambda: r.approx_distinct(a, b)
+                if keyed:
+                    asks["by_key"] = lambda: r.distinct_rows_by_key(s, e)
+                    asks["key_scalar"] = lambda: r.approx_distinct(a, b, key=key)
+            else:
+                asks["series"] = lambda: r.quantile_rows_by(gran, 0.5, s, e)
+                asks["scalar"] = lambda: r.approx_quantile(0.5, a, b)
+                if keyed:
+                    asks["by_key"] = lambda: r.quantile_rows_by_key(0.5, s, e)
+                    asks["key_scalar"] = lambda: r.approx_quantile(
+                        0.5, a, b, key=key
+                    )
+            for name, ask in asks.items():
+                raw, merged, job = _three_ways(r, ask, built)
+                where = (family, keyed, name, gran, s, e, a, b, key)
+                if family != "kll":
+                    assert raw == merged == job, where
+                    continue
+                if name in ("scalar", "key_scalar"):
+                    truth = _truth(
+                        rows, "v", a, b,
+                        (lambda row: 0) if name == "scalar"
+                        else (lambda row: 0 if row["k"] == key else 1),
+                    ).get(0)
+                    for got in (raw, merged, job):
+                        assert (got is None) == (truth is None), where
+                        assert got is None or _rank_ok(truth, got), where
+                    continue
+                cell_of = (
+                    _bucket_of(gran) if name == "series"
+                    else (lambda row: row["k"])
+                )
+                truth = _truth(rows, "v", s, e, cell_of)
+                assert [c for c, _ in raw] == [c for c, _ in merged]
+                assert [c for c, _ in raw] == [c for c, _ in job], where
+                for got in (raw, merged, job):
+                    for cell, val in got:
+                        vals = truth.get(cell)
+                        assert (val is None) == (not vals), (where, cell)
+                        assert val is None or _rank_ok(vals, val), (where, cell)
+        # every merged level was served: the day level and a rung, or the
+        # (key, day) level and (theta has no single-range keyed series)
+        # the key-total rung
+        if keyed:
+            assert "key+day" in built, built
+            assert family == "theta" or "key" in built, built
+        else:
+            assert "day" in built and len(built) > 1, built
     finally:
         r.unpersist()
